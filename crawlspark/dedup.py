@@ -164,19 +164,6 @@ def seen_delta(emitted: DataFrame, now: Column | None = None,
     ).select(*cols)
 
 
-def mark_seen(seen: DataFrame, emitted: DataFrame,
-              now: Column | None = None, default_ttl_days: int = 30,
-              n_salts: int = N_SALTS) -> DataFrame:
-    """Eager MERGE form of seen_delta (anti-join + union) — API
-    convenience for bounded states; the wave driver uses seen_delta +
-    read-side resolution so per-wave cost never scales with the total
-    seen-set size."""
-    cols = ["source", "id", "url_hash", "last_updated_on", "expires_at", "salt"]
-    new_rows = seen_delta(emitted, now, default_ttl_days, n_salts)
-    kept = seen.join(new_rows.select("source", "id"), ["source", "id"], "left_anti")
-    return kept.select(*cols).unionByName(new_rows.select(*cols))
-
-
 def content_hash(col: Column) -> Column:
     """D4 (deduplicator.go:127-130): sha256, first 16 bytes as 32 hex chars.
     Built-in — no UDF."""
@@ -366,22 +353,6 @@ def simhash64_py(text: str | None) -> int:
     return v - (1 << 64) if v >= (1 << 63) else v
 
 
-_simhash_udf = None
-
-
-def simhash_udf():
-    global _simhash_udf
-    if _simhash_udf is None:
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("long")
-        def simhash64(texts: pd.Series) -> pd.Series:
-            return pd.Series([simhash64_py(t) for t in texts], dtype="int64")
-
-        _simhash_udf = simhash64
-    return _simhash_udf
-
-
 def simhash64_expr(text_col) -> "F.Column":
     """Per-ROW md5 bit-vote simhash as one JVM Column expression —
     bit-for-bit equal to simhash64_py (pinned in tests/test_dedup.py
@@ -447,9 +418,8 @@ def simhash64_frame(df: DataFrame, text_col: str = "text",
                     key_col: str = "url") -> DataFrame:
     """(key, sh) via simhash64_expr — a pure zero-shuffle projection,
     so input multiplicity is preserved natively (every row hashes its
-    own text; no grouped collapse, no join-back). simhash_udf remains
-    the cross-checked Python twin (C-backed md5 — measured faster on a
-    single node, but it puts an Arrow/Python stage in the plan)."""
+    own text; no grouped collapse, no join-back). simhash64_py is the
+    cross-checked pure-Python twin."""
     return df.select(F.col(key_col).alias("key"),
                      simhash64_expr(F.col(text_col)).alias("sh"))
 

@@ -55,7 +55,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import os
 import time
 from datetime import datetime, timedelta
 
@@ -130,37 +129,27 @@ def table_hash(df: DataFrame) -> int:
     return hash((int(out["s"] or 0), int(out["n"])))
 
 
+# Output files per fat-table write and per compacted base (Iceberg's
+# writer sizes files in production).
+SNAPSHOT_FILES = 8
+# Fixed bloom capacity per salt bucket so per-wave delta blooms OR-merge
+# into the stored table (dedup.merge_blooms). At the 10^10-key design
+# point: 256 salts x ~4e7 keys => ~50 MB/salt.
+BLOOM_CAPACITY_PER_SALT = 1_000_000
+
+
 class WaveDriver:
     def __init__(self, spark: SparkSession, store: SnapshotStore,
                  source: str = "vieclam24h", num_partitions: int = 32,
-                 n_salts: int = D.N_SALTS, max_retries: int = 3,
-                 use_bloom: bool = True, collect_stats: bool = True,
-                 snapshot_files: int | None = 8, compact_every: int = 8,
-                 bloom_capacity_per_salt: int = 1_000_000,
-                 normalize_fn=None):
+                 max_retries: int = 3, use_bloom: bool = True,
+                 compact_every: int = 8):
         self.spark = spark
         self.store = store
         self.source = source
-        # N1 source dispatch (normalizer.go:30-43): the per-source
-        # normalizer is an injectable seam; the closed-world fixtures
-        # are vieclam24h-shaped, so that path is the default. The other
-        # reference paths (normalize_vietnamworks / normalize_topdev /
-        # normalize_generic) plug in here against their own staged
-        # input contracts.
-        self.normalize_fn = normalize_fn or normalize_vieclam24h
         self.num_partitions = num_partitions
-        self.n_salts = n_salts
         self.max_retries = max_retries
         self.use_bloom = use_bloom
-        # Stats now cost ZERO extra actions (they ride the single
-        # forcing aggregate); the flag is kept for API compatibility.
-        self.collect_stats = collect_stats
-        self.snapshot_files = snapshot_files
         self.compact_every = compact_every
-        # Fixed bloom capacity per salt bucket so per-wave delta blooms
-        # OR-merge into the stored table (dedup.merge_blooms). At the
-        # 10^10-key design point: 256 salts x ~4e7 keys => ~50 MB/salt.
-        self.bloom_capacity_per_salt = bloom_capacity_per_salt
 
     # -- pending predicate ---------------------------------------------------
     def _pending(self) -> F.Column:
@@ -213,20 +202,21 @@ class WaveDriver:
         return out.select(*_SEEN_COLS)
 
     # -- bootstrap ----------------------------------------------------------
+    def _seed_rows(self, seeds: pd.DataFrame, wave: int) -> DataFrame:
+        """Pending frontier rows for a seed list stamped with `wave`.
+        seeds: pandas (url, host, page, depth)."""
+        pdf = seeds.assign(
+            source=self.source,
+            id=seeds["url"],  # D6 fallback: id=url when no API id
+            last_updated_on=None, wave=wave, rank=0, priority=0.0,
+            state="pending", attempts=0)
+        return self.spark.createDataFrame(pdf[_FRONTIER_COLS],
+                                          schema=FRONTIER_SCHEMA)
+
     def bootstrap(self, seeds: pd.DataFrame) -> int:
         """Seed the frontier with depth-0 list pages (wave 0 snapshot).
         seeds: pandas (url, host, page, depth)."""
-        pdf = seeds.copy()
-        pdf["source"] = self.source
-        pdf["id"] = pdf["url"]  # D6 fallback: id=url when no API id
-        pdf["last_updated_on"] = None
-        pdf["wave"] = 0
-        pdf["rank"] = 0
-        pdf["priority"] = 0.0
-        pdf["state"] = "pending"
-        pdf["attempts"] = 0
-        fr = (self.spark.createDataFrame(pdf[_FRONTIER_COLS], schema=FRONTIER_SCHEMA)
-              .withColumn("_wseq", F.lit(0)))
+        fr = self._seed_rows(seeds, 0).withColumn("_wseq", F.lit(0))
         seen = (self.spark.createDataFrame([], SEEN_SCHEMA)
                 .withColumn("_wseq", F.lit(0)))
         return self.store.commit(0, {}, appends={"frontier": fr, "seen": seen})
@@ -246,18 +236,8 @@ class WaveDriver:
                  .withColumn("wave", F.lit(wave + 1)))
         delta = flips
         if seeds is not None:
-            pdf = seeds.copy()
-            pdf["source"] = self.source
-            pdf["id"] = pdf["url"]
-            pdf["last_updated_on"] = None
-            pdf["wave"] = wave + 1
-            pdf["rank"] = 0
-            pdf["priority"] = 0.0
-            pdf["state"] = "pending"
-            pdf["attempts"] = 0
-            fresh = self.spark.createDataFrame(
-                pdf[_FRONTIER_COLS], schema=FRONTIER_SCHEMA)
-            fresh = fresh.join(fv.select("url"), "url", "left_anti")
+            fresh = (self._seed_rows(seeds, wave + 1)
+                     .join(fv.select("url"), "url", "left_anti"))
             delta = delta.unionByName(fresh.select(*delta.columns))
         delta = delta.withColumn("_wseq", F.lit(wave + 1))
         return self.store.commit(wave + 1, {}, appends={"frontier": delta})
@@ -354,8 +334,7 @@ class WaveDriver:
         bloom_cand = None
         if blooms_prev is not None:
             raw_cls = D.classify_with_bloom(
-                links, seen, blooms_prev, now_ts,
-                n_salts=self.n_salts, cache=True)
+                links, seen, blooms_prev, now_ts, cache=True)
             bloom_cand = raw_cls._bloom_cand  # probed frame: cogroup
             classified = raw_cls.drop("url_hash", "salt")
         else:
@@ -389,7 +368,7 @@ class WaveDriver:
             changed.withColumn("_rn", F.row_number().over(w_seen))
                    .filter(F.col("_rn") == 1)
                    .select("source", "id", "host", "last_updated_on"),
-            now_ts, n_salts=self.n_salts)
+            now_ts)
             .withColumn("_wseq", F.lit(wave)))
 
         # ---- detail pages -> extract -> normalize -> jobs append ---------
@@ -400,8 +379,10 @@ class WaveDriver:
                   .withColumn("crawled_at", F.col("_warc_ts")))
         # single-consumer frame: its one write computes it once — no
         # cache, and it stays OUT of the counter job (the normalize +
-        # unescape-pUDF subtree would dominate the stats action)
-        jobs_batch = (self.normalize_fn(staged).dropDuplicates(["id"])
+        # unescape-pUDF subtree would dominate the stats action). N1
+        # source dispatch (normalizer.go:30-43): the closed-world
+        # fixtures are vieclam24h-shaped, so that normalizer runs here.
+        jobs_batch = (normalize_vieclam24h(staged).dropDuplicates(["id"])
                       .withColumn("wave", F.lit(wave)))
 
         # the byte-identity surface (C2, worker.go:145-147): CleanToText of
@@ -460,14 +441,6 @@ class WaveDriver:
         # pending row into scheduled/deferred/disallowed, so work
         # remains after this wave iff something was enqueued, deferred,
         # or returned retryable-missing.
-        _trace = os.environ.get("CRAWLSPARK_TRACE") == "1"
-        _t = time.time()
-
-        def _tick(label):
-            nonlocal _t
-            if _trace:
-                print(f"[wave {wave}] {label} {time.time() - _t:.2f}s", flush=True)
-            _t = time.time()
 
         # THE pre-commit action (one per wave): materializing classified
         # computes the whole chain beneath it — sched, the Python
@@ -486,7 +459,6 @@ class WaveDriver:
                        classified, cls_metrics)
         counted = {"fetched": fetched, **cls,
                    "enqueued": cls["new"] + cls["updated"]}
-        _tick("extract+classify")
 
         # incremental bloom maintenance: delta bloom at fixed capacity,
         # OR-merged into the stored table — O(delta + n_salts); skipped
@@ -494,10 +466,9 @@ class WaveDriver:
         blooms_out = None
         if self.use_bloom and counted.get("enqueued", 0) > 0:
             delta_blooms = D.build_blooms(
-                seen_new, capacity_per_salt=self.bloom_capacity_per_salt)
+                seen_new, capacity_per_salt=BLOOM_CAPACITY_PER_SALT)
             blooms_out = (D.merge_blooms(blooms_prev, delta_blooms)
                           if blooms_prev is not None else delta_blooms)
-            _tick("blooms")
         tables = {"blooms": blooms_out} if blooms_out is not None else {}
         self.store.commit(
             wave,
@@ -505,23 +476,10 @@ class WaveDriver:
             appends={"frontier": frontier_delta, "seen": seen_new,
                      "jobs": jobs_batch, "extracted": extracted_batch,
                      "lineage": lineage_new, "jsonld_audit": audit},
-            output_partitions=self.snapshot_files,
+            output_partitions=SNAPSHOT_FILES,
             # only the fat tables pay a file-sizing shuffle; control
             # tables write with natural partitioning.
-            # MEASURED ANTI-RESULT (round 4, 60k pages, best-of-2):
-            # folding appends into one partitionBy(_table) job — the
-            # obvious way to cut per-job constants — is SLOWER than
-            # the thread-pooled separate writes at both 2c and 8c:
-            # baseline 7.2s@8c/11.0s@2c commit wall, 4-control-table
-            # fold 8.1/12.1, all-6 fold 9.9/15.3. Concurrent job
-            # submission already overlaps the constants, while the
-            # fold serializes all branches into one DAG, pays a
-            # column-superset union, and runs 7 dynamic-partition
-            # writers per task. fold_appends stays available in
-            # SnapshotStore (tested) for regimes with higher per-job
-            # cost (e.g. a remote catalog), but the driver doesn't use it.
             repartition_tables={"jobs", "extracted"})
-        _tick("commit")
         # sched/missing observations filled during action 1 / the
         # frontier-delta write respectively — read after commit
         counted.update(_obs_get(obs_sched, ["deferred", "disallowed"],
@@ -555,14 +513,12 @@ class WaveDriver:
         wave start, never the wall clock."""
         wave = self.store.latest_wave()
         now_ts = F.to_timestamp(F.lit(str(wave_start(wave))))
-        fr = self._resolved("frontier", ["url"])
-        if self.snapshot_files:
-            # cluster the base by state within files: parquet row-group
-            # min/max stats then let the every-wave pending filter SKIP
-            # the (dominant, ever-growing) fetched row groups instead of
-            # scanning the whole frontier
-            fr = (fr.repartition(self.snapshot_files)
-                  .sortWithinPartitions("state"))
+        # cluster the base by state within files: parquet row-group
+        # min/max stats then let the every-wave pending filter SKIP the
+        # (dominant, ever-growing) fetched row groups instead of
+        # scanning the whole frontier
+        fr = (self._resolved("frontier", ["url"])
+              .repartition(SNAPSHOT_FILES).sortWithinPartitions("state"))
         # seen base is stored bucketed by salt (directory partitioning —
         # the plain-parquet analogue of Iceberg bucket-partitioned MoR):
         # clustered by the same key the blooms and the hot-domain skew
@@ -574,10 +530,10 @@ class WaveDriver:
         tables: dict[str, DataFrame] = {"frontier": fr, "seen": sn}
         if self.use_bloom:
             tables["blooms"] = D.build_blooms(
-                sn, capacity_per_salt=self.bloom_capacity_per_salt)
+                sn, capacity_per_salt=BLOOM_CAPACITY_PER_SALT)
         return self.store.commit(wave, tables,
                                  partition_by={"seen": ["salt"]},
-                                 output_partitions=self.snapshot_files,
+                                 output_partitions=SNAPSHOT_FILES,
                                  repartition_tables={"blooms"})
 
     # -- read-side views (append tables resolve last-write-wins here,

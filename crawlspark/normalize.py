@@ -216,17 +216,6 @@ def qualifications_default(col: Column) -> Column:
     return F.coalesce(nonempty(col), F.lit("Không yêu cầu"))
 
 
-def normalize_time(col: Column) -> Column:
-    """N16 (normalizer.go:807-822): try 4 layouts, fall back to now."""
-    return F.coalesce(
-        F.to_timestamp(col, "yyyy-MM-dd"),
-        F.to_timestamp(col, "dd/MM/yyyy"),
-        F.to_timestamp(col, "yyyy-MM-dd'T'HH:mm:ss'Z'"),
-        F.to_timestamp(col, "yyyy-MM-dd'T'HH:mm:ssXXX"),
-        F.current_timestamp(),
-    )
-
-
 def salary_display_vieclam24h(
     is_neg: Column, sal_text_jsonld: Column, sal_min: Column, sal_max: Column,
     salary_text_api: Column,

@@ -20,6 +20,12 @@ JSON manifest:
 Tables not rewritten by a commit carry forward by reference (the
 manifest points at the previous snapshot's directory) — no data copy,
 like Iceberg manifests reusing unchanged data files.
+
+One write path and one read path: every table a commit touches is its
+own parquet write (submitted concurrently), and a read is a plain
+parquet union of the table's directories. A snapshot records ``sid``,
+``wave``, ``tables``, ``layout`` and ``committed_at``; readers ignore
+any other key (older manifests carry an empty ``select`` map).
 """
 
 from __future__ import annotations
@@ -59,10 +65,13 @@ class SnapshotStore:
     def _entry(self, table: str, snapshot_id: int | None = None):
         """(paths, base_partition_cols) for a table at a snapshot, or
         None. paths[0] is the base (last overwrite); the rest are the
-        append deltas committed since, oldest first."""
+        append deltas committed since, oldest first. An unknown
+        snapshot_id raises KeyError — never mistaken for "table absent"."""
         snaps = self.snapshots()
         if snapshot_id is not None:
             snaps = [s for s in snaps if s["sid"] == snapshot_id]
+            if not snaps:
+                raise KeyError(f"no snapshot with sid {snapshot_id}")
         for s in reversed(snaps):
             if table in s["tables"]:
                 entry = s["tables"][table]
@@ -71,24 +80,10 @@ class SnapshotStore:
                 return [str(self.root / p) for p in paths], part
         return None
 
-    def _read_paths(self, spark: SparkSession, paths: list[str],
-                    select: dict) -> DataFrame:
-        """Union a table's batch dirs. A dir written by a FOLDED commit
-        (several control tables in one partitioned write) carries the
-        fold's column superset; its manifest `select` entry prunes it
-        back to the table's own columns."""
-        plain = [p for p in paths if p not in select]
-        frames = ([spark.read.parquet(*plain)] if plain else []) + [
-            spark.read.parquet(p).select(*select[p]) for p in paths
-            if p in select]
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
-
     def read(self, spark: SparkSession, table: str,
              snapshot_id: int | None = None) -> DataFrame | None:
-        """Read a table at a snapshot (default: latest). None if absent.
+        """Read a table at a snapshot (default: latest). None if absent;
+        KeyError if ``snapshot_id`` names no snapshot.
 
         Append-mode tables resolve to the union of all their batch
         directories (manifest entry is a list) — the parquet-sandbox
@@ -100,25 +95,11 @@ class SnapshotStore:
         if got is None:
             return None
         paths, part = got
-        select = self._select_map(snapshot_id)
-        if len(paths) == 1:
-            return self._read_paths(spark, paths, select)
-        if not part:
-            return self._read_paths(spark, paths, select)
-        deltas = self._read_paths(spark, paths[1:], select)
+        if len(paths) == 1 or not part:
+            return spark.read.parquet(*paths)
+        deltas = spark.read.parquet(*paths[1:])
         return deltas.unionByName(
             spark.read.parquet(paths[0]).select(*deltas.columns))
-
-    def _select_map(self, snapshot_id: int | None = None) -> dict:
-        """abs-path -> column list for folded batch dirs (carried
-        forward across snapshots like the table entries themselves)."""
-        snaps = self.snapshots()
-        if snapshot_id is not None:
-            snaps = [s for s in snaps if s["sid"] == snapshot_id]
-        if not snaps:
-            return {}
-        sel = snaps[-1].get("select", {})
-        return {str(self.root / rel): cols for rel, cols in sel.items()}
 
     def read_split(self, spark: SparkSession, table: str,
                    snapshot_id: int | None = None
@@ -134,11 +115,10 @@ class SnapshotStore:
         if got is None:
             return None, None
         paths, _ = got
-        select = self._select_map(snapshot_id)
-        base = self._read_paths(spark, paths[:1], select)
+        base = spark.read.parquet(paths[0])
         if len(paths) == 1:
             return base, None
-        deltas = self._read_paths(spark, paths[1:], select)
+        deltas = spark.read.parquet(*paths[1:])
         return base.select(*deltas.columns), deltas
 
     # -- commit -----------------------------------------------------------
@@ -146,8 +126,7 @@ class SnapshotStore:
                partition_by: dict[str, list[str]] | None = None,
                output_partitions: int | None = None,
                appends: dict[str, DataFrame] | None = None,
-               repartition_tables: set[str] | None = None,
-               fold_appends: set[str] | None = None) -> int:
+               repartition_tables: set[str] | None = None) -> int:
         """Write `tables` (overwrite semantics) and `appends` (the wave's
         batch joins the table's directory list — O(batch) IO instead of
         an O(total) rewrite, like Iceberg appending data files), then
@@ -157,19 +136,7 @@ class SnapshotStore:
         repartition_tables limits the file-sizing repartition to the
         named (fat) tables — small control/delta tables write with their
         natural partitioning, saving one shuffle per table per wave
-        (Iceberg's writer handles file sizing in production).
-
-        fold_appends names append tables to write as ONE Spark job: a
-        column-superset union partitioned by a `_table` discriminator.
-        Every parquet job pays corpus-size-independent constants
-        (Catalyst planning, task scheduling, committer setup) that are
-        pure serial fraction at N->4N scaling; folding the small
-        control deltas cuts the wave's job count without changing any
-        table's read schema — each folded dir's manifest `select`
-        entry prunes reads back to the table's own columns, and a
-        zero-row table simply contributes no partition dir (nothing is
-        appended). Column names shared across folded tables must have
-        identical types (the driver's fold set does)."""
+        (Iceberg's writer handles file sizing in production)."""
         manifest = self._read_manifest()
         prev = manifest["snapshots"][-1] if manifest["snapshots"] else None
         sid = (prev["sid"] + 1) if prev else 1
@@ -179,7 +146,6 @@ class SnapshotStore:
         # with directory partitioning (e.g. seen bucketed by salt) —
         # readers must read such a base separately from the flat deltas
         layout: dict = dict(prev.get("layout", {})) if prev else {}
-        select_map: dict = dict(prev.get("select", {})) if prev else {}
 
         def _write(item):
             name, df = item
@@ -208,32 +174,6 @@ class SnapshotStore:
             return name, rel, part_cols
 
         appends = appends or {}
-        folded = {n: df for n, df in appends.items()
-                  if fold_appends and n in fold_appends}
-        plain_appends = {n: df for n, df in appends.items() if n not in folded}
-
-        def _write_folded():
-            from pyspark.sql import functions as F
-
-            cols_by = {n: df.columns for n, df in folded.items()}
-            frames = [df.withColumn("_table", F.lit(n))
-                      for n, df in folded.items()]
-            uni = frames[0]
-            for f in frames[1:]:
-                uni = uni.unionByName(f, allowMissingColumns=True)
-            if output_partitions:
-                # round-robin, NOT by _table: hashing by the
-                # discriminator would funnel each table's whole batch
-                # into one task; round-robin keeps the write wide and
-                # the partitionBy writer still splits files per table
-                uni = uni.repartition(output_partitions)
-            rel = f"data/{sid}/ctl"
-            uni.write.mode("overwrite").partitionBy("_table") \
-               .parquet(str(self.root / rel))
-            # a zero-row table leaves no partition dir: append nothing
-            return [(n, f"{rel}/_table={n}", cols)
-                    for n, cols in cols_by.items()
-                    if (self.root / rel / f"_table={n}").exists()]
 
         def _append_entry(name, rel):
             prev_entry = entry_tables.get(name, [])
@@ -247,12 +187,10 @@ class SnapshotStore:
         # fraction is what kills N->4N scaling efficiency).
         from concurrent.futures import ThreadPoolExecutor
 
-        all_items = list(tables.items()) + list(plain_appends.items())
-        n_jobs = len(all_items) + (1 if folded else 0)
-        with ThreadPoolExecutor(max_workers=max(1, n_jobs)) as pool:
-            fold_fut = pool.submit(_write_folded) if folded else None
+        all_items = list(tables.items()) + list(appends.items())
+        with ThreadPoolExecutor(max_workers=max(1, len(all_items))) as pool:
             for name, rel, part_cols in pool.map(_write, all_items):
-                if name in plain_appends:
+                if name in appends:
                     _append_entry(name, rel)
                 else:
                     entry_tables[name] = rel
@@ -260,24 +198,12 @@ class SnapshotStore:
                         layout[name] = part_cols
                     else:
                         layout.pop(name, None)
-            if fold_fut is not None:
-                for name, rel, cols in fold_fut.result():
-                    _append_entry(name, rel)
-                    select_map[rel] = cols
-
-        # prune select entries whose dirs are no longer referenced
-        # (compaction overwrote the table; its delta chain was dropped)
-        live: set = set()
-        for e in entry_tables.values():
-            live.update(e if isinstance(e, list) else [e])
-        select_map = {k: v for k, v in select_map.items() if k in live}
 
         manifest["snapshots"].append({
             "sid": sid,
             "wave": wave,
             "tables": entry_tables,
             "layout": layout,
-            "select": select_map,
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         })
         tmp = self._manifest_path.with_suffix(".json.tmp")

@@ -76,10 +76,8 @@ class TestClassify:
 
 class TestMarkSeen:
     def test_ttl_arithmetic(self, spark):
-        # deduplicator.go:72-89: future expired_on -> expired_on + 1d;
-        # past/absent -> now + 30d + 1d
-        from crawlspark.schemas import SEEN_SCHEMA
-        seen = spark.createDataFrame([], SEEN_SCHEMA)
+        # D2 MarkSeenWithTTL (deduplicator.go:72-89), delta form:
+        # future expired_on -> expired_on + 1d; past/absent -> now + 30d + 1d
         emitted = spark.createDataFrame(pd.DataFrame({
             "source": ["s", "s"],
             "id": ["a", "b"],
@@ -87,19 +85,9 @@ class TestMarkSeen:
             "last_updated_on": ["1", "2"],
             "expired_on": [pd.Timestamp("2026-03-01"), pd.Timestamp("2025-01-01")],
         }))
-        got = {r["id"]: r for r in D.mark_seen(seen, emitted, _now()).collect()}
+        got = {r["id"]: r for r in D.seen_delta(emitted, _now()).collect()}
         assert str(got["a"]["expires_at"]) == "2026-03-02 00:00:00"
         assert str(got["b"]["expires_at"]) == "2026-02-10 00:00:00"  # now+31d
-
-    def test_merge_last_write_wins(self, spark):
-        seen = _seen(spark, [("s", "1", 0, "old", "2026-02-01", 0),
-                             ("s", "2", 0, "keep", "2026-02-01", 0)])
-        emitted = spark.createDataFrame(pd.DataFrame({
-            "source": ["s"], "id": ["1"], "host": ["h"], "last_updated_on": ["new"],
-        }))
-        got = {r["id"]: r["last_updated_on"]
-               for r in D.mark_seen(seen, emitted, _now()).collect()}
-        assert got == {"1": "new", "2": "keep"}
 
 
 class TestContentHash:
@@ -137,12 +125,6 @@ class TestSimhash:
         assert len(pairs) == 1
         assert (pairs[0]["key_a"], pairs[0]["key_b"]) == ("a", "b")
         assert pairs[0]["hamming"] == 0
-
-    def test_udf_matches_py(self, spark):
-        texts = ["one two three", "", None, "Xin chào thế giới"]
-        df = spark.createDataFrame(pd.DataFrame({"t": texts}))
-        got = [r["s"] for r in df.select(D.simhash_udf()(F.col("t")).alias("s")).collect()]
-        assert got == [D.simhash64_py(t) for t in texts]
 
     def test_jvm_frame_matches_py(self, spark):
         """simhash64_frame (the JVM hot path) must equal simhash64_py

@@ -1,8 +1,10 @@
 """End-to-end wave driver tests: full crawl, three-way state machine
 across waves, robots, budget deferral, kill-resume determinism."""
 
+import json
 import shutil
 import time
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -29,6 +31,23 @@ def world(spark, tmp_path):
 
 def crawl_all(w, max_waves=6):
     return w["drv"].run_until_done(w["pages"], w["robots"], w["ranks"], max_waves)
+
+
+@contextmanager
+def shuffle_parallelism(spark, n):
+    """Run the block at `n` real shuffle partitions: AQE coalescing is
+    off, otherwise a small input collapses every shuffle to the same
+    single partition whatever the configured count."""
+    keys = ("spark.sql.shuffle.partitions",
+            "spark.sql.adaptive.coalescePartitions.enabled")
+    prev = {k: spark.conf.get(k) for k in keys}
+    spark.conf.set(keys[0], str(n))
+    spark.conf.set(keys[1], "false")
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
 
 
 class TestFullCrawl:
@@ -144,22 +163,65 @@ class TestResume:
         fN = st.read(spark, "frontier")
         assert f0.filter(F.col("state") == "pending").count() > 0
         assert f0.count() < fN.count()
+        # an unknown snapshot is an error, not "table absent"
+        bad = max(sids) + 100
+        with pytest.raises(KeyError, match=str(bad)):
+            st.read(spark, "frontier", snapshot_id=bad)
+        with pytest.raises(KeyError, match=str(bad)):
+            st.read_split(spark, "frontier", snapshot_id=bad)
+        assert st.read(spark, "no_such_table", snapshot_id=sids[0]) is None
+
+    def test_resume_from_manifest_with_select_key(self, spark, tmp_path,
+                                                  world):
+        """A warehouse written before the folded-commit path was removed
+        carries an (always empty) `select` map in every snapshot. It
+        still reads, resumes to the same state as an uninterrupted run,
+        and new snapshots carry only the current keys."""
+        crawl_all(world)
+        drvA = world["drv"]
+        hA = (table_hash(drvA.frontier_view()), table_hash(drvA.seen_view()),
+              table_hash(drvA.store.read(spark, "jobs")))
+
+        storeB = SnapshotStore(tmp_path / "whOld")
+        drvB = WaveDriver(spark, storeB)
+        drvB.bootstrap(world["seeds"])
+        drvB.run_wave(world["pages"], world["robots"], world["ranks"])
+        manifest = json.loads(storeB._manifest_path.read_text())
+        for snap in manifest["snapshots"]:
+            snap["select"] = {}
+        storeB._manifest_path.write_text(json.dumps(manifest, indent=1))
+        n_old = len(manifest["snapshots"])
+        assert storeB.read(spark, "frontier", snapshot_id=1).count() > 0
+
+        drvB2 = WaveDriver(spark, SnapshotStore(storeB.root))
+        drvB2.run_until_done(world["pages"], world["robots"], world["ranks"], 6)
+        hB = (table_hash(drvB2.frontier_view()), table_hash(drvB2.seen_view()),
+              table_hash(drvB2.store.read(spark, "jobs")))
+        assert hA == hB
+        new = drvB2.store.snapshots()[n_old:]
+        assert new
+        for snap in new:
+            assert set(snap) == {"sid", "wave", "tables", "layout",
+                                 "committed_at"}
 
 
 class TestParallelismInvariance:
     def test_same_state_at_different_parallelism(self, spark, tmp_path, world):
         """Scaling-determinism evidence: identical final state when run
-        with different partition counts (the local analogue of N vs 4N
-        executors holding the same crawl order + seen set)."""
+        at different shuffle and input partition counts (the local
+        analogue of N vs 4N executors holding the same crawl order +
+        seen set)."""
         crawl_all(world)
         drvA = world["drv"]
         hA = (table_hash(drvA.seen_view()),
               table_hash(drvA.store.read(spark, "jobs")),
               table_hash(drvA.store.read(spark, "extracted")))
         storeB = SnapshotStore(tmp_path / "whP")
-        drvB = WaveDriver(spark, storeB, num_partitions=13)
+        drvB = WaveDriver(spark, storeB)
         drvB.bootstrap(world["seeds"])
-        drvB.run_until_done(world["pages"], world["robots"], world["ranks"], 6)
+        with shuffle_parallelism(spark, 13):
+            drvB.run_until_done(world["pages"].repartition(7),
+                                world["robots"], world["ranks"], 6)
         hB = (table_hash(drvB.seen_view()),
               table_hash(drvB.store.read(spark, "jobs")),
               table_hash(drvB.store.read(spark, "extracted")))
@@ -298,11 +360,11 @@ class TestSeenDeterminism:
         ranks = spark.createDataFrame(synth.gen_host_rank())
 
         hashes = set()
-        for i in range(2):
-            drv = WaveDriver(spark, SnapshotStore(tmp_path / f"wh{i}"),
-                             num_partitions=4 if i == 0 else 1)
+        for i, (n_shuffle, n_pages) in enumerate([(4, 1), (13, 2)]):
+            drv = WaveDriver(spark, SnapshotStore(tmp_path / f"wh{i}"))
             drv.bootstrap(seeds)
-            drv.run_wave(pages, robots, ranks)
+            with shuffle_parallelism(spark, n_shuffle):
+                drv.run_wave(pages.repartition(n_pages), robots, ranks)
             seen = drv.seen_view().filter(F.col("id") == "7").collect()
             assert len(seen) == 1
             assert seen[0]["last_updated_on"] == "1111"  # page 1 wins
@@ -340,43 +402,3 @@ class TestObsGet:
         # fallback frame is wrong on purpose: metrics must win
         got = _obs_get(obs, ["n"], spark.range(99), [F.count("*").alias("n")])
         assert got == {"n": 5}
-
-
-class TestFoldedCommit:
-    def test_fold_roundtrip_select_pruning_and_empty(self, spark, tmp_path):
-        """SnapshotStore.fold_appends: several append tables written as
-        one partitioned job must read back with their own schemas; a
-        zero-row table appends nothing; later unfolded appends to the
-        same table union cleanly with folded dirs.
-
-        (The wave driver measured the fold SLOWER than thread-pooled
-        separate writes on this box and does not use it — the seam
-        stays for high-per-job-cost backends, so it stays tested.)"""
-        from crawlspark.tables import SnapshotStore
-
-        store = SnapshotStore(tmp_path / "wh")
-        a = spark.createDataFrame([(1, "x"), (2, "y")], "k int, va string")
-        b = spark.createDataFrame([(7, 3.5)], "k int, vb double")
-        empty = spark.createDataFrame([], "k int, vc string")
-        store.commit(1, {}, appends={"ta": a, "tb": b, "tc": empty},
-                     fold_appends={"ta", "tb", "tc"})
-        ra = store.read(spark, "ta")
-        assert sorted(ra.columns) == ["k", "va"]      # superset pruned
-        assert {(r.k, r.va) for r in ra.collect()} == {(1, "x"), (2, "y")}
-        rb = store.read(spark, "tb")
-        assert sorted(rb.columns) == ["k", "vb"]
-        assert rb.first().vb == 3.5
-        assert store.read(spark, "tc") is None         # nothing appended
-
-        # mixed chain: plain (unfolded) append after a folded one
-        a2 = spark.createDataFrame([(3, "z")], "k int, va string")
-        store.commit(2, {}, appends={"ta": a2})
-        assert {r.k for r in store.read(spark, "ta").collect()} == {1, 2, 3}
-
-        # overwrite drops the delta chain and prunes stale select keys
-        store.commit(3, {"ta": spark.createDataFrame([(9, "w")],
-                                                     "k int, va string")})
-        assert {r.k for r in store.read(spark, "ta").collect()} == {9}
-        assert all(not k.endswith("=ta") for k in store._select_map())
-        # tb's folded dir is still live, its select entry survives
-        assert any(k.endswith("=tb") for k in store._select_map())
