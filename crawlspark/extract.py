@@ -1,5 +1,5 @@
 """Page extraction (SURVEY §2.4): HTML/JSON-LD -> typed struct, one
-logical parse per page, as vectorized pandas UDFs.
+logical parse per page, in one Arrow-batched ``mapInArrow`` stage.
 
 Re-expresses the reference enrichment path
 (internal/module/vieclam24h/scraper.go:156-291) and the generic
@@ -16,18 +16,16 @@ over the closed-world fixture HTML. Field semantics are kept exactly:
 - every valid-JSON ld+json blob preserved for the audit side channel
   (scraper.go:127-154)
 
-The pure-python functions are the test oracle; the pandas UDFs wrap
-them for the engine. No JVM-side HTML parser exists, so this is a
-deliberate (Arrow-batched) Python stage; everything downstream is
-built-in Column expressions.
+The pure-python functions are the test oracle, and ``extract_pages``
+(the stage the wave runs) calls them per Arrow batch. No JVM-side HTML
+parser exists, so this is a deliberate (Arrow-batched) Python stage;
+everything downstream is built-in Column expressions.
 """
 
 from __future__ import annotations
 
 import json
 import re
-
-import pandas as pd
 
 # Fixture/list-page shapes are controlled by synth.py, so anchored
 # regex extraction is exact; patterns tolerate attribute reordering
@@ -183,9 +181,6 @@ def extract_jsonld_blobs(html: str | None) -> list[str]:
     return out
 
 
-# ---------------------------------------------------------------------------
-# Spark pandas-UDF wrappers
-# ---------------------------------------------------------------------------
 def _to_str(h) -> str | None:
     """html stays BINARY end-to-end on the JVM side (a binary->string
     cast doubles the bytes held per row); decode happens here, per
@@ -193,42 +188,6 @@ def _to_str(h) -> str | None:
     if isinstance(h, (bytes, bytearray)):
         return h.decode("utf-8", "replace")
     return h
-
-
-_udfs = None
-
-
-def udfs():
-    """Return (extract_struct_udf, extract_links_udf, extract_jsonld_udf).
-
-    Usage: df.withColumn("x", extract_struct_udf(F.col("html")))
-    then select x.* — Catalyst prunes unused struct fields after the UDF.
-    Inputs may be binary or string.
-    """
-    global _udfs
-    if _udfs is not None:
-        return _udfs
-
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, StringType
-
-    from .schemas import EXTRACTED_STRUCT, LINK_STRUCT
-
-    @pandas_udf(EXTRACTED_STRUCT)
-    def extract_struct_udf(html: pd.Series) -> pd.DataFrame:
-        rows = [extract_detail_fields(_to_str(h)) for h in html]
-        return pd.DataFrame(rows, columns=list(_EMPTY.keys()))
-
-    @pandas_udf(ArrayType(LINK_STRUCT))
-    def extract_links_udf(html: pd.Series) -> pd.Series:
-        return pd.Series([extract_links(_to_str(h)) for h in html])
-
-    @pandas_udf(ArrayType(StringType()))
-    def extract_jsonld_udf(html: pd.Series) -> pd.Series:
-        return pd.Series([extract_jsonld_blobs(_to_str(h)) for h in html])
-
-    _udfs = (extract_struct_udf, extract_links_udf, extract_jsonld_udf)
-    return _udfs
 
 
 def _nullable_struct(st):
@@ -241,249 +200,15 @@ def _nullable_struct(st):
                          for f in st.fields])
 
 
-_RX_JSONLD_J = r'(?s)<script type="application/ld\+json">(.*?)</script>'
-_RX_FLEXCOL_J = (r'(?s)<div class="flex flex-col[^"]*">\s*'
-                 r'<div>([^<]*)</div>\s*<div>([^<]*)</div>')
-_RX_CANONICAL_J = r'<link\s+rel="canonical"\s+href="([^"]*)"'
-_RX_JOBLINK_J = (r'<a class="job-link" href="([^"]+)"'
-                 r'(?:\s+data-id="([^"]*)")?'
-                 r'(?:\s+data-updated="([^"]*)")?[^>]*>')
-# participation probes: regexp_extract returns "" both when an optional
-# group matched an empty value AND when it did not participate at all —
-# the oracle distinguishes (None vs ""), so presence is re-checked with
-# anchored prefixes mirroring the optional-group structure
-_RX_HAS_ID_J = r'^<a class="job-link" href="[^"]+"\s+data-id="'
-_RX_HAS_UPD_J = (r'^<a class="job-link" href="[^"]+"'
-                 r'(?:\s+data-id="[^"]*")?\s+data-updated="')
+def extract_pages(df, html_col: str = "html", depth_col: str = "depth"):
+    """Combined per-page extraction as ONE pandas-free ``mapInArrow``
+    stage over the oracle functions above.
 
-_JP_SCHEMA = (
-    "`@type` string, title string, description string, jobBenefits string,"
-    " skills string, qualifications string, industry string,"
-    " occupationalCategory string, employmentType string,"
-    " hiringOrganization struct<name:string, sameAs:string>,"
-    " jobLocation array<struct<address:struct<addressRegion:string,"
-    " addressLocality:string>>>,"
-    " baseSalary struct<currency:string, value:struct<minValue:double,"
-    " maxValue:double, value:string>>,"
-    " jobRequirement string, otherRequirement string, rateResponse string"
-)
-
-
-def extract_pages_jvm(df, html_col: str = "html", depth_col: str = "depth"):
-    """The extraction stage as PURE Column expressions — no Python
-    workers, no Arrow channel.
-
-    Round-4 result: built to lift the Arrow channel's measured scaling
-    cap, it did NOT win — see extract_pages' measurement table (this
-    form is ~2.6x slower absolute at every core count with the same
-    2->8 scaling, because the stage floor is the parquet scan + host
-    bandwidth, and Catalyst regex/JSON evaluation loses to CPython's
-    C-backed re/json). Kept fully parity-pinned as the zero-Python
-    alternative; not the default.
-
-    Exact-parity notes vs the Python oracle (extract_detail_fields /
-    extract_links / extract_jsonld_blobs; pinned by full-corpus
-    equality tests):
-    - Python .strip() trims all whitespace; F.trim only spaces — all
-      strips are regexp '^\\s+|\\s+$' replaces.
-    - "valid JSON object" gate = try_parse_json non-null AND
-      schema_of_variant starting OBJECT (json.loads + isinstance-dict
-      parity).
-    - "last JobPosting blob's non-empty value wins" folds as
-      get(reverse(filter(transform(...))), 0) per field; the three
-      salary fields ride ONE struct so they come from the same blob,
-      exactly like the oracle's single if-branch.
-    - int(minv) truncates toward zero == double->long ANSI cast.
-    - optional link attrs: None-vs-empty distinguished via anchored
-      participation probes (see _RX_HAS_*).
-    - null html: links coalesce to [], detail struct = all-null with
-      jsonld_count 0, audit blobs [] — byte-matching the oracle dict.
-
-    Same output contract as extract_pages: df minus html, plus
-    (_links, x, jsonld).
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from .schemas import EXTRACTED_STRUCT, LINK_STRUCT
-
-    def strip(c):
-        return F.regexp_replace(c, r"^\s+|\s+$", "")
-
-    def last_of(arr, pred):
-        return F.get(F.reverse(F.filter(arr, pred)), 0)
-
-    depth = F.col(depth_col)
-
-    # ---- staged projections, NOT one expression tree -----------------
-    # Each stage materializes its expensive arrays as named columns; a
-    # single-tree first cut re-inlined the full parse chain into every
-    # one of the ~25 output fields (no CSE across struct fields) and
-    # measured ~8x SLOWER than the Arrow stage it was meant to beat.
-    # CollapseProject keeps multi-referenced non-cheap aliases staged
-    # (SPARK-36718), so each array below is evaluated once per row.
-    passthrough = [f.name for f in df.schema.fields if f.name != html_col]
-    s0 = df.select(*passthrough, depth.alias("_d"),
-                   F.decode(F.col(html_col), "UTF-8").alias("_h"))
-    h = F.col("_h")
-
-    # blobs: trimmed candidates; one try_parse_json per blob, validity
-    # checked on the parsed variant (json.loads + isinstance-dict)
-    # depth-gated scans: list pages never pay the JSON-LD/flex/
-    # canonical regexes, detail pages never pay the link regex (CASE
-    # short-circuits evaluation) — the Python twin has the same split
-    d0 = F.col("_d")
-    s1 = s0.select(
-        "*",
-        F.when(d0 != 0, F.transform(
-            F.regexp_extract_all(h, F.lit(_RX_JSONLD_J), F.lit(1)),
-            lambda b: strip(b))).alias("_cand"),
-        F.when(d0 != 0, F.regexp_extract_all(
-            h, F.lit(_RX_FLEXCOL_J), F.lit(0))).alias("_flex"),
-        F.when(d0 != 0, F.regexp_extract_all(
-            h, F.lit(_RX_CANONICAL_J), F.lit(1))).alias("_canon"),
-        F.when(d0 == 0, F.regexp_extract_all(
-            h, F.lit(_RX_JOBLINK_J), F.lit(0))).alias("_lm"))
-    s2 = s1.select(
-        "*",
-        F.filter(
-            F.transform(F.col("_cand"),
-                        lambda b: F.struct(b.alias("b"),
-                                           F.try_parse_json(b).alias("v"))),
-            lambda p: (p["b"] != "") & p["v"].isNotNull()
-            & F.schema_of_variant(p["v"]).startswith("OBJECT"))
-        .alias("_vp"))
-    s3 = s2.select(
-        "*",
-        F.transform(F.col("_vp"), lambda p: p["b"]).alias("_valid"),
-        F.transform(
-            F.filter(F.col("_vp"), lambda p: F.try_variant_get(
-                p["v"], "$.@type", "string") == "JobPosting"),
-            lambda p: F.from_json(p["b"], _JP_SCHEMA)).alias("_jp"))
-    valid = F.col("_valid")
-    jps = F.col("_jp")
-
-    def last_str(getter):
-        return last_of(F.transform(jps, getter),
-                       lambda v: v.isNotNull() & (v != ""))
-
-    # industry: comma split + strip + drop empty, last non-empty list
-    ind_lists = F.transform(jps, lambda s: F.filter(
-        F.transform(F.split(s["industry"], ","), strip), lambda p: p != ""))
-    # jobLocation ordered dedup (array_distinct keeps first occurrence)
-    city_lists = F.transform(jps, lambda s: F.array_distinct(F.filter(
-        F.transform(s["jobLocation"],
-                    lambda l: l["address"]["addressRegion"]),
-        lambda r: r.isNotNull() & (r != ""))))
-    dist_lists = F.transform(jps, lambda s: F.array_distinct(F.filter(
-        F.transform(s["jobLocation"],
-                    lambda l: l["address"]["addressLocality"]),
-        lambda r: r.isNotNull() & (r != ""))))
-
-    def last_list(lists):
-        return last_of(lists, lambda l: l.isNotNull() & (F.size(l) > 0))
-
-    # salary trio comes from the SAME (last qualifying) blob
-    sal = last_of(
-        F.transform(jps, lambda s: F.struct(
-            F.coalesce(s["baseSalary"]["value"]["minValue"], F.lit(0.0))
-            .alias("mn"),
-            F.coalesce(s["baseSalary"]["value"]["maxValue"], F.lit(0.0))
-            .alias("mx"),
-            s["baseSalary"]["currency"].alias("cur"))),
-        lambda t: (t["mn"] > 0) | (t["mx"] > 0))
-    sal_text = last_str(lambda s: s["baseSalary"]["value"]["value"])
-
-    # experience div: label-matched full matches, LAST wins
-    exp_vals = F.transform(
-        F.filter(
-            F.col("_flex"),
-            lambda m: strip(F.regexp_extract(m, _RX_FLEXCOL_J, 1))
-            == "Kinh nghiệm"),
-        lambda m: strip(F.regexp_extract(m, _RX_FLEXCOL_J, 2)))
-
-    x = F.struct(
-        F.get(F.col("_canon"), 0).alias("canonical_url"),
-        F.get(F.reverse(exp_vals), 0).alias("experience_text"),
-        last_str(lambda s: s["title"]).alias("title"),
-        last_str(lambda s: s["hiringOrganization"]["name"]).alias("company"),
-        last_str(lambda s: s["description"]).alias("job_description"),
-        last_str(lambda s: s["jobBenefits"]).alias("job_benefits"),
-        last_str(lambda s: s["skills"]).alias("skills"),
-        last_str(lambda s: s["qualifications"]).alias("qualifications"),
-        last_list(ind_lists).alias("industry"),
-        last_str(lambda s: s["occupationalCategory"])
-        .alias("occupational_category"),
-        last_str(lambda s: s["employmentType"]).alias("employment_type"),
-        last_str(lambda s: s["hiringOrganization"]["sameAs"])
-        .alias("company_website"),
-        last_list(city_lists).alias("location_city"),
-        last_list(dist_lists).alias("location_district"),
-        sal["mn"].cast("long").alias("salary_min_jsonld"),
-        sal["mx"].cast("long").alias("salary_max_jsonld"),
-        sal["cur"].alias("salary_currency"),
-        sal_text.alias("salary_text_jsonld"),
-        F.when(sal_text.isNotNull(), F.lit(True)).alias("is_negotiable"),
-        last_str(lambda s: s["jobRequirement"]).alias("job_requirement"),
-        last_str(lambda s: s["otherRequirement"]).alias("other_requirement"),
-        last_str(lambda s: s["rateResponse"]).alias("rate_response_text"),
-        F.coalesce(F.size(valid), F.lit(0)).cast("int").alias("jsonld_count"),
-    )
-
-    links = F.transform(F.col("_lm"), lambda m, i: F.struct(
-        F.regexp_extract(m, _RX_JOBLINK_J, 1).alias("href"),
-        (i + 1).cast("int").alias("rank"),
-        F.when(m.rlike(_RX_HAS_ID_J),
-               F.regexp_extract(m, _RX_JOBLINK_J, 2)).alias("item_id"),
-        F.when(m.rlike(_RX_HAS_UPD_J),
-               F.regexp_extract(m, _RX_JOBLINK_J, 3)).alias("item_updated")))
-
-    d = F.col("_d")
-    out = s3.select(
-        *passthrough,
-        F.when(d == 0, F.coalesce(links, F.array().cast(
-            T.ArrayType(LINK_STRUCT)))).alias("_links"),
-        F.when(d != 0, x).alias("x"),
-        F.when(d != 0, F.coalesce(valid, F.array().cast(
-            "array<string>"))).alias("jsonld"),
-    )
-    # align column types with the Arrow stage's declared schema
-    return out.withColumn("x", F.col("x").cast(
-        _nullable_struct(EXTRACTED_STRUCT)))
-
-
-def extract_pages(df, html_col: str = "html", depth_col: str = "depth",
-                  impl: str | None = None):
-    """Combined per-page extraction. Default = the pandas-free
-    ``mapInArrow`` stage; impl='jvm' (or CRAWLSPARK_EXTRACT_IMPL)
-    selects the pure-Column twin (extract_pages_jvm).
-
-    MEASURED (round 4, 60k detail pages, best-of-2, same session):
-
-        cores   jvm      arrow
-          2     14.2 s    5.6 s
-          8      5.3 s    2.2 s
-         32      5.8 s    2.3 s
-
-    The JVM twin was built to beat the Arrow channel's 2.1-2.5x
-    scaling cap — it does NOT: both forms scale ~2.6x from 2->8 and
-    flatline beyond (the parquet-scan + decode floor is ~1.7 s at 8
-    cores and the host's memory bandwidth collapses past 8 procs),
-    while the JVM form is ~2.6x slower ABSOLUTE at every width:
-    CPython's C-backed re/json across one Arrow hop beats Catalyst's
-    per-call regex (UTF8String->String conversion per regexp, no CSE
-    across struct fields — the staged-projection form below is already
-    the fast JVM shape; the naive expression tree was 8x worse).
-    "UDFs are the slow path" applies to row-at-a-time Python, not to a
-    vectorized Arrow stage whose inner loop is C. The JVM twin stays
-    parity-pinned (full-corpus equality tests) as the option for
-    clusters where Python workers are unavailable or metered.
-
-    The mapInArrow stage is itself measured 2.3x faster absolute than
-    the pandas-UDF channel on this exact stage (BENCH.md probe table:
-    7.8 s vs 17.8 s at 2 cores), because the fat binary html column
-    and the wide struct result never round-trip through pandas block
-    managers.
+    Measured 2.3x faster absolute than the pandas-UDF channel on this
+    exact stage (BENCH.md probe table: 7.8 s vs 17.8 s at 2 cores),
+    because the fat binary html column and the wide struct result never
+    round-trip through pandas block managers. A pure-Column twin was
+    ~2.6x slower at every core count (BENCH.md, round 4).
 
     Semantics: list pages (depth 0) run the
     link scan, detail pages run the JSON-LD enrichment + audit-blob
@@ -494,12 +219,6 @@ def extract_pages(df, html_col: str = "html", depth_col: str = "depth",
 
     Returns df's columns minus html, plus (_links, x, jsonld).
     """
-    import os
-
-    impl = impl or os.environ.get("CRAWLSPARK_EXTRACT_IMPL", "arrow")
-    if impl == "jvm":
-        return extract_pages_jvm(df, html_col, depth_col)
-
     import pyarrow as pa
     from pyspark.sql import types as T
     from pyspark.sql.pandas.types import to_arrow_type

@@ -12,7 +12,8 @@ enforced logically:
   priority order within the (host, class) group;
 - rows whose slot exceeds the class's tokens_per_wave are DEFERRED to
   the next wave (state='deferred');
-- robots disallow-prefix matches are DISALLOWED and never fetched.
+- urls the host's robots rules disallow (RFC 9309 longest match,
+  ``*`` and ``$`` patterns) are DISALLOWED and never fetched.
 
 Delay classes (P2): the reference runs list crawling and detail
 scraping as separate processes with separate delays (3 s lists,
@@ -47,25 +48,18 @@ DEFAULT_DETAIL_DELAY_MS = 5000  # reference detail default (scraper.go:29-32)
 
 
 def join_robots(frontier: DataFrame, robots: DataFrame) -> DataFrame:
-    """Broadcast-join the (tiny) robots table; flag disallowed urls (P4).
-
-    With an ``allow_prefixes`` column (parse_robots_txt output) the
-    full RFC 9309 longest-match evaluation applies; without it the
-    fixture-era disallow-prefix match is kept (backward-compatible)."""
+    """Broadcast-join the (tiny) robots table; flag disallowed urls (P4)
+    by the RFC 9309 longest-match evaluation (``robots_allows``). A
+    table without an ``allow_prefixes`` column has no Allow rules."""
     path = F.regexp_replace(F.col("url"), r"^https?://[^/]+", "")
     fr = frontier.join(F.broadcast(robots), "host", "left")
-    if "allow_prefixes" in robots.columns:
-        disallowed = F.when(
-            F.col("disallow_prefixes").isNotNull(),
-            ~robots_allows(path, F.col("disallow_prefixes"),
-                           F.coalesce(F.col("allow_prefixes"),
-                                      F.array().cast("array<string>")))
-        ).otherwise(F.lit(False))
-    else:
-        disallowed = F.when(
-            F.col("disallow_prefixes").isNotNull(),
-            F.exists("disallow_prefixes",
-                     lambda p: path.startswith(p))).otherwise(F.lit(False))
+    no_allow = F.array().cast("array<string>")
+    allow = (F.coalesce(F.col("allow_prefixes"), no_allow)
+             if "allow_prefixes" in robots.columns else no_allow)
+    disallowed = F.when(
+        F.col("disallow_prefixes").isNotNull(),
+        ~robots_allows(path, F.col("disallow_prefixes"), allow)
+    ).otherwise(F.lit(False))
     return fr.withColumn("_disallowed", disallowed)
 
 

@@ -1611,8 +1611,8 @@ ORDER BY cosine DESC, e.vec_id LIMIT 10
 
 def q_doc_simhash(spark, sf):
     """D5 simhash hashes, fully JVM-side (dedup.simhash64_frame: the
-    md5 bit-vote as explode + conv + 64 partial-agg sums — no Python
-    stage in the plan; the pUDF twin is the cross-checked fallback).
+    md5 bit-vote as one per-row higher-order-function projection — no
+    shuffle, no Python stage; simhash64_py is the cross-checked twin).
     The md5-based scheme was chosen so DuckDB replays it EXACTLY in
     SQL: per-token h = int(md5(tok)[:16],16), votes = sum(bit?+1:-1)
     per bit position, signed 64-bit reassembly."""

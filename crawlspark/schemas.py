@@ -84,7 +84,7 @@ LINEAGE_SCHEMA = T.StructType(
 )
 
 # ---------------------------------------------------------------------------
-# extracted — output struct of the one-DOM-parse-per-page extraction pUDF
+# extracted — output struct of the one-DOM-parse-per-page extraction stage
 # (reference raw_data keys written by enrichJobData,
 #  internal/module/vieclam24h/scraper.go:156-291)
 # ---------------------------------------------------------------------------

@@ -206,7 +206,17 @@ class SnapshotStore:
             "layout": layout,
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         })
+        # durable before visible: fsync the tmp file, swap, then fsync
+        # the directory so the rename itself survives a power loss
         tmp = self._manifest_path.with_suffix(".json.tmp")
-        tmp.write_text(json.dumps(manifest, indent=1))
+        with open(tmp, "w") as f:
+            f.write(json.dumps(manifest, indent=1))
+            f.flush()
+            os.fsync(f.fileno())
         os.replace(tmp, self._manifest_path)  # the atomic commit point
+        dir_fd = os.open(self.root, os.O_RDONLY)
+        try:
+            os.fsync(dir_fd)
+        finally:
+            os.close(dir_fd)
         return sid

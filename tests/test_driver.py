@@ -402,3 +402,37 @@ class TestObsGet:
         # fallback frame is wrong on purpose: metrics must win
         got = _obs_get(obs, ["n"], spark.range(99), [F.count("*").alias("n")])
         assert got == {"n": 5}
+
+
+class TestManifestDurability:
+    def test_manifest_fsynced_before_swap(self, tmp_path, monkeypatch):
+        """A power loss must never publish an empty or torn manifest:
+        the tmp file is fsynced with its full content BEFORE os.replace
+        makes it visible, and the directory is fsynced after."""
+        import os
+        import stat
+
+        events = []
+        real_fsync, real_replace = os.fsync, os.replace
+
+        def fsync(fd):
+            st = os.fstat(fd)
+            events.append(("fsync", stat.S_ISDIR(st.st_mode), st.st_ino,
+                           st.st_size))
+            real_fsync(fd)
+
+        def replace(src, dst):
+            events.append(("replace", os.stat(src).st_ino, str(dst)))
+            real_replace(src, dst)
+
+        monkeypatch.setattr(os, "fsync", fsync)
+        monkeypatch.setattr(os, "replace", replace)
+        store = SnapshotStore(tmp_path / "wh")
+        assert store.commit(wave=1, tables={}) == 1
+        manifest = tmp_path / "wh" / "_manifest.json"
+        assert [e[0] for e in events] == ["fsync", "replace", "fsync"]
+        (_, is_dir, ino, size), (_, src_ino, dst), (_, dir_after, _, _) = events
+        assert not is_dir and ino == src_ino  # the tmp file itself
+        assert size == manifest.stat().st_size  # with its full content
+        assert dst == str(manifest) and dir_after
+        assert store.latest()["sid"] == 1

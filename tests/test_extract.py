@@ -1,14 +1,13 @@
-"""Extraction tests: oracle semantics + Spark pUDF parity + the
-byte-identity invariant (BASELINE.json)."""
+"""Extraction tests: oracle semantics + parity of the mapInArrow
+stage with the oracle + the byte-identity invariant (BASELINE.json)."""
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import functions as F
 
 from crawlspark import synth
-from crawlspark.clean import clean_to_text, udfs as clean_udfs
+from crawlspark.clean import udfs as clean_udfs
 from crawlspark.extract import (extract_detail_fields, extract_jsonld_blobs,
-                                extract_links, udfs as extract_udfs)
+                                extract_links, extract_pages)
 
 
 def _page_html(i: int) -> str:
@@ -83,95 +82,78 @@ class TestOracle:
         assert all(l["item_id"] and l["item_updated"] for l in links)
 
 
+def _corpus(spark):
+    """The synth corpus at both depths: list pages (depth 0) and
+    detail pages (depth 1), keyed by url."""
+    pages = synth.gen_pages_pandas(600, seed=42)
+    df = (spark.createDataFrame(pages[["url", "html", "text"]])
+          .withColumn("depth", F.col("url").rlike(r"id\d+\.html$").cast("int")))
+    return pages, df
+
+
+def _plain(v):
+    """Row/list values from collect() as plain dicts and lists."""
+    if hasattr(v, "asDict"):
+        return {k: _plain(x) for k, x in v.asDict().items()}
+    if isinstance(v, list):
+        return [_plain(x) for x in v]
+    return v
+
+
 class TestSparkParity:
-    def test_struct_udf_matches_oracle(self, spark):
-        pages = synth.gen_pages_pandas(120, seed=42)
-        details = pages[pages["text"] != ""].head(40)
-        df = spark.createDataFrame(details[["url", "html"]])
-        ex_udf, _, _ = extract_udfs()
-        got = (df.withColumn("x", ex_udf(F.col("html").cast("string")))
-                 .select("url", "x.*").toPandas().set_index("url"))
-        for _, r in details.iterrows():
-            want = extract_detail_fields(r["html"].decode())
-            g = got.loc[r["url"]]
-            for k, v in want.items():
-                gv = g[k]
-                if isinstance(gv, np.ndarray):
-                    gv = list(gv)
-                if v is None:
-                    assert gv is None or (isinstance(gv, float) and pd.isna(gv)), (k, gv)
-                else:
-                    assert gv == v, (k, gv, v)
+    """extract_pages (the mapInArrow stage the wave runs) must equal
+    the Python oracle row for row over the synth corpus — every field,
+    both page depths, plus null/empty html."""
+
+    def test_detail_rows_match_oracle(self, spark):
+        pages, df = _corpus(spark)
+        html = {r.url: r.html.decode() for r in pages.itertuples()}
+        got = [r for r in extract_pages(df).collect() if r.depth == 1]
+        assert len(got) == (pages["text"] != "").sum() > 0
+        for r in got:
+            h = html[r.url]
+            assert _plain(r.x) == extract_detail_fields(h), r.url
+            assert r.jsonld == extract_jsonld_blobs(h), r.url
+            assert r._links is None, r.url
+
+    def test_list_rows_match_oracle(self, spark):
+        pages, df = _corpus(spark)
+        html = {r.url: r.html.decode() for r in pages.itertuples()}
+        got = [r for r in extract_pages(df).collect() if r.depth == 0]
+        assert len(got) == (pages["text"] == "").sum() > 0
+        for r in got:
+            assert _plain(r._links) == extract_links(html[r.url]), r.url
+            assert r.x is None and r.jsonld is None, r.url
+        links = [l for r in got for l in r._links]
+        assert links and all(l.item_id for l in links)
 
     def test_byte_identity_invariant(self, spark):
         """THE BASELINE.json gate: clean_to_text(extracted description)
         must equal the frozen golden pages.text, byte for byte."""
-        pages = synth.gen_pages_pandas(300, seed=42)
-        details = pages[pages["text"] != ""]
-        df = spark.createDataFrame(details[["url", "html", "text"]])
-        ex_udf, _, _ = extract_udfs()
+        pages, df = _corpus(spark)
         _, clean_to_text_udf, _ = clean_udfs()
-        out = (df.withColumn("x", ex_udf(F.col("html").cast("string")))
-                 .withColumn("extracted_text", clean_to_text_udf(F.col("x.job_description")))
-                 .select("url", "text", "extracted_text"))
-        mismatches = out.filter(F.col("text") != F.col("extracted_text")).count()
+        out = (extract_pages(df).filter(F.col("depth") == 1)
+               .withColumn("extracted_text",
+                           clean_to_text_udf(F.col("x.job_description")))
+               .select("url", "text", "extracted_text"))
+        mismatches = out.filter(
+            ~F.col("text").eqNullSafe(F.col("extracted_text"))).count()
         assert mismatches == 0
-        assert out.count() == len(details)
-
-    def test_links_udf(self, spark):
-        lists = synth.gen_list_chunk(150, seed=42)
-        df = spark.createDataFrame(lists[["url", "html"]])
-        _, links_udf, _ = extract_udfs()
-        exploded = (df.withColumn("link", F.explode(links_udf(F.col("html").cast("string"))))
-                      .select("url", "link.*"))
-        n = exploded.count()
-        assert n == 150
-        assert exploded.filter(F.col("item_id").isNull()).count() == 0
-
-
-class TestJvmParity:
-    """extract_pages_jvm (pure Column expressions) must equal the
-    Arrow/Python-oracle stage row for row over the full synthetic
-    corpus — every field, both page depths, plus null/empty html."""
-
-    def _both(self, spark, df):
-        from crawlspark.extract import extract_pages, extract_pages_jvm
-
-        sel = ["url", "depth", "_links", "x", "jsonld"]
-        a = extract_pages(df).select(*sel)
-        b = extract_pages_jvm(df).select(*sel)
-        return a, b
-
-    def test_full_corpus_equality(self, spark):
-        pages = synth.gen_pages_pandas(600, seed=42)
-        df = (spark.createDataFrame(pages[["url", "html"]])
-              .withColumn("depth",
-                          F.when(F.col("url").contains("/viec-lam/danh-sach"),
-                                 F.lit(0)).otherwise(F.lit(1))))
-        a, b = self._both(spark, df)
-        assert a.exceptAll(b).count() == 0
-        assert b.exceptAll(a).count() == 0
-        assert a.count() == len(pages)
+        assert out.count() == (pages["text"] != "").sum()
 
     def test_null_and_empty_html(self, spark):
         rows = [("u0", None, 0), ("u1", None, 1),
                 ("u2", b"", 0), ("u3", b"", 1),
                 ("u4", b"<p>no structures</p>", 1)]
         df = spark.createDataFrame(rows, "url string, html binary, depth int")
-        a, b = self._both(spark, df)
-        ra = {r.url: r.asDict() for r in a.collect()}
-        rb = {r.url: r.asDict() for r in b.collect()}
-        assert ra == rb
-        assert ra["u1"]["x"]["jsonld_count"] == 0
-        assert ra["u0"]["_links"] == []
-
-    def test_jvm_plan_has_no_python_stage(self, spark):
-        from crawlspark.extract import extract_pages_jvm
-
-        df = spark.createDataFrame([("u", b"<p></p>", 1)],
-                                   "url string, html binary, depth int")
-        plan = extract_pages_jvm(df)._jdf.queryExecution() \
-            .executedPlan().toString()
-        for marker in ("MapInArrow", "ArrowEvalPython", "BatchEvalPython",
-                       "FlatMapGroupsInPandas", "MapInPandas"):
-            assert marker not in plan, marker
+        got = {r.url: r for r in extract_pages(df).collect()}
+        for url, h, d in rows:
+            s = h.decode() if h is not None else None
+            if d == 0:
+                assert got[url]._links == extract_links(s) == []
+                assert got[url].x is None and got[url].jsonld is None
+            else:
+                assert _plain(got[url].x) == extract_detail_fields(s)
+                assert got[url].jsonld == extract_jsonld_blobs(s) == []
+                assert got[url]._links is None
+        assert got["u1"].x.jsonld_count == 0

@@ -165,13 +165,12 @@ class TestEndToEndNormalize:
         """extract -> normalize over the synth corpus; checks the joined
         pipeline produces the canonical job schema with sane values."""
         from crawlspark import synth
-        from crawlspark.extract import udfs as extract_udfs
+        from crawlspark.extract import extract_pages
 
         pages = synth.gen_pages_pandas(200, seed=42)
         details = pages[pages["text"] != ""]
         df = spark.createDataFrame(details[["url", "warc_ts", "html"]])
-        ex_udf, _, _ = extract_udfs()
-        staged = (df.withColumn("x", ex_udf(F.col("html").cast("string")))
+        staged = (extract_pages(df.withColumn("depth", F.lit(1)))
                     .withColumn("id", F.regexp_extract("url", r"id(\d+)\.html$", 1))
                     .withColumn("source", F.lit("vieclam24h"))
                     .withColumn("item_title", F.col("x.title"))

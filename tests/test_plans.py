@@ -60,38 +60,7 @@ class TestAggregation:
 
 
 class TestCrawlPipeline:
-    def test_html_never_crosses_a_shuffle(self, spark):
-        """The engine invariant: extraction consumes html straight off
-        the scan (broadcast join), so no Exchange carries html bytes."""
-        from crawlspark import synth
-        from crawlspark.extract import udfs as extract_udfs
-
-        pages = spark.createDataFrame(synth.gen_pages_pandas(50))
-        urls = pages.select("url")
-        ex_udf, _, _ = extract_udfs()
-        fetched = (pages.select("url", F.col("html").cast("string").alias("h"))
-                   .join(F.broadcast(urls), "url", "inner")
-                   .withColumn("x", ex_udf(F.col("h"))).drop("h")
-                   .select("url", "x.title"))
-        plan = plan_of(fetched)
-        # every Exchange in the plan must not carry the html column
-        for chunk in plan.split("Exchange")[1:]:
-            first_line = chunk.splitlines()[0]
-            assert "html" not in first_line and " h#" not in first_line
-
-    def test_extraction_is_single_python_stage(self, spark):
-        from crawlspark import synth
-        from crawlspark.extract import udfs as extract_udfs
-
-        pages = spark.createDataFrame(synth.gen_pages_pandas(50))
-        ex_udf, _, _ = extract_udfs()
-        df = (pages.withColumn("x", ex_udf(F.col("html").cast("string")))
-              .select("url", "x.job_description"))
-        plan = plan_of(df)
-        assert plan.count("ArrowEvalPython") == 1
-        assert "Exchange" not in plan  # narrow end to end
-
-    def _extraction_plan(self, spark, impl):
+    def _extraction_plan(self, spark):
         from crawlspark import synth
         from crawlspark.extract import extract_pages
 
@@ -101,33 +70,38 @@ class TestCrawlPipeline:
                       .withColumn("page", F.lit(1)))
         df = (extract_pages(
             pages.select("url", "html", F.col("warc_ts").alias("_warc_ts"))
-                 .join(F.broadcast(fetch_cols), "url", "inner"), impl=impl)
+                 .join(F.broadcast(fetch_cols), "url", "inner"))
             .select("url", "depth", "page", "x", "jsonld"))
         return plan_of(df)
 
-    def test_jvm_extraction_twin_is_pure_jvm(self, spark):
-        """The round-4 JVM twin (opt-in; measured slower than the
-        Arrow stage on this box, see extract.py): NO Python stage of
-        any kind, html consumed in-stage and never in an Exchange."""
-        plan = self._extraction_plan(spark, "jvm")
-        for marker in ("MapInArrow", "ArrowEvalPython", "BatchEvalPython",
-                       "FlatMapGroupsInPandas", "MapInPandas"):
-            assert marker not in plan, marker
+    def test_html_never_crosses_a_shuffle(self, spark):
+        """The engine invariant: extraction consumes html straight off
+        the scan (broadcast join), so no Exchange carries html bytes."""
+        plan = self._extraction_plan(spark)
         assert "BroadcastHashJoin" in plan
+        # every Exchange in the plan must not carry the html column
         for chunk in plan.split("Exchange")[1:]:
             assert "html" not in chunk.splitlines()[0]
 
+    def test_extraction_is_single_python_stage(self, spark):
+        from crawlspark import synth
+        from crawlspark.extract import extract_pages
+
+        pages = spark.createDataFrame(synth.gen_pages_pandas(50))
+        df = (extract_pages(pages.withColumn("depth", F.lit(1)))
+              .select("url", "x.job_description"))
+        plan = plan_of(df)
+        assert plan.count("MapInArrow") == 1
+        assert "ArrowEvalPython" not in plan
+        assert "Exchange" not in plan  # narrow end to end
+
     def test_arrow_extraction_is_one_maparrow_stage(self, spark):
-        """The DEFAULT (driver hot path) keeps its round-3 shape: ONE
-        pandas-free MapInArrow stage, no second Python stage, html
-        never shuffled."""
-        plan = self._extraction_plan(spark, "arrow")
+        """The driver hot path keeps its round-3 shape: ONE pandas-free
+        MapInArrow stage and no second Python stage."""
+        plan = self._extraction_plan(spark)
         assert plan.count("MapInArrow") == 1
         assert "ArrowEvalPython" not in plan
         assert "FlatMapGroupsInPandas" not in plan
-        assert "BroadcastHashJoin" in plan
-        for chunk in plan.split("Exchange")[1:]:
-            assert "html" not in chunk.splitlines()[0]
 
     def test_dedup_classify_never_exchanges_seen(self, spark, tmp_path):
         """The 100 TB invariant: classify streams the seen side — no

@@ -16,19 +16,29 @@ def _frontier(spark, rows):
 
 def test_unknown_host_gets_defaults(spark):
     """A host absent from robots schedules with the reference default
-    delay (3000 ms) and an unbounded budget (crawler.go:40-42)."""
+    delay (3000 ms) and an unbounded budget (crawler.go:40-42). A
+    robots table without an allow_prefixes column still matches its
+    disallow rules per RFC 9309 ('*' and '$'), not as literal prefixes."""
     fr = _frontier(spark, [
         (f"https://x.vn/{i}", "x.vn", "s", str(i), None, 0, 0, 0, i,
-         0.0, "pending", 0) for i in range(3)])
+         0.0, "pending", 0) for i in range(3)] + [
+        (f"https://p.vn{p}", "p.vn", "s", p, None, 0, 0, 0, i,
+         0.0, "pending", 0) for i, p in enumerate(
+            ["/index.php", "/search", "/search/results"])])
     robots = spark.createDataFrame(
-        [("other.vn", 9999, None, 1)],
+        [("other.vn", 9999, None, 1), ("p.vn", 3000, ["/*.php", "/search$"], 9)],
         "host string, crawl_delay_ms int, disallow_prefixes array<string>, "
         "tokens_per_wave int")
     out = {r["id"]: r for r in
            politeness.schedule(fr, robots, "2026-01-01 00:00:00").collect()}
-    assert all(r["state"] == "scheduled" for r in out.values())
-    epochs = sorted(int(r["scheduled_ts"].timestamp()) for r in out.values())
+    x = [out[str(i)] for i in range(3)]
+    assert all(r["state"] == "scheduled" for r in x)
+    epochs = sorted(int(r["scheduled_ts"].timestamp()) for r in x)
     assert epochs[1] - epochs[0] == 3 and epochs[2] - epochs[1] == 3  # 3000ms
+    assert {p: out[p]["state"] for p in
+            ["/index.php", "/search", "/search/results"]} == {
+        "/index.php": "disallowed", "/search": "disallowed",
+        "/search/results": "scheduled"}
 
 
 def test_detail_class_spacing_and_budget(spark):
