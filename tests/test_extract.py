@@ -105,7 +105,9 @@ class TestSparkParity:
     the Python oracle row for row over the synth corpus — every field,
     both page depths, plus null/empty html."""
 
-    def test_detail_rows_match_oracle(self, spark):
+    def test_struct_udf_matches_oracle(self, spark):
+        """Detail rows: the extracted struct, the audit blobs and the
+        absent link list equal the oracle, field by field."""
         pages, df = _corpus(spark)
         html = {r.url: r.html.decode() for r in pages.itertuples()}
         got = [r for r in extract_pages(df).collect() if r.depth == 1]
@@ -157,3 +159,26 @@ class TestSparkParity:
                 assert got[url].jsonld == extract_jsonld_blobs(s) == []
                 assert got[url]._links is None
         assert got["u1"].x.jsonld_count == 0
+
+
+class TestJvmParity:
+    """What the JVM holds after the Arrow round trip must equal the
+    oracle run on the driver, as whole frames: the full synth corpus at
+    both depths, no row dropped, duplicated or altered in transit."""
+
+    def test_full_corpus_equality(self, spark):
+        pages, df = _corpus(spark)
+        sel = ["url", "depth", "_links", "x", "jsonld"]
+        got = extract_pages(df).select(*sel)
+        want_rows = []
+        for r in df.select("url", "html", "depth").collect():
+            h = r.html.decode()
+            if r.depth == 0:
+                want_rows.append((r.url, 0, extract_links(h), None, None))
+            else:
+                want_rows.append((r.url, 1, None, extract_detail_fields(h),
+                                  extract_jsonld_blobs(h)))
+        want = spark.createDataFrame(want_rows, got.schema)
+        assert got.exceptAll(want).count() == 0
+        assert want.exceptAll(got).count() == 0
+        assert got.count() == len(pages)
