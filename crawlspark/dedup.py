@@ -73,61 +73,45 @@ def classify(candidates: DataFrame, seen: DataFrame,
 
     SHUFFLE SHAPE (the 100 TB invariant): candidates is the wave-
     bounded side, seen is the 10^10-key state side. A plain left join
-    would hash-exchange the ENTIRE seen table every wave. Instead the
-    left join is decomposed so seen only ever STREAMS (column-pruned
-    scan, zero exchange):
-      hit_vals = seen ⋈ broadcast(candidate KEYS)   (inner, streamed)
-      hits = candidates ⋈ broadcast(hit_vals)        (status compare)
-      news = candidates ▷ broadcast(hit_vals keys)   (anti)
-    Only (source, id[, last_updated_on]) triples are ever broadcast —
-    never full candidate rows (a list-heavy wave's payload columns
-    would press the 8 GB broadcast hard limit; ADVICE r3) — and the
-    candidate frame itself never shuffles either. Seen is scanned
-    once per materializing branch, but pruned columnar scans beat a
-    full-table shuffle write+read at any scale where seen >> wave.
+    would hash-exchange the ENTIRE seen table every wave. Instead seen
+    only ever STREAMS (column-pruned scan, zero exchange), probed ONCE:
+      hit_vals = seen ⋉ broadcast(candidate KEYS)      (semi, streamed)
+      out      = candidates ⟕ broadcast(hit_vals)     (status compare)
+    A semi join never fans out on duplicate build keys, so the key set
+    needs no distinct (no shuffle), and seen is unique per key, so
+    hit_vals holds <=1 row per candidate key. Only (source, id[,
+    last_updated_on]) triples are ever broadcast — never full candidate
+    rows (a list-heavy wave's payload columns would press the 8 GB
+    broadcast hard limit; ADVICE r3) — and the candidate frame itself
+    never shuffles either.
 
     broadcast=False is the escape hatch for a wave whose KEY SET
-    alone outgrows the driver: one plain left join (both sides
+    alone outgrows the driver: the same left join unhinted (both sides
     hash-exchange; seen pays a full shuffle) with identical output —
     degradation, not failure.
 
     NULL semantics match the reference's Redis string compare: presence
-    is the inner-join match itself (a stored NULL value is still
-    *seen*), and value comparison is null-safe — candidate NULL vs
-    stored non-NULL (or vice versa) is UPDATED, NULL vs NULL is
-    UNCHANGED (deduplicator.go:60-66: the Redis GET distinguishes
-    key-missing from empty-value).
+    is the join match itself (a stored NULL value is still *seen*), and
+    value comparison is null-safe — candidate NULL vs stored non-NULL
+    (or vice versa) is UPDATED, NULL vs NULL is UNCHANGED
+    (deduplicator.go:60-66: the Redis GET distinguishes key-missing
+    from empty-value).
     """
-    out_cols = list(candidates.columns) + ["status"]
     s = (seen_live(seen, now)
          .select("source", "id", F.col("last_updated_on").alias("_seen_val")))
-    if not broadcast:
-        joined = candidates.join(
-            s.withColumn("_seen", F.lit(True)), ["source", "id"], "left")
-        return joined.withColumn(
-            "status",
-            F.when(F.col("_seen").isNull(), F.lit(STATUS_NEW))
-            .when(~F.col("_seen_val").eqNullSafe(F.col("last_updated_on")),
-                  F.lit(STATUS_UPDATED))
-            .otherwise(F.lit(STATUS_UNCHANGED))).select(*out_cols)
-    # distinct: duplicate candidate keys must not fan out the
-    # candidates ⋈ hit_vals join (seen is unique per key, so distinct
-    # keys keep hit_vals at <=1 row per key)
-    keys = candidates.select("source", "id").distinct()
-    hit_vals = s.join(F.broadcast(keys), ["source", "id"], "inner")
-    hits = (candidates.join(F.broadcast(hit_vals), ["source", "id"], "inner")
-            .withColumn(
-                "status",
-                F.when(~F.col("_seen_val").eqNullSafe(F.col("last_updated_on")),
-                       F.lit(STATUS_UPDATED))
-                .otherwise(F.lit(STATUS_UNCHANGED)))
-            .select(*out_cols))
-    news = (candidates
-            .join(F.broadcast(hit_vals.select("source", "id")),
-                  ["source", "id"], "left_anti")
-            .withColumn("status", F.lit(STATUS_NEW))
-            .select(*out_cols))
-    return hits.unionByName(news)
+    if broadcast:
+        s = s.join(F.broadcast(candidates.select("source", "id")),
+                   ["source", "id"], "left_semi")
+    s = s.withColumn("_seen", F.lit(True))
+    joined = candidates.join(F.broadcast(s) if broadcast else s,
+                             ["source", "id"], "left")
+    return joined.withColumn(
+        "status",
+        F.when(F.col("_seen").isNull(), F.lit(STATUS_NEW))
+        .when(~F.col("_seen_val").eqNullSafe(F.col("last_updated_on")),
+              F.lit(STATUS_UPDATED))
+        .otherwise(F.lit(STATUS_UNCHANGED))
+    ).select(*candidates.columns, "status")
 
 
 def expires_at_expr(expired_on: Column, now: Column | None = None,

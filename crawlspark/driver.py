@@ -43,14 +43,15 @@ Scale notes:
   by url hash (storage-layer config); plan shape is identical.
 - html stays BINARY end-to-end and is dropped inside the same stage
   that extracts from it; nothing html-bearing is ever persisted.
-- exactly TWO driver-side actions per wave: narrow counts that fill
-  the extraction and classify caches (serializing the Python stage so
-  concurrent commit writes cannot duplicate it). Every wave stat rides
-  Observation metrics attached to frames those jobs and the commit
-  writes materialize anyway — no dedicated counter job (the round-1
-  serial floor of ~11 .count() actions, then round-2's one 9-branch
-  union job, are both gone); loop control is exact arithmetic over
-  the stats, never a frontier re-read.
+- ONE driver-side action per wave before the commit: a count of the
+  classify cache, which fills the extraction and schedule caches
+  beneath it (serializing the Python stage so the commit's concurrent
+  writes cannot duplicate it). Every wave stat rides Observation
+  metrics attached to frames that job and the commit writes
+  materialize anyway — no dedicated counter job (the round-1 serial
+  floor of ~11 .count() actions, then round-2's one 9-branch union
+  job, are both gone); loop control is exact arithmetic over the
+  stats, never a frontier re-read.
 """
 
 from __future__ import annotations
@@ -163,9 +164,11 @@ class WaveDriver:
         The base (bootstrap or last compaction) is already one row per
         key, and every delta is too (per-wave dedup), so ONLY the delta
         chain is window-resolved; the base streams through a broadcast
-        anti join against the resolved delta keys. The per-wave read
-        therefore exchanges O(delta-chain) rows, never O(total state) —
-        the round-2 scheme's full-table `row_number() OVER (source,id)`
+        anti join against the RAW delta keys (a key changed in several
+        waves repeats, but an anti join does not fan out on duplicate
+        build keys, so no distinct). The window is the read's ONE hash
+        exchange: O(delta-chain) rows, never O(total state) — the
+        round-2 scheme's full-table `row_number() OVER (source,id)`
         shuffle+sort is gone. Delta waves always carry a higher `_wseq`
         than the base they follow, so delta-wins is exact. The broadcast
         of delta keys is bounded by compact_every waves of changes
@@ -180,11 +183,8 @@ class WaveDriver:
         w = Window.partitionBy(*keys).orderBy(F.col("_wseq").desc())
         dres = (deltas.withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") == 1).drop("_rn"))
-        # membership only — distinct over the raw deltas (map-side
-        # combined) instead of re-running the window subtree under the
-        # broadcast
-        dkeys = deltas.select(*keys).distinct()
-        survivors = base.join(F.broadcast(dkeys), keys, "left_anti")
+        survivors = base.join(F.broadcast(deltas.select(*keys)), keys,
+                              "left_anti")
         return dres.unionByName(survivors)
 
     def frontier_view(self) -> DataFrame | None:
@@ -245,6 +245,10 @@ class WaveDriver:
     # -- one wave -----------------------------------------------------------
     def run_wave(self, pages: DataFrame, robots: DataFrame,
                  host_rank: DataFrame) -> dict:
+        """Run one wave and commit it as one snapshot; returns its stats.
+        The committed lineage ``wall_ms`` is the wave's wall time up to
+        the commit and excludes the commit's writes; ``stats["wall_ms"]``
+        covers the whole call (commit and any compaction included)."""
         t0 = time.time()
         spark = self.spark
         wave = self.store.latest_wave() + 1
@@ -288,8 +292,7 @@ class WaveDriver:
         # shuffle. html stays binary; the combined mapInArrow page stage
         # (pandas-free — 2.3x faster measured, BENCH.md) decodes per
         # Arrow batch and html is dropped inside the same stage, so the
-        # wave-long cache holds only extracted columns. Unfetchable urls
-        # (P8 retry) come from an anti join reading ONLY pages.url.
+        # wave-long cache holds only extracted columns.
         fetch_cols = to_fetch.select("url", "depth", "page", "id", "last_updated_on")
         obs_fetch = Observation()
         fetch_metrics = [F.count(F.lit(1)).alias("fetched")]
@@ -302,19 +305,21 @@ class WaveDriver:
             .persist())
         # P8 retry: missing urls return to the pending pool with
         # attempts+1 (state left 'scheduled' would orphan them forever;
-        # the pending filter caps at max_retries).
-        # persisted: consumed by the frontier delta and observed for the
-        # retry stats — one column-pruned pages.url scan, zero extra jobs
+        # the pending filter caps at max_retries). extract_pages is 1:1
+        # over pages ⋈ fetch_cols, so the cached processed.url IS the
+        # fetched set: missing and fetched rows split to_fetch on it
+        # (one broadcast, reused by both joins) — pages is never scanned
+        # again for them.
+        got = F.broadcast(processed.select("url"))
         obs_missing = Observation()
         missing_metrics = [
             F.count(F.lit(1)).alias("missing"),
             F.count(F.when(F.col("attempts") < self.max_retries, 1))
             .alias("missing_retryable")]
-        missing = (to_fetch.join(pages.select("url"), "url", "left_anti")
+        missing = (to_fetch.join(got, "url", "left_anti")
                    .withColumn("attempts", F.col("attempts") + 1)
                    .withColumn("state", F.lit("pending"))
-                   .observe(obs_missing, *missing_metrics)
-                   .persist())
+                   .observe(obs_missing, *missing_metrics))
 
         # ---- list pages -> frontier candidates (S5 + D1/D2) --------------
         links = (processed.filter(F.col("depth") == 0)
@@ -395,7 +400,7 @@ class WaveDriver:
                                F.posexplode("jsonld").alias("blob_index", "blob"))
 
         # ---- frontier delta (O(changed rows), never a rewrite) -----------
-        fetched_rows = (to_fetch.join(missing.select("url"), "url", "left_anti")
+        fetched_rows = (to_fetch.join(got, "url", "left_semi")
                         .withColumn("state", F.lit("fetched")))
         state_changes = (fetched_rows.select(*_FRONTIER_COLS)
                          .unionByName(missing.select(*_FRONTIER_COLS))
@@ -416,24 +421,7 @@ class WaveDriver:
                           .filter(F.col("_rn") == 1).drop("_rn", "_pri")
                           .withColumn("_wseq", F.lit(wave)))
 
-        # ---- lineage (per-partition metrics, north_rule) ------------------
-        pid = F.spark_partition_id().alias("partition_id")
-        fetch_counts = processed.groupBy(pid).agg(F.count("*").alias("urls_fetched"))
-        cls_counts = (classified.groupBy(pid).agg(
-            F.count(F.when(F.col("status") == D.STATUS_NEW, 1)).alias("new"),
-            F.count(F.when(F.col("status") == D.STATUS_UPDATED, 1)).alias("updated"),
-            F.count(F.when(F.col("status") == D.STATUS_UNCHANGED, 1)).alias("unchanged"),
-        ).withColumn("dedup_hits", F.col("unchanged")))
-        wall_ms = int((time.time() - t0) * 1000)
-        lineage_new = (fetch_counts.join(cls_counts, "partition_id", "full_outer")
-                       .na.fill(0)
-                       .withColumn("wave", F.lit(wave))
-                       .withColumn("wall_ms", F.lit(wall_ms))
-                       .withColumn("committed_at", F.current_timestamp())
-                       .select("wave", "partition_id", "urls_fetched", "dedup_hits",
-                               "new", "updated", "unchanged", "wall_ms", "committed_at"))
-
-        # ---- driver-side actions (two, both doing real work) --------------
+        # ---- the driver-side action (one per wave, before the commit) -----
         # Wave stats are Observation metrics riding jobs the wave runs
         # anyway — the round-2 dedicated 9-branch counter job (pure
         # task-scheduling overhead, ~5 s/crawl measured) is gone. Loop
@@ -470,6 +458,23 @@ class WaveDriver:
             blooms_out = (D.merge_blooms(blooms_prev, delta_blooms)
                           if blooms_prev is not None else delta_blooms)
         tables = {"blooms": blooms_out} if blooms_out is not None else {}
+
+        # ---- lineage (per-partition metrics, north_rule) ------------------
+        # ONE aggregate over both cached frames: each union branch tags
+        # its rows with its own partition id (fetched rows carry a null
+        # status). wall_ms is the wave up to here — every job but the
+        # commit's writes.
+        pid = F.spark_partition_id().alias("partition_id")
+        tagged = (processed.select(pid, F.lit(None).cast("string").alias("status"))
+                  .unionByName(classified.select(pid, "status")))
+        wall_ms = int((time.time() - t0) * 1000)
+        lineage_new = tagged.groupBy("partition_id").agg(
+            F.count(F.when(F.col("status").isNull(), 1)).alias("urls_fetched"),
+            *cls_metrics
+        ).select(F.lit(wave).alias("wave"), "partition_id", "urls_fetched",
+                 F.col("unchanged").alias("dedup_hits"), "new", "updated",
+                 "unchanged", F.lit(wall_ms).alias("wall_ms"),
+                 F.current_timestamp().alias("committed_at"))
         self.store.commit(
             wave,
             tables,
@@ -480,7 +485,7 @@ class WaveDriver:
             # only the fat tables pay a file-sizing shuffle; control
             # tables write with natural partitioning.
             repartition_tables={"jobs", "extracted"})
-        # sched/missing observations filled during action 1 / the
+        # sched/missing observations filled during the count / the
         # frontier-delta write respectively — read after commit
         counted.update(_obs_get(obs_sched, ["deferred", "disallowed"],
                                 sched, sched_metrics))
@@ -496,7 +501,6 @@ class WaveDriver:
         sched.unpersist()
         processed.unpersist()
         classified.unpersist()
-        missing.unpersist()
         if bloom_cand is not None:
             bloom_cand.unpersist()
         if self.compact_every and wave % self.compact_every == 0:

@@ -26,6 +26,12 @@ own parquet write (submitted concurrently), and a read is a plain
 parquet union of the table's directories. A snapshot records ``sid``,
 ``wave``, ``tables``, ``layout`` and ``committed_at``; readers ignore
 any other key (older manifests carry an empty ``select`` map).
+
+Schemas live in the manifest, as Iceberg keeps them in table metadata:
+a top-level ``schemas`` map holds each table's schema as of its latest
+write, and reads apply it, so a read runs no schema-inference job and
+an empty partitioned write (no footer-bearing file) still reads. A
+manifest without ``schemas`` falls back to inference.
 """
 
 from __future__ import annotations
@@ -62,12 +68,15 @@ class SnapshotStore:
         return None if s is None else s["wave"]
 
     # -- read -------------------------------------------------------------
-    def _entry(self, table: str, snapshot_id: int | None = None):
-        """(paths, base_partition_cols) for a table at a snapshot, or
-        None. paths[0] is the base (last overwrite); the rest are the
-        append deltas committed since, oldest first. An unknown
+    def _entry(self, spark: SparkSession, table: str,
+               snapshot_id: int | None = None):
+        """(paths, base_partition_cols, reader) for a table at a
+        snapshot, or None. paths[0] is the base (last overwrite); the
+        rest are the append deltas committed since, oldest first. The
+        reader carries the manifest schema when there is one. An unknown
         snapshot_id raises KeyError — never mistaken for "table absent"."""
-        snaps = self.snapshots()
+        manifest = self._read_manifest()
+        snaps = manifest["snapshots"]
         if snapshot_id is not None:
             snaps = [s for s in snaps if s["sid"] == snapshot_id]
             if not snaps:
@@ -77,7 +86,11 @@ class SnapshotStore:
                 entry = s["tables"][table]
                 paths = entry if isinstance(entry, list) else [entry]
                 part = s.get("layout", {}).get(table, [])
-                return [str(self.root / p) for p in paths], part
+                schema = manifest.get("schemas", {}).get(table)
+                reader = spark.read
+                if schema is not None:
+                    reader = reader.schema(schema)
+                return [str(self.root / p) for p in paths], part, reader
         return None
 
     def read(self, spark: SparkSession, table: str,
@@ -91,15 +104,15 @@ class SnapshotStore:
         base (e.g. seen bucketed by salt) is read separately from the
         flat deltas and unioned by name.
         """
-        got = self._entry(table, snapshot_id)
+        got = self._entry(spark, table, snapshot_id)
         if got is None:
             return None
-        paths, part = got
+        paths, part, reader = got
         if len(paths) == 1 or not part:
-            return spark.read.parquet(*paths)
-        deltas = spark.read.parquet(*paths[1:])
+            return reader.parquet(*paths)
+        deltas = reader.parquet(*paths[1:])
         return deltas.unionByName(
-            spark.read.parquet(paths[0]).select(*deltas.columns))
+            reader.parquet(paths[0]).select(*deltas.columns))
 
     def read_split(self, spark: SparkSession, table: str,
                    snapshot_id: int | None = None
@@ -111,14 +124,14 @@ class SnapshotStore:
         ONLY the deltas and anti-join the base — the read-side exchange
         is O(delta chain), never O(total state) (Iceberg MoR analogue;
         the delta chain is bounded by compact_every)."""
-        got = self._entry(table, snapshot_id)
+        got = self._entry(spark, table, snapshot_id)
         if got is None:
             return None, None
-        paths, _ = got
-        base = spark.read.parquet(paths[0])
+        paths, _, reader = got
+        base = reader.parquet(paths[0])
         if len(paths) == 1:
             return base, None
-        deltas = spark.read.parquet(*paths[1:])
+        deltas = reader.parquet(*paths[1:])
         return base.select(*deltas.columns), deltas
 
     # -- commit -----------------------------------------------------------
@@ -164,13 +177,6 @@ class SnapshotStore:
             for col in part_cols:
                 writer = writer.partitionBy(col)
             writer.parquet(str(self.root / rel))
-            if part_cols and not any((self.root / rel).rglob("*.parquet")):
-                # an EMPTY partitioned write leaves no schema-bearing
-                # file (partition dirs only exist per value) — rewrite
-                # flat so the dir stays readable (Iceberg keeps schema
-                # in metadata; plain parquet needs a footer)
-                df.limit(0).write.mode("overwrite").parquet(str(self.root / rel))
-                part_cols = []
             return name, rel, part_cols
 
         appends = appends or {}
@@ -188,6 +194,8 @@ class SnapshotStore:
         from concurrent.futures import ThreadPoolExecutor
 
         all_items = list(tables.items()) + list(appends.items())
+        manifest.setdefault("schemas", {}).update(
+            (name, df.schema.toDDL()) for name, df in all_items)
         with ThreadPoolExecutor(max_workers=max(1, len(all_items))) as pool:
             for name, rel, part_cols in pool.map(_write, all_items):
                 if name in appends:

@@ -33,6 +33,17 @@ def crawl_all(w, max_waves=6):
     return w["drv"].run_until_done(w["pages"], w["robots"], w["ranks"], max_waves)
 
 
+def state_hashes(spark, drv):
+    """Content hashes of the RESOLVED views (the observable state of the
+    O(delta) commit scheme) and the append-only output tables."""
+    return {
+        "frontier": table_hash(drv.frontier_view()),
+        "seen": table_hash(drv.seen_view()),
+        "jobs": table_hash(drv.store.read(spark, "jobs")),
+        "extracted": table_hash(drv.store.read(spark, "extracted")),
+    }
+
+
 @contextmanager
 def shuffle_parallelism(spark, n):
     """Run the block at `n` real shuffle partitions: AQE coalescing is
@@ -127,18 +138,8 @@ class TestResume:
     def test_kill_resume_bit_identical(self, spark, tmp_path, world):
         """north_rule P10: kill after wave k; resume produces the same
         frontier/seen/jobs as the uninterrupted run."""
-        # uninterrupted run in store A (hashes over the RESOLVED views —
-        # the observable state of the O(delta) commit scheme)
-        def state_hashes(drv):
-            return {
-                "frontier": table_hash(drv.frontier_view()),
-                "seen": table_hash(drv.seen_view()),
-                "jobs": table_hash(drv.store.read(spark, "jobs")),
-                "extracted": table_hash(drv.store.read(spark, "extracted")),
-            }
-
-        crawl_all(world)
-        hA = state_hashes(world["drv"])
+        crawl_all(world)  # uninterrupted run in store A
+        hA = state_hashes(spark, world["drv"])
 
         # interrupted run in store B: wave 1, "crash", new driver resumes
         storeB = SnapshotStore(tmp_path / "whB")
@@ -151,7 +152,7 @@ class TestResume:
         (orphan / "part-zzz.parquet").write_bytes(b"garbage")
         drvB2 = WaveDriver(spark, SnapshotStore(storeB.root), num_partitions=4)
         drvB2.run_until_done(world["pages"], world["robots"], world["ranks"], 6)
-        hB = state_hashes(drvB2)
+        hB = state_hashes(spark, drvB2)
         assert hA == hB
 
     def test_time_travel(self, spark, world):
@@ -204,6 +205,30 @@ class TestResume:
             assert set(snap) == {"sid", "wave", "tables", "layout",
                                  "committed_at"}
 
+    def test_resume_without_manifest_schemas(self, spark, tmp_path, world):
+        """A warehouse whose manifest carries no `schemas` map reads by
+        schema inference and resumes bit-identical to an uninterrupted
+        run; the next commit records the schemas of what it writes."""
+        crawl_all(world)
+        hA = state_hashes(spark, world["drv"])
+
+        storeB = SnapshotStore(tmp_path / "whNoSchemas")
+        drvB = WaveDriver(spark, storeB, num_partitions=4)
+        drvB.bootstrap(world["seeds"])
+        drvB.run_wave(world["pages"], world["robots"], world["ranks"])
+        manifest = json.loads(storeB._manifest_path.read_text())
+        assert set(manifest.pop("schemas")) >= {"frontier", "seen", "jobs"}
+        storeB._manifest_path.write_text(json.dumps(manifest, indent=1))
+        assert storeB.read(spark, "frontier").count() > 0
+
+        drvB2 = WaveDriver(spark, SnapshotStore(storeB.root), num_partitions=4)
+        drvB2.run_until_done(world["pages"], world["robots"], world["ranks"], 6)
+        assert state_hashes(spark, drvB2) == hA
+        schemas = json.loads(storeB._manifest_path.read_text())["schemas"]
+        assert {"frontier", "seen", "jobs", "extracted"} <= set(schemas)
+        for snap in drvB2.store.snapshots():
+            assert "schemas" not in snap  # top level only
+
 
 class TestParallelismInvariance:
     def test_same_state_at_different_parallelism(self, spark, tmp_path, world):
@@ -248,6 +273,52 @@ class TestDeltaState:
                           & (F.col("attempts") >= drv.max_retries)))
         assert parked.count() > 0
         assert drv.pending_count() == 0  # capped rows leave the pool
+
+    def test_missing_urls_match_pages_anti_join(self, spark, world):
+        """The missing set comes from the fetch cache, not a pages.url
+        scan: per wave, the `missing`/`missing_retryable` stats and the
+        re-pended frontier rows must equal what an anti join of the
+        scheduled urls against pages.url gives — also when pages holds
+        two captures of one url."""
+        pages = world["pages"]
+        lists = sorted(r["url"] for r in pages.filter(
+            F.col("url").contains("/viec-lam-")).select("url").collect())
+        dup = pages.filter(F.col("url").rlike(r"id15\.html$"))
+        assert dup.count() == 1
+        pages = (pages.filter(~F.col("url").rlike(r"3\.html$")
+                              & (F.col("url") != lists[0]))
+                 .unionByName(dup.withColumn(
+                     "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 HOUR"))))
+        page_urls = [r["url"] for r in pages.select("url").collect()]
+        captures = {u: page_urls.count(u) for u in set(page_urls)}
+        drv = world["drv"]
+        total_missing = 0
+        for _ in range(8):
+            before = {r["url"]: r["attempts"] for r in drv.frontier_view()
+                      .filter(drv._pending()).collect()}
+            if not before:
+                break
+            stats = drv.run_wave(pages, world["robots"], world["ranks"])
+            after = {r["url"]: (r["state"], r["attempts"])
+                     for r in drv.frontier_view().collect()}
+            # scheduled = every pending row that neither stayed deferred
+            # (unchanged) nor was disallowed
+            scheduled = {u for u, a in before.items()
+                         if after[u] != ("pending", a)
+                         and after[u][0] != "disallowed"}
+            missing = {u for u in scheduled if u not in captures}
+            assert stats["missing"] == len(missing)
+            assert stats["missing_retryable"] == sum(
+                before[u] + 1 < drv.max_retries for u in missing)
+            assert stats["fetched"] == sum(
+                captures.get(u, 0) for u in scheduled)
+            for u in scheduled:
+                want = (("pending", before[u] + 1) if u in missing
+                        else ("fetched", before[u]))
+                assert after[u] == want, u
+            total_missing += len(missing)
+        assert total_missing > drv.max_retries  # the list page and details
+        assert after[dup.first()["url"]][0] == "fetched"
 
     def test_zero_budget_wave_stops_loop(self, spark, world):
         """Starvation guard: a wave that only defers (zero tokens) is
@@ -326,6 +397,43 @@ class TestDeltaState:
         assert left == {"alive"}  # expired row physically gone
         raw = store.read(spark, "seen")
         assert raw.filter(F.col("id") == "dead").count() == 0
+
+    def test_compaction_of_all_expired_seen_reads_back_and_resumes(
+            self, spark, world):
+        """Every seen row expired: compaction writes an EMPTY
+        salt-partitioned seen base (no parquet file a reader could infer
+        a schema from). It reads back through the manifest schema and
+        the crawl resumes on it."""
+        import pandas as pd
+        from crawlspark.schemas import SEEN_SCHEMA
+
+        store, drv = world["store"], world["drv"]
+        rows = pd.DataFrame({
+            "source": ["s"] * 3, "id": ["d0", "d1", "d2"],
+            "url_hash": [1, 2, 3], "last_updated_on": ["1", "2", "3"],
+            "expires_at": [pd.Timestamp("2020-01-01")] * 3,
+            "salt": [0, 1, 2]})
+        delta = (spark.createDataFrame(rows)
+                 .select(*[F.col(f.name).cast(f.dataType)
+                           for f in SEEN_SCHEMA.fields])
+                 .withColumn("_wseq", F.lit(1)))
+        store.commit(1, {}, appends={"seen": delta})
+        drv.compact()
+        snap = store.latest()
+        assert snap["layout"]["seen"] == ["salt"]
+        assert not any((store.root / snap["tables"]["seen"]).rglob("*.parquet"))
+        assert drv.seen_view().count() == 0
+
+        drv2 = WaveDriver(spark, SnapshotStore(store.root), num_partitions=4)
+        stats = drv2.run_until_done(world["pages"], world["robots"],
+                                    world["ranks"], 6)
+        assert stats[0]["fetched"] == len(world["seeds"])
+        assert stats[0]["new"] > 0 and stats[0]["unchanged"] == 0
+        assert drv2.pending_count() == 0
+        frontier = drv2.frontier_view()
+        n_disallowed = frontier.filter(F.col("state") == "disallowed").count()
+        assert store.read(spark, "jobs").count() == N - n_disallowed
+        assert drv2.seen_view().count() == N
 
 
 class TestSeenDeterminism:
@@ -436,3 +544,65 @@ class TestManifestDurability:
         assert size == manifest.stat().st_size  # with its full content
         assert dst == str(manifest) and dir_after
         assert store.latest()["sid"] == 1
+
+
+def _job_ids(spark) -> set[int]:
+    """Ids of every job the status store holds, once the listener bus
+    has delivered every event posted so far."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(None))
+
+
+def _jobs_by_execution(spark, ids: set[int]) -> dict[str, int]:
+    """Job counts per SQL execution (description) for the given job ids;
+    jobs outside any SQL execution (e.g. schema inference) are grouped
+    under one key."""
+    owner = {}
+    it = spark._jsparkSession.sharedState().statusStore() \
+        .executionsList().iterator()
+    while it.hasNext():
+        e = it.next()
+        desc = (e.description() or "").splitlines()[0][:60]
+        jobs = e.jobs().keySet().iterator()
+        while jobs.hasNext():
+            owner[int(jobs.next())] = f"execution {e.executionId()}: {desc}"
+    out: dict[str, int] = {}
+    for j in sorted(ids):
+        key = owner.get(j, "<no SQL execution>")
+        out[key] = out.get(key, 0) + 1
+    return out
+
+
+class TestJobBudget:
+    # Spark jobs run by run_until_done on the 120-page world below
+    # (bootstrap excluded): 2 waves plus the initial pending count
+    MAX_JOBS = 66
+
+    def test_wave_loop_job_budget(self, spark, tmp_path):
+        """Job-count guard on the wave loop, counted as
+        perfbench/crawl.py:run_cycle does (every job the session ran in
+        between). A plan change that re-runs a cached subtree, adds an
+        exchange-backed action or brings back schema inference shows up
+        here; the failure message lists the jobs per SQL execution."""
+        pages = spark.createDataFrame(synth.gen_pages_pandas(120))
+        robots = spark.createDataFrame(synth.gen_robots())
+        ranks = spark.createDataFrame(synth.gen_host_rank())
+        drv = WaveDriver(spark, SnapshotStore(tmp_path / "wh"),
+                         num_partitions=4)
+        drv.bootstrap(synth.gen_seed_list(120))
+
+        ids0 = _job_ids(spark)
+        stats = drv.run_until_done(pages, robots, ranks, 6)
+        ran = _job_ids(spark) - ids0
+        assert len(stats) == 2
+        assert len(ran) <= self.MAX_JOBS, json.dumps(
+            _jobs_by_execution(spark, ran), indent=1)
+
+        # reads apply the manifest schema: no inference job
+        ids0 = _job_ids(spark)
+        for table in drv.store.latest()["tables"]:
+            drv.store.read(spark, table)
+            drv.store.read_split(spark, table)
+        ran = _job_ids(spark) - ids0
+        assert not ran, json.dumps(_jobs_by_execution(spark, ran), indent=1)
