@@ -65,7 +65,8 @@ def seen_live(seen: DataFrame, now: Column | None = None) -> DataFrame:
 
 
 def classify(candidates: DataFrame, seen: DataFrame,
-             now: Column | None = None, broadcast: bool = True) -> DataFrame:
+             now: Column | None = None, broadcast: bool = True,
+             keys: DataFrame | None = None) -> DataFrame:
     """D1 three-way change detection (deduplicator.go:49-67):
     missing -> NEW; stored != last_updated_on -> UPDATED; else UNCHANGED.
 
@@ -85,6 +86,10 @@ def classify(candidates: DataFrame, seen: DataFrame,
     broadcast hard limit; ADVICE r3) — and the candidate frame itself
     never shuffles either.
 
+    keys narrows the broadcast key set (default: every candidate key).
+    A key left out finds no seen row and reads NEW, so it may omit only
+    keys known to be unseen — classify_with_bloom passes the bloom hits.
+
     broadcast=False is the escape hatch for a wave whose KEY SET
     alone outgrows the driver: the same left join unhinted (both sides
     hash-exchange; seen pays a full shuffle) with identical output —
@@ -100,7 +105,8 @@ def classify(candidates: DataFrame, seen: DataFrame,
     s = (seen_live(seen, now)
          .select("source", "id", F.col("last_updated_on").alias("_seen_val")))
     if broadcast:
-        s = s.join(F.broadcast(candidates.select("source", "id")),
+        keys = candidates if keys is None else keys
+        s = s.join(F.broadcast(keys.select("source", "id")),
                    ["source", "id"], "left_semi")
     s = s.withColumn("_seen", F.lit(True))
     joined = candidates.join(F.broadcast(s) if broadcast else s,
@@ -284,33 +290,20 @@ def bloom_might_contain(candidates: DataFrame, blooms: DataFrame,
 
 def classify_with_bloom(candidates: DataFrame, seen: DataFrame,
                         blooms: DataFrame, now: Column | None = None,
-                        n_salts: int = N_SALTS,
-                        cache: bool = False) -> DataFrame:
-    """D1 with the bloom pre-filter: bloom misses short-circuit to NEW
-    without joining; only possible hits stream into the seen join.
-    n_salts MUST match the salt modulus the seen/bloom tables were
-    built with (threaded from the driver, not defaulted silently).
-
-    cache=True persists the bloom-probed candidate frame: the probed
-    subtree (cogroup Python stage + salt shuffle) is consumed by the
-    misses branch AND twice inside classify's decomposition, and a
-    broadcast build cannot be reused as a streamed input — without the
-    cache it would re-run up to three times. The persisted handle is
-    attached to the result as ``_bloom_cand`` for the caller to
-    unpersist once the result is materialized (the wave driver does)."""
-    cand = candidates.withColumn(
-        "url_hash", url_hash(F.col("source"), F.col("id"))
-    ).withColumn("salt", salt_of(F.col("host"), n_salts))
-    cand = bloom_might_contain(cand, blooms)
-    if cache:
-        cand = cand.persist()
-    misses = (cand.filter(~F.col("might_contain"))
-                  .withColumn("status", F.lit(STATUS_NEW)))
-    hits = classify(cand.filter(F.col("might_contain")), seen, now)
-    out = misses.unionByName(hits).drop("might_contain")
-    if cache:
-        out._bloom_cand = cand
-    return out
+                        n_salts: int = N_SALTS) -> DataFrame:
+    """D1 with the bloom pre-filter: only the keys the bloom may contain
+    enter the seen semi join's broadcast; a bloom miss cannot match a
+    seen row, so it comes out NEW from the same left join. The probe
+    reads key columns only (source, id, url_hash, salt), never the
+    candidate payload, and nothing is persisted. n_salts MUST match the
+    salt modulus the seen/bloom tables were built with (threaded from
+    the driver, not defaulted silently)."""
+    keys = candidates.select(
+        "source", "id",
+        url_hash(F.col("source"), F.col("id")).alias("url_hash"),
+        salt_of(F.col("host"), n_salts).alias("salt"))
+    hits = bloom_might_contain(keys, blooms).filter(F.col("might_contain"))
+    return classify(candidates, seen, now, keys=hits)
 
 
 # ---------------------------------------------------------------------------

@@ -43,20 +43,21 @@ Scale notes:
   by url hash (storage-layer config); plan shape is identical.
 - html stays BINARY end-to-end and is dropped inside the same stage
   that extracts from it; nothing html-bearing is ever persisted.
-- ONE driver-side action per wave before the commit: a count of the
-  classify cache, which fills the extraction and schedule caches
-  beneath it (serializing the Python stage so the commit's concurrent
-  writes cannot duplicate it). Every wave stat rides Observation
-  metrics attached to frames that job and the commit writes
-  materialize anyway — no dedicated counter job (the round-1 serial
-  floor of ~11 .count() actions, then round-2's one 9-branch union
-  job, are both gone); loop control is exact arithmetic over the
-  stats, never a frontier re-read.
+- ONE driver-side action per wave before the commit: a count per
+  (partition, kind) over the three cached frames (processed rows,
+  classified rows by status, scheduled rows by state). Collecting it
+  fills the schedule, extraction and bloom-probe caches beneath it
+  (serializing the Python stage so the commit's concurrent writes
+  cannot duplicate it); the wave stats and the lineage rows are sums
+  over what it returns. Only ``missing`` rides an Observation, on the
+  frontier-delta write that materializes it anyway. Loop control is
+  exact arithmetic over the stats, never a frontier re-read.
 """
 
 from __future__ import annotations
 
 import time
+from collections import Counter, defaultdict
 from datetime import datetime, timedelta
 
 import pandas as pd
@@ -70,7 +71,7 @@ from .clean import udfs as clean_udfs
 from .extract import extract_pages
 from .frontier import host_of, priority_expr
 from .normalize import normalize_vieclam24h
-from .schemas import FRONTIER_SCHEMA, SEEN_SCHEMA
+from .schemas import FRONTIER_SCHEMA, LINEAGE_SCHEMA, SEEN_SCHEMA
 from .tables import SnapshotStore
 
 WAVE_EPOCH = datetime(2026, 1, 1)
@@ -81,6 +82,9 @@ _SEEN_COLS = [f.name for f in SEEN_SCHEMA.fields]
 
 _STAT_KEYS = ("fetched", "missing", "missing_retryable", "deferred",
               "disallowed", "enqueued", "new", "updated", "unchanged")
+# aggregate kinds a lineage row counts (sched states only feed the stats)
+_LINEAGE_KINDS = ("fetched", D.STATUS_NEW, D.STATUS_UPDATED,
+                  D.STATUS_UNCHANGED)
 
 
 def _obs_get(obs: Observation, names: list[str], fallback: DataFrame,
@@ -268,19 +272,11 @@ class WaveDriver:
                    .drop("_hr")
                    .select(*_FRONTIER_COLS))
 
-        # Persist shared lineage. Wave stats ride Observation metrics
-        # (CollectMetrics accumulators) attached to frames the wave's
-        # own jobs materialize anyway — no dedicated counter job.
-        obs_sched = Observation()
-        sched_metrics = [
-            F.count(F.when(F.col("state") == "deferred", 1)).alias("deferred"),
-            F.count(F.when(F.col("state") == "disallowed", 1))
-            .alias("disallowed")]
-        sched = (politeness.schedule(pending, robots, ws)
-                 .observe(obs_sched, *sched_metrics)
-                 .persist())
+        # persist shared lineage: sched, processed and classified are
+        # each read by several writes and by the wave's one aggregate
+        sched = politeness.schedule(pending, robots, ws).persist()
         to_fetch = sched.filter(F.col("state") == "scheduled").drop("slot", "scheduled_ts")
-        # deferred rows stay pending: no delta row, counted via obs_sched
+        # deferred rows stay pending: no delta row, counted by the aggregate
         disallowed = (sched.filter(F.col("state") == "disallowed")
                       .drop("slot", "scheduled_ts"))
 
@@ -294,14 +290,11 @@ class WaveDriver:
         # Arrow batch and html is dropped inside the same stage, so the
         # wave-long cache holds only extracted columns.
         fetch_cols = to_fetch.select("url", "depth", "page", "id", "last_updated_on")
-        obs_fetch = Observation()
-        fetch_metrics = [F.count(F.lit(1)).alias("fetched")]
         processed = (extract_pages(
             pages.select("url", "html", F.col("warc_ts").alias("_warc_ts"))
                  .join(F.broadcast(fetch_cols), "url", "inner"))
             .select("url", "depth", "page", "id", "last_updated_on",
                     "_warc_ts", "_links", "x", "jsonld")
-            .observe(obs_fetch, *fetch_metrics)
             .persist())
         # P8 retry: missing urls return to the pending pool with
         # attempts+1 (state left 'scheduled' would orphan them forever;
@@ -309,7 +302,9 @@ class WaveDriver:
         # over pages ⋈ fetch_cols, so the cached processed.url IS the
         # fetched set: missing and fetched rows split to_fetch on it
         # (one broadcast, reused by both joins) — pages is never scanned
-        # again for them.
+        # again for them. missing keeps an Observation: its rows exist
+        # only in the frontier delta write, so counting them in the
+        # aggregate would run the got broadcast a second time.
         got = F.broadcast(processed.select("url"))
         obs_missing = Observation()
         missing_metrics = [
@@ -336,22 +331,11 @@ class WaveDriver:
 
         seen = self.seen_view() or spark.createDataFrame([], SEEN_SCHEMA)
         blooms_prev = self.store.read(spark, "blooms") if self.use_bloom else None
-        bloom_cand = None
         if blooms_prev is not None:
-            raw_cls = D.classify_with_bloom(
-                links, seen, blooms_prev, now_ts, cache=True)
-            bloom_cand = raw_cls._bloom_cand  # probed frame: cogroup
-            classified = raw_cls.drop("url_hash", "salt")
+            classified = D.classify_with_bloom(links, seen, blooms_prev, now_ts)
         else:
             classified = D.classify(links, seen, now_ts)
-        obs_cls = Observation()
-        cls_metrics = [
-            F.count(F.when(F.col("status") == D.STATUS_NEW, 1)).alias("new"),
-            F.count(F.when(F.col("status") == D.STATUS_UPDATED, 1))
-            .alias("updated"),
-            F.count(F.when(F.col("status") == D.STATUS_UNCHANGED, 1))
-            .alias("unchanged")]
-        classified = classified.observe(obs_cls, *cls_metrics).persist()
+        classified = classified.persist()
 
         changed = classified.filter(F.col("status") != D.STATUS_UNCHANGED)
         enqueue = (changed.drop("status")
@@ -421,38 +405,36 @@ class WaveDriver:
                           .filter(F.col("_rn") == 1).drop("_rn", "_pri")
                           .withColumn("_wseq", F.lit(wave)))
 
-        # ---- the driver-side action (one per wave, before the commit) -----
-        # Wave stats are Observation metrics riding jobs the wave runs
-        # anyway — the round-2 dedicated 9-branch counter job (pure
-        # task-scheduling overhead, ~5 s/crawl measured) is gone. Loop
-        # control stays exact arithmetic: the scheduler partitions EVERY
-        # pending row into scheduled/deferred/disallowed, so work
-        # remains after this wave iff something was enqueued, deferred,
-        # or returned retryable-missing.
-
-        # THE pre-commit action (one per wave): materializing classified
-        # computes the whole chain beneath it — sched, the Python
-        # extraction stage, and the bloom probe all fill their persist
-        # caches in this single job, and obs_sched/obs_fetch/obs_cls
-        # all fire (their CollectMetrics nodes sit below the persists).
-        # Round-4 merge: a separate processed.count() action was pure
-        # job-constant overhead — the extraction cache fills here just
-        # the same, and the commit's concurrent writes still see only
-        # cached frames. The bloom decision below needs the enqueued
-        # count pre-commit, hence counting classified, not processed.
-        classified.count()
-        fetched = _obs_get(obs_fetch, ["fetched"],
-                           processed, fetch_metrics)["fetched"]
-        cls = _obs_get(obs_cls, ["new", "updated", "unchanged"],
-                       classified, cls_metrics)
-        counted = {"fetched": fetched, **cls,
-                   "enqueued": cls["new"] + cls["updated"]}
+        # ---- THE pre-commit action (one per wave) ---------------------------
+        # One aggregate over the three cached frames, each row tagged
+        # with its partition and its kind: "fetched" for processed rows,
+        # the dedup status for classified rows, the schedule state for
+        # sched rows. Collecting it fills every cache beneath it — sched,
+        # the Python extraction stage and the bloom probe — so the
+        # commit's concurrent writes see only cached frames, and both the
+        # wave stats and the lineage rows are sums over what it returns.
+        pid = F.spark_partition_id().alias("partition_id")
+        tagged = (processed.select(pid, F.lit("fetched").alias("kind"))
+                  .unionByName(classified.select(pid, F.col("status").alias("kind")))
+                  .unionByName(sched.select(pid, F.col("state").alias("kind"))))
+        total: Counter = Counter()
+        per_part: dict[int, Counter] = defaultdict(Counter)
+        for part, kind, rows in tagged.groupBy("partition_id", "kind").count().collect():
+            total[kind] += rows
+            if kind in _LINEAGE_KINDS:
+                per_part[part][kind] += rows
+        counted = {"fetched": total["fetched"], "new": total[D.STATUS_NEW],
+                   "updated": total[D.STATUS_UPDATED],
+                   "unchanged": total[D.STATUS_UNCHANGED],
+                   "deferred": total["deferred"],
+                   "disallowed": total["disallowed"]}
+        counted["enqueued"] = counted["new"] + counted["updated"]
 
         # incremental bloom maintenance: delta bloom at fixed capacity,
         # OR-merged into the stored table — O(delta + n_salts); skipped
         # entirely on waves that marked nothing new (detail waves)
         blooms_out = None
-        if self.use_bloom and counted.get("enqueued", 0) > 0:
+        if self.use_bloom and counted["enqueued"] > 0:
             delta_blooms = D.build_blooms(
                 seen_new, capacity_per_salt=BLOOM_CAPACITY_PER_SALT)
             blooms_out = (D.merge_blooms(blooms_prev, delta_blooms)
@@ -460,21 +442,14 @@ class WaveDriver:
         tables = {"blooms": blooms_out} if blooms_out is not None else {}
 
         # ---- lineage (per-partition metrics, north_rule) ------------------
-        # ONE aggregate over both cached frames: each union branch tags
-        # its rows with its own partition id (fetched rows carry a null
-        # status). wall_ms is the wave up to here — every job but the
-        # commit's writes.
-        pid = F.spark_partition_id().alias("partition_id")
-        tagged = (processed.select(pid, F.lit(None).cast("string").alias("status"))
-                  .unionByName(classified.select(pid, "status")))
-        wall_ms = int((time.time() - t0) * 1000)
-        lineage_new = tagged.groupBy("partition_id").agg(
-            F.count(F.when(F.col("status").isNull(), 1)).alias("urls_fetched"),
-            *cls_metrics
-        ).select(F.lit(wave).alias("wave"), "partition_id", "urls_fetched",
-                 F.col("unchanged").alias("dedup_hits"), "new", "updated",
-                 "unchanged", F.lit(wall_ms).alias("wall_ms"),
-                 F.current_timestamp().alias("committed_at"))
+        # from the collected counts; one file per wave. wall_ms is the
+        # wave up to here — every job but the commit's writes.
+        wall_ms, committed_at = int((time.time() - t0) * 1000), datetime.now()
+        lineage_new = spark.createDataFrame(
+            [(wave, part, c["fetched"], c[D.STATUS_UNCHANGED], c[D.STATUS_NEW],
+              c[D.STATUS_UPDATED], c[D.STATUS_UNCHANGED], wall_ms, committed_at)
+             for part, c in sorted(per_part.items())],
+            LINEAGE_SCHEMA).coalesce(1)
         self.store.commit(
             wave,
             tables,
@@ -485,14 +460,11 @@ class WaveDriver:
             # only the fat tables pay a file-sizing shuffle; control
             # tables write with natural partitioning.
             repartition_tables={"jobs", "extracted"})
-        # sched/missing observations filled during the count / the
-        # frontier-delta write respectively — read after commit
-        counted.update(_obs_get(obs_sched, ["deferred", "disallowed"],
-                                sched, sched_metrics))
+        # the missing observation fires in the frontier-delta write
         counted.update(_obs_get(obs_missing,
                                 ["missing", "missing_retryable"],
                                 missing, missing_metrics))
-        stats = {"wave": wave, **{k: int(counted.get(k, 0)) for k in _STAT_KEYS}}
+        stats = {"wave": wave, **{k: int(counted[k]) for k in _STAT_KEYS}}
         # exact pending-work indicator: deferred rows stay pending,
         # enqueues become pending, retryable missing re-pend; every
         # other pending row transitioned this wave
@@ -501,8 +473,6 @@ class WaveDriver:
         sched.unpersist()
         processed.unpersist()
         classified.unpersist()
-        if bloom_cand is not None:
-            bloom_cand.unpersist()
         if self.compact_every and wave % self.compact_every == 0:
             self.compact()
         stats["wall_ms"] = int((time.time() - t0) * 1000)

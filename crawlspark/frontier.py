@@ -22,8 +22,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 def order_cols() -> list[Column]:
-    """The crawl-order sort key: priority DESC, then reference FIFO."""
-    return [F.col("priority").desc(), F.col("wave").asc(),
+    """The crawl-order sort key: priority DESC, then reference FIFO.
+    Nullable columns sort nulls last (the round-1 pandas sort's NaN
+    placement, which the politeness scheduler keeps)."""
+    return [F.col("priority").desc(), F.col("wave").asc_nulls_last(),
             F.col("page").asc_nulls_last(), F.col("rank").asc_nulls_last(),
             F.col("url").asc()]
 

@@ -43,6 +43,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .frontier import order_cols
+
 DEFAULT_DELAY_MS = 3000         # reference list default (crawler.go:40-42)
 DEFAULT_DETAIL_DELAY_MS = 5000  # reference detail default (scraper.go:29-32)
 
@@ -118,12 +120,7 @@ def schedule(frontier: DataFrame, robots: DataFrame, wave_start,
             ).otherwise(tokens)
         part_cols.append(is_detail.alias("_class"))
 
-    # FIFO priority order (matches frontier.order_cols; null placement
-    # mirrors the round-1 pandas sort: NaN last in every direction)
-    order = [F.col("priority").desc_nulls_last(),
-             F.col("wave").asc_nulls_last(),
-             F.col("page").asc_nulls_last(), F.col("rank").asc_nulls_last(),
-             F.col("url").asc()]
+    order = order_cols()
     w = (Window.partitionBy(*part_cols).orderBy(*order)
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     allowed = ~F.coalesce(F.col("_disallowed"), F.lit(False))

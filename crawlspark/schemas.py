@@ -78,7 +78,7 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("new", T.LongType(), False),
         T.StructField("updated", T.LongType(), False),
         T.StructField("unchanged", T.LongType(), False),
-        T.StructField("wall_ms", T.LongType(), False),
+        T.StructField("wall_ms", T.IntegerType(), False),
         T.StructField("committed_at", T.TimestampType(), False),
     ]
 )
