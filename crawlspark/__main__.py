@@ -122,9 +122,10 @@ def cmd_status(args) -> int:
         spark = _spark(args)
         lin = store.read(spark, "lineage")
         row = lin.agg(F.sum("urls_fetched").alias("fetched"),
-                      F.sum("dedup_hits").alias("dedup_hits")).first()
+                      F.sum("unchanged").alias("unchanged")).first()
         out["urls_fetched"] = int(row["fetched"] or 0)
-        out["dedup_hits"] = int(row["dedup_hits"] or 0)
+        # dedup hits are the urls classified unchanged
+        out["dedup_hits"] = int(row["unchanged"] or 0)
         spark.stop()
     print(json.dumps(out))
     return 0

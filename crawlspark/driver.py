@@ -446,8 +446,8 @@ class WaveDriver:
         # wave up to here — every job but the commit's writes.
         wall_ms, committed_at = int((time.time() - t0) * 1000), datetime.now()
         lineage_new = spark.createDataFrame(
-            [(wave, part, c["fetched"], c[D.STATUS_UNCHANGED], c[D.STATUS_NEW],
-              c[D.STATUS_UPDATED], c[D.STATUS_UNCHANGED], wall_ms, committed_at)
+            [(wave, part, c["fetched"], c[D.STATUS_NEW], c[D.STATUS_UPDATED],
+              c[D.STATUS_UNCHANGED], wall_ms, committed_at)
              for part, c in sorted(per_part.items())],
             LINEAGE_SCHEMA).coalesce(1)
         self.store.commit(

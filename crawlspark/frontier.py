@@ -1,5 +1,5 @@
 """Priority frontier (SURVEY §2.7 P7): the reference's Redis FIFO list
-re-expressed as explicit order columns + partition-local sort.
+re-expressed as explicit order columns.
 
 The reference's ordering contract is LPUSH/BRPOP FIFO by (wave, page,
 rank) (internal/queue/publisher.go:36, consumer.go:38, list page order
@@ -9,11 +9,10 @@ order is data: ``priority DESC, wave, page, rank`` — priority constant
 (depth x host_rank x recrawl_age) refines it without breaking the
 tie-break.
 
-Scale: repartition by SALTED host so the Zipf-hot host spreads across
-partitions for the fetch/extract work, then sortWithinPartitions — a
-total global sort is never needed because the politeness scheduler
-(politeness.py) re-groups by TRUE host anyway; cross-host order is
-irrelevant to the crawl contract.
+Scale: a wave runs no global sort. ``politeness.schedule`` groups the
+pending rows by TRUE host (and delay class) and orders each group by
+``order_cols()`` in a window; cross-host order is irrelevant to the
+crawl contract.
 """
 
 from __future__ import annotations
@@ -42,14 +41,6 @@ def priority_expr(depth: Column, host_rank: Column,
     age = recrawl_age_hours if recrawl_age_hours is not None else F.lit(0.0)
     return (F.coalesce(host_rank, F.lit(0.5)) / (F.lit(1.0) + depth)
             * (F.lit(1.0) + age / F.lit(24.0)))
-
-
-def order_frontier(frontier: DataFrame, num_partitions: int = 32,
-                   n_salts: int = 16) -> DataFrame:
-    """Partition by salted host, FIFO-sort within partitions."""
-    salted = F.pmod(F.xxhash64(F.col("host")), F.lit(n_salts))
-    return (frontier.repartition(num_partitions, salted)
-            .sortWithinPartitions(*order_cols()))
 
 
 def job_detail_url(host: Column, slug: Column, job_id: Column) -> Column:

@@ -37,48 +37,6 @@ def get_string(*cols: Column) -> Column:
     return F.coalesce(*[nonempty(c) for c in cols], F.lit(""))
 
 
-def _variant_str(e: Column, obj_key: str) -> Column:
-    """A tolerant array element's string value: a scalar STRING element
-    is itself (non-string scalars drop, as in the reference's type
-    switches); an object element contributes its ``obj_key`` field.
-    Gated on schema_of_variant because variant->string would otherwise
-    stringify objects to their JSON text."""
-    return F.coalesce(
-        F.try_variant_get(e, "$." + obj_key, "string"),
-        F.when(F.schema_of_variant(e) == "STRING",
-               F.try_variant_get(e, "$", "string")))
-
-
-def tolerant_join(col: Column, sep: str = "; ",
-                  obj_key: str = "description") -> Column:
-    """N14 shape tolerance (normalizer.go:606-627 parseBenefits,
-    :545-563 parseLocations): a staged raw value may be a plain string,
-    a JSON array of strings, or a JSON array of objects — the reference
-    switches on the decoded Go type. Engine form: one try_parse_json to
-    VARIANT; if the value parses as an array, join its string elements
-    (picking ``obj_key`` from object elements) with ``sep``; anything
-    else — plain strings included — passes through verbatim."""
-    arr = F.try_variant_get(F.try_parse_json(col), "$", "array<variant>")
-    elems = F.transform(arr, lambda e: _variant_str(e, obj_key))
-    joined = F.array_join(
-        F.filter(elems, lambda x: x.isNotNull() & (x != "")), sep)
-    return F.when(arr.isNotNull(), joined).otherwise(col)
-
-
-def tolerant_array(col: Column, obj_key: str = "cityNameVi") -> Column:
-    """N14 string-or-array pull to array<string> (normalizer.go:583-603
-    parseLocationsArray, :545-563 parseLocations' city objects): a JSON
-    array value yields its string elements (or ``obj_key`` of object
-    elements, empties dropped); a plain non-empty string yields a
-    one-element array; empty/null yields null."""
-    arr = F.try_variant_get(F.try_parse_json(col), "$", "array<variant>")
-    elems = F.filter(
-        F.transform(arr, lambda e: _variant_str(e, obj_key)),
-        lambda x: x.isNotNull() & (x != ""))
-    return (F.when(arr.isNotNull(), elems)
-            .when(nonempty(col).isNotNull(), F.array(nonempty(col))))
-
-
 def get_int(*cols: Column) -> Column:
     """N3: lenient int from the first parseable candidate, else 0.
     try_cast: an unparseable string is 'try the next key', never an
@@ -140,18 +98,6 @@ def map_experience_to_tags(exp: Column) -> Column:
         .when(years <= 2, _arr("D", "E", "F"))
         .when(years <= 3, _arr("E", "F"))
         .when(years <= 5, _arr("E", "F"))
-        .otherwise(_arr("F"))
-    )
-
-
-def map_experience_years_to_tags(years: Column) -> Column:
-    """N6 (normalizer.go:911-924): integer years -> tags (VNW table —
-    deliberately different from N5)."""
-    return (
-        F.when(years <= 1, _arr("A", "B"))
-        .when(years <= 2, _arr("C"))
-        .when(years <= 5, _arr("D"))
-        .when(years <= 10, _arr("E"))
         .otherwise(_arr("F"))
     )
 
@@ -309,223 +255,3 @@ def normalize_vieclam24h(df: DataFrame) -> DataFrame:
         parse_unix_timestamp(F.col("last_updated_on")).alias("updated_at"),
     )
     return out
-
-
-def normalize_vietnamworks(df: DataFrame) -> DataFrame:
-    """N1 VietnamWorks path (normalizer.go:62-134) over a typed payload.
-
-    Input contract: id, source, url, crawled_at plus typed columns
-    mirroring the VNW API item (vietnamworks/types.go / the raw_data
-    keys of crawler.go:144-201): job_title, company_name,
-    job_description, job_requirement, address, pretty_salary,
-    salary_min_vnd, salary_max_vnd, years_of_experience, job_level_vi,
-    job_level, benefits array<struct<benefit_value>>, working_locations
-    array<struct<city_name_vi, address>>, skills array<struct<
-    skill_name>>, industries_v3 array<struct<industry_name_vi, name>>,
-    job_function struct<parent_name_vi, parent_name>.
-
-    Faithful ordering quirks: VND->millions conversion runs BEFORE the
-    display chain (normalizer.go:86-91 vs :93-110); the two-sided
-    display requires max < 999; the final else RESETS min/max to 0.
-    Years<=0 leaves experience empty so the top-level default fills
-    tags with A..F (normalizer.go:54-56).
-    """
-    _, _, unescape_udf = clean_udfs()
-
-    mn = vnd_to_millions(get_int(F.col("salary_min_vnd")))
-    mx = vnd_to_millions(get_int(F.col("salary_max_vnd")))
-    pretty = nonempty(F.col("pretty_salary"))
-    salary = (
-        F.when(pretty.isNotNull(), pretty)
-        .when((mn > 0) & (mx > 0) & (mx < 999),
-              F.format_string("%d - %d triệu", mn, mx))
-        .when(mn > 0, F.format_string("Trên %d triệu", mn))
-        .otherwise(F.lit("Thỏa thuận"))
-    )
-    negotiable = (
-        F.when(pretty.isNotNull(), is_negotiable_salary(pretty))
-        .when((mn > 0) & (mx > 0) & (mx < 999), F.lit(False))
-        .when(mn > 0, F.lit(False))
-        .otherwise(F.lit(True))
-    )
-    fell_through = ~((pretty.isNotNull()) | (mn > 0))
-    years = get_int(F.col("years_of_experience")).cast("int")
-    experience = F.when(years > 0, F.format_string("%d năm", years)).otherwise(F.lit(""))
-    # N13 nested-array pulls (normalizer.go:677-719, 827-907, 950-965)
-    benefits = F.array_join(F.filter(
-        F.transform(F.col("benefits"), lambda b: F.coalesce(b["benefit_value"], F.lit(""))),
-        lambda v: v != ""), "; ")
-    location = F.coalesce(
-        nonempty(F.col("address")),
-        nonempty(F.array_join(F.filter(
-            F.transform(F.col("working_locations"), lambda l: F.coalesce(l["address"], F.lit(""))),
-            lambda v: v != ""), "; ")),
-        F.lit(""))
-    location_city = F.filter(
-        F.transform(F.col("working_locations"), lambda l: F.coalesce(l["city_name_vi"], F.lit(""))),
-        lambda v: v != "")
-    field = F.array_join(F.filter(
-        F.transform(F.col("skills"), lambda s: F.coalesce(s["skill_name"], F.lit(""))),
-        lambda v: v != ""), ", ")
-    industry = F.filter(
-        F.transform(F.col("industries_v3"),
-                    lambda i: F.coalesce(nonempty(i["industry_name_vi"]),
-                                         nonempty(i["name"]), F.lit(""))),
-        lambda v: v != "")
-    jf = F.coalesce(nonempty(F.col("job_function")["parent_name_vi"]),
-                    nonempty(F.col("job_function")["parent_name"]))
-    industry = F.when(F.size(F.coalesce(industry, F.array())) > 0, industry) \
-        .when(jf.isNotNull(), F.array(jf)) \
-        .otherwise(F.lit(None).cast("array<string>"))
-
-    return df.select(
-        F.col("id").cast("string").alias("id"),
-        F.col("source"),
-        F.col("url").alias("source_url"),
-        unescape_udf(get_string(F.col("job_title"))).alias("title"),
-        unescape_udf(get_string(F.col("company_name"))).alias("company"),
-        F.lit("").alias("company_website"),
-        unescape_udf(location).alias("location"),
-        F.when(F.size(F.coalesce(location_city, F.array())) > 0, location_city)
-        .alias("location_city"),
-        F.lit(None).cast("array<string>").alias("location_district"),
-        get_string(F.col("job_level_vi"), F.col("job_level")).alias("position"),
-        salary.alias("salary"),
-        F.when(fell_through, F.lit(0)).otherwise(mn).cast("int").alias("salary_min"),
-        F.when(fell_through, F.lit(0)).otherwise(mx).cast("int").alias("salary_max"),
-        negotiable.alias("is_negotiable"),
-        F.lit("").alias("work_type"),
-        industry.alias("industry"),
-        field.alias("field"),
-        experience.alias("experience"),
-        F.when(years > 0, map_experience_years_to_tags(years))
-        .otherwise(map_experience_to_tags(F.lit(""))).alias("experience_tags"),
-        F.lit(None).cast("array<string>").alias("skills"),
-        F.lit("").alias("qualifications"),
-        F.lit("").alias("occupational_category"),
-        F.lit("").alias("employment_type"),
-        unescape_udf(get_string(F.col("job_description"))).alias("description"),
-        unescape_udf(get_string(F.col("job_requirement"))).alias("requirements"),
-        unescape_udf(benefits).alias("benefits"),
-        F.lit(0).alias("total_views"),
-        F.lit(0).alias("total_resume_applied"),
-        F.lit(0.0).alias("rate_response"),
-        F.col("crawled_at"),
-        F.lit(None).cast("timestamp").alias("expired_at"),
-        F.lit(None).cast("timestamp").alias("created_at"),
-        F.lit(None).cast("timestamp").alias("updated_at"),
-    )
-
-
-def normalize_topdev(df: DataFrame) -> DataFrame:
-    """N1 TopDev path (normalizer.go:253-309). Input contract: id,
-    source, url, crawled_at plus title, company, description,
-    requirement, salary_min_vnd, salary_max_vnd, salary_text,
-    experience (string), level, benefits array<string>, locations
-    array<string>, skills array<string>.
-
-    Quirks kept: VND conversion BEFORE display; the display uses the
-    converted values with no 999 guard; IsNegotiable is NEVER set on
-    this path (stays false even for 'Thỏa thuận', normalizer.go:287-295);
-    location_city = last comma-part of each location (N18).
-    """
-    _, _, unescape_udf = clean_udfs()
-
-    mn = vnd_to_millions(get_int(F.col("salary_min_vnd")))
-    mx = vnd_to_millions(get_int(F.col("salary_max_vnd")))
-    stext = nonempty(F.col("salary_text"))
-    salary = (
-        F.when(stext.isNotNull(), stext)
-        .when((mn > 0) & (mx > 0), F.format_string("%d - %d triệu", mn, mx))
-        .otherwise(F.lit("Thỏa thuận"))
-    )
-    locations = F.coalesce(F.col("locations"), F.array())
-    location = F.array_join(locations, "; ")
-    location_city = F.transform(
-        locations, lambda l: F.trim(F.element_at(F.split(l, ","), -1)))  # N18
-    benefits = F.array_join(F.coalesce(F.col("benefits"), F.array()), "; ")
-    field = F.array_join(F.coalesce(F.col("skills"), F.array()), ", ")
-    experience = get_string(F.col("experience"))
-
-    return df.select(
-        F.col("id").cast("string").alias("id"),
-        F.col("source"),
-        F.col("url").alias("source_url"),
-        unescape_udf(get_string(F.col("title"))).alias("title"),
-        unescape_udf(get_string(F.col("company"))).alias("company"),
-        F.lit("").alias("company_website"),
-        unescape_udf(location).alias("location"),
-        F.when(F.size(locations) > 0, location_city).alias("location_city"),
-        F.lit(None).cast("array<string>").alias("location_district"),
-        get_string(F.col("level")).alias("position"),
-        salary.alias("salary"),
-        mn.cast("int").alias("salary_min"),
-        mx.cast("int").alias("salary_max"),
-        F.lit(False).alias("is_negotiable"),
-        F.lit("").alias("work_type"),
-        F.lit(None).cast("array<string>").alias("industry"),
-        field.alias("field"),
-        experience.alias("experience"),
-        map_experience_to_tags(experience).alias("experience_tags"),
-        F.lit(None).cast("array<string>").alias("skills"),
-        F.lit("").alias("qualifications"),
-        F.lit("").alias("occupational_category"),
-        F.lit("").alias("employment_type"),
-        unescape_udf(get_string(F.col("description"))).alias("description"),
-        unescape_udf(get_string(F.col("requirement"))).alias("requirements"),
-        unescape_udf(benefits).alias("benefits"),
-        F.lit(0).alias("total_views"),
-        F.lit(0).alias("total_resume_applied"),
-        F.lit(0.0).alias("rate_response"),
-        F.col("crawled_at"),
-        F.lit(None).cast("timestamp").alias("expired_at"),
-        F.lit(None).cast("timestamp").alias("created_at"),
-        F.lit(None).cast("timestamp").alias("updated_at"),
-    )
-
-
-def normalize_generic(df: DataFrame) -> DataFrame:
-    """N1 generic path (normalizer.go:312-339): flat key pulls + N7
-    salary parse. Input contract: string columns title, company,
-    location, city, position, salary, work_type, industry, field,
-    experience, description, requirements, benefits + id/source/url/
-    crawled_at."""
-    _, _, unescape_udf = clean_udfs()
-    sal = parse_salary(get_string(F.col("salary")))
-    experience = get_string(F.col("experience"))
-    return df.select(
-        F.col("id").cast("string").alias("id"),
-        F.col("source"),
-        F.col("url").alias("source_url"),
-        unescape_udf(get_string(F.col("title"))).alias("title"),
-        unescape_udf(get_string(F.col("company"))).alias("company"),
-        F.lit("").alias("company_website"),
-        unescape_udf(get_string(F.col("location"))).alias("location"),
-        tolerant_array(F.col("city")).alias("location_city"),
-        F.lit(None).cast("array<string>").alias("location_district"),
-        get_string(F.col("position")).alias("position"),
-        get_string(F.col("salary")).alias("salary"),
-        sal["min"].alias("salary_min"),
-        sal["max"].alias("salary_max"),
-        is_negotiable_salary(F.col("salary")).alias("is_negotiable"),
-        get_string(F.col("work_type")).alias("work_type"),
-        F.when(nonempty(F.col("industry")).isNotNull(),
-               F.array(nonempty(F.col("industry")))).alias("industry"),
-        get_string(F.col("field")).alias("field"),
-        experience.alias("experience"),
-        map_experience_to_tags(experience).alias("experience_tags"),
-        F.lit(None).cast("array<string>").alias("skills"),
-        F.lit("").alias("qualifications"),
-        F.lit("").alias("occupational_category"),
-        F.lit("").alias("employment_type"),
-        unescape_udf(get_string(F.col("description"))).alias("description"),
-        unescape_udf(get_string(F.col("requirements"))).alias("requirements"),
-        unescape_udf(get_string(tolerant_join(F.col("benefits")))).alias("benefits"),
-        F.lit(0).alias("total_views"),
-        F.lit(0).alias("total_resume_applied"),
-        F.lit(0.0).alias("rate_response"),
-        F.col("crawled_at"),
-        F.lit(None).cast("timestamp").alias("expired_at"),
-        F.lit(None).cast("timestamp").alias("created_at"),
-        F.lit(None).cast("timestamp").alias("updated_at"),
-    )

@@ -74,7 +74,6 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("wave", T.IntegerType(), False),
         T.StructField("partition_id", T.IntegerType(), False),
         T.StructField("urls_fetched", T.LongType(), False),
-        T.StructField("dedup_hits", T.LongType(), False),
         T.StructField("new", T.LongType(), False),
         T.StructField("updated", T.LongType(), False),
         T.StructField("unchanged", T.LongType(), False),
@@ -129,64 +128,5 @@ LINK_STRUCT = T.StructType(
         T.StructField("rank", T.IntegerType(), False),
         T.StructField("item_id", T.StringType(), True),       # data-id attr
         T.StructField("item_updated", T.StringType(), True),  # data-updated attr
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# jobs — the normalized output table (reference: domain.Job,
-# internal/domain/job.go:6-44 / Postgres DDL postgres.go:48-84)
-# ---------------------------------------------------------------------------
-JOB_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.StringType(), False),
-        T.StructField("source", T.StringType(), False),
-        T.StructField("source_url", T.StringType(), True),
-        T.StructField("title", T.StringType(), True),
-        T.StructField("company", T.StringType(), True),
-        T.StructField("company_website", T.StringType(), True),
-        T.StructField("location", T.StringType(), True),
-        T.StructField("location_city", T.ArrayType(T.StringType()), True),
-        T.StructField("location_district", T.ArrayType(T.StringType()), True),
-        T.StructField("position", T.StringType(), True),
-        T.StructField("salary", T.StringType(), True),
-        T.StructField("salary_min", T.IntegerType(), True),
-        T.StructField("salary_max", T.IntegerType(), True),
-        T.StructField("is_negotiable", T.BooleanType(), True),
-        T.StructField("work_type", T.StringType(), True),
-        T.StructField("industry", T.ArrayType(T.StringType()), True),
-        T.StructField("field", T.StringType(), True),
-        T.StructField("experience", T.StringType(), True),
-        T.StructField("experience_tags", T.ArrayType(T.StringType()), True),
-        T.StructField("skills", T.ArrayType(T.StringType()), True),
-        T.StructField("qualifications", T.StringType(), True),
-        T.StructField("occupational_category", T.StringType(), True),
-        T.StructField("employment_type", T.StringType(), True),
-        T.StructField("description", T.StringType(), True),
-        T.StructField("requirements", T.StringType(), True),
-        T.StructField("benefits", T.StringType(), True),
-        T.StructField("total_views", T.IntegerType(), True),
-        T.StructField("total_resume_applied", T.IntegerType(), True),
-        T.StructField("rate_response", T.DoubleType(), True),
-        T.StructField("crawled_at", T.TimestampType(), True),
-        T.StructField("expired_at", T.TimestampType(), True),
-        T.StructField("created_at", T.TimestampType(), True),
-        T.StructField("updated_at", T.TimestampType(), True),
-    ]
-)
-
-# robots — politeness budgets (FIXTURES.md §5)
-ROBOTS_SCHEMA = T.StructType(
-    [
-        T.StructField("host", T.StringType(), False),
-        T.StructField("crawl_delay_ms", T.IntegerType(), False),
-        T.StructField("disallow_prefixes", T.ArrayType(T.StringType()), True),
-        T.StructField("tokens_per_wave", T.IntegerType(), False),
-    ]
-)
-
-HOST_RANK_SCHEMA = T.StructType(
-    [
-        T.StructField("host", T.StringType(), False),
-        T.StructField("rank", T.DoubleType(), False),
     ]
 )

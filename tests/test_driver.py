@@ -637,16 +637,61 @@ class TestLineage:
         sums = {r["wave"]: r for r in
                 drv.store.read(spark, "lineage").groupBy("wave").agg(
                     *(F.sum(c).alias(c) for c in (
-                        "urls_fetched", "dedup_hits", "new", "updated",
+                        "urls_fetched", "new", "updated",
                         "unchanged"))).collect()}
         for s in stats:
             got = sums[s["wave"]]
             assert (got["urls_fetched"], got["new"], got["updated"],
-                    got["unchanged"], got["dedup_hits"]) == (
-                s["fetched"], s["new"], s["updated"], s["unchanged"],
-                s["unchanged"]), s["wave"]
+                    got["unchanged"]) == (
+                s["fetched"], s["new"], s["updated"], s["unchanged"]), s["wave"]
         schemas = json.loads(drv.store._manifest_path.read_text())["schemas"]
         assert schemas["lineage"] == LINEAGE_SCHEMA.toDDL()
+
+    def test_lineage_with_dedup_hits_column_still_reads(self, spark, tmp_path,
+                                                        monkeypatch):
+        """Lineage files committed with the former ``dedup_hits`` column
+        (a copy of ``unchanged``) read back beside the files of a later
+        wave, and every wave's ``unchanged`` sum equals its stats."""
+        from crawlspark.schemas import LINEAGE_SCHEMA
+
+        store = SnapshotStore(tmp_path / "wh")
+        drv = WaveDriver(spark, store, num_partitions=4)
+        commit = store.commit
+
+        def commit_with_dedup_hits(wave, tables, **kw):
+            lin = kw["appends"].get("lineage")
+            if lin is not None:
+                kw["appends"]["lineage"] = lin.select(
+                    "wave", "partition_id", "urls_fetched",
+                    F.col("unchanged").alias("dedup_hits"), "new", "updated",
+                    "unchanged", "wall_ms", "committed_at")
+            return commit(wave, tables, **kw)
+
+        robots = spark.createDataFrame(synth.gen_robots())
+        ranks = spark.createDataFrame(synth.gen_host_rank())
+        pages2 = spark.createDataFrame(synth.gen_pages_pandas(120, wave=2))
+        with monkeypatch.context() as m:
+            m.setattr(store, "commit", commit_with_dedup_hits)
+            drv.bootstrap(synth.gen_seed_list(120))
+            stats = drv.run_until_done(
+                spark.createDataFrame(synth.gen_pages_pandas(120)),
+                robots, ranks, 6)
+            drv.reseed(synth.gen_seed_list(120, wave=2))
+            stats.append(drv.run_wave(pages2, robots, ranks))
+        assert stats[-1]["unchanged"] > 0  # bloom-probed, old format
+        stats.append(drv.run_wave(pages2, robots, ranks))
+
+        paths = store.latest()["tables"]["lineage"]
+        old = spark.read.parquet(str(store.root / paths[0]))
+        new = spark.read.parquet(str(store.root / paths[-1]))
+        assert "dedup_hits" in old.columns
+        assert new.columns == LINEAGE_SCHEMA.fieldNames()
+        lin = store.read(spark, "lineage")
+        assert lin.columns == LINEAGE_SCHEMA.fieldNames()
+        sums = {r["wave"]: r["unchanged"] for r in
+                lin.groupBy("wave").agg(F.sum("unchanged").alias("unchanged"))
+                .collect()}
+        assert sums == {s["wave"]: s["unchanged"] for s in stats}
 
 
 class TestCacheHygiene:

@@ -5,7 +5,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from crawlspark import politeness, synth
-from crawlspark.frontier import crawl_sequence, host_of, order_frontier
+from crawlspark.frontier import crawl_sequence, host_of
 
 
 def _frontier(spark, rows):
@@ -31,20 +31,6 @@ def test_crawl_sequence_fifo(spark):
     assert seq["u000"] == 3   # (1,1,2)
     assert seq["u002"] == 4   # (1,2,1)
     assert seq["u003"] == 5   # (2,1,1)
-
-
-def test_order_frontier_partition_local_sort(spark):
-    """order_frontier sorts within partitions by the crawl key; within
-    one host every row lands in one partition => host-local FIFO."""
-    rows = [(f"https://h{i%3}.vn/p{i}", f"h{i%3}.vn", "s", str(i), None,
-             1, 1, i // 5 + 1, i % 5 + 1, 0.5, "pending", 0) for i in range(60)]
-    out = order_frontier(_frontier(spark, rows), num_partitions=4)
-    pdf = out.withColumn("pid", F.spark_partition_id()).toPandas()
-    for (pid, host), g in pdf.groupby(["pid", "host"]):
-        keys = list(zip(g["page"], g["rank"]))
-        assert keys == sorted(keys)
-    # a host never spans partitions
-    assert (pdf.groupby("host")["pid"].nunique() == 1).all()
 
 
 def test_schedule_slots_follow_fifo_within_host(spark):
