@@ -19,9 +19,9 @@ Scale design (10^10-URL frontier):
   delta at fixed capacity, OR-merge into the stored bloom table —
   O(delta + n_salts) per wave), and probed via COGROUP on salt so each
   probe task deserializes only its own salt's bits. At 10^10 keys and
-  10 bits/key that is ~12.5 GB total across 256 salts => ~50 MB per
-  salt bucket per task — never collected to the driver, never shipped
-  whole to any executor.
+  fpp 0.01 (~9.6 bits/key) that is ~12 GB total across N_SALTS = 16
+  salts => ~6.3e8 keys and ~750 MB per salt bucket per task — never
+  collected to the driver, never shipped whole to any executor.
 - TTL without Redis: lazy expiry — reads filter expires_at >= now;
   a compaction wave physically drops expired rows (same observable
   semantics as Redis per-key TTL, deduplicator.go:76-84) and rebuilds
@@ -202,8 +202,9 @@ def build_blooms(seen: DataFrame, fpp: float = 0.01,
     (groupBy(salt).applyInPandas). Returns a Spark DataFrame
     (salt, m, k, bits, n_keys) — never collected to the driver; the
     probe side cogroups on salt so each task touches exactly one salt's
-    bits (the 10^10-key design point is ~50 MB per salt bucket, which
-    must not be closure-shipped or broadcast in aggregate).
+    bits (the 10^10-key design point is ~750 MB per salt bucket over
+    N_SALTS = 16 salts, which must not be closure-shipped or broadcast
+    in aggregate).
 
     capacity_per_salt fixes m/k for the stated key capacity so blooms
     built from per-wave DELTAS can be OR-merged into the stored blooms

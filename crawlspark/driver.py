@@ -121,6 +121,13 @@ def _obs_get(obs: Observation, names: list[str], fallback: DataFrame,
     return {n: int(row[n]) for n in names}
 
 
+def _first_per_key(df: DataFrame, keys: list[str], *order) -> DataFrame:
+    """One row per ``keys``: the first in ``order`` (row_number() = 1)."""
+    w = Window.partitionBy(*keys).orderBy(*order)
+    return (df.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1).drop("_rn"))
+
+
 def wave_start(wave: int) -> datetime:
     return WAVE_EPOCH + timedelta(seconds=wave * WAVE_SECONDS)
 
@@ -138,8 +145,9 @@ def table_hash(df: DataFrame) -> int:
 # writer sizes files in production).
 SNAPSHOT_FILES = 8
 # Fixed bloom capacity per salt bucket so per-wave delta blooms OR-merge
-# into the stored table (dedup.merge_blooms). At the 10^10-key design
-# point: 256 salts x ~4e7 keys => ~50 MB/salt.
+# into the stored table (dedup.merge_blooms). 1M keys is ~1.2 MB/salt;
+# the 10^10-key design point needs N_SALTS = 16 salts x ~6.3e8 keys
+# => ~750 MB/salt.
 BLOOM_CAPACITY_PER_SALT = 1_000_000
 
 
@@ -184,9 +192,7 @@ class WaveDriver:
             return None
         if deltas is None:
             return base
-        w = Window.partitionBy(*keys).orderBy(F.col("_wseq").desc())
-        dres = (deltas.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1).drop("_rn"))
+        dres = _first_per_key(deltas, keys, F.col("_wseq").desc())
         survivors = base.join(F.broadcast(deltas.select(*keys)), keys,
                               "left_anti")
         return dres.unionByName(survivors)
@@ -272,207 +278,212 @@ class WaveDriver:
                    .drop("_hr")
                    .select(*_FRONTIER_COLS))
 
-        # persist shared lineage: sched, processed and classified are
-        # each read by several writes and by the wave's one aggregate
-        sched = politeness.schedule(pending, robots, ws).persist()
-        to_fetch = sched.filter(F.col("state") == "scheduled").drop("slot", "scheduled_ts")
-        # deferred rows stay pending: no delta row, counted by the aggregate
-        disallowed = (sched.filter(F.col("state") == "disallowed")
-                      .drop("slot", "scheduled_ts"))
+        # released in the finally, in persist order, however the wave ends
+        cached: list[DataFrame] = []
 
-        # "fetch": equi-join with the pages table. The frontier side is
-        # explicitly broadcast (inner join) and PRUNED to the columns
-        # the downstream stages read: the wave is politeness-budget-
-        # bounded while pages is the 100 TB side — broadcasting the
-        # small side guarantees the fat html column NEVER crosses a
-        # shuffle. html stays binary; the combined mapInArrow page stage
-        # (pandas-free — 2.3x faster measured, BENCH.md) decodes per
-        # Arrow batch and html is dropped inside the same stage, so the
-        # wave-long cache holds only extracted columns.
-        fetch_cols = to_fetch.select("url", "depth", "page", "id", "last_updated_on")
-        processed = (extract_pages(
-            pages.select("url", "html", F.col("warc_ts").alias("_warc_ts"))
-                 .join(F.broadcast(fetch_cols), "url", "inner"))
-            .select("url", "depth", "page", "id", "last_updated_on",
-                    "_warc_ts", "_links", "x", "jsonld")
-            .persist())
-        # P8 retry: missing urls return to the pending pool with
-        # attempts+1 (state left 'scheduled' would orphan them forever;
-        # the pending filter caps at max_retries). extract_pages is 1:1
-        # over pages ⋈ fetch_cols, so the cached processed.url IS the
-        # fetched set: missing and fetched rows split to_fetch on it
-        # (one broadcast, reused by both joins) — pages is never scanned
-        # again for them. missing keeps an Observation: its rows exist
-        # only in the frontier delta write, so counting them in the
-        # aggregate would run the got broadcast a second time.
-        got = F.broadcast(processed.select("url"))
-        obs_missing = Observation()
-        missing_metrics = [
-            F.count(F.lit(1)).alias("missing"),
-            F.count(F.when(F.col("attempts") < self.max_retries, 1))
-            .alias("missing_retryable")]
-        missing = (to_fetch.join(got, "url", "left_anti")
-                   .withColumn("attempts", F.col("attempts") + 1)
-                   .withColumn("state", F.lit("pending"))
-                   .observe(obs_missing, *missing_metrics))
+        def cache(df: DataFrame) -> DataFrame:
+            cached.append(df.persist())
+            return df
 
-        # ---- list pages -> frontier candidates (S5 + D1/D2) --------------
-        links = (processed.filter(F.col("depth") == 0)
-                 .withColumn("l", F.explode("_links"))
-                 .select(F.col("l.href").alias("url"),
-                         F.lit(self.source).alias("source"),
-                         F.coalesce(F.col("l.item_id"), F.col("l.href")).alias("id"),
-                         F.col("l.item_updated").alias("last_updated_on"),
-                         (F.col("depth") + 1).alias("depth"),
-                         F.lit(wave).alias("wave"),
-                         F.col("page"),
-                         F.col("l.rank").alias("rank"))
-                 .withColumn("host", host_of(F.col("url"))))
+        try:
+            # persist shared lineage: sched, processed and classified are
+            # each read by several writes and by the wave's one aggregate
+            sched = cache(politeness.schedule(pending, robots, ws))
+            to_fetch = sched.filter(F.col("state") == "scheduled").drop("slot", "scheduled_ts")
+            # deferred rows stay pending: no delta row, counted by the aggregate
+            disallowed = (sched.filter(F.col("state") == "disallowed")
+                          .drop("slot", "scheduled_ts"))
 
-        seen = self.seen_view() or spark.createDataFrame([], SEEN_SCHEMA)
-        blooms_prev = self.store.read(spark, "blooms") if self.use_bloom else None
-        if blooms_prev is not None:
-            classified = D.classify_with_bloom(links, seen, blooms_prev, now_ts)
-        else:
-            classified = D.classify(links, seen, now_ts)
-        classified = classified.persist()
+            # "fetch": equi-join with the pages table. The frontier side is
+            # explicitly broadcast (inner join) and PRUNED to the columns
+            # the downstream stages read: the wave is politeness-budget-
+            # bounded while pages is the 100 TB side — broadcasting the
+            # small side guarantees the fat html column NEVER crosses a
+            # shuffle. html stays binary; the combined mapInArrow page stage
+            # (pandas-free — 2.3x faster measured, BENCH.md) decodes per
+            # Arrow batch and html is dropped inside the same stage, so the
+            # wave-long cache holds only extracted columns.
+            fetch_cols = to_fetch.select("url", "depth", "page", "id", "last_updated_on")
+            processed = cache(extract_pages(
+                pages.select("url", "html", F.col("warc_ts").alias("_warc_ts"))
+                     .join(F.broadcast(fetch_cols), "url", "inner"))
+                .select("url", "depth", "page", "id", "last_updated_on",
+                        "_warc_ts", "_links", "x", "jsonld"))
+            # P8 retry: missing urls return to the pending pool with
+            # attempts+1 (state left 'scheduled' would orphan them forever;
+            # the pending filter caps at max_retries). extract_pages is 1:1
+            # over pages ⋈ fetch_cols, so the cached processed.url IS the
+            # fetched set: missing and fetched rows split to_fetch on it
+            # (one broadcast, reused by both joins) — pages is never scanned
+            # again for them. missing keeps an Observation: its rows exist
+            # only in the frontier delta write, so counting them in the
+            # aggregate would run the got broadcast a second time.
+            got = F.broadcast(processed.select("url"))
+            obs_missing = Observation()
+            missing_metrics = [
+                F.count(F.lit(1)).alias("missing"),
+                F.count(F.when(F.col("attempts") < self.max_retries, 1))
+                .alias("missing_retryable")]
+            missing = (to_fetch.join(got, "url", "left_anti")
+                       .withColumn("attempts", F.col("attempts") + 1)
+                       .withColumn("state", F.lit("pending"))
+                       .observe(obs_missing, *missing_metrics))
 
-        changed = classified.filter(F.col("status") != D.STATUS_UNCHANGED)
-        enqueue = (changed.drop("status")
-                   .withColumn("priority", F.lit(0.0))
-                   .withColumn("state", F.lit("pending"))
-                   .withColumn("attempts", F.lit(0))
-                   .select(*_FRONTIER_COLS))
+            # ---- list pages -> frontier candidates (S5 + D1/D2) --------------
+            links = (processed.filter(F.col("depth") == 0)
+                     .withColumn("l", F.explode("_links"))
+                     .select(F.col("l.href").alias("url"),
+                             F.lit(self.source).alias("source"),
+                             F.coalesce(F.col("l.item_id"), F.col("l.href")).alias("id"),
+                             F.col("l.item_updated").alias("last_updated_on"),
+                             (F.col("depth") + 1).alias("depth"),
+                             F.lit(wave).alias("wave"),
+                             F.col("page"),
+                             F.col("l.rank").alias("rank"))
+                     .withColumn("host", host_of(F.col("url"))))
 
-        # publish-then-mark, atomically: the seen DELTA commits in the
-        # same snapshot as the frontier delta (O(delta), no anti-join
-        # against the stored seen set). One row per (source,id): a wave
-        # that lists the same item twice keeps the earliest FIFO
-        # discovery — the same deterministic tie-break as frontier_delta,
-        # so resolved seen values stay parallelism/resume-invariant.
-        w_seen = Window.partitionBy("source", "id").orderBy(
-            F.col("page").asc_nulls_last(), F.col("rank").asc_nulls_last(),
-            F.col("last_updated_on").asc_nulls_last(), F.col("url").asc())
-        seen_new = (D.seen_delta(
-            changed.withColumn("_rn", F.row_number().over(w_seen))
-                   .filter(F.col("_rn") == 1)
-                   .select("source", "id", "host", "last_updated_on"),
-            now_ts)
-            .withColumn("_wseq", F.lit(wave)))
+            seen = self.seen_view() or spark.createDataFrame([], SEEN_SCHEMA)
+            blooms_prev = self.store.read(spark, "blooms") if self.use_bloom else None
+            if blooms_prev is not None:
+                classified = D.classify_with_bloom(links, seen, blooms_prev, now_ts)
+            else:
+                classified = D.classify(links, seen, now_ts)
+            classified = cache(classified)
 
-        # ---- detail pages -> extract -> normalize -> jobs append ---------
-        details = processed.filter(F.col("depth") > 0)
-        staged = (details
-                  .withColumn("source", F.lit(self.source))
-                  .withColumn("item_title", F.col("x.title"))
-                  .withColumn("crawled_at", F.col("_warc_ts")))
-        # single-consumer frame: its one write computes it once — no
-        # cache, and it stays OUT of the counter job (the normalize +
-        # unescape-pUDF subtree would dominate the stats action). N1
-        # source dispatch (normalizer.go:30-43): the closed-world
-        # fixtures are vieclam24h-shaped, so that normalizer runs here.
-        jobs_batch = (normalize_vieclam24h(staged).dropDuplicates(["id"])
-                      .withColumn("wave", F.lit(wave)))
+            changed = classified.filter(F.col("status") != D.STATUS_UNCHANGED)
+            enqueue = (changed.drop("status")
+                       .withColumn("priority", F.lit(0.0))
+                       .withColumn("state", F.lit("pending"))
+                       .withColumn("attempts", F.lit(0))
+                       .select(*_FRONTIER_COLS))
 
-        # the byte-identity surface (C2, worker.go:145-147): CleanToText of
-        # the extracted description, committed per url
-        _, clean_to_text_udf, _ = clean_udfs()
-        extracted_batch = details.select(
-            "url", F.lit(wave).alias("wave"),
-            clean_to_text_udf(F.col("x.job_description")).alias("text"))
-        audit = details.select("url", F.lit(wave).alias("wave"),
-                               F.posexplode("jsonld").alias("blob_index", "blob"))
+            # publish-then-mark, atomically: the seen DELTA commits in the
+            # same snapshot as the frontier delta (O(delta), no anti-join
+            # against the stored seen set). One row per (source,id): a wave
+            # that lists the same item twice keeps the earliest FIFO
+            # discovery — the same deterministic tie-break as frontier_delta,
+            # so resolved seen values stay parallelism/resume-invariant.
+            seen_new = (D.seen_delta(
+                _first_per_key(changed, ["source", "id"],
+                               F.col("page").asc_nulls_last(),
+                               F.col("rank").asc_nulls_last(),
+                               F.col("last_updated_on").asc_nulls_last(),
+                               F.col("url").asc())
+                .select("source", "id", "host", "last_updated_on"),
+                now_ts)
+                .withColumn("_wseq", F.lit(wave)))
 
-        # ---- frontier delta (O(changed rows), never a rewrite) -----------
-        fetched_rows = (to_fetch.join(got, "url", "left_semi")
-                        .withColumn("state", F.lit("fetched")))
-        state_changes = (fetched_rows.select(*_FRONTIER_COLS)
-                         .unionByName(missing.select(*_FRONTIER_COLS))
-                         .unionByName(disallowed.select(*_FRONTIER_COLS))
-                         .withColumn("_pri", F.lit(0)))
-        # Within-wave resolution: one row per url. An enqueue beats a
-        # state update (an UPDATED link re-pends a just-fetched url for
-        # recrawl — publisher.go:30-83 re-push semantics); duplicate
-        # enqueues keep the earliest FIFO discovery (page, rank).
-        wave_delta = state_changes.unionByName(
-            enqueue.withColumn("_pri", F.lit(1)))
-        w_dedup = Window.partitionBy("url").orderBy(
-            F.col("_pri").desc(), F.col("page").asc_nulls_last(),
-            F.col("rank").asc_nulls_last(),
-            F.col("last_updated_on").asc_nulls_last(), F.col("id").asc())
-        frontier_delta = (wave_delta
-                          .withColumn("_rn", F.row_number().over(w_dedup))
-                          .filter(F.col("_rn") == 1).drop("_rn", "_pri")
-                          .withColumn("_wseq", F.lit(wave)))
+            # ---- detail pages -> extract -> normalize -> jobs append ---------
+            details = processed.filter(F.col("depth") > 0)
+            staged = (details
+                      .withColumn("source", F.lit(self.source))
+                      .withColumn("item_title", F.col("x.title"))
+                      .withColumn("crawled_at", F.col("_warc_ts")))
+            # single-consumer frame: its one write computes it once — no
+            # cache, and it stays OUT of the counter job (the normalize +
+            # unescape-pUDF subtree would dominate the stats action). N1
+            # source dispatch (normalizer.go:30-43): the closed-world
+            # fixtures are vieclam24h-shaped, so that normalizer runs here.
+            jobs_batch = (normalize_vieclam24h(staged).dropDuplicates(["id"])
+                          .withColumn("wave", F.lit(wave)))
 
-        # ---- THE pre-commit action (one per wave) ---------------------------
-        # One aggregate over the three cached frames, each row tagged
-        # with its partition and its kind: "fetched" for processed rows,
-        # the dedup status for classified rows, the schedule state for
-        # sched rows. Collecting it fills every cache beneath it — sched,
-        # the Python extraction stage and the bloom probe — so the
-        # commit's concurrent writes see only cached frames, and both the
-        # wave stats and the lineage rows are sums over what it returns.
-        pid = F.spark_partition_id().alias("partition_id")
-        tagged = (processed.select(pid, F.lit("fetched").alias("kind"))
-                  .unionByName(classified.select(pid, F.col("status").alias("kind")))
-                  .unionByName(sched.select(pid, F.col("state").alias("kind"))))
-        total: Counter = Counter()
-        per_part: dict[int, Counter] = defaultdict(Counter)
-        for part, kind, rows in tagged.groupBy("partition_id", "kind").count().collect():
-            total[kind] += rows
-            if kind in _LINEAGE_KINDS:
-                per_part[part][kind] += rows
-        counted = {"fetched": total["fetched"], "new": total[D.STATUS_NEW],
-                   "updated": total[D.STATUS_UPDATED],
-                   "unchanged": total[D.STATUS_UNCHANGED],
-                   "deferred": total["deferred"],
-                   "disallowed": total["disallowed"]}
-        counted["enqueued"] = counted["new"] + counted["updated"]
+            # the byte-identity surface (C2, worker.go:145-147): CleanToText of
+            # the extracted description, committed per url
+            _, clean_to_text_udf, _ = clean_udfs()
+            extracted_batch = details.select(
+                "url", F.lit(wave).alias("wave"),
+                clean_to_text_udf(F.col("x.job_description")).alias("text"))
+            audit = details.select("url", F.lit(wave).alias("wave"),
+                                   F.posexplode("jsonld").alias("blob_index", "blob"))
 
-        # incremental bloom maintenance: delta bloom at fixed capacity,
-        # OR-merged into the stored table — O(delta + n_salts); skipped
-        # entirely on waves that marked nothing new (detail waves)
-        blooms_out = None
-        if self.use_bloom and counted["enqueued"] > 0:
-            delta_blooms = D.build_blooms(
-                seen_new, capacity_per_salt=BLOOM_CAPACITY_PER_SALT)
-            blooms_out = (D.merge_blooms(blooms_prev, delta_blooms)
-                          if blooms_prev is not None else delta_blooms)
-        tables = {"blooms": blooms_out} if blooms_out is not None else {}
+            # ---- frontier delta (O(changed rows), never a rewrite) -----------
+            fetched_rows = (to_fetch.join(got, "url", "left_semi")
+                            .withColumn("state", F.lit("fetched")))
+            state_changes = (fetched_rows.select(*_FRONTIER_COLS)
+                             .unionByName(missing.select(*_FRONTIER_COLS))
+                             .unionByName(disallowed.select(*_FRONTIER_COLS))
+                             .withColumn("_pri", F.lit(0)))
+            # Within-wave resolution: one row per url. An enqueue beats a
+            # state update (an UPDATED link re-pends a just-fetched url for
+            # recrawl — publisher.go:30-83 re-push semantics); duplicate
+            # enqueues keep the earliest FIFO discovery (page, rank).
+            wave_delta = state_changes.unionByName(
+                enqueue.withColumn("_pri", F.lit(1)))
+            frontier_delta = (_first_per_key(
+                wave_delta, ["url"], F.col("_pri").desc(),
+                F.col("page").asc_nulls_last(), F.col("rank").asc_nulls_last(),
+                F.col("last_updated_on").asc_nulls_last(), F.col("id").asc())
+                .drop("_pri")
+                .withColumn("_wseq", F.lit(wave)))
 
-        # ---- lineage (per-partition metrics, north_rule) ------------------
-        # from the collected counts; one file per wave. wall_ms is the
-        # wave up to here — every job but the commit's writes.
-        wall_ms, committed_at = int((time.time() - t0) * 1000), datetime.now()
-        lineage_new = spark.createDataFrame(
-            [(wave, part, c["fetched"], c[D.STATUS_NEW], c[D.STATUS_UPDATED],
-              c[D.STATUS_UNCHANGED], wall_ms, committed_at)
-             for part, c in sorted(per_part.items())],
-            LINEAGE_SCHEMA).coalesce(1)
-        self.store.commit(
-            wave,
-            tables,
-            appends={"frontier": frontier_delta, "seen": seen_new,
-                     "jobs": jobs_batch, "extracted": extracted_batch,
-                     "lineage": lineage_new, "jsonld_audit": audit},
-            output_partitions=SNAPSHOT_FILES,
-            # only the fat tables pay a file-sizing shuffle; control
-            # tables write with natural partitioning.
-            repartition_tables={"jobs", "extracted"})
-        # the missing observation fires in the frontier-delta write
-        counted.update(_obs_get(obs_missing,
-                                ["missing", "missing_retryable"],
-                                missing, missing_metrics))
+            # ---- THE pre-commit action (one per wave) ---------------------------
+            # One aggregate over the three cached frames, each row tagged
+            # with its partition and its kind: "fetched" for processed rows,
+            # the dedup status for classified rows, the schedule state for
+            # sched rows. Collecting it fills every cache beneath it — sched,
+            # the Python extraction stage and the bloom probe — so the
+            # commit's concurrent writes see only cached frames, and both the
+            # wave stats and the lineage rows are sums over what it returns.
+            pid = F.spark_partition_id().alias("partition_id")
+            tagged = (processed.select(pid, F.lit("fetched").alias("kind"))
+                      .unionByName(classified.select(pid, F.col("status").alias("kind")))
+                      .unionByName(sched.select(pid, F.col("state").alias("kind"))))
+            total: Counter = Counter()
+            per_part: dict[int, Counter] = defaultdict(Counter)
+            for part, kind, rows in tagged.groupBy("partition_id", "kind").count().collect():
+                total[kind] += rows
+                if kind in _LINEAGE_KINDS:
+                    per_part[part][kind] += rows
+            counted = {"fetched": total["fetched"], "new": total[D.STATUS_NEW],
+                       "updated": total[D.STATUS_UPDATED],
+                       "unchanged": total[D.STATUS_UNCHANGED],
+                       "deferred": total["deferred"],
+                       "disallowed": total["disallowed"]}
+            counted["enqueued"] = counted["new"] + counted["updated"]
+
+            # incremental bloom maintenance: delta bloom at fixed capacity,
+            # OR-merged into the stored table — O(delta + n_salts); skipped
+            # entirely on waves that marked nothing new (detail waves)
+            blooms_out = None
+            if self.use_bloom and counted["enqueued"] > 0:
+                delta_blooms = D.build_blooms(
+                    seen_new, capacity_per_salt=BLOOM_CAPACITY_PER_SALT)
+                blooms_out = (D.merge_blooms(blooms_prev, delta_blooms)
+                              if blooms_prev is not None else delta_blooms)
+            tables = {"blooms": blooms_out} if blooms_out is not None else {}
+
+            # ---- lineage (per-partition metrics, north_rule) ------------------
+            # from the collected counts; one file per wave. wall_ms is the
+            # wave up to here — every job but the commit's writes.
+            wall_ms, committed_at = int((time.time() - t0) * 1000), datetime.now()
+            lineage_new = spark.createDataFrame(
+                [(wave, part, c["fetched"], c[D.STATUS_NEW], c[D.STATUS_UPDATED],
+                  c[D.STATUS_UNCHANGED], wall_ms, committed_at)
+                 for part, c in sorted(per_part.items())],
+                LINEAGE_SCHEMA).coalesce(1)
+            self.store.commit(
+                wave,
+                tables,
+                appends={"frontier": frontier_delta, "seen": seen_new,
+                         "jobs": jobs_batch, "extracted": extracted_batch,
+                         "lineage": lineage_new, "jsonld_audit": audit},
+                output_partitions=SNAPSHOT_FILES,
+                # only the fat tables pay a file-sizing shuffle; control
+                # tables write with natural partitioning.
+                repartition_tables={"jobs", "extracted"})
+            # the missing observation fires in the frontier-delta write
+            counted.update(_obs_get(obs_missing,
+                                    ["missing", "missing_retryable"],
+                                    missing, missing_metrics))
+        finally:
+            for df in cached:
+                df.unpersist()
         stats = {"wave": wave, **{k: int(counted[k]) for k in _STAT_KEYS}}
         # exact pending-work indicator: deferred rows stay pending,
         # enqueues become pending, retryable missing re-pend; every
         # other pending row transitioned this wave
         stats["work_remains"] = (stats["enqueued"] + stats["deferred"]
                                  + stats["missing_retryable"]) > 0
-        sched.unpersist()
-        processed.unpersist()
-        classified.unpersist()
         if self.compact_every and wave % self.compact_every == 0:
             self.compact()
         stats["wall_ms"] = int((time.time() - t0) * 1000)
@@ -516,9 +527,7 @@ class WaveDriver:
         df = self.store.read(self.spark, table)
         if df is None:
             return None
-        w = Window.partitionBy(key).orderBy(F.col("wave").desc())
-        return (df.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1).drop("_rn"))
+        return _first_per_key(df, [key], F.col("wave").desc())
 
     def jobs_view(self) -> DataFrame | None:
         """Normalized jobs, last write per id (K3 upsert semantics)."""

@@ -57,11 +57,14 @@ def _nonempty(s) -> str | None:
     return s if isinstance(s, str) and s != "" else None
 
 
-def extract_detail_fields(html: str | None) -> dict:
-    """Oracle for the per-page extraction struct (enrichJobData parity)."""
-    out = dict(_EMPTY)
+def _extract_detail(html: str | None) -> tuple[dict, list[str]]:
+    """One pass over a detail page: the extraction struct
+    (enrichJobData parity) and the JSON-LD audit blobs
+    (scraper.go:127-154), from one regex scan and one ``json.loads``
+    per blob."""
+    out, blobs = dict(_EMPTY), []
     if not html:
-        return out
+        return out, blobs
 
     m = _RE_CANONICAL.search(html)
     if m:
@@ -73,7 +76,6 @@ def extract_detail_fields(html: str | None) -> dict:
         if m.group(1).strip() == "Kinh nghiệm":
             out["experience_text"] = m.group(2).strip()
 
-    n_valid = 0
     for m in _RE_JSONLD.finditer(html):
         blob = m.group(1).strip()
         if not blob:
@@ -84,7 +86,7 @@ def extract_detail_fields(html: str | None) -> dict:
             continue
         if not isinstance(jp, dict):
             continue
-        n_valid += 1
+        blobs.append(blob)  # every trimmed, valid-JSON-object blob, raw
         if jp.get("@type") != "JobPosting":
             continue  # scraper.go:208-209
         # keys only set when non-empty (scraper.go:217-245)
@@ -147,8 +149,13 @@ def extract_detail_fields(html: str | None) -> dict:
         rr = jp.get("rateResponse")
         if rr is not None and rr != "":
             out["rate_response_text"] = repr(rr) if isinstance(rr, float) else str(rr)
-    out["jsonld_count"] = n_valid
-    return out
+    out["jsonld_count"] = len(blobs)
+    return out, blobs
+
+
+def extract_detail_fields(html: str | None) -> dict:
+    """Oracle for the per-page extraction struct (enrichJobData parity)."""
+    return _extract_detail(html)[0]
 
 
 def extract_links(html: str | None) -> list[dict]:
@@ -166,19 +173,7 @@ def extract_links(html: str | None) -> list[dict]:
 def extract_jsonld_blobs(html: str | None) -> list[str]:
     """Oracle for the JSON-LD audit side channel (scraper.go:127-154):
     every trimmed, valid-JSON-object blob, raw."""
-    if not html:
-        return []
-    out = []
-    for m in _RE_JSONLD.finditer(html):
-        blob = m.group(1).strip()
-        if not blob:
-            continue
-        try:
-            if isinstance(json.loads(blob), dict):
-                out.append(blob)
-        except ValueError:
-            continue
-    return out
+    return _extract_detail(html)[1]
 
 
 def _to_str(h) -> str | None:
@@ -211,8 +206,9 @@ def extract_pages(df, html_col: str = "html", depth_col: str = "depth"):
     ~2.6x slower at every core count (BENCH.md, round 4).
 
     Semantics: list pages (depth 0) run the
-    link scan, detail pages run the JSON-LD enrichment + audit-blob
-    scan (scraper.go:156-291, colly_extractor.go:165-203). html is
+    link scan, detail pages one JSON-LD scan that yields both the
+    enrichment struct and the audit blobs (scraper.go:127-291,
+    colly_extractor.go:165-203). html is
     decoded per Arrow batch and DROPPED inside the stage; every other
     input column is re-emitted zero-copy, so the only Python-side
     materializations are the html bytes and the extracted values.
@@ -243,9 +239,10 @@ def extract_pages(df, html_col: str = "html", depth_col: str = "depth"):
                     xs.append(None)
                     blobs.append(None)
                 else:
+                    x, jsonld = _extract_detail(s)
                     links.append(None)
-                    xs.append(extract_detail_fields(s))
-                    blobs.append(extract_jsonld_blobs(s))
+                    xs.append(x)
+                    blobs.append(jsonld)
             arrays = [b.column(b.schema.get_field_index(n)) for n in names]
             arrays += [pa.array(links, links_t), pa.array(xs, x_t),
                        pa.array(blobs, blobs_t)]

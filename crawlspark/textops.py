@@ -42,6 +42,26 @@ def token_count(text: Column) -> Column:
 BPE_TOKEN_PATTERN = r"'(?:[sdmt]|ll|ve|re)| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+"
 
 
+def _hash60(x: Column) -> Column:
+    """The oracle-replayable hash: the first 15 hex digits (60 bits) of
+    md5(x) as a long — inside a signed 64-bit lane in both engines
+    (DuckDB: ('0x' || substr(md5(x), 1, 15))::UBIGINT)."""
+    return F.conv(F.substring(F.md5(x), 1, 15), 16, 10).cast("long")
+
+
+def _token_chunks(text: Column, size: int) -> Column:
+    """Whitespace tokens re-chunked into fixed-size space-joined
+    pseudo-lines (the last may be shorter); [] for empty/null text.
+    Deterministic, so an oracle replays the identical chunk set."""
+    toks = tokens_expr(text)
+    n = F.size(toks)
+    nchunks = F.ceil(n / F.lit(size)).cast("int")
+    return F.when(n > 0, F.transform(
+        F.sequence(F.lit(0), nchunks - 1),
+        lambda i: F.concat_ws(" ", F.slice(toks, i * size + 1, size)))) \
+        .otherwise(F.array().cast("array<string>"))
+
+
 def bpe_token_count(text: Column) -> Column:
     """BPE-ish token count (task brief): the GPT-2 pre-tokenization
     regex classes counted JVM-side with regexp_count — the cheap
@@ -299,9 +319,10 @@ def ngram_jaccard_for_pairs(df: DataFrame, pairs: DataFrame,
 def ngram_jaccard(left: DataFrame, right: DataFrame, text_col: str,
                   key_col: str, shingle_n: int,
                   pairs: DataFrame) -> DataFrame:
-    """Exact n-gram Jaccard for given (id_a, id_b) pairs — array form,
-    kept as the cross-check twin for ngram_jaccard_for_pairs (tests
-    assert identical output); the count-based form is the hot path."""
+    """Exact n-gram Jaccard for given (id_a, id_b) pairs — array form:
+    the verify step minhash_lsh_pairs runs on broadcast-sized candidate
+    sets. ngram_jaccard_for_pairs (count form) is the fallback for pair
+    sets too large to broadcast; nothing calls it yet."""
     sh = (left.select(F.col(key_col).alias("_id"),
                       word_shingles(F.col(text_col), shingle_n).alias("_sh"))
           .withColumn("_n", F.size("_sh")))
@@ -477,6 +498,19 @@ def cosine_pair_sim(a: Column, b: Column) -> Column:
     return dot / (na * nb)
 
 
+def _embedding_dim(df: DataFrame, vec_col: str, dim: int | None) -> int:
+    """``dim`` if given, else the length of the first vector; an empty
+    frame (or a null first vector) has no dimension to infer, so it
+    fails loudly instead of with a TypeError on a None subscript."""
+    if dim is not None:
+        return dim
+    head = df.select(vec_col).first()
+    if head is None or head[vec_col] is None:
+        raise ValueError("cannot infer the embedding dim from an empty "
+                         "DataFrame; pass dim= explicitly")
+    return len(head[vec_col])
+
+
 def embedding_near_dups(df: DataFrame, threshold: float = 0.9,
                         vec_col: str = "embedding",
                         key_col: str = "vec_id",
@@ -495,8 +529,7 @@ def embedding_near_dups(df: DataFrame, threshold: float = 0.9,
         b = df.select(F.col(key_col).alias("id_b"), F.col(vec_col).alias("vb"))
         pairs = a.join(b, F.col("id_a") < F.col("id_b"))
     else:
-        if dim is None:
-            dim = len(df.select(vec_col).first()[vec_col])
+        dim = _embedding_dim(df, vec_col, dim)
         bucketed = df.withColumn(
             "_b", lsh_bucket(F.col(vec_col), dim, n_planes, seed))
         a = bucketed.select(F.col(key_col).alias("id_a"),
@@ -786,14 +819,7 @@ def paragraph_dedup(df: DataFrame, text_col: str = "text",
     re-aggregate. collect_list order is engine-nondeterministic;
     array_sort on (pos, p) structs restores it deterministically."""
     if para_tokens > 0:
-        toks = tokens_expr(F.col(text_col))
-        n = F.size(toks)
-        nchunks = F.ceil(n / F.lit(para_tokens)).cast("int")
-        paras = F.when(n > 0, F.transform(
-            F.sequence(F.lit(0), nchunks - 1),
-            lambda i: F.concat_ws(" ", F.slice(toks, i * para_tokens + 1,
-                                               para_tokens)))) \
-            .otherwise(F.array().cast("array<string>"))
+        paras = _token_chunks(F.col(text_col), para_tokens)
     else:
         paras = F.split(F.coalesce(F.col(text_col), F.lit("")), r"\n+")
     ex = (df.select(F.col(key_col).alias("key"),
@@ -879,11 +905,9 @@ def stratified_sample(df: DataFrame, rates: dict[str, float],
     table is a literal CASE chain (strata are few by definition).
     The hash is the same '0x'+hex-prefix construction the oracles
     replay, so DuckDB draws the identical sample."""
-    h = F.conv(F.substring(
-        F.md5(F.concat(F.lit(salt + "|"),
-                       F.coalesce(F.col(strat_col), F.lit("")),
-                       F.lit("|"), F.col(key_col).cast("string"))),
-        1, 15), 16, 10).cast("long")
+    h = _hash60(F.concat(F.lit(salt + "|"),
+                         F.coalesce(F.col(strat_col), F.lit("")),
+                         F.lit("|"), F.col(key_col).cast("string")))
     bucket = F.pmod(h, F.lit(1_000_000))
     rate = F.lit(float(default_rate))
     for stratum, r in sorted(rates.items()):
@@ -924,10 +948,8 @@ def mix_corpus(df: DataFrame, weights: dict[str, float],
         "rate",
         F.when(des.isNull() | (F.col("_T") <= 0), F.lit(0.0))
          .otherwise(F.least(F.lit(1.0), des / F.col("_T").cast("double"))))
-    h = F.conv(F.substring(
-        F.md5(F.concat(F.lit(salt + "|"), F.col("_src"), F.lit("|"),
-                       F.col("key").cast("string"))), 1, 15), 16, 10) \
-        .cast("long")
+    h = _hash60(F.concat(F.lit(salt + "|"), F.col("_src"), F.lit("|"),
+                         F.col("key").cast("string")))
     return (toks.join(F.broadcast(rates.select("_src", "rate")), "_src")
             .filter(F.pmod(h, F.lit(1_000_000)) < F.col("rate") * 1_000_000)
             .select("key", F.col("_src").alias("source"), "n_tokens",
@@ -943,49 +965,27 @@ def pack_sequences(df: DataFrame, budget: int, text_col: str = "text",
     sequence (the concat-and-chunk bookkeeping an LLM pretraining
     loader runs over a corpus).
 
-    The global running token total is a DISTRIBUTED PREFIX SUM, not a
+    The global running token total is ``_prefix_sum`` over one
+    constant group, weighted by the doc's token count — not a
     single-partition window: a global `Window.orderBy(key)` would pull
     the entire corpus through ONE task (Spark's unpartitioned-window
-    trap — WindowExec moves everything into one partition). Instead:
-    range-partition by key, per-partition running sum (each partition
-    windows only its own rows), collect the P per-partition totals
-    (driver-side: P numbers, not rows), and broadcast-join each
-    partition's exclusive offset back. Deterministic: range
-    partitioning + in-partition key order reproduce the same global
-    order at any parallelism.
+    trap). Deterministic: range partitioning + in-partition key order
+    reproduce the same global order at any parallelism.
 
     Returns (key, n_tokens, seq_id, seq_offset) where seq_id =
     floor(start / budget) and seq_offset = start % budget, start
     being the doc's first-token position in the global concat."""
     counts = df.select(F.col(key_col).alias("key"),
                        token_count(F.col(text_col)).cast("long")
-                       .alias("n_tokens"))
-    p = num_partitions or counts.sparkSession.sparkContext.defaultParallelism
-    parted = (counts.repartitionByRange(p, "key")
-              .sortWithinPartitions("key")
-              .withColumn("_pid", F.spark_partition_id()))
-    w = (Window.partitionBy("_pid").orderBy("key")
-         .rowsBetween(Window.unboundedPreceding, 0))
-    # Persist the NARROW addressed frame (4 ints/doc) before the
-    # totals action: the prefix sum needs two passes, and without this
-    # the second pass re-tokenizes the full text corpus. At scale the
-    # persisted side is ~32 bytes/doc vs re-scanning the corpus.
-    local = (parted.withColumn("_cum", F.sum("n_tokens").over(w))
-             .persist())
-    totals = (local.groupBy("_pid").agg(F.max("_cum").alias("_tot"))
-              .orderBy("_pid").collect())
-    off, offsets = 0, {}
-    for r in totals:
-        offsets[r["_pid"]] = off
-        off += r["_tot"]
-    off_df = local.sparkSession.createDataFrame(
-        [(pid, o) for pid, o in offsets.items()], "_pid int, _off long")
-    start = F.col("_off") + F.col("_cum") - F.col("n_tokens")
-    return (local.join(F.broadcast(off_df), "_pid")
-            .select("key", "n_tokens",
-                    F.floor(start / budget).cast("long").alias("seq_id"),
-                    F.pmod(start, F.lit(budget)).cast("long")
-                    .alias("seq_offset")))
+                       .alias("n_tokens"),
+                       F.lit("all").alias("_g"))
+    summed = _prefix_sum(counts, "_g", ["key"], F.col("n_tokens"),
+                         num_partitions)
+    start = F.col("_cum") - F.col("n_tokens")
+    return summed.select(
+        "key", "n_tokens",
+        F.floor(start / budget).cast("long").alias("seq_id"),
+        F.pmod(start, F.lit(budget)).cast("long").alias("seq_offset"))
 
 
 def chunk_documents(df: DataFrame, size: int = 512, overlap: int = 64,
@@ -1277,12 +1277,12 @@ def grouped_ntile(df: DataFrame, part_col: str, order_cols: list[str],
 
     `Window.partitionBy(lang)` puts each language in ONE sort task —
     at 100 TB the English partition is ~half the corpus through a
-    single thread. This is instead the seq_pack distributed-rank
-    shape: global range partition on ``order_cols`` (a total order —
-    include a unique key), per-(input-partition, group) local
-    row_number, a lazy prefix-sum window over the P x |groups| count
-    table (numbers, not rows), broadcast exclusive offsets back,
-    rank = offset + local.
+    single thread. This is instead grouped_rank, the distributed
+    prefix sum seq_pack also runs: global range partition on
+    ``order_cols`` (a total order — include a unique key),
+    per-(input-partition, group) local running count, a lazy
+    prefix-sum window over the P x |groups| count table (numbers, not
+    rows), broadcast exclusive offsets back, rank = offset + local.
     A mega-group spreads across ALL partitions, so skew in the group
     column cannot serialize the sort. The bucket is then pure integer
     arithmetic on (rank, group_total) — the exact SQL NTILE closed
@@ -1304,42 +1304,53 @@ def grouped_ntile(df: DataFrame, part_col: str, order_cols: list[str],
             .drop("n_group"))
 
 
-def grouped_rank(df: DataFrame, part_col: str, order_cols: list[str],
-                 num_partitions: int | None = None) -> DataFrame:
-    """The distributed-rank primitive under grouped_ntile /
-    group_quantiles / shard_plan: exact 1-based rank within
-    ``part_col`` by ``order_cols`` (which must totally order rows)
-    plus the group total, computed WITHOUT a per-group window sort —
-    global range partition on the order columns, per-(partition,
-    group) local row_number, exclusive offsets from a lazy prefix-sum
-    window over the P x |groups| count table (numbers, not rows),
-    broadcast back.
-    Returns df + (rank long, n_group long)."""
-    sess = df.sparkSession
-    p = num_partitions or sess.sparkContext.defaultParallelism
+def _prefix_sum(df: DataFrame, part_col: str, order_cols: list[str],
+                weight: Column, num_partitions: int | None) -> DataFrame:
+    """The distributed prefix sum under grouped_rank and
+    pack_sequences: the running total of ``weight`` within
+    ``part_col`` in ``order_cols`` order, computed WITHOUT a per-group
+    window sort — global range partition on the order columns,
+    per-(partition, group) local running sum, exclusive offsets from a
+    lazy prefix-sum window over the P x |groups| total table (numbers,
+    not rows), broadcast back. No action runs while it is built.
+    Returns df + (_cum long: inclusive running total, _tot long: group
+    total)."""
+    p = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     oc = [F.col(c) for c in order_cols]
     parted = (df.repartitionByRange(p, *oc)
               .withColumn("_pid", F.spark_partition_id()))
-    w = Window.partitionBy("_pid", part_col).orderBy(*oc)
-    local = parted.withColumn("_lrn", F.row_number().over(w)).persist()
-    # r6: the exclusive offsets are a LAZY prefix sum over the
-    # P x |groups| count table (window partitioned by the group,
-    # ordered by partition id) instead of a driver-side collect +
-    # createDataFrame — same numbers, no blocking action, no
-    # driver-memory exposure to a high-cardinality part_col (the r5
-    # verdict's guard note), and the count table stays distributed.
-    cnt = local.groupBy("_pid", part_col).agg(F.count("*").alias("_c"))
+    w = (Window.partitionBy("_pid", part_col).orderBy(*oc)
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    # persisted: the local sums feed both the total table and the
+    # offset join, and recomputing them re-runs the range shuffle
+    local = parted.withColumn("_lcum", F.sum(weight).over(w)).persist()
+    # offsets from a lazy window, not a driver-side collect: no
+    # blocking action, no driver-memory exposure to a high-cardinality
+    # part_col, and the total table stays distributed
+    cnt = local.groupBy("_pid", part_col).agg(F.sum(weight).alias("_c"))
     wo = (Window.partitionBy(part_col).orderBy("_pid")
           .rowsBetween(Window.unboundedPreceding, -1))
     wt = Window.partitionBy(part_col)
     off_df = cnt.select(
         "_pid", part_col,
         F.coalesce(F.sum("_c").over(wo), F.lit(0)).cast("long").alias("_off"),
-        F.sum("_c").over(wt).cast("long").alias("_tot"))
+        F.sum("_c").over(wt).cast("long").alias("_gtot"))
     return (local.join(F.broadcast(off_df), ["_pid", part_col])
-            .withColumn("rank", (F.col("_off") + F.col("_lrn")).cast("long"))
-            .withColumn("n_group", F.col("_tot").cast("long"))
-            .drop("_pid", "_lrn", "_off", "_tot"))
+            .withColumn("_cum", (F.col("_off") + F.col("_lcum")).cast("long"))
+            .withColumn("_tot", F.col("_gtot"))
+            .drop("_pid", "_lcum", "_off", "_gtot"))
+
+
+def grouped_rank(df: DataFrame, part_col: str, order_cols: list[str],
+                 num_partitions: int | None = None) -> DataFrame:
+    """The distributed-rank primitive under grouped_ntile /
+    group_quantiles / shard_plan: exact 1-based rank within
+    ``part_col`` by ``order_cols`` (which must totally order rows)
+    plus the group total — ``_prefix_sum`` with weight 1.
+    Returns df + (rank long, n_group long)."""
+    return (_prefix_sum(df, part_col, order_cols, F.lit(1), num_partitions)
+            .withColumnRenamed("_cum", "rank")
+            .withColumnRenamed("_tot", "n_group"))
 
 
 def pmi_bigrams(df: DataFrame, text_col: str = "text",
@@ -1584,9 +1595,7 @@ def kmv_distinct(df: DataFrame, text_col: str = "text",
     uniform 60-bit value, keep the k smallest per group, estimate
     |distinct| = (k-1) / u_k with u_k the k-th smallest hash
     normalized to (0,1]. Unlike HLL the estimator is DETERMINISTIC
-    given the hash, so a SQL oracle replays it bit-for-bit (md5-hex →
-    int, the same scheme simhash uses; DuckDB: ('0x'||substr)::UBIGINT,
-    Spark: conv(...,16,10)).
+    given the hash, so a SQL oracle replays it bit-for-bit (_hash60).
 
     Shape: distinct (group, token) is one partial-agg'd aggregate;
     the rank window then runs over the VOCAB-sized distinct frame
@@ -1594,14 +1603,11 @@ def kmv_distinct(df: DataFrame, text_col: str = "text",
     rides the same shuffled frame as a grouped count (one extra
     aggregate, no extra scan) and is returned beside the estimate as
     the accuracy exhibit; drop it at 100 TB if only the sketch is
-    wanted. 15 hex digits = 60 bits keeps the hash inside a signed
-    64-bit lane in both engines; 2^60 as a double literal is exact."""
+    wanted. 2^60 as a double literal is exact."""
     toks = (df.select(F.col(group_col).alias("grp"),
                       F.explode(tokens_expr(F.col(text_col))).alias("w"))
             .distinct())
-    hashed = toks.select(
-        "grp", F.conv(F.substring(F.md5("w"), 1, 15), 16, 10)
-        .cast("long").alias("h"))
+    hashed = toks.select("grp", _hash60(F.col("w")).alias("h"))
     wk = Window.partitionBy("grp").orderBy("h")
     ranked = hashed.withColumn("_r", F.row_number().over(wk))
     agg = (ranked.groupBy("grp")
@@ -1729,14 +1735,7 @@ def line_dedup(df: DataFrame, text_col: str = "text",
     projection: array_distinct preserves first-occurrence order in
     Spark, so there is NO explode, NO window, NO shuffle — a 100 TB
     corpus runs this entirely inside whole-stage codegen."""
-    toks = tokens_expr(F.col(text_col))
-    n = F.size(toks)
-    nchunks = F.ceil(n / F.lit(line_tokens)).cast("int")
-    lines = F.when(n > 0, F.transform(
-        F.sequence(F.lit(0), nchunks - 1),
-        lambda i: F.concat_ws(" ", F.slice(toks, i * line_tokens + 1,
-                                           line_tokens)))) \
-        .otherwise(F.array().cast("array<string>"))
+    lines = _token_chunks(F.col(text_col), line_tokens)
     uniq = F.array_distinct(lines)
     return df.select(
         F.col(key_col),
@@ -1796,36 +1795,21 @@ def semantic_dedup(df: DataFrame, threshold: float = 0.5,
     the same stated recall trade as embedding_near_dups; raise
     n_planes for smaller clusters (speed) or lower it for recall.
 
-    Shape: bucket is a per-row expression; the pair join is an equi
-    join ON THE BUCKET (never cartesian); the drop set is a distinct
-    projection of the pair result; the verdict is a left join against
-    it. At 100 TB the bucket join is the only corpus-wide exchange."""
-    if dim is None:
-        head = df.select(vec_col).first()
-        if head is None or head[vec_col] is None:
-            # empty frame (or null head vector): no dimension to infer —
-            # fail loudly instead of the latent TypeError on
-            # None-subscript (ADVICE r5), mirroring embedding_near_dups
-            raise ValueError(
-                "semantic_dedup: cannot infer embedding dim from an "
-                "empty DataFrame; pass dim= explicitly")
-        dim = len(head[vec_col])
-    b = df.select(F.col(key_col), F.col(vec_col).alias("_v"),
-                  lsh_bucket(F.col(vec_col), dim, n_planes, seed)
-                  .alias("cluster"))
-    a = b.select(F.col(key_col).alias("_ia"), F.col("_v").alias("_va"),
-                 F.col("cluster").alias("_c"))
-    bb = b.select(F.col(key_col).alias("_ib"), F.col("_v").alias("_vb"),
-                  F.col("cluster").alias("_c"))
-    drops = (a.join(bb, "_c")
-             .filter(F.col("_ia") < F.col("_ib"))
-             .filter(F.round(cosine_pair_sim(F.col("_va"), F.col("_vb")), 6)
-                     >= threshold)
-             .select(F.col("_ib").alias(key_col)).distinct()
+    Shape: bucket is a per-row expression; the drop set is the
+    distinct id_b of embedding_near_dups' pairs (its equi join ON THE
+    BUCKET — never cartesian — and its cosine verify); the verdict is
+    a left join against it. At 100 TB the bucket join is the only
+    corpus-wide exchange."""
+    dim = _embedding_dim(df, vec_col, dim)
+    drops = (embedding_near_dups(df, threshold, vec_col, key_col, n_planes,
+                                 seed, dim=dim)
+             .select(F.col("id_b").alias(key_col)).distinct()
              .withColumn("_drop", F.lit(1)))
-    return (b.join(drops, key_col, "left")
-            .select(F.col(key_col), F.col("cluster").cast("long")
-                    .alias("cluster"),
+    return (df.select(F.col(key_col),
+                      lsh_bucket(F.col(vec_col), dim, n_planes, seed)
+                      .alias("cluster"))
+            .join(drops, key_col, "left")
+            .select(F.col(key_col), "cluster",
                     F.col("_drop").isNull().alias("kept")))
 
 
@@ -1853,9 +1837,8 @@ def cdc_chunks(df: DataFrame, modulus: int = 8, text_col: str = "text",
     toks = tokens_expr(F.col(text_col))
     ex = (df.select(F.col(key_col),
                     F.posexplode(toks).alias("pos", "w"))
-          .withColumn("_flag", (F.conv(F.substring(F.md5("w"), 1, 15),
-                                       16, 10).cast("long")
-                                % modulus == 0).cast("int")))
+          .withColumn("_flag", (_hash60(F.col("w")) % modulus == 0)
+                      .cast("int")))
     wc = (Window.partitionBy(key_col).orderBy("pos")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     chunked = ex.withColumn("chunk_idx", F.sum("_flag").over(wc))
@@ -1893,9 +1876,8 @@ def cms_frequencies(df: DataFrame, depth: int = 4, width: int = 64,
     toks = (df.select(F.explode(tokens_expr(F.col(text_col))).alias("w"))
             .persist())
     buckets = F.array(*[
-        (F.conv(F.substring(F.md5(F.concat_ws(":", F.lit(str(j)),
-                                              F.col("w"))), 1, 15), 16, 10)
-         .cast("long") % width).alias(f"b{j}")
+        (_hash60(F.concat_ws(":", F.lit(str(j)), F.col("w"))) % width)
+        .alias(f"b{j}")
         for j in range(depth)])
     pairs = (toks.select("w", F.posexplode(buckets).alias("row", "bucket")))
     sketch = (pairs.groupBy("row", "bucket")

@@ -1,5 +1,7 @@
+"""Check every QUERIES entry against its DuckDB oracle at one scale factor
+(argv[1], default sf0.01): one status line per entry, then ``BAD: [...]``;
+exits 1 when any entry mismatches or errors."""
 import sys, math, time
-sys.path.insert(0, "/root/repo")
 import duckdb
 from crawlspark.queries import QUERIES, warm_ann_indices
 from crawlspark.session import get_spark
@@ -38,3 +40,4 @@ for name, (fn, sql) in QUERIES.items():
     print(f"{name:24s} {status} ({len(srows) if 'srows' in dir() else '?'} rows, {time.time()-t0:.1f}s)", flush=True)
 print("BAD:", bad)
 spark.stop()
+sys.exit(1 if bad else 0)

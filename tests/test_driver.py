@@ -719,3 +719,24 @@ class TestCacheHygiene:
         # the recrawl's list wave classified its links through the bloom
         list_wave = next(s for s in stats if s["unchanged"])
         assert list_wave["wave"] in probed_waves
+
+    def test_failed_commit_leaves_no_persisted_rdd(self, spark, tmp_path,
+                                                   monkeypatch):
+        """A wave whose commit raises still releases the frames it
+        persisted: the error propagates and the session holds as many
+        persisted RDDs as before the wave."""
+        drv = WaveDriver(spark, SnapshotStore(tmp_path / "wh"),
+                         num_partitions=4)
+        drv.bootstrap(synth.gen_seed_list(40))
+
+        def boom(*args, **kwargs):
+            raise OSError("commit failed")
+
+        monkeypatch.setattr(drv.store, "commit", boom)
+        persisted = spark.sparkContext._jsc.getPersistentRDDs
+        before = persisted().size()
+        with pytest.raises(OSError, match="commit failed"):
+            drv.run_wave(spark.createDataFrame(synth.gen_pages_pandas(40)),
+                         spark.createDataFrame(synth.gen_robots()),
+                         spark.createDataFrame(synth.gen_host_rank()))
+        assert persisted().size() == before

@@ -37,6 +37,10 @@ REFERENCE_ONLY = {
     "frontier.crawl_sequence": "crawl-order audit of the reference's queue",
     "dedup.content_hash": "the reference's D4 sha256 hash shape",
     "dedup.exact_dedup": "the reference's D4 exact dedup over content_hash",
+    "extract.extract_detail_fields":
+        "oracle the extraction parity tests compare the x struct against",
+    "extract.extract_jsonld_blobs":
+        "oracle the extraction parity tests compare the audit blobs against",
     "textops.ngram_jaccard_for_pairs": "fallback for ngram_jaccard's broadcast",
     "multimodal.encode_ppm": "test fixture: PPM image payloads",
     "multimodal.gen_media_pandas": "test fixture: media corpus",

@@ -210,6 +210,16 @@ class TestEmbeddingNearDups:
         assert all(exact[k] == v for k, v in lsh.items())
         assert len(exact) > 0
 
+    def test_empty_frame_needs_dim(self, spark):
+        """With no rows there is no dimension to infer: both LSH
+        operators say so with a ValueError, and run once dim= is
+        given."""
+        empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
+        for op in (X.embedding_near_dups, X.semantic_dedup):
+            with pytest.raises(ValueError, match="pass dim="):
+                op(empty)
+            assert op(empty, dim=8).count() == 0
+
 
 class TestIVF:
     def test_full_probe_equals_brute_force_and_pruning(self, spark, tmp_path):
@@ -457,6 +467,21 @@ class TestCorpusHygiene:
         plan = (X.pack_sequences(df, budget=100, num_partitions=7)
                 ._jdf.queryExecution().executedPlan().toString())
         assert "SinglePartition" not in plan, plan
+
+    def test_pack_sequences_build_runs_no_job(self, spark):
+        """Building the packing runs no Spark job: the prefix-sum
+        offsets come from a lazy window, not a driver-side collect.
+        Counted through a job group."""
+        rows = [(i, "w " * (i % 9 + 1)) for i in range(50)]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        sc = spark.sparkContext
+        sc.setJobGroup("pack_sequences_build", "pack_sequences build")
+        try:
+            X.pack_sequences(df, budget=10, num_partitions=3)
+        finally:
+            sc.setJobGroup(None, None)
+        assert sc.statusTracker().getJobIdsForGroup(
+            "pack_sequences_build") == []
 
     def test_mix_corpus_rates_and_determinism(self, spark):
         """Rates derive from measured token totals (clamped at 1),
