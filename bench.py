@@ -239,8 +239,7 @@ def state_commit_probe(rows_per_wave: int = 200_000, waves: int = 20,
                              F.lit(0).alias("attempts"),
                              F.lit(w).alias("_wseq")))
             t0 = time.time()
-            store.commit(w, {}, appends={"frontier": delta},
-                         output_partitions=8)
+            store.commit(w, {}, appends={"frontier": delta.repartition(8)})
             commit_s.append(round(time.time() - t0, 2))
             if compact_every and w % compact_every == 0:
                 t0 = time.time()

@@ -3,16 +3,20 @@
 The north_rule's deployment surface: the SAME module runs as
 
   # local
-  python -m crawlspark crawl --pages pages.parquet --warehouse wh/
+  python -m crawlspark crawl --pages pages.parquet --warehouse wh/ \\
+      --seeds seeds.parquet
 
   # multi-executor cluster (the production shape)
   python -m crawlspark package --out crawlspark.zip
   spark-submit --py-files crawlspark.zip --master <cluster> \\
-      path/to/crawlspark/__main__.py crawl --pages ... --warehouse ...
+      path/to/crawlspark/__main__.py crawl --pages ... --warehouse ... \\
+      --seeds ...
 
 Subcommands:
   crawl   run waves until the frontier drains (resumes automatically
-          from the warehouse's last committed snapshot — P10)
+          from the warehouse's last committed snapshot — P10). A new
+          warehouse needs --seeds (parquet: url, host, page, depth);
+          on a resumed one, --seeds starts a new crawl cycle
   synth   generate a deterministic pages corpus + seed list
   status  print the warehouse's snapshot/lineage summary
   package zip the package for --py-files
@@ -39,44 +43,26 @@ def _spark(args):
 
 def cmd_crawl(args) -> int:
     import pandas as pd
-    from pyspark.sql import functions as F
 
     from crawlspark import synth
     from crawlspark.driver import WaveDriver
     from crawlspark.tables import SnapshotStore
 
+    store = SnapshotStore(args.warehouse)
+    fresh = store.latest() is None
+    if fresh and not args.seeds:
+        raise SystemExit("crawl: a new warehouse needs --seeds "
+                         "(parquet: url, host, page, depth)")
     spark = _spark(args)
     pages = spark.read.parquet(args.pages)
     robots = (spark.read.parquet(args.robots) if args.robots
               else spark.createDataFrame(synth.gen_robots()))
     ranks = (spark.read.parquet(args.host_rank) if args.host_rank
              else spark.createDataFrame(synth.gen_host_rank()))
-    store = SnapshotStore(args.warehouse)
-    drv = WaveDriver(spark, store, source=args.source,
+    drv = WaveDriver(spark, store,
                      num_partitions=args.shuffle_partitions or 32)
-    if store.latest() is None:
-        if args.seeds:
-            seeds = pd.read_parquet(args.seeds)
-        else:
-            # depth-0 list pages straight from the corpus: pages whose
-            # url matches the LIST grammar (synth.list_url — the
-            # closed-world fixture shape), with the real page number so
-            # the (wave, page, rank) FIFO contract holds. Other corpora
-            # must pass an explicit --seeds (url, host, page, depth).
-            lists = (pages.withColumn("host", F.expr("parse_url(url, 'HOST')"))
-                     .filter(F.col("url").rlike(
-                         r"/viec-lam(-trang-\d+)?-vi\.html$"))
-                     .withColumn("page", F.coalesce(
-                         F.regexp_extract("url", r"-trang-(\d+)-vi",
-                                          1).try_cast("int"), F.lit(1)))
-                     .select("url", "host", "page").distinct())
-            seeds = lists.toPandas()
-            if seeds.empty:
-                raise SystemExit(
-                    "no list pages matched the fixture URL grammar; "
-                    "pass --seeds (parquet: url, host, page, depth)")
-            seeds["depth"] = 0
-        drv.bootstrap(seeds)
+    if fresh:
+        drv.bootstrap(pd.read_parquet(args.seeds))
     elif args.seeds:
         # resuming warehouse + explicit seeds = a new crawl cycle:
         # enqueue unseen seed urls via the P6 reseed path
@@ -151,7 +137,6 @@ def main(argv: list[str] | None = None) -> int:
     c.add_argument("--seeds")
     c.add_argument("--robots")
     c.add_argument("--host-rank")
-    c.add_argument("--source", default="vieclam24h")
     c.add_argument("--max-waves", type=int, default=50)
     c.set_defaults(fn=cmd_crawl)
 

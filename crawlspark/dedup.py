@@ -9,15 +9,15 @@ Scale design (10^10-URL frontier):
 - The per-job Redis round-trip (deduplicator.go:49-67, the reference's
   scalability ceiling) becomes ONE shuffle: candidates LEFT JOIN seen
   on (source, id).
-- ``seen`` is salted by xxhash64(host) % n_salts so one hot domain
-  (Zipf top host owns ~30% of URLs) spreads over n_salts buckets in
+- ``seen`` is salted by xxhash64(host) % N_SALTS so one hot domain
+  (Zipf top host owns ~30% of URLs) spreads over N_SALTS buckets in
   the membership layer; politeness grouping stays keyed by TRUE host
   (frontier.py) — salting only where skew hurts, never where semantics
   need the real key.
 - Bloom fast path: per-salt blooms built distributively with
   applyInPandas, updated INCREMENTALLY per wave (build from the wave's
   delta at fixed capacity, OR-merge into the stored bloom table —
-  O(delta + n_salts) per wave), and probed via COGROUP on salt so each
+  O(delta + N_SALTS) per wave), and probed via COGROUP on salt so each
   probe task deserializes only its own salt's bits. At 10^10 keys and
   fpp 0.01 (~9.6 bits/key) that is ~12 GB total across N_SALTS = 16
   salts => ~6.3e8 keys and ~750 MB per salt bucket per task — never
@@ -39,16 +39,22 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+# One salt modulus for the seen table, its blooms and every probe of
+# them, so a probe can never salt keys differently from the tables.
 N_SALTS = 16
+# D2 default TTL when a job carries no future expiry (deduplicator.go:72-89)
+DEFAULT_TTL_DAYS = 30
+# bloom target false-positive rate (~9.6 bits/key)
+BLOOM_FPP = 0.01
 
 STATUS_NEW = "NEW"
 STATUS_UPDATED = "UPDATED"
 STATUS_UNCHANGED = "UNCHANGED"
 
 
-def salt_of(host: Column, n_salts: int = N_SALTS) -> Column:
-    """Membership-layer salt (north_rule): xxhash64(host) % n_salts."""
-    return F.pmod(F.xxhash64(host), F.lit(n_salts)).cast("int")
+def salt_of(host: Column) -> Column:
+    """Membership-layer salt (north_rule): xxhash64(host) % N_SALTS."""
+    return F.pmod(F.xxhash64(host), F.lit(N_SALTS)).cast("int")
 
 
 def url_hash(source: Column, id_: Column) -> Column:
@@ -120,19 +126,16 @@ def classify(candidates: DataFrame, seen: DataFrame,
     ).select(*candidates.columns, "status")
 
 
-def expires_at_expr(expired_on: Column, now: Column | None = None,
-                    default_ttl_days: int = 30) -> Column:
+def expires_at_expr(expired_on: Column, now: Column | None = None) -> Column:
     """D2 TTL arithmetic (deduplicator.go:72-89): ttl = until(expired_on);
-    if <= 0 use default 30d; then +24h buffer."""
+    if <= 0 use DEFAULT_TTL_DAYS; then +24h buffer."""
     now = F.current_timestamp() if now is None else now
     base = F.when(expired_on > now, expired_on).otherwise(
-        now + F.make_interval(days=F.lit(default_ttl_days)))
+        now + F.make_interval(days=F.lit(DEFAULT_TTL_DAYS)))
     return base + F.make_interval(days=F.lit(1))
 
 
-def seen_delta(emitted: DataFrame, now: Column | None = None,
-               default_ttl_days: int = 30,
-               n_salts: int = N_SALTS) -> DataFrame:
+def seen_delta(emitted: DataFrame, now: Column | None = None) -> DataFrame:
     """D2 MarkSeenWithTTL, delta form: emit ONLY the wave's new/updated
     seen rows (O(delta) — never touches the stored seen table). The
     MERGE semantics (last-write-wins on (source,id), the Redis SET of
@@ -149,8 +152,8 @@ def seen_delta(emitted: DataFrame, now: Column | None = None,
         "source", "id",
         url_hash(F.col("source"), F.col("id")).alias("url_hash"),
         F.col("last_updated_on"),
-        expires_at_expr(exp, now, default_ttl_days).alias("expires_at"),
-        salt_of(F.col("host"), n_salts).alias("salt"),
+        expires_at_expr(exp, now).alias("expires_at"),
+        salt_of(F.col("host")).alias("salt"),
     ).select(*cols)
 
 
@@ -173,10 +176,10 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
 # ---------------------------------------------------------------------------
 # Bloom fast path (D1 pre-filter)
 # ---------------------------------------------------------------------------
-def bloom_params(n: int, fpp: float = 0.01) -> tuple[int, int]:
-    """(m bits, k hashes) for n keys at target false-positive rate."""
+def bloom_params(n: int) -> tuple[int, int]:
+    """(m bits, k hashes) for n keys at false-positive rate BLOOM_FPP."""
     n = max(n, 1)
-    m = int(math.ceil(-n * math.log(fpp) / (math.log(2) ** 2)))
+    m = int(math.ceil(-n * math.log(BLOOM_FPP) / (math.log(2) ** 2)))
     m = max(64, (m + 63) // 64 * 64)
     k = max(1, round(m / n * math.log(2)))
     return m, min(k, 16)
@@ -196,7 +199,7 @@ def _bloom_positions(hashes: np.ndarray, m: int, k: int) -> np.ndarray:
 BLOOM_SCHEMA = "salt int, m long, k int, bits binary, n_keys long"
 
 
-def build_blooms(seen: DataFrame, fpp: float = 0.01,
+def build_blooms(seen: DataFrame,
                  capacity_per_salt: int | None = None) -> DataFrame:
     """Build one bloom per salt bucket, distributively
     (groupBy(salt).applyInPandas). Returns a Spark DataFrame
@@ -211,7 +214,7 @@ def build_blooms(seen: DataFrame, fpp: float = 0.01,
     (merge_blooms) — the incremental path. Without it, m is sized from
     the batch itself (one-shot builds)."""
     if capacity_per_salt is not None:
-        m_fixed, k_fixed = bloom_params(capacity_per_salt, fpp)
+        m_fixed, k_fixed = bloom_params(capacity_per_salt)
     else:
         m_fixed = k_fixed = None
 
@@ -220,7 +223,7 @@ def build_blooms(seen: DataFrame, fpp: float = 0.01,
         if m_fixed is not None:
             m, k = m_fixed, k_fixed
         else:
-            m, k = bloom_params(len(hashes), fpp)
+            m, k = bloom_params(len(hashes))
         bits = np.zeros(m // 64, dtype=np.uint64)
         pos = _bloom_positions(hashes, m, k).ravel()
         np.bitwise_or.at(bits, pos // 64, np.uint64(1) << (pos % 64).astype(np.uint64))
@@ -235,7 +238,7 @@ def build_blooms(seen: DataFrame, fpp: float = 0.01,
 
 def merge_blooms(prev: DataFrame, delta: DataFrame) -> DataFrame:
     """OR-merge two bloom tables built at the SAME capacity (same m/k
-    per salt): per-salt bitwise OR — O(n_salts) rows per wave, never
+    per salt): per-salt bitwise OR — O(N_SALTS) rows per wave, never
     O(total keys). Salts present on only one side pass through."""
     both = (prev.select("salt", "m", "k", "bits", "n_keys")
             .unionByName(delta.select("salt", "m", "k", "bits", "n_keys")))
@@ -258,10 +261,9 @@ def merge_blooms(prev: DataFrame, delta: DataFrame) -> DataFrame:
     return both.groupBy("salt").applyInPandas(orr, schema=BLOOM_SCHEMA)
 
 
-def bloom_might_contain(candidates: DataFrame, blooms: DataFrame,
-                        hash_col: str = "url_hash",
-                        salt_col: str = "salt") -> DataFrame:
+def bloom_might_contain(candidates: DataFrame, blooms: DataFrame) -> DataFrame:
     """Adds ``might_contain`` (false => definitively NEW, skip the join).
+    candidates: needs (url_hash, salt).
 
     Distribution: candidates COGROUP blooms on salt — each task
     deserializes ONLY its salt's bit array (never the full bloom set;
@@ -278,31 +280,31 @@ def bloom_might_contain(candidates: DataFrame, blooms: DataFrame,
             return cand.assign(might_contain=False)  # empty bucket: all new
         bits = np.frombuffer(bl["bits"].iloc[0], dtype=np.uint64)
         m, k = int(bl["m"].iloc[0]), int(bl["k"].iloc[0])
-        pos = _bloom_positions(cand[hash_col].to_numpy().astype(np.uint64), m, k)
+        pos = _bloom_positions(cand["url_hash"].to_numpy().astype(np.uint64), m, k)
         hit = np.ones(len(cand), dtype=bool)
         for row in pos:
             hit &= (bits[row // 64] >> (row % 64).astype(np.uint64)) & np.uint64(1) != 0
         return cand.assign(might_contain=hit)
 
-    return (candidates.groupBy(salt_col)
+    return (candidates.groupBy("salt")
             .cogroup(blooms.groupBy("salt"))
             .applyInPandas(probe, schema=out_schema))
 
 
 def classify_with_bloom(candidates: DataFrame, seen: DataFrame,
-                        blooms: DataFrame, now: Column | None = None,
-                        n_salts: int = N_SALTS) -> DataFrame:
+                        blooms: DataFrame, now: Column | None = None
+                        ) -> DataFrame:
     """D1 with the bloom pre-filter: only the keys the bloom may contain
     enter the seen semi join's broadcast; a bloom miss cannot match a
     seen row, so it comes out NEW from the same left join. The probe
     reads key columns only (source, id, url_hash, salt), never the
-    candidate payload, and nothing is persisted. n_salts MUST match the
-    salt modulus the seen/bloom tables were built with (threaded from
-    the driver, not defaulted silently)."""
+    candidate payload, and nothing is persisted. Keys are salted with
+    N_SALTS, the modulus seen_delta builds the seen and bloom tables
+    with."""
     keys = candidates.select(
         "source", "id",
         url_hash(F.col("source"), F.col("id")).alias("url_hash"),
-        salt_of(F.col("host"), n_salts).alias("salt"))
+        salt_of(F.col("host")).alias("salt"))
     hits = bloom_might_contain(keys, blooms).filter(F.col("might_contain"))
     return classify(candidates, seen, now, keys=hits)
 

@@ -29,7 +29,7 @@ State tables are O(delta) per wave (Iceberg merge-on-read analogue):
     IO never scales with total state size.
   - blooms update incrementally: the wave's seen delta builds a
     fixed-capacity per-salt bloom that OR-merges into the stored
-    bloom table — O(delta + n_salts) per wave, never a full rebuild.
+    bloom table — O(delta + N_SALTS) per wave, never a full rebuild.
 
 Resume (north_rule, P10): every wave is a snapshot; a killed run
 restarts from the last committed wave and reproduces the uninterrupted
@@ -141,8 +141,13 @@ def table_hash(df: DataFrame) -> int:
     return hash((int(out["s"] or 0), int(out["n"])))
 
 
-# Output files per fat-table write and per compacted base (Iceberg's
-# writer sizes files in production).
+# Output files per fat-table write (jobs, extracted) and per compacted
+# base (frontier, blooms); control and delta tables write with their
+# natural partitioning, saving one shuffle per table per wave (Iceberg's
+# writer sizes files in production). Sizing MUST be repartition, not
+# coalesce: coalesce would pull the upstream compute (normalize/clean
+# Python UDFs) down to SNAPSHOT_FILES tasks; repartition keeps compute
+# wide and only shuffles the small finished rows into the output files.
 SNAPSHOT_FILES = 8
 # Fixed bloom capacity per salt bucket so per-wave delta blooms OR-merge
 # into the stored table (dedup.merge_blooms). 1M keys is ~1.2 MB/salt;
@@ -152,15 +157,18 @@ BLOOM_CAPACITY_PER_SALT = 1_000_000
 
 
 class WaveDriver:
+    # the label of every row and seen key: the wave's one normalizer
+    # (normalize_vieclam24h) decides the source, not a setting
+    source = "vieclam24h"
+    # P8: fetch attempts before a url that keeps going missing is parked
+    max_retries = 3
+
     def __init__(self, spark: SparkSession, store: SnapshotStore,
-                 source: str = "vieclam24h", num_partitions: int = 32,
-                 max_retries: int = 3, use_bloom: bool = True,
+                 num_partitions: int = 32, use_bloom: bool = True,
                  compact_every: int = 8):
         self.spark = spark
         self.store = store
-        self.source = source
         self.num_partitions = num_partitions
-        self.max_retries = max_retries
         self.use_bloom = use_bloom
         self.compact_every = compact_every
 
@@ -231,25 +239,24 @@ class WaveDriver:
                 .withColumn("_wseq", F.lit(0)))
         return self.store.commit(0, {}, appends={"frontier": fr, "seen": seen})
 
-    def reseed(self, seeds: pd.DataFrame | None = None) -> int:
+    def reseed(self, seeds: pd.DataFrame) -> int:
         """Model the cron re-crawl (P6): flip fetched list pages back to
         pending for the next cycle — as an O(list pages) delta, never a
-        frontier rewrite. Pass the cycle's seed list to also enqueue NEW
-        list pages — a growing corpus adds pagination tail pages that
-        the previous cycle never saw (the reference reaches them by
-        re-paginating the API until LastPage each run,
-        vieclam24h/crawler.go:76-166)."""
+        frontier rewrite — and enqueue the cycle's seed urls the
+        frontier has not seen: a growing corpus adds pagination tail
+        pages that the previous cycle never saw (the reference reaches
+        them by re-paginating the API until LastPage each run,
+        vieclam24h/crawler.go:76-166). seeds: pandas (url, host, page,
+        depth)."""
         wave = self.store.latest_wave()
         fv = self.frontier_view()
         flips = (fv.filter((F.col("depth") == 0) & (F.col("state") == "fetched"))
                  .withColumn("state", F.lit("pending"))
                  .withColumn("wave", F.lit(wave + 1)))
-        delta = flips
-        if seeds is not None:
-            fresh = (self._seed_rows(seeds, wave + 1)
-                     .join(fv.select("url"), "url", "left_anti"))
-            delta = delta.unionByName(fresh.select(*delta.columns))
-        delta = delta.withColumn("_wseq", F.lit(wave + 1))
+        fresh = (self._seed_rows(seeds, wave + 1)
+                 .join(fv.select("url"), "url", "left_anti"))
+        delta = (flips.unionByName(fresh.select(*flips.columns))
+                 .withColumn("_wseq", F.lit(wave + 1)))
         return self.store.commit(wave + 1, {}, appends={"frontier": delta})
 
     # -- one wave -----------------------------------------------------------
@@ -385,14 +392,16 @@ class WaveDriver:
             # source dispatch (normalizer.go:30-43): the closed-world
             # fixtures are vieclam24h-shaped, so that normalizer runs here.
             jobs_batch = (normalize_vieclam24h(staged).dropDuplicates(["id"])
-                          .withColumn("wave", F.lit(wave)))
+                          .withColumn("wave", F.lit(wave))
+                          .repartition(SNAPSHOT_FILES))
 
             # the byte-identity surface (C2, worker.go:145-147): CleanToText of
             # the extracted description, committed per url
             _, clean_to_text_udf, _ = clean_udfs()
             extracted_batch = details.select(
                 "url", F.lit(wave).alias("wave"),
-                clean_to_text_udf(F.col("x.job_description")).alias("text"))
+                clean_to_text_udf(F.col("x.job_description")).alias("text")
+            ).repartition(SNAPSHOT_FILES)
             audit = details.select("url", F.lit(wave).alias("wave"),
                                    F.posexplode("jsonld").alias("blob_index", "blob"))
 
@@ -442,7 +451,7 @@ class WaveDriver:
             counted["enqueued"] = counted["new"] + counted["updated"]
 
             # incremental bloom maintenance: delta bloom at fixed capacity,
-            # OR-merged into the stored table — O(delta + n_salts); skipped
+            # OR-merged into the stored table — O(delta + N_SALTS); skipped
             # entirely on waves that marked nothing new (detail waves)
             blooms_out = None
             if self.use_bloom and counted["enqueued"] > 0:
@@ -466,11 +475,7 @@ class WaveDriver:
                 tables,
                 appends={"frontier": frontier_delta, "seen": seen_new,
                          "jobs": jobs_batch, "extracted": extracted_batch,
-                         "lineage": lineage_new, "jsonld_audit": audit},
-                output_partitions=SNAPSHOT_FILES,
-                # only the fat tables pay a file-sizing shuffle; control
-                # tables write with natural partitioning.
-                repartition_tables={"jobs", "extracted"})
+                         "lineage": lineage_new, "jsonld_audit": audit})
             # the missing observation fires in the frontier-delta write
             counted.update(_obs_get(obs_missing,
                                     ["missing", "missing_retryable"],
@@ -515,11 +520,10 @@ class WaveDriver:
         tables: dict[str, DataFrame] = {"frontier": fr, "seen": sn}
         if self.use_bloom:
             tables["blooms"] = D.build_blooms(
-                sn, capacity_per_salt=BLOOM_CAPACITY_PER_SALT)
+                sn, capacity_per_salt=BLOOM_CAPACITY_PER_SALT
+            ).repartition(SNAPSHOT_FILES)
         return self.store.commit(wave, tables,
-                                 partition_by={"seen": ["salt"]},
-                                 output_partitions=SNAPSHOT_FILES,
-                                 repartition_tables={"blooms"})
+                                 partition_by={"seen": ["salt"]})
 
     # -- read-side views (append tables resolve last-write-wins here,
     # the parquet-sandbox equivalent of Iceberg MERGE results) ----------

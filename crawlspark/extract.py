@@ -195,7 +195,7 @@ def _nullable_struct(st):
                          for f in st.fields])
 
 
-def extract_pages(df, html_col: str = "html", depth_col: str = "depth"):
+def extract_pages(df):
     """Combined per-page extraction as ONE pandas-free ``mapInArrow``
     stage over the oracle functions above.
 
@@ -213,7 +213,8 @@ def extract_pages(df, html_col: str = "html", depth_col: str = "depth"):
     input column is re-emitted zero-copy, so the only Python-side
     materializations are the html bytes and the extracted values.
 
-    Returns df's columns minus html, plus (_links, x, jsonld).
+    df needs ``html`` and ``depth`` columns. Returns df's columns minus
+    html, plus (_links, x, jsonld).
     """
     import pyarrow as pa
     from pyspark.sql import types as T
@@ -221,7 +222,7 @@ def extract_pages(df, html_col: str = "html", depth_col: str = "depth"):
 
     from .schemas import EXTRACTED_STRUCT, LINK_STRUCT
 
-    passthrough = [f for f in df.schema.fields if f.name != html_col]
+    passthrough = [f for f in df.schema.fields if f.name != "html"]
     names = [f.name for f in passthrough]
     links_t = to_arrow_type(T.ArrayType(LINK_STRUCT))
     x_t = to_arrow_type(_nullable_struct(EXTRACTED_STRUCT))
@@ -229,8 +230,8 @@ def extract_pages(df, html_col: str = "html", depth_col: str = "depth"):
 
     def run(batches):
         for b in batches:
-            html = b.column(b.schema.get_field_index(html_col))
-            depth = b.column(b.schema.get_field_index(depth_col))
+            html = b.column(b.schema.get_field_index("html"))
+            depth = b.column(b.schema.get_field_index("depth"))
             links, xs, blobs = [], [], []
             for h, d in zip(html.to_pylist(), depth.to_pylist()):
                 s = _to_str(h)

@@ -66,8 +66,6 @@ def join_robots(frontier: DataFrame, robots: DataFrame) -> DataFrame:
 
 
 def schedule(frontier: DataFrame, robots: DataFrame, wave_start,
-             default_delay_ms: int = DEFAULT_DELAY_MS,
-             default_detail_delay_ms: int = DEFAULT_DETAIL_DELAY_MS,
              two_phase: bool = False) -> DataFrame:
     """Assign (slot, scheduled_ts, state) per (host[, delay-class]) group.
 
@@ -105,13 +103,13 @@ def schedule(frontier: DataFrame, robots: DataFrame, wave_start,
     two_class = "detail_delay_ms" in robots.columns
     is_detail = F.col("depth") > 0
     delay = F.coalesce(F.col("crawl_delay_ms").cast("long"),
-                       F.lit(default_delay_ms).cast("long"))
+                       F.lit(DEFAULT_DELAY_MS).cast("long"))
     tokens = F.coalesce(F.col("tokens_per_wave").cast("long"),
                         F.lit(10**9).cast("long"))
     part_cols: list[Column] = [F.col("host")]
     if two_class:
         d_delay = F.coalesce(F.col("detail_delay_ms").cast("long"),
-                             F.lit(default_detail_delay_ms).cast("long"))
+                             F.lit(DEFAULT_DETAIL_DELAY_MS).cast("long"))
         delay = F.when(is_detail, d_delay).otherwise(delay)
         if "detail_tokens_per_wave" in robots.columns:
             tokens = F.when(

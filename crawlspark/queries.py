@@ -3105,7 +3105,7 @@ def q_bloom_audit(spark, sf):
         D.salt_of(F.col("host")).alias("salt"),
         (F.col("doc_id") % 2 == 0).alias("member"))
     members = keyed.filter("member").select("url_hash", "salt")
-    blooms = D.build_blooms(members, fpp=0.01)
+    blooms = D.build_blooms(members)
     probed = D.bloom_might_contain(
         keyed.select("salt", "url_hash", "doc_id", "member"), blooms)
     per_salt = (probed.groupBy("salt")

@@ -51,7 +51,7 @@ FRONTIER_SCHEMA = T.StructType(
 # seen — URL-seen / change-detection state
 # (reference: Redis key job:seen:{source}:{id} -> last_updated_on with TTL,
 #  internal/common/dedup/deduplicator.go:49-89)
-# salt = xxhash64(host) % n_salts breaks hot-domain skew in the
+# salt = xxhash64(host) % N_SALTS breaks hot-domain skew in the
 # membership layer (north_rule); politeness still groups by true host.
 # ---------------------------------------------------------------------------
 SEEN_SCHEMA = T.StructType(

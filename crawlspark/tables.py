@@ -137,19 +137,15 @@ class SnapshotStore:
     # -- commit -----------------------------------------------------------
     def commit(self, wave: int, tables: dict[str, DataFrame],
                partition_by: dict[str, list[str]] | None = None,
-               output_partitions: int | None = None,
-               appends: dict[str, DataFrame] | None = None,
-               repartition_tables: set[str] | None = None) -> int:
+               appends: dict[str, DataFrame] | None = None) -> int:
         """Write `tables` (overwrite semantics) and `appends` (the wave's
         batch joins the table's directory list — O(batch) IO instead of
         an O(total) rewrite, like Iceberg appending data files), then
         atomically publish ONE snapshot covering both plus every
         carried-forward table. Returns the new snapshot id.
 
-        repartition_tables limits the file-sizing repartition to the
-        named (fat) tables — small control/delta tables write with their
-        natural partitioning, saving one shuffle per table per wave
-        (Iceberg's writer handles file sizing in production)."""
+        Each frame is written with the partitioning it arrives in: the
+        caller sizes the files it writes (driver.SNAPSHOT_FILES)."""
         manifest = self._read_manifest()
         prev = manifest["snapshots"][-1] if manifest["snapshots"] else None
         sid = (prev["sid"] + 1) if prev else 1
@@ -163,15 +159,6 @@ class SnapshotStore:
         def _write(item):
             name, df = item
             rel = f"data/{sid}/{name}"
-            if output_partitions and (repartition_tables is None
-                                      or name in repartition_tables):
-                # Fewer output files avoid committer contention (Iceberg
-                # handles file sizing in production). MUST be repartition,
-                # not coalesce: coalesce would pull the upstream compute
-                # (normalize/clean pUDFs) down to output_partitions tasks;
-                # repartition keeps compute wide and only shuffles the
-                # small finished rows into the output files.
-                df = df.repartition(output_partitions)
             part_cols = (partition_by or {}).get(name, [])
             writer = df.write.mode("overwrite")
             for col in part_cols:

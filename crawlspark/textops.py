@@ -265,8 +265,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
            .union(cand.select(F.col("id_b").alias(key_col)))
            .distinct())
     cand_docs = df.join(F.broadcast(ids), key_col)
-    jac = ngram_jaccard(cand_docs, cand_docs, text_col, key_col,
-                        shingle_n, cand)
+    jac = ngram_jaccard(cand_docs, text_col, key_col, shingle_n, cand)
     return jac.filter(F.col("jaccard") >= jaccard_threshold)
 
 
@@ -316,14 +315,14 @@ def ngram_jaccard_for_pairs(df: DataFrame, pairs: DataFrame,
     return inter.select("id_a", "id_b", jac.alias("jaccard"))
 
 
-def ngram_jaccard(left: DataFrame, right: DataFrame, text_col: str,
-                  key_col: str, shingle_n: int,
-                  pairs: DataFrame) -> DataFrame:
-    """Exact n-gram Jaccard for given (id_a, id_b) pairs — array form:
-    the verify step minhash_lsh_pairs runs on broadcast-sized candidate
-    sets. ngram_jaccard_for_pairs (count form) is the fallback for pair
-    sets too large to broadcast; nothing calls it yet."""
-    sh = (left.select(F.col(key_col).alias("_id"),
+def ngram_jaccard(docs: DataFrame, text_col: str, key_col: str,
+                  shingle_n: int, pairs: DataFrame) -> DataFrame:
+    """Exact n-gram Jaccard for given (id_a, id_b) pairs of ``docs`` —
+    array form: the verify step minhash_lsh_pairs runs on
+    broadcast-sized candidate sets. ngram_jaccard_for_pairs (count
+    form) is the fallback for pair sets too large to broadcast; nothing
+    calls it yet."""
+    sh = (docs.select(F.col(key_col).alias("_id"),
                       word_shingles(F.col(text_col), shingle_n).alias("_sh"))
           .withColumn("_n", F.size("_sh")))
     a = sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a"),

@@ -21,7 +21,7 @@ def norm(v):
 
 bad = []
 for name, (fn, sql) in QUERIES.items():
-    t0 = time.time()
+    t0, srows = time.time(), None
     try:
         sdf = fn(spark, SF)
         srows = sorted(tuple(norm(x) for x in r) for r in sdf.collect())
@@ -37,7 +37,7 @@ for name, (fn, sql) in QUERIES.items():
     except Exception as e:
         status = f"ERR {e}"
         bad.append(name)
-    print(f"{name:24s} {status} ({len(srows) if 'srows' in dir() else '?'} rows, {time.time()-t0:.1f}s)", flush=True)
+    print(f"{name:24s} {status} ({'?' if srows is None else len(srows)} rows, {time.time()-t0:.1f}s)", flush=True)
 print("BAD:", bad)
 spark.stop()
 sys.exit(1 if bad else 0)

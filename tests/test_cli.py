@@ -83,3 +83,21 @@ class TestCli:
         assert r.returncode == 0, r.stderr[-3000:]
         done = json.loads(r.stdout.splitlines()[-1])
         assert done["total_fetched"] > 0
+
+
+def test_crawl_new_warehouse_needs_seeds(tmp_path, monkeypatch):
+    """A new warehouse has no frontier to resume: crawl refuses it
+    without --seeds before any Spark session starts."""
+    import crawlspark.session
+    from crawlspark.__main__ import main
+
+    started = []
+    monkeypatch.setattr(crawlspark.session, "get_spark",
+                        lambda *a, **k: started.append(a))
+    wh = tmp_path / "wh"
+    wh.mkdir()
+    with pytest.raises(SystemExit) as exc:
+        main(["crawl", "--pages", str(tmp_path / "missing.parquet"),
+              "--warehouse", str(wh)])
+    assert "--seeds" in str(exc.value)
+    assert started == []

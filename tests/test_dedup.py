@@ -204,27 +204,6 @@ class TestNullSemantics:
 
 
 class TestBloomDistribution:
-    def test_n_salts_threaded(self, spark):
-        """classify_with_bloom must salt candidates with the SAME
-        modulus the seen table was built with (n_salts != default)."""
-        n_salts = 4
-        seen = _seen(spark, [("s", str(i), 0, "100", "2026-02-01", 0)
-                             for i in range(60)])
-        seen = (seen.withColumn("url_hash", D.url_hash(F.col("source"), F.col("id")))
-                .withColumn("salt", D.salt_of(F.col("id"), n_salts)))
-        cands = _cands(spark, [("s", str(i), str(i), "100") for i in range(120)])
-        cands = cands.withColumn("host", F.col("id"))
-        blooms = D.build_blooms(seen)
-        got = {r["id"]: r["status"]
-               for r in D.classify_with_bloom(cands, seen, blooms, _now(),
-                                              n_salts=n_salts).collect()}
-        want = {r["id"]: r["status"]
-                for r in D.classify(
-                    cands.withColumn("url_hash", D.url_hash(F.col("source"), F.col("id")))
-                         .withColumn("salt", D.salt_of(F.col("id"), n_salts)),
-                    seen, _now()).collect()}
-        assert got == want  # no seen key misread as definitively NEW
-
     def test_incremental_merge_equals_full_build(self, spark):
         """Per-wave delta blooms OR-merged == one-shot build over the
         union (at fixed capacity): identical probe behavior."""
@@ -235,7 +214,7 @@ class TestBloomDistribution:
                               for i in range(50, 100)])
         prep = lambda df: (df
             .withColumn("url_hash", D.url_hash(F.col("source"), F.col("id")))
-            .withColumn("salt", D.salt_of(F.col("id"), 4)))
+            .withColumn("salt", D.salt_of(F.col("id"))))
         b1 = D.build_blooms(prep(half1), capacity_per_salt=cap)
         b2 = D.build_blooms(prep(half2), capacity_per_salt=cap)
         merged = D.merge_blooms(b1, b2)

@@ -269,7 +269,7 @@ class TestJaccardForms:
                 .select(F.col("a.doc_id").alias("id_a"),
                         F.col("b.doc_id").alias("id_b")).distinct())
         exp = {(r.id_a, r.id_b, r.jaccard) for r in
-               X.ngram_jaccard(docs, docs, "text", "doc_id", 2, cand)
+               X.ngram_jaccard(docs, "text", "doc_id", 2, cand)
                .filter(F.col("jaccard") >= 0.3).collect()}
         assert got == exp and len(got) > 0
 
@@ -286,7 +286,7 @@ class TestJaccardForms:
         cand = spark.createDataFrame(pair_rows, "id_a long, id_b long")
         got = {(r.id_a, r.id_b, r.jaccard) for r in
                X.ngram_jaccard_for_pairs(docs, cand).collect()}
-        arr = X.ngram_jaccard(docs, docs, "text", "doc_id", 2, cand).collect()
+        arr = X.ngram_jaccard(docs, "text", "doc_id", 2, cand).collect()
         exp_pos = {(r.id_a, r.id_b, r.jaccard) for r in arr if r.jaccard > 0}
         exp_zero = {(r.id_a, r.id_b) for r in arr if r.jaccard == 0}
         assert got == exp_pos
@@ -316,7 +316,7 @@ class TestJaccardForms:
                 .select(F.col("a.doc_id").alias("id_a"),
                         F.col("b.doc_id").alias("id_b")).distinct())
         exp = {(r.id_a, r.id_b, r.jaccard) for r in
-               X.ngram_jaccard(docs, docs, "text", "doc_id", 2, cand)
+               X.ngram_jaccard(docs, "text", "doc_id", 2, cand)
                .filter(F.col("jaccard") >= 0.5).collect()}
         assert got == exp and len(got) > 0
 
