@@ -15,18 +15,19 @@ Scale design (10^10-URL frontier):
   (frontier.py) — salting only where skew hurts, never where semantics
   need the real key.
 - Bloom fast path: per-salt blooms built distributively with
-  applyInPandas, updated INCREMENTALLY per wave (build from the wave's
-  delta at fixed capacity, OR-merge into the stored bloom table —
-  O(delta + N_SALTS) per wave), and probed via COGROUP on salt so each
-  probe task deserializes only its own salt's bits. At 10^10 keys and
-  fpp 0.01 (~9.6 bits/key) that is ~12 GB total across N_SALTS = 16
-  salts => ~6.3e8 keys and ~750 MB per salt bucket per task — never
-  collected to the driver, never shipped whole to any executor.
+  applyInPandas and stored like ``seen``, as layers (scalable-bloom
+  style, Almeida et al. 2007): a compacted base sized to the surviving
+  keys plus one append layer per enqueuing wave, each sized to that
+  wave's seen delta — a wave writes O(delta) bloom bytes, never the
+  whole filter. Probed via COGROUP on salt so each probe task
+  deserializes only its own salt's layers. At 10^10 keys and fpp 0.01
+  (~9.6 bits/key) the base is ~12 GB across N_SALTS = 16 salts =>
+  ~6.3e8 keys and ~750 MB per salt bucket per task — never collected
+  to the driver, never shipped whole to any executor.
 - TTL without Redis: lazy expiry — reads filter expires_at >= now;
   a compaction wave physically drops expired rows (same observable
   semantics as Redis per-key TTL, deduplicator.go:76-84) and rebuilds
-  blooms from the surviving keys (resizing m if the capacity estimate
-  drifted).
+  the bloom base from the surviving keys, folding the wave layers away.
 """
 
 from __future__ import annotations
@@ -199,31 +200,22 @@ def _bloom_positions(hashes: np.ndarray, m: int, k: int) -> np.ndarray:
 BLOOM_SCHEMA = "salt int, m long, k int, bits binary, n_keys long"
 
 
-def build_blooms(seen: DataFrame,
-                 capacity_per_salt: int | None = None) -> DataFrame:
+def build_blooms(seen: DataFrame) -> DataFrame:
     """Build one bloom per salt bucket, distributively
-    (groupBy(salt).applyInPandas). Returns a Spark DataFrame
-    (salt, m, k, bits, n_keys) — never collected to the driver; the
-    probe side cogroups on salt so each task touches exactly one salt's
-    bits (the 10^10-key design point is ~750 MB per salt bucket over
-    N_SALTS = 16 salts, which must not be closure-shipped or broadcast
-    in aggregate).
+    (groupBy(salt).applyInPandas), each sized by bloom_params to the
+    keys of its bucket. Returns a Spark DataFrame (salt, m, k, bits,
+    n_keys) — never collected to the driver; the probe side cogroups on
+    salt so each task touches exactly one salt's bits (the 10^10-key
+    design point is ~750 MB per salt bucket over N_SALTS = 16 salts,
+    which must not be closure-shipped or broadcast in aggregate).
 
-    capacity_per_salt fixes m/k for the stated key capacity so blooms
-    built from per-wave DELTAS can be OR-merged into the stored blooms
-    (merge_blooms) — the incremental path. Without it, m is sized from
-    the batch itself (one-shot builds)."""
-    if capacity_per_salt is not None:
-        m_fixed, k_fixed = bloom_params(capacity_per_salt)
-    else:
-        m_fixed = k_fixed = None
+    The driver stores the result as one bloom layer: built from a wave's
+    seen delta it is that wave's append layer, built from the compacted
+    seen base it is the new base layer."""
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         hashes = pdf["url_hash"].to_numpy()
-        if m_fixed is not None:
-            m, k = m_fixed, k_fixed
-        else:
-            m, k = bloom_params(len(hashes))
+        m, k = bloom_params(len(hashes))
         bits = np.zeros(m // 64, dtype=np.uint64)
         pos = _bloom_positions(hashes, m, k).ravel()
         np.bitwise_or.at(bits, pos // 64, np.uint64(1) << (pos % 64).astype(np.uint64))
@@ -237,9 +229,10 @@ def build_blooms(seen: DataFrame,
 
 
 def merge_blooms(prev: DataFrame, delta: DataFrame) -> DataFrame:
-    """OR-merge two bloom tables built at the SAME capacity (same m/k
-    per salt): per-salt bitwise OR — O(N_SALTS) rows per wave, never
-    O(total keys). Salts present on only one side pass through."""
+    """OR-merge two bloom tables built at the SAME m/k per salt:
+    per-salt bitwise OR. The wave path no longer merges (it appends a
+    layer per wave, see build_blooms); perfbench's tracer still patches
+    this name."""
     both = (prev.select("salt", "m", "k", "bits", "n_keys")
             .unionByName(delta.select("salt", "m", "k", "bits", "n_keys")))
 
@@ -247,8 +240,7 @@ def merge_blooms(prev: DataFrame, delta: DataFrame) -> DataFrame:
         ms = pdf["m"].unique()
         if len(ms) != 1:
             raise ValueError(
-                f"bloom m mismatch in salt {pdf['salt'].iloc[0]}: {ms}; "
-                "rebuild blooms at one capacity (compaction) before merging")
+                f"bloom m mismatch in salt {pdf['salt'].iloc[0]}: {ms}")
         acc = np.zeros(int(ms[0]) // 64, dtype=np.uint64)
         for b in pdf["bits"]:
             acc |= np.frombuffer(b, dtype=np.uint64)
@@ -263,10 +255,16 @@ def merge_blooms(prev: DataFrame, delta: DataFrame) -> DataFrame:
 
 def bloom_might_contain(candidates: DataFrame, blooms: DataFrame) -> DataFrame:
     """Adds ``might_contain`` (false => definitively NEW, skip the join).
-    candidates: needs (url_hash, salt).
+    candidates: needs (url_hash, salt). blooms: one or more layer rows
+    per salt, each with its own m/k; a key hits when any layer of its
+    salt contains it (no false negatives: every seen key was added to
+    some layer). Each layer is built at BLOOM_FPP, so with L layers the
+    false-positive rate is at most L x BLOOM_FPP (union bound); the
+    driver's probes see L <= 1 + the enqueuing waves since the last
+    compaction.
 
     Distribution: candidates COGROUP blooms on salt — each task
-    deserializes ONLY its salt's bit array (never the full bloom set;
+    deserializes ONLY its salt's bit arrays (never the full bloom set;
     no driver collect, no closure capture). The salt shuffle of the
     candidate metadata is one the classify join pays anyway."""
     out_schema = ", ".join(
@@ -274,16 +272,14 @@ def bloom_might_contain(candidates: DataFrame, blooms: DataFrame) -> DataFrame:
     ) + ", might_contain boolean"
 
     def probe(cand: pd.DataFrame, bl: pd.DataFrame) -> pd.DataFrame:
-        if cand.empty:
-            return cand.assign(might_contain=pd.Series([], dtype=bool))
-        if bl.empty:
-            return cand.assign(might_contain=False)  # empty bucket: all new
-        bits = np.frombuffer(bl["bits"].iloc[0], dtype=np.uint64)
-        m, k = int(bl["m"].iloc[0]), int(bl["k"].iloc[0])
-        pos = _bloom_positions(cand["url_hash"].to_numpy().astype(np.uint64), m, k)
-        hit = np.ones(len(cand), dtype=bool)
-        for row in pos:
-            hit &= (bits[row // 64] >> (row % 64).astype(np.uint64)) & np.uint64(1) != 0
+        hashes = cand["url_hash"].to_numpy().astype(np.uint64)
+        hit = np.zeros(len(cand), dtype=bool)  # no layer: all new
+        for raw, m, k in zip(bl["bits"], bl["m"], bl["k"]):
+            bits = np.frombuffer(raw, dtype=np.uint64)
+            in_layer = np.ones(len(cand), dtype=bool)
+            for row in _bloom_positions(hashes, int(m), int(k)):
+                in_layer &= (bits[row // 64] >> (row % 64).astype(np.uint64)) & np.uint64(1) != 0
+            hit |= in_layer
         return cand.assign(might_contain=hit)
 
     return (candidates.groupBy("salt")

@@ -5,7 +5,7 @@ Per wave:
   -> "fetch" = equi-join against the pages table (S7: the closed-world
   analogue of the HTTP GET) -> ONE combined extraction pass (list
   pages: link scan; detail pages: JSON-LD enrichment + audit blobs)
-  -> dedup classify (incremental bloom + seen join) -> enqueue
+  -> dedup classify (layered bloom + seen join) -> enqueue
   NEW/UPDATED, append seen delta -> normalize -> append jobs batch
   -> lineage rows per partition -> ONE atomic snapshot commit.
 
@@ -25,11 +25,13 @@ State tables are O(delta) per wave (Iceberg merge-on-read analogue):
     kill-resume replays it deterministically) rewrites the resolved
     views as a fresh base, physically drops TTL-expired seen rows
     (deduplicator.go:76-84's Redis expiry), and rebuilds the bloom
-    table from surviving keys. Between compactions, per-wave commit
+    base from surviving keys. Between compactions, per-wave commit
     IO never scales with total state size.
-  - blooms update incrementally: the wave's seen delta builds a
-    fixed-capacity per-salt bloom that OR-merges into the stored
-    bloom table — O(delta + N_SALTS) per wave, never a full rebuild.
+  - blooms are layered the way seen is: a wave that enqueues keys
+    appends one bloom per salt sized to its seen delta (O(delta) bytes,
+    nothing read or rewritten), and a probe ORs the base and every
+    layer since. compact() folds the layers into a base sized to the
+    surviving keys.
 
 Resume (north_rule, P10): every wave is a snapshot; a killed run
 restarts from the last committed wave and reproduces the uninterrupted
@@ -142,18 +144,13 @@ def table_hash(df: DataFrame) -> int:
 
 
 # Output files per fat-table write (jobs, extracted) and per compacted
-# base (frontier, blooms); control and delta tables write with their
+# frontier base; control, delta and bloom tables write with their
 # natural partitioning, saving one shuffle per table per wave (Iceberg's
 # writer sizes files in production). Sizing MUST be repartition, not
 # coalesce: coalesce would pull the upstream compute (normalize/clean
 # Python UDFs) down to SNAPSHOT_FILES tasks; repartition keeps compute
 # wide and only shuffles the small finished rows into the output files.
 SNAPSHOT_FILES = 8
-# Fixed bloom capacity per salt bucket so per-wave delta blooms OR-merge
-# into the stored table (dedup.merge_blooms). 1M keys is ~1.2 MB/salt;
-# the 10^10-key design point needs N_SALTS = 16 salts x ~6.3e8 keys
-# => ~750 MB/salt.
-BLOOM_CAPACITY_PER_SALT = 1_000_000
 
 
 class WaveDriver:
@@ -450,17 +447,6 @@ class WaveDriver:
                        "disallowed": total["disallowed"]}
             counted["enqueued"] = counted["new"] + counted["updated"]
 
-            # incremental bloom maintenance: delta bloom at fixed capacity,
-            # OR-merged into the stored table — O(delta + N_SALTS); skipped
-            # entirely on waves that marked nothing new (detail waves)
-            blooms_out = None
-            if self.use_bloom and counted["enqueued"] > 0:
-                delta_blooms = D.build_blooms(
-                    seen_new, capacity_per_salt=BLOOM_CAPACITY_PER_SALT)
-                blooms_out = (D.merge_blooms(blooms_prev, delta_blooms)
-                              if blooms_prev is not None else delta_blooms)
-            tables = {"blooms": blooms_out} if blooms_out is not None else {}
-
             # ---- lineage (per-partition metrics, north_rule) ------------------
             # from the collected counts; one file per wave. wall_ms is the
             # wave up to here — every job but the commit's writes.
@@ -470,12 +456,16 @@ class WaveDriver:
                   c[D.STATUS_UNCHANGED], wall_ms, committed_at)
                  for part, c in sorted(per_part.items())],
                 LINEAGE_SCHEMA).coalesce(1)
-            self.store.commit(
-                wave,
-                tables,
-                appends={"frontier": frontier_delta, "seen": seen_new,
-                         "jobs": jobs_batch, "extracted": extracted_batch,
-                         "lineage": lineage_new, "jsonld_audit": audit})
+
+            # bloom maintenance: one layer per salt sized to the seen
+            # delta, appended like the delta itself; skipped on waves that
+            # marked nothing new (detail waves)
+            appends = {"frontier": frontier_delta, "seen": seen_new,
+                       "jobs": jobs_batch, "extracted": extracted_batch,
+                       "lineage": lineage_new, "jsonld_audit": audit}
+            if self.use_bloom and counted["enqueued"] > 0:
+                appends["blooms"] = D.build_blooms(seen_new)
+            self.store.commit(wave, {}, appends=appends)
             # the missing observation fires in the frontier-delta write
             counted.update(_obs_get(obs_missing,
                                     ["missing", "missing_retryable"],
@@ -498,7 +488,8 @@ class WaveDriver:
     def compact(self) -> int:
         """Rewrite frontier/seen as their resolved views (fresh base for
         the delta chain), physically drop TTL-expired seen rows, and
-        rebuild blooms from the surviving keys. Keyed to the current
+        rebuild the bloom base, sized to the surviving keys, in place of
+        the base and its wave layers. Keyed to the current
         wave (deterministic under kill-resume); the expiry cutoff is the
         wave start, never the wall clock."""
         wave = self.store.latest_wave()
@@ -519,9 +510,7 @@ class WaveDriver:
               .repartition(F.col("salt")))
         tables: dict[str, DataFrame] = {"frontier": fr, "seen": sn}
         if self.use_bloom:
-            tables["blooms"] = D.build_blooms(
-                sn, capacity_per_salt=BLOOM_CAPACITY_PER_SALT
-            ).repartition(SNAPSHOT_FILES)
+            tables["blooms"] = D.build_blooms(sn)
         return self.store.commit(wave, tables,
                                  partition_by={"seen": ["salt"]})
 

@@ -46,8 +46,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 class SnapshotStore:
     def __init__(self, root: str | Path):
+        # created by the first commit: opening a store (a status read,
+        # a refused crawl) leaves no directory behind
         self.root = Path(root)
-        self.root.mkdir(parents=True, exist_ok=True)
         self._manifest_path = self.root / "_manifest.json"
 
     # -- manifest ---------------------------------------------------------
@@ -146,6 +147,7 @@ class SnapshotStore:
 
         Each frame is written with the partitioning it arrives in: the
         caller sizes the files it writes (driver.SNAPSHOT_FILES)."""
+        self.root.mkdir(parents=True, exist_ok=True)
         manifest = self._read_manifest()
         prev = manifest["snapshots"][-1] if manifest["snapshots"] else None
         sid = (prev["sid"] + 1) if prev else 1

@@ -101,3 +101,23 @@ def test_crawl_new_warehouse_needs_seeds(tmp_path, monkeypatch):
               "--warehouse", str(wh)])
     assert "--seeds" in str(exc.value)
     assert started == []
+
+
+def test_refused_crawl_and_status_leave_no_warehouse(tmp_path, monkeypatch,
+                                                     capsys):
+    """Opening a warehouse creates nothing: a crawl refused for a
+    missing --seeds and a status read of a new path both leave the path
+    absent (the first commit creates the directory)."""
+    import crawlspark.session
+    from crawlspark.__main__ import main
+
+    monkeypatch.setattr(crawlspark.session, "get_spark",
+                        lambda *a, **k: pytest.fail("Spark started"))
+    wh = tmp_path / "wh"
+    with pytest.raises(SystemExit, match="--seeds"):
+        main(["crawl", "--pages", str(tmp_path / "missing.parquet"),
+              "--warehouse", str(wh)])
+    assert not wh.exists()
+    assert main(["status", "--warehouse", str(wh)]) == 0
+    assert json.loads(capsys.readouterr().out)["snapshots"] == 0
+    assert not wh.exists()

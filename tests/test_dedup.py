@@ -1,5 +1,7 @@
 """Dedup state machine, TTL arithmetic, blooms, content hash, simhash."""
 
+from collections import Counter
+
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -204,25 +206,37 @@ class TestNullSemantics:
 
 
 class TestBloomDistribution:
-    def test_incremental_merge_equals_full_build(self, spark):
-        """Per-wave delta blooms OR-merged == one-shot build over the
-        union (at fixed capacity): identical probe behavior."""
-        cap = 10_000
-        half1 = _seen(spark, [("s", str(i), 0, "1", "2026-02-01", 0)
-                              for i in range(50)])
-        half2 = _seen(spark, [("s", str(i), 0, "1", "2026-02-01", 0)
-                              for i in range(50, 100)])
+    def test_layered_probe_matches_one_shot_build(self, spark):
+        """A bloom table of two layers (one per half of the keys, each
+        sized to its half) probes like a one-shot build over the union:
+        every member hits, so no false negatives, and non-members stay
+        near the per-layer false-positive rate."""
         prep = lambda df: (df
             .withColumn("url_hash", D.url_hash(F.col("source"), F.col("id")))
             .withColumn("salt", D.salt_of(F.col("id"))))
-        b1 = D.build_blooms(prep(half1), capacity_per_salt=cap)
-        b2 = D.build_blooms(prep(half2), capacity_per_salt=cap)
-        merged = D.merge_blooms(b1, b2)
-        full = D.build_blooms(prep(half1.unionByName(half2)),
-                              capacity_per_salt=cap)
-        got = {r["salt"]: r["bits"] for r in merged.collect()}
-        want = {r["salt"]: r["bits"] for r in full.collect()}
-        assert got == want
+        half1 = prep(_seen(spark, [("s", str(i), 0, "1", "2026-02-01", 0)
+                                   for i in range(300)]))
+        half2 = prep(_seen(spark, [("s", str(i), 0, "1", "2026-02-01", 0)
+                                   for i in range(300, 500)]))
+        layered = D.build_blooms(half1).unionByName(D.build_blooms(half2))
+        full = D.build_blooms(half1.unionByName(half2))
+        rows = layered.collect()
+        assert max(Counter(r["salt"] for r in rows).values()) == 2
+        for r in rows:  # each layer sized to its own keys
+            assert len(r["bits"]) * 8 == D.bloom_params(r["n_keys"])[0]
+        assert sum(r["n_keys"] for r in rows) == 500
+
+        cands = prep(_cands(spark, [("s", str(i), str(i), "1")
+                                    for i in range(1000)]))
+
+        def hits(blooms):
+            return {r["id"] for r in D.bloom_might_contain(cands, blooms)
+                    .filter("might_contain").collect()}
+
+        members = {str(i) for i in range(500)}
+        got, want = hits(layered), hits(full)
+        assert got & members == want & members == members
+        assert len(got - members) < 0.05 * 500
 
     def test_probe_with_missing_salt_bucket(self, spark):
         """Candidates whose salt has no bloom row are definitively NEW

@@ -578,6 +578,8 @@ class TestJobBudget:
     # Spark jobs run by run_until_done on the 120-page world below
     # (bootstrap excluded): 2 waves plus the initial pending count
     MAX_JOBS = 65
+    # ... and by reseed plus run_until_done of the recrawl below
+    MAX_RECRAWL_JOBS = 86
 
     def test_wave_loop_job_budget(self, spark, tmp_path):
         """Job-count guard on the wave loop, counted as
@@ -607,20 +609,48 @@ class TestJobBudget:
         ran = _job_ids(spark) - ids0
         assert not ran, json.dumps(_jobs_by_execution(spark, ran), indent=1)
 
+    def test_recrawl_job_budget(self, spark, tmp_path):
+        """The same guard on the recrawl half of _crawl_then_recrawl
+        (reseed plus its wave loop), the half whose list wave probes the
+        bloom and appends a bloom layer. compact_every=4 puts the
+        compaction, and with it the bloom base rebuild, inside the
+        counted half, as perfbench's recrawl workload does."""
+        drv = WaveDriver(spark, SnapshotStore(tmp_path / "wh"),
+                         num_partitions=4, compact_every=4)
+        drv.bootstrap(synth.gen_seed_list(120))
+        drv.run_until_done(spark.createDataFrame(synth.gen_pages_pandas(120)),
+                           spark.createDataFrame(synth.gen_robots()),
+                           spark.createDataFrame(synth.gen_host_rank()), 6)
+
+        ids0 = _job_ids(spark)
+        stats = _recrawl(spark, drv)
+        ran = _job_ids(spark) - ids0
+        assert [s["wave"] for s in stats] == [4, 5]  # compacts after wave 4
+        assert stats[0]["unchanged"] > 0  # a bloom-probed list wave
+        assert len(ran) <= self.MAX_RECRAWL_JOBS, json.dumps(
+            _jobs_by_execution(spark, ran), indent=1)
+
 
 def _crawl_then_recrawl(spark, drv, n=120) -> list[dict]:
     """A crawl of the wave-1 corpus, then a reseeded recrawl of the
     wave-2 corpus (its first wave probes the bloom with every list
     link). Returns the stats of every wave."""
-    robots = spark.createDataFrame(synth.gen_robots())
-    ranks = spark.createDataFrame(synth.gen_host_rank())
     drv.bootstrap(synth.gen_seed_list(n))
     stats = drv.run_until_done(
-        spark.createDataFrame(synth.gen_pages_pandas(n)), robots, ranks, 6)
+        spark.createDataFrame(synth.gen_pages_pandas(n)),
+        spark.createDataFrame(synth.gen_robots()),
+        spark.createDataFrame(synth.gen_host_rank()), 6)
+    return stats + _recrawl(spark, drv, n)
+
+
+def _recrawl(spark, drv, n=120) -> list[dict]:
+    """The recrawl half of _crawl_then_recrawl: reseed with the wave-2
+    list pages, then crawl the wave-2 corpus."""
     drv.reseed(synth.gen_seed_list(n, wave=2))
-    return stats + drv.run_until_done(
+    return drv.run_until_done(
         spark.createDataFrame(synth.gen_pages_pandas(n, wave=2)),
-        robots, ranks, 6)
+        spark.createDataFrame(synth.gen_robots()),
+        spark.createDataFrame(synth.gen_host_rank()), 6)
 
 
 class TestLineage:
@@ -740,3 +770,135 @@ class TestCacheHygiene:
                          spark.createDataFrame(synth.gen_robots()),
                          spark.createDataFrame(synth.gen_host_rank()))
         assert persisted().size() == before
+
+
+# three crawl cycles of the 120-page world: the wave-1 corpus, the
+# wave-2 corpus (20% updated, 10% new) and a grown wave-2 corpus
+_CYCLES = ((120, 1), (120, 2), (150, 2))
+
+
+def _three_cycles(spark, drv, after_first=None):
+    """Crawl _CYCLES on ``drv``, each cycle reseeded with its list pages;
+    ``after_first(drv)`` runs between the first and second cycle.
+    Robots allow one list page per host per wave (detail pages keep
+    their budgets), so the host with two list pages spreads each
+    cycle's listing over two enqueuing waves. Returns the stats of every
+    wave (less its wall time) and the state hashes after each cycle."""
+    rb = synth.gen_robots()
+    robots = spark.createDataFrame(rb.assign(
+        detail_delay_ms=rb["crawl_delay_ms"],
+        detail_tokens_per_wave=rb["tokens_per_wave"], tokens_per_wave=1))
+    ranks = spark.createDataFrame(synth.gen_host_rank())
+    stats, hashes = [], []
+    for i, (n, wave) in enumerate(_CYCLES):
+        seeds = synth.gen_seed_list(n, wave=wave)
+        if i == 0:
+            drv.bootstrap(seeds)
+        else:
+            drv.reseed(seeds)
+        stats += [{k: v for k, v in st.items() if k != "wall_ms"}
+                  for st in drv.run_until_done(
+                      spark.createDataFrame(
+                          synth.gen_pages_pandas(n, wave=wave)),
+                      robots, ranks, 8)]
+        hashes.append(state_hashes(spark, drv))
+        if i == 0 and after_first is not None:
+            after_first(drv)
+    return stats, hashes
+
+
+def _bloom_paths(snapshot) -> list[str]:
+    """The bloom layer paths a snapshot holds, base first."""
+    entry = snapshot["tables"].get("blooms", [])
+    return entry if isinstance(entry, list) else [entry]
+
+
+def _probe_entries(monkeypatch, drv) -> dict[int, list[str]]:
+    """wave -> the bloom layer paths its probe reads (base first)."""
+    entries = {}
+    read = drv.store.read
+
+    def spy(spark, table, *args, **kwargs):
+        paths = _bloom_paths(drv.store.latest())
+        if table == "blooms" and paths:
+            entries[drv.store.latest_wave() + 1] = paths
+        return read(spark, table, *args, **kwargs)
+
+    monkeypatch.setattr(drv.store, "read", spy)
+    return entries
+
+
+class TestBloomLayers:
+    # compaction at wave 5 folds the first two cycles' layers into a
+    # base; the third cycle's second list wave (wave 10) then probes that
+    # base plus the layers of waves 6 and 9
+    COMPACT_EVERY = 5
+
+    @pytest.fixture(scope="class")
+    def plain(self, spark, tmp_path_factory):
+        """The same three cycles classified without the bloom."""
+        drv = WaveDriver(spark, SnapshotStore(tmp_path_factory.mktemp("p")),
+                         num_partitions=4, use_bloom=False,
+                         compact_every=self.COMPACT_EVERY)
+        return _three_cycles(spark, drv)
+
+    def test_layered_bloom_matches_plain_classify(self, spark, tmp_path,
+                                                  monkeypatch, plain):
+        """Per-wave bloom layers over a compacted base classify exactly
+        as the plain seen join does, and every stored layer is sized to
+        the keys it holds."""
+        from crawlspark import dedup as D
+
+        drv = WaveDriver(spark, SnapshotStore(tmp_path / "wh"),
+                         num_partitions=4, compact_every=self.COMPACT_EVERY)
+        entries = _probe_entries(monkeypatch, drv)
+        stats, hashes = _three_cycles(spark, drv)
+        assert (stats, hashes) == plain
+
+        snaps = drv.store.snapshots()
+        bases = {s["tables"]["blooms"] for s in snaps
+                 if isinstance(s["tables"].get("blooms"), str)}
+        by_wave = {s["wave"]: s for s in stats}
+        layered = [w for w, paths in entries.items()
+                   if paths[0] in bases and len(paths) >= 3
+                   and by_wave[w]["unchanged"] > 0]
+        assert layered, entries  # base + >= 2 layers on a list wave
+
+        for path in {p for s in snaps for p in _bloom_paths(s)}:
+            for r in spark.read.parquet(str(drv.store.root / path)).collect():
+                assert len(r["bits"]) * 8 == D.bloom_params(r["n_keys"])[0]
+
+    def test_fixed_capacity_bloom_table_resumes(self, spark, tmp_path,
+                                                monkeypatch, plain):
+        """A warehouse whose bloom table is one overwritten fixed-m table
+        (the format before bloom layers: every salt at the capacity of
+        1M keys) resumes: the table is read as the first layer, and the
+        bloom-probed waves after it classify as the plain seen join."""
+        import numpy as np
+
+        from crawlspark import dedup as D
+
+        def to_fixed_capacity(drv):
+            keys = drv.seen_view().select("salt", "url_hash").toPandas()
+            m, k = D.bloom_params(1_000_000)
+            rows = []
+            for salt, g in keys.groupby("salt"):
+                bits = np.zeros(m // 64, dtype=np.uint64)
+                pos = D._bloom_positions(g["url_hash"].to_numpy(), m, k).ravel()
+                np.bitwise_or.at(bits, pos // 64,
+                                 np.uint64(1) << (pos % 64).astype(np.uint64))
+                rows.append((int(salt), m, k, bits.tobytes(), len(g)))
+            drv.store.commit(drv.store.latest_wave(), {
+                "blooms": spark.createDataFrame(rows, D.BLOOM_SCHEMA)})
+            fixed.append(drv.store.latest()["tables"]["blooms"])
+
+        fixed = []
+        drv = WaveDriver(spark, SnapshotStore(tmp_path / "wh"),
+                         num_partitions=4, compact_every=self.COMPACT_EVERY)
+        entries = _probe_entries(monkeypatch, drv)
+        stats, hashes = _three_cycles(spark, drv, after_first=to_fixed_capacity)
+        assert (stats, hashes) == plain
+        assert isinstance(fixed[0], str)
+        by_wave = {s["wave"]: s for s in stats}
+        assert any(paths[0] == fixed[0] and by_wave[w]["unchanged"] > 0
+                   for w, paths in entries.items()), entries
