@@ -45,15 +45,18 @@ Scale notes:
   by url hash (storage-layer config); plan shape is identical.
 - html stays BINARY end-to-end and is dropped inside the same stage
   that extracts from it; nothing html-bearing is ever persisted.
+- the fetch keeps ONE capture per url (latest ``warc_ts``, ties broken
+  by the html hash), so the extraction cache is 1:1 with the fetched
+  urls and every url-keyed output is the same at any partition layout.
 - ONE driver-side action per wave before the commit: a count per
-  (partition, kind) over the three cached frames (processed rows,
-  classified rows by status, scheduled rows by state). Collecting it
-  fills the schedule, extraction and bloom-probe caches beneath it
-  (serializing the Python stage so the commit's concurrent writes
-  cannot duplicate it); the wave stats and the lineage rows are sums
-  over what it returns. Only ``missing`` rides an Observation, on the
-  frontier-delta write that materializes it anyway. Loop control is
-  exact arithmetic over the stats, never a frontier re-read.
+  (partition, kind, retry class) over the three cached frames
+  (processed rows, classified rows by status, scheduled rows by state).
+  Collecting it fills the schedule, extraction and bloom-probe caches
+  beneath it (serializing the Python stage so the commit's concurrent
+  writes cannot duplicate it); every wave stat and the lineage rows are
+  sums over what it returns (``missing`` is scheduled minus fetched).
+  Loop control is exact arithmetic over the stats, never a frontier
+  re-read.
 """
 
 from __future__ import annotations
@@ -92,6 +95,11 @@ _LINEAGE_KINDS = ("fetched", D.STATUS_NEW, D.STATUS_UPDATED,
 def _obs_get(obs: Observation, names: list[str], fallback: DataFrame,
              exprs: list) -> dict:
     """Observation metrics with a deterministic fallback.
+
+    No engine code calls this since the wave counts ``missing`` from
+    its one aggregate; it is kept only because perfbench's tracer
+    (``perfbench/tracing.py``) patches it by name, and goes with the
+    next tracer change.
 
     Metrics ride CollectMetrics accumulators on jobs the wave runs
     anyway (zero dedicated counter jobs). Two PySpark 4.1.2 edge cases
@@ -307,31 +315,31 @@ class WaveDriver:
             # (pandas-free — 2.3x faster measured, BENCH.md) decodes per
             # Arrow batch and html is dropped inside the same stage, so the
             # wave-long cache holds only extracted columns.
-            fetch_cols = to_fetch.select("url", "depth", "page", "id", "last_updated_on")
-            processed = cache(extract_pages(
-                pages.select("url", "html", F.col("warc_ts").alias("_warc_ts"))
-                     .join(F.broadcast(fetch_cols), "url", "inner"))
+            # One capture per url: pages may hold several (Common Crawl
+            # does), so the latest warc_ts wins, ties broken by the html
+            # hash taken in the scan stage; the window runs over the
+            # extraction output, after html is dropped. processed is then
+            # 1:1 with the fetched urls.
+            fetch_cols = to_fetch.select("url", "depth", "page", "id",
+                                         "last_updated_on", "attempts")
+            processed = cache(_first_per_key(extract_pages(
+                pages.select("url", "html", F.col("warc_ts").alias("_warc_ts"),
+                             F.xxhash64("html").alias("_html_hash"))
+                     .join(F.broadcast(fetch_cols), "url", "inner")),
+                ["url"], F.col("_warc_ts").desc(), F.col("_html_hash").asc())
                 .select("url", "depth", "page", "id", "last_updated_on",
-                        "_warc_ts", "_links", "x", "jsonld"))
+                        "attempts", "_warc_ts", "_links", "x", "jsonld"))
             # P8 retry: missing urls return to the pending pool with
             # attempts+1 (state left 'scheduled' would orphan them forever;
-            # the pending filter caps at max_retries). extract_pages is 1:1
-            # over pages ⋈ fetch_cols, so the cached processed.url IS the
-            # fetched set: missing and fetched rows split to_fetch on it
-            # (one broadcast, reused by both joins) — pages is never scanned
-            # again for them. missing keeps an Observation: its rows exist
-            # only in the frontier delta write, so counting them in the
-            # aggregate would run the got broadcast a second time.
+            # the pending filter caps at max_retries). The cached
+            # processed.url IS the fetched set: missing and fetched rows
+            # split to_fetch on it (one broadcast, reused by both joins) —
+            # pages is never scanned again for them, and the aggregate
+            # counts them as scheduled minus fetched.
             got = F.broadcast(processed.select("url"))
-            obs_missing = Observation()
-            missing_metrics = [
-                F.count(F.lit(1)).alias("missing"),
-                F.count(F.when(F.col("attempts") < self.max_retries, 1))
-                .alias("missing_retryable")]
             missing = (to_fetch.join(got, "url", "left_anti")
                        .withColumn("attempts", F.col("attempts") + 1)
-                       .withColumn("state", F.lit("pending"))
-                       .observe(obs_missing, *missing_metrics))
+                       .withColumn("state", F.lit("pending")))
 
             # ---- list pages -> frontier candidates (S5 + D1/D2) --------------
             links = (processed.filter(F.col("depth") == 0)
@@ -388,7 +396,9 @@ class WaveDriver:
             # unescape-pUDF subtree would dominate the stats action). N1
             # source dispatch (normalizer.go:30-43): the closed-world
             # fixtures are vieclam24h-shaped, so that normalizer runs here.
-            jobs_batch = (normalize_vieclam24h(staged).dropDuplicates(["id"])
+            # One row per url; two urls listed under one id both append,
+            # and jobs_view decides between them.
+            jobs_batch = (normalize_vieclam24h(staged)
                           .withColumn("wave", F.lit(wave))
                           .repartition(SNAPSHOT_FILES))
 
@@ -424,28 +434,34 @@ class WaveDriver:
 
             # ---- THE pre-commit action (one per wave) ---------------------------
             # One aggregate over the three cached frames, each row tagged
-            # with its partition and its kind: "fetched" for processed rows,
-            # the dedup status for classified rows, the schedule state for
-            # sched rows. Collecting it fills every cache beneath it — sched,
-            # the Python extraction stage and the bloom probe — so the
-            # commit's concurrent writes see only cached frames, and both the
-            # wave stats and the lineage rows are sums over what it returns.
+            # with its partition, its kind and its retry class: "fetched"
+            # for processed rows, the dedup status for classified rows, the
+            # schedule state for sched rows. Collecting it fills every cache
+            # beneath it — sched, the Python extraction stage and the bloom
+            # probe — so the commit's concurrent writes see only cached
+            # frames, and both the wave stats and the lineage rows are sums
+            # over what it returns. A url re-pended as missing stays
+            # retryable while attempts + 1 < max_retries.
             pid = F.spark_partition_id().alias("partition_id")
-            tagged = (processed.select(pid, F.lit("fetched").alias("kind"))
-                      .unionByName(classified.select(pid, F.col("status").alias("kind")))
-                      .unionByName(sched.select(pid, F.col("state").alias("kind"))))
-            total: Counter = Counter()
+            retry = (F.col("attempts") + 1 < self.max_retries).alias("retry")
+            tagged = (processed.select(pid, F.lit("fetched").alias("kind"), retry)
+                      .unionByName(classified.select(pid, F.col("status").alias("kind"),
+                                                     F.lit(False).alias("retry")))
+                      .unionByName(sched.select(pid, F.col("state").alias("kind"), retry)))
+            total, retryable = Counter(), Counter()
             per_part: dict[int, Counter] = defaultdict(Counter)
-            for part, kind, rows in tagged.groupBy("partition_id", "kind").count().collect():
+            for part, kind, r, rows in (tagged.groupBy("partition_id", "kind", "retry")
+                                        .count().collect()):
                 total[kind] += rows
+                retryable[kind] += rows if r else 0
                 if kind in _LINEAGE_KINDS:
                     per_part[part][kind] += rows
-            counted = {"fetched": total["fetched"], "new": total[D.STATUS_NEW],
-                       "updated": total[D.STATUS_UPDATED],
-                       "unchanged": total[D.STATUS_UNCHANGED],
-                       "deferred": total["deferred"],
-                       "disallowed": total["disallowed"]}
-            counted["enqueued"] = counted["new"] + counted["updated"]
+            counted = {k: total[k] for k in ("fetched", "deferred", "disallowed")}
+            counted.update(new=total[D.STATUS_NEW], updated=total[D.STATUS_UPDATED],
+                           unchanged=total[D.STATUS_UNCHANGED],
+                           enqueued=total[D.STATUS_NEW] + total[D.STATUS_UPDATED],
+                           missing=total["scheduled"] - total["fetched"],
+                           missing_retryable=retryable["scheduled"] - retryable["fetched"])
 
             # ---- lineage (per-partition metrics, north_rule) ------------------
             # from the collected counts; one file per wave. wall_ms is the
@@ -466,10 +482,6 @@ class WaveDriver:
             if self.use_bloom and counted["enqueued"] > 0:
                 appends["blooms"] = D.build_blooms(seen_new)
             self.store.commit(wave, {}, appends=appends)
-            # the missing observation fires in the frontier-delta write
-            counted.update(_obs_get(obs_missing,
-                                    ["missing", "missing_retryable"],
-                                    missing, missing_metrics))
         finally:
             for df in cached:
                 df.unpersist()
@@ -516,18 +528,22 @@ class WaveDriver:
 
     # -- read-side views (append tables resolve last-write-wins here,
     # the parquet-sandbox equivalent of Iceberg MERGE results) ----------
-    def _latest_view(self, table: str, key: str) -> DataFrame | None:
+    def _latest_view(self, table: str, key: str, *tie) -> DataFrame | None:
         df = self.store.read(self.spark, table)
         if df is None:
             return None
-        return _first_per_key(df, [key], F.col("wave").desc())
+        return _first_per_key(df, [key], F.col("wave").desc(), *tie)
 
     def jobs_view(self) -> DataFrame | None:
-        """Normalized jobs, last write per id (K3 upsert semantics)."""
-        return self._latest_view("jobs", "id")
+        """Normalized jobs, last write per id (K3 upsert semantics). A
+        wave appends one row per fetched url, so two urls listed under
+        one id tie on wave: the smaller ``source_url`` wins."""
+        return self._latest_view("jobs", "id", F.col("source_url").asc())
 
     def extracted_view(self) -> DataFrame | None:
-        """Extracted text, last write per url (byte-identity surface)."""
+        """Extracted text, last write per url (byte-identity surface). A
+        wave appends one row per fetched url (its latest capture), so
+        the last wave decides."""
         return self._latest_view("extracted", "url")
 
     # -- loop ---------------------------------------------------------------

@@ -279,7 +279,8 @@ class TestDeltaState:
         scan: per wave, the `missing`/`missing_retryable` stats and the
         re-pended frontier rows must equal what an anti join of the
         scheduled urls against pages.url gives — also when pages holds
-        two captures of one url."""
+        two captures of one url, which counts once in ``fetched`` and
+        commits its later capture."""
         pages = world["pages"]
         lists = sorted(r["url"] for r in pages.filter(
             F.col("url").contains("/viec-lam-")).select("url").collect())
@@ -310,15 +311,21 @@ class TestDeltaState:
             assert stats["missing"] == len(missing)
             assert stats["missing_retryable"] == sum(
                 before[u] + 1 < drv.max_retries for u in missing)
-            assert stats["fetched"] == sum(
-                captures.get(u, 0) for u in scheduled)
+            assert stats["fetched"] == len(scheduled - missing)  # urls
             for u in scheduled:
                 want = (("pending", before[u] + 1) if u in missing
                         else ("fetched", before[u]))
                 assert after[u] == want, u
             total_missing += len(missing)
         assert total_missing > drv.max_retries  # the list page and details
-        assert after[dup.first()["url"]][0] == "fetched"
+        dup_url = dup.first()["url"]
+        assert after[dup_url][0] == "fetched"
+        # the duplicated url committed one row, from its later capture
+        assert drv.store.read(spark, "extracted").filter(
+            F.col("url") == dup_url).count() == 1
+        later = pages.filter(F.col("url") == dup_url).agg(F.max("warc_ts")).first()[0]
+        assert [r["crawled_at"] for r in drv.store.read(spark, "jobs")
+                .filter(F.col("source_url") == dup_url).collect()] == [later]
 
     def test_zero_budget_wave_stops_loop(self, spark, world):
         """Starvation guard: a wave that only defers (zero tokens) is
@@ -478,6 +485,65 @@ class TestSeenDeterminism:
             assert seen[0]["last_updated_on"] == "1111"  # page 1 wins
             hashes.add(table_hash(drv.seen_view()))
         assert len(hashes) == 1  # invariant across partition layouts
+
+
+class TestMultiCapture:
+    def test_latest_capture_wins_at_any_layout(self, spark, tmp_path):
+        """Crawl input can hold several captures of one url (Common
+        Crawl does): the fetch keeps the latest warc_ts per url, so the
+        raw jobs log, jobs_view and extracted_view are the same at any
+        partition layout, the extracted text is the later capture's, and
+        ``fetched`` counts urls. Two detail urls listed under one item
+        id resolve in jobs_view to the smaller source_url."""
+        import re
+
+        import numpy as np
+        import pandas as pd
+
+        from crawlspark.schemas import PAGES_SCHEMA
+
+        first = synth.gen_pages_pandas(120)
+        ids = np.arange(1, 121)
+        second = synth.gen_detail_chunk(ids[synth.updated_mask(ids)], wave=2)
+        second["warc_ts"] = second["warc_ts"] + pd.Timedelta(hours=1)
+        # one list page lists its first two public detail urls under the
+        # first one's item id
+        li = int(first.index[first["url"].str.contains("/viec-lam-")][0])
+        html = first.at[li, "html"].decode()
+        links = [m for m in re.finditer(
+            r'href="([^"]+)" data-id="(\d+)"', html)
+            if "/private-" not in m.group(1)][:2]
+        pair = sorted(m.group(1) for m in links)
+        shared_id = links[0].group(2)
+        b = links[1]
+        first.at[li, "html"] = (html[:b.start(2)] + shared_id
+                                + html[b.end(2):]).encode()
+        both = pd.concat([first, second], ignore_index=True)
+        latest = both.sort_values("warc_ts").groupby("url")["text"].last()
+        robots = spark.createDataFrame(synth.gen_robots())
+        ranks = spark.createDataFrame(synth.gen_host_rank())
+
+        hashes = set()
+        layouts = [(both, 4, 1), (both.iloc[::-1], 13, 7)]
+        for i, (pdf, n_shuffle, n_pages) in enumerate(layouts):
+            pages = spark.createDataFrame(pdf, PAGES_SCHEMA).repartition(n_pages)
+            drv = WaveDriver(spark, SnapshotStore(tmp_path / f"wh{i}"))
+            drv.bootstrap(synth.gen_seed_list(120))
+            with shuffle_parallelism(spark, n_shuffle):
+                stats = drv.run_until_done(pages, robots, ranks, 6)
+            assert sum(s["fetched"] for s in stats) == drv.frontier_view() \
+                .filter(F.col("state") == "fetched").count()
+            text = {r["url"]: r["text"]
+                    for r in drv.extracted_view().collect()}
+            assert set(second["url"]) - set(text) <= {
+                u for u in second["url"] if "/private-" in u}
+            assert {u: latest[u] for u in text} == text
+            kept = drv.jobs_view().filter(F.col("id") == shared_id).collect()
+            assert [r["source_url"] for r in kept] == pair[:1]
+            hashes.add((table_hash(drv.store.read(spark, "jobs")),
+                        table_hash(drv.jobs_view()),
+                        table_hash(drv.extracted_view())))
+        assert len(hashes) == 1
 
 
 class TestObsGet:
