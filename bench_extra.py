@@ -11,7 +11,13 @@ run_queries loop (same session config, same order), but adds:
   --skip-warm        skip warm_ann_indices (only valid when no ann query
                      in the subset)
 
-Prints one JSON line {"queries": {name: [s, ...]}, "ann_index_build_secs": s}.
+Each plan dump and each timed run builds and releases its caches inside
+its own cache_scope. Prints one JSON line {"queries": {name: [s, ...]},
+"jobs_stages": {name: [[jobs, stages listed], ...]},
+"stages_executed": {name: [stages, ...]}, "ann_index_build_secs": s}.
+Listed stages include those a job skipped because their shuffle output
+already existed; executed stages are those that completed tasks in one
+of the entry's jobs.
 """
 
 from __future__ import annotations
@@ -40,7 +46,7 @@ def main():
     args = ap.parse_args()
 
     from crawlspark.queries import QUERIES, warm_ann_indices
-    from crawlspark.session import get_spark
+    from crawlspark.session import cache_scope, get_spark
 
     names = [n.strip() for n in args.queries.split(",") if n.strip()] or \
         list(QUERIES)
@@ -53,12 +59,14 @@ def main():
         idx_secs = round(warm_ann_indices(spark, SF_DIR), 3)
     times: dict[str, list[float]] = {}
     jobs: dict[str, list[tuple[int, int]]] = {}
+    executed: dict[str, list[int]] = {}
+    status_store = spark.sparkContext._jsc.sc().statusStore()
     for name in names:
         fn = QUERIES[name][0]
         if args.plans:
             Path(args.plans).mkdir(parents=True, exist_ok=True)
             buf = io.StringIO()
-            with redirect_stdout(buf):
+            with redirect_stdout(buf), cache_scope():
                 fn(spark, SF_DIR).explain("formatted")
             (Path(args.plans) / f"{name}.txt").write_text(buf.getvalue())
         times[name] = []
@@ -66,7 +74,8 @@ def main():
             group = f"bx_{name}_{rep}"
             spark.sparkContext.setJobGroup(group, name)
             t0 = time.time()
-            fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()
+            with cache_scope():
+                fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()
             times[name].append(round(time.time() - t0, 2))
             st = spark.sparkContext.statusTracker()
             jids = st.getJobIdsForGroup(group)
@@ -75,9 +84,12 @@ def main():
                 ji = st.getJobInfo(j)
                 nstages += len(ji.stageIds) if ji else 0
             jobs.setdefault(name, []).append((len(jids), nstages))
+            executed.setdefault(name, []).append(sum(
+                status_store.job(j).numCompletedStages() for j in jids))
             spark.sparkContext.setJobGroup(None, None)
     spark.stop()
     print(json.dumps({"queries": times, "jobs_stages": jobs,
+                      "stages_executed": executed,
                       "ann_index_build_secs": idx_secs,
                       "sf": SF_DIR, "cpus": CPUS}))
 

@@ -42,6 +42,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .session import cached
+
 # One salt modulus for the seen table, its blooms and every probe of
 # them, so a probe can never salt keys differently from the tables.
 N_SALTS = 16
@@ -477,11 +479,11 @@ def dup_clusters(nodes: DataFrame, pairs: DataFrame,
     # an expensive banded-join pipeline — each reference re-runs it
     # (the same multi-reference trap measured on the LSH verify, r4).
     # Persisted because every round's neighbor-min re-reads the edges.
-    edges = (pairs.select(F.explode(F.array(
+    edges = cached(pairs.select(F.explode(F.array(
         F.struct(F.col("key_a").alias("a"), F.col("key_b").alias("b")),
         F.struct(F.col("key_b").alias("a"), F.col("key_a").alias("b"))))
         .alias("e"))
-        .select("e.a", "e.b").distinct().persist())
+        .select("e.a", "e.b").distinct())
     # r6: fold the FIRST propagation step into initialization. With
     # labels(0) = key, round one's neighbor-min is just min(neighbor
     # key) — computable directly from the edge list with no staged
@@ -492,23 +494,21 @@ def dup_clusters(nodes: DataFrame, pairs: DataFrame,
     # reaches the same labels from any intermediate state of the
     # propagation lattice).
     nbr0 = edges.groupBy("a").agg(F.min("b").alias("nlbl"))
-    labels = (nodes.join(nbr0, nodes["key"] == nbr0["a"], "left")
-              .select("key",
-                      F.least(F.col("key"),
-                              F.coalesce(F.col("nlbl"), F.col("key")))
-                      .alias("lbl"))
-              .persist())
+    labels = cached(nodes.join(nbr0, nodes["key"] == nbr0["a"], "left")
+                    .select("key",
+                            F.least(F.col("key"),
+                                    F.coalesce(F.col("nlbl"), F.col("key")))
+                            .alias("lbl")))
     persisted = labels  # unpersist must hit the EXACT persisted plan
     for _ in range(max_iter):
         nbr = (edges.join(labels, edges["b"] == labels["key"])
                .groupBy("a").agg(F.min("lbl").alias("nlbl")))
-        staged = (labels.join(nbr, labels["key"] == nbr["a"], "left")
-                  .select(labels["key"],
-                          F.least(F.col("lbl"),
-                                  F.coalesce(F.col("nlbl"), F.col("lbl")))
-                          .alias("_new"),
-                          F.col("lbl").alias("_old"))
-                  .persist())
+        staged = cached(labels.join(nbr, labels["key"] == nbr["a"], "left")
+                        .select(labels["key"],
+                                F.least(F.col("lbl"),
+                                        F.coalesce(F.col("nlbl"), F.col("lbl")))
+                                .alias("_new"),
+                                F.col("lbl").alias("_old")))
         # ONE full-scan aggregate both (a) answers the convergence
         # check and (b) materializes every cached partition of
         # `staged`. The previous filter(...).limit(1).count() could
@@ -522,9 +522,8 @@ def dup_clusters(nodes: DataFrame, pairs: DataFrame,
         labels = staged.select("key", F.col("_new").alias("lbl"))
         if changed == 0:
             break
-    # the final labels are cached; edges only matter again if that
-    # cache is evicted (recompute stays correct, just cold)
-    edges.unpersist()
+    # the final labels and the edges stay cached for the consumer's
+    # action; the caller's cache_scope releases them
     return labels.select("key", F.col("lbl").alias("cluster"))
 
 

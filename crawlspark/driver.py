@@ -77,6 +77,7 @@ from .extract import extract_pages
 from .frontier import host_of, priority_expr
 from .normalize import normalize_vieclam24h
 from .schemas import FRONTIER_SCHEMA, LINEAGE_SCHEMA, SEEN_SCHEMA
+from .session import cache_scope, cached
 from .tables import SnapshotStore
 
 WAVE_EPOCH = datetime(2026, 1, 1)
@@ -290,17 +291,11 @@ class WaveDriver:
                    .drop("_hr")
                    .select(*_FRONTIER_COLS))
 
-        # released in the finally, in persist order, however the wave ends
-        cached: list[DataFrame] = []
-
-        def cache(df: DataFrame) -> DataFrame:
-            cached.append(df.persist())
-            return df
-
-        try:
+        # the scope releases the wave's caches however the wave ends
+        with cache_scope():
             # persist shared lineage: sched, processed and classified are
             # each read by several writes and by the wave's one aggregate
-            sched = cache(politeness.schedule(pending, robots, ws))
+            sched = cached(politeness.schedule(pending, robots, ws))
             to_fetch = sched.filter(F.col("state") == "scheduled").drop("slot", "scheduled_ts")
             # deferred rows stay pending: no delta row, counted by the aggregate
             disallowed = (sched.filter(F.col("state") == "disallowed")
@@ -322,7 +317,7 @@ class WaveDriver:
             # 1:1 with the fetched urls.
             fetch_cols = to_fetch.select("url", "depth", "page", "id",
                                          "last_updated_on", "attempts")
-            processed = cache(_first_per_key(extract_pages(
+            processed = cached(_first_per_key(extract_pages(
                 pages.select("url", "html", F.col("warc_ts").alias("_warc_ts"),
                              F.xxhash64("html").alias("_html_hash"))
                      .join(F.broadcast(fetch_cols), "url", "inner")),
@@ -360,7 +355,7 @@ class WaveDriver:
                 classified = D.classify_with_bloom(links, seen, blooms_prev, now_ts)
             else:
                 classified = D.classify(links, seen, now_ts)
-            classified = cache(classified)
+            classified = cached(classified)
 
             changed = classified.filter(F.col("status") != D.STATUS_UNCHANGED)
             enqueue = (changed.drop("status")
@@ -482,9 +477,6 @@ class WaveDriver:
             if self.use_bloom and counted["enqueued"] > 0:
                 appends["blooms"] = D.build_blooms(seen_new)
             self.store.commit(wave, {}, appends=appends)
-        finally:
-            for df in cached:
-                df.unpersist()
         stats = {"wave": wave, **{k: int(counted[k]) for k in _STAT_KEYS}}
         # exact pending-work indicator: deferred rows stay pending,
         # enqueues become pending, retryable missing re-pend; every

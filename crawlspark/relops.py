@@ -17,6 +17,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .session import cached
+
 
 def asof_join(left: DataFrame, right: DataFrame, on: str,
               left_ts: str, right_ts: str,
@@ -106,16 +108,18 @@ def entity_rank(edges: DataFrame, iters: int = 5,
     # (deg, the degree join, and both node-set legs) — when the caller
     # hands an expensive pipeline (a JSON-extraction scan + distinct),
     # every unpersisted reference re-runs it end to end (measured r6:
-    # the events pipeline ran 4x per call; LRU-evicted like any cache).
-    edges = edges.persist()
+    # the events pipeline ran 4x per call). It, e and anchored stay
+    # cached for the consumer's action; the caller's cache_scope
+    # releases them.
+    edges = cached(edges)
     deg = edges.groupBy("src").agg(F.count("*").alias("_deg"))
     # every node appears as a source (the outdegree >= 1 contract
     # above), so the node set IS deg's key set — no second union +
     # distinct pass over the edge list
     nodes = deg.select(F.col("src").alias("node"))
     ncnt = F.broadcast(nodes.agg(F.count("*").cast("double").alias("_n")))
-    e = edges.join(deg, "src").persist()
-    anchored = nodes.crossJoin(ncnt).persist()
+    e = cached(edges.join(deg, "src"))
+    anchored = cached(nodes.crossJoin(ncnt))
 
     ranks = anchored.select("node", (F.lit(1.0) / F.col("_n")).alias("rank"))
     for _ in range(iters):

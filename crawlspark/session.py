@@ -14,9 +14,46 @@ from __future__ import annotations
 import os
 import tempfile
 import zipfile
+from collections.abc import Iterator
+from contextlib import contextmanager
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
+
+# open cache scopes, innermost last; each holds the frames it persisted.
+# Process-wide, as the session's cache manager is: operators register
+# their caches without a scope being passed down to them.
+_scopes: list[list[DataFrame]] = []
+
+
+def cached(df: DataFrame) -> DataFrame:
+    """Persist ``df`` at Spark's default level and return it — the one
+    persist site of the package. Inside a ``cache_scope`` the innermost
+    scope releases it on exit; a plan that was already cached keeps
+    its owner, so a scope never drops another caller's cache. Outside
+    any scope it stays cached until evicted or unpersisted."""
+    fresh = df.storageLevel == StorageLevel.NONE
+    df = df.persist()
+    if fresh and _scopes:
+        _scopes[-1].append(df)
+    return df
+
+
+@contextmanager
+def cache_scope() -> Iterator[None]:
+    """Unpersist, on exit (error or not), every frame ``cached`` in
+    this scope. Run a lazy frame's actions inside the scope that built
+    it. Release is newest first: a cache built on another goes before
+    it, so no release re-plans a dependent cache."""
+    frames: list[DataFrame] = []
+    _scopes.append(frames)
+    try:
+        yield
+    finally:
+        _scopes.pop()
+        for df in reversed(frames):
+            df.unpersist()
 
 
 def build_package_zip(out: str | Path) -> Path:

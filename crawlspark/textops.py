@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .session import cache_scope, cached
+
 # ---------------------------------------------------------------------------
 # Text analysis
 # ---------------------------------------------------------------------------
@@ -228,9 +230,10 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     # BOTH sides — unpersisted, each side re-runs the whole shingle
     # explode + grouped-min pipeline (and pays its Janino compile
     # twice cold). The frame is (key, num_perm hashes) — tiny relative
-    # to the corpus at any scale — and LRU-evicted like cand below.
-    sig = minhash_signature(df, text_col, key_col, num_perm,
-                            shingle_n).persist()
+    # to the corpus at any scale. It and cand below stay cached for
+    # the consumer's action; the caller's cache_scope releases both.
+    sig = cached(minhash_signature(df, text_col, key_col, num_perm,
+                                   shingle_n))
     band_structs = [
         F.struct(F.lit(b).alias("band"),
                  F.concat_ws("|", *[F.col(f"mh{b * rows_per_band + r}")
@@ -240,20 +243,17 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     banded = (sig.select(F.col(key_col), F.explode(F.array(*band_structs)).alias("bv"))
               .select(key_col, "bv.band", "bv.val"))
     a, b = banded.alias("a"), banded.alias("b")
-    cand = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.val") == F.col("b.val"))
-                   & (F.col(f"a.{key_col}") < F.col(f"b.{key_col}")))
-            .select(F.col(f"a.{key_col}").alias("id_a"),
-                    F.col(f"b.{key_col}").alias("id_b"))
-            .distinct()
-            # persisted: the verify references the candidate frame 3x
-            # (two id prunes + the pair join), and every UNcached
-            # reference would re-run the whole band join (the measured
-            # r4 3-reference anti-result). The frame is broadcast-sized
-            # by this operator's contract, so the cache is tiny; it is
-            # left cached for the consumer (LRU-evicted, rebuilt
-            # correctly if dropped).
-            .persist())
+    # persisted: the verify references the candidate frame 3x (two id
+    # prunes + the pair join), and every UNcached reference would
+    # re-run the whole band join (the measured r4 3-reference
+    # anti-result). The frame is broadcast-sized by this operator's
+    # contract, so the cache is tiny.
+    cand = cached(a.join(b, (F.col("a.band") == F.col("b.band"))
+                         & (F.col("a.val") == F.col("b.val"))
+                         & (F.col(f"a.{key_col}") < F.col(f"b.{key_col}")))
+                  .select(F.col(f"a.{key_col}").alias("id_a"),
+                          F.col(f"b.{key_col}").alias("id_b"))
+                  .distinct())
     # r5 scale fix: shingle ONLY candidate members. The previous form
     # shingled the ENTIRE corpus on both verify sides — O(corpus)
     # array construction for an O(candidates) answer; at 100 TB the
@@ -871,8 +871,9 @@ def lm_quality_score(df: DataFrame, text_col: str = "text",
     # unpersisted, the vocab reference re-runs the corpus explode+agg
     # a second time (and the scoring join a third). With the cache the
     # corpus is exploded exactly twice: once into counts, once into
-    # the scoring join. The frame is vocab-sized.
-    counts = toks.groupBy("w").agg(F.count("*").alias("c")).persist()
+    # the scoring join. The frame is vocab-sized; the caller's
+    # cache_scope releases it.
+    counts = cached(toks.groupBy("w").agg(F.count("*").alias("c")))
     total = counts.agg(F.sum("c")).first()[0] or 1
     vocab = (counts.orderBy(F.col("c").desc(), "w").limit(vocab_k)
              .select("w", (-F.log2(F.col("c") / F.lit(float(total))))
@@ -1321,8 +1322,9 @@ def _prefix_sum(df: DataFrame, part_col: str, order_cols: list[str],
     w = (Window.partitionBy("_pid", part_col).orderBy(*oc)
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     # persisted: the local sums feed both the total table and the
-    # offset join, and recomputing them re-runs the range shuffle
-    local = parted.withColumn("_lcum", F.sum(weight).over(w)).persist()
+    # offset join, and recomputing them re-runs the range shuffle; the
+    # caller's cache_scope releases them
+    local = cached(parted.withColumn("_lcum", F.sum(weight).over(w)))
     # offsets from a lazy window, not a driver-side collect: no
     # blocking action, no driver-memory exposure to a high-cardinality
     # part_col, and the total table stays distributed
@@ -1374,12 +1376,11 @@ def pmi_bigrams(df: DataFrame, text_col: str = "text",
     # (total + the candidate rows) — without a persist each reference
     # re-tokenizes the corpus (no CSE across DataFrame references, the
     # SPARK-36718 family of traps). Persist the two vocab-sized count
-    # tables; the corpus itself is scanned exactly twice.
-    uni = (toks.groupBy("w").agg(F.count("*").cast("long").alias("c"))
-           .persist())
-    big = (df.select(F.explode(ngrams_all(t, 2)).alias("bg"))
-           .groupBy("bg").agg(F.count("*").cast("long").alias("cb"))
-           .persist())
+    # tables (the caller's cache_scope releases them); the corpus
+    # itself is scanned exactly twice.
+    uni = cached(toks.groupBy("w").agg(F.count("*").cast("long").alias("c")))
+    big = cached(df.select(F.explode(ngrams_all(t, 2)).alias("bg"))
+                 .groupBy("bg").agg(F.count("*").cast("long").alias("cb")))
     nu = uni.agg(F.sum("c").cast("double").alias("_nu"))
     nb = big.agg(F.sum("cb").cast("double").alias("_nb"))
     sp = (big.filter(F.col("cb") >= min_count)
@@ -1438,8 +1439,7 @@ def vocab_coverage(df: DataFrame, text_col: str = "text",
     to 6 before comparison."""
     kmax = max(ks)
     toks = df.select(F.explode(tokens_expr(F.col(text_col))).alias("w"))
-    uni = (toks.groupBy("w").agg(F.count("*").cast("long").alias("c"))
-           .persist())
+    uni = cached(toks.groupBy("w").agg(F.count("*").cast("long").alias("c")))
     total = uni.agg(F.sum("c").cast("double").alias("_total"))
     top = uni.orderBy(F.col("c").desc(), F.col("w")).limit(int(kmax))
     wr = Window.orderBy(F.col("c").desc(), F.col("w"))
@@ -1557,11 +1557,10 @@ def bigram_lm_score(df: DataFrame, text_col: str = "text",
     adds no cross-engine float noise; the mean is rounded to 4 (float
     sums run in partition order). Docs with <2 tokens score 0.0."""
     t = F.col(text_col)
-    pairs = (df.select(F.col(key_col),
-                       F.explode(ngrams_all(t, 2)).alias("bg"))
-             .persist())
-    big = (pairs.groupBy("bg")
-           .agg(F.count("*").cast("long").alias("c12")).persist())
+    pairs = cached(df.select(F.col(key_col),
+                             F.explode(ngrams_all(t, 2)).alias("bg")))
+    big = cached(pairs.groupBy("bg")
+                 .agg(F.count("*").cast("long").alias("c12")))
     w1s = (big.withColumn("_w1", F.split("bg", " ")[0])
            .groupBy("_w1").agg(F.sum("c12").cast("long").alias("c1")))
     v = big.select(F.count_distinct(F.split("bg", " ")[1])
@@ -1860,30 +1859,26 @@ def cms_frequencies(df: DataFrame, depth: int = 4, width: int = 64,
     whole sketch bucket-for-bucket. The CMS invariant est >= exact
     (one-sided error) is returned as a checkable column.
 
-    Shape: ONE corpus explode (persisted — the sketch aggregate and
-    the exact vocab count are independent subtrees, and unpersisted
-    each would re-run the explode; the ADVICE-flagged docstring/plan
-    mismatch) fans out to depth (row, bucket) pairs (a posexplode over
-    a depth-sized array — depth x rows, still map-local); the sketch
-    is a depth*width-row grouped sum (tiny, broadcast back); vocab
-    estimates join the sketch per row and take the grouped min. At
-    100 TB the sketch stays 256 counters — that IS the point of the
-    sketch. (At corpus scale persisting the raw token stream is the
-    wrong trade — there, drop the persist and pay the second explode,
-    or pre-aggregate to the vocab first; the cache is LRU-evicted
-    either way.)"""
-    toks = (df.select(F.explode(tokens_expr(F.col(text_col))).alias("w"))
-            .persist())
+    Shape: ONE corpus explode into the exact vocab count (map-side
+    combined); every vocab row fans out to its depth (row, bucket)
+    pairs (a posexplode over a depth-sized array — depth x vocab, still
+    map-local). The sketch is a depth*width-row grouped sum of
+    ``exact`` over those pairs — a cell is the sum over its bucket's
+    words of their counts, the same total as counting raw tokens —
+    tiny and broadcast back; vocab estimates join it per row and take
+    the grouped min. Both uses of the vocab pairs run one plan, so the
+    corpus is read once and nothing is persisted. At 100 TB the sketch
+    stays 256 counters — that IS the point of the sketch."""
     buckets = F.array(*[
         (_hash60(F.concat_ws(":", F.lit(str(j)), F.col("w"))) % width)
         .alias(f"b{j}")
         for j in range(depth)])
-    pairs = (toks.select("w", F.posexplode(buckets).alias("row", "bucket")))
-    sketch = (pairs.groupBy("row", "bucket")
-              .agg(F.count("*").cast("long").alias("cell")))
-    vocab = toks.groupBy("w").agg(F.count("*").cast("long").alias("exact"))
+    vocab = (df.select(F.explode(tokens_expr(F.col(text_col))).alias("w"))
+             .groupBy("w").agg(F.count("*").cast("long").alias("exact")))
     vb = (vocab.select("w", "exact",
                        F.posexplode(buckets).alias("row", "bucket")))
+    sketch = (vb.groupBy("row", "bucket")
+              .agg(F.sum("exact").cast("long").alias("cell")))
     est = (vb.join(F.broadcast(sketch), ["row", "bucket"])
            .groupBy("w", "exact")
            .agg(F.min("cell").alias("cms_est")))
@@ -1892,6 +1887,7 @@ def cms_frequencies(df: DataFrame, depth: int = 4, width: int = 64,
                       .alias("overcount"))
 
 
+@cache_scope()
 def bpe_learn(df: DataFrame, n_merges: int = 8,
               text_col: str = "text") -> list[tuple[int, str, str, int]]:
     """Learn the top-N byte-pair-encoding merges from the corpus —
@@ -1907,19 +1903,20 @@ def bpe_learn(df: DataFrame, n_merges: int = 8,
     frame (tokenizer training is an offline loop by nature; the
     corpus is scanned exactly once, for the word counts). The
     sequence rewrite is a per-row HOF fold — no shuffle. At 100 TB
-    the iteration cost is bounded by |vocab|, not corpus size."""
+    the iteration cost is bounded by |vocab|, not corpus size. Runs in
+    its own cache_scope: what the loop still holds cached is released
+    before the list returns."""
     # words is PERSISTED so recompute of any child stops at the
     # vocab-sized frame instead of re-scanning the corpus (the r5
     # unpersist ordering dropped the only cached ancestor before the
     # child materialized, so every merge re-ran the corpus scan +
     # word-count shuffle — the ADVICE-flagged contradiction of the
     # 'corpus is scanned exactly once' contract).
-    words = (df.select(F.explode(tokens_expr(F.col(text_col))).alias("w"))
-             .groupBy("w").agg(F.count("*").cast("long").alias("c"))
-             .persist())
+    words = cached(df.select(F.explode(tokens_expr(F.col(text_col))).alias("w"))
+                   .groupBy("w").agg(F.count("*").cast("long").alias("c")))
     chars = F.filter(F.split(F.col("w"), ""), lambda s: s != "")
-    seqs = words.select(
-        "c", F.concat(chars, F.array(F.lit("</w>"))).alias("syms")).persist()
+    seqs = cached(words.select(
+        "c", F.concat(chars, F.array(F.lit("</w>"))).alias("syms")))
     prev = None
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(n_merges):
@@ -1953,14 +1950,10 @@ def bpe_learn(df: DataFrame, n_merges: int = 8,
         # ever materializes (the next collect would recompute the
         # whole lineage). Defer: drop the GRANDPARENT, which the next
         # collect no longer reads.
-        nxt = seqs.select("c", fold.alias("syms")).persist()
+        nxt = cached(seqs.select("c", fold.alias("syms")))
         if prev is not None:
             prev.unpersist()
         prev, seqs = seqs, nxt
-    if prev is not None:
-        prev.unpersist()
-    seqs.unpersist()
-    words.unpersist()
     return merges
 
 
@@ -1990,8 +1983,9 @@ def minhash_accuracy(df: DataFrame, text_col: str = "text",
     # persisted: the all-pairs self-join references base on BOTH sides;
     # unpersisted, the signature aggregate and the shingle arrays are
     # each computed twice. The frame is |subset| rows (the caller caps
-    # the input), so the cache is audit-sized.
-    base = sig.join(sh, key_col).persist()
+    # the input), so the cache is audit-sized. The caller's
+    # cache_scope releases it.
+    base = cached(sig.join(sh, key_col))
     a = base.select(*[F.col(c).alias(f"a_{c}") for c in base.columns])
     b = base.select(*[F.col(c).alias(f"b_{c}") for c in base.columns])
     pairs = a.join(b, F.col(f"a_{key_col}") < F.col(f"b_{key_col}"))

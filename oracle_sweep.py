@@ -4,7 +4,7 @@ exits 1 when any entry mismatches or errors."""
 import sys, math, time
 import duckdb
 from crawlspark.queries import QUERIES, warm_ann_indices
-from crawlspark.session import get_spark
+from crawlspark.session import cache_scope, get_spark
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 spark = get_spark("sweep", master="local[32]", shuffle_partitions=32)
@@ -23,8 +23,9 @@ bad = []
 for name, (fn, sql) in QUERIES.items():
     t0, srows = time.time(), None
     try:
-        sdf = fn(spark, SF)
-        srows = sorted(tuple(norm(x) for x in r) for r in sdf.collect())
+        with cache_scope():
+            srows = sorted(tuple(norm(x) for x in r)
+                           for r in fn(spark, SF).collect())
         if sql:
             drows = sorted(tuple(norm(x) for x in r)
                            for r in con.execute(sql).fetchall())

@@ -16,3 +16,14 @@ def spark():
                   extra_conf={"spark.driver.memory": "4g"})
     yield s
     s.stop()
+
+
+@pytest.fixture(autouse=True)
+def _cache_scope():
+    """Each test runs inside one cache_scope, so the caches an operator
+    leaves for its consumer are released when the test ends. Module-
+    and session-scoped fixtures are set up before it and keep theirs."""
+    from crawlspark.session import cache_scope
+
+    with cache_scope():
+        yield

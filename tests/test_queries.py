@@ -7,6 +7,7 @@ import duckdb
 import pytest
 
 from crawlspark.queries import QUERIES
+from crawlspark.session import cache_scope
 
 SF = "/root/testdata/sf0.001"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -36,12 +37,21 @@ def _rows(df_rows, cols):
     return sorted(tuple(_norm(r[i]) for i in order) for r in df_rows)
 
 
+def _persisted(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
 @pytest.mark.parametrize("name", [k for k, v in QUERIES.items() if v[1]])
 def test_oracle_pair(name, spark, duck):
+    """The entry matches its oracle, and the scope that runs it
+    releases every cache the entry made."""
     fn, sql = QUERIES[name]
-    sdf = fn(spark, SF)
-    spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
+    before = _persisted(spark)
+    with cache_scope():
+        sdf = fn(spark, SF)
+        spark_cols = sdf.columns
+        spark_rows = [tuple(r) for r in sdf.collect()]
+    assert _persisted(spark) == before
     res = duck.execute(sql)
     duck_cols = [d[0] for d in res.description]
     duck_rows = res.fetchall()
@@ -56,9 +66,12 @@ def test_oracle_pair(name, spark, duck):
 @pytest.mark.parametrize("name", [k for k, v in QUERIES.items() if v[1] is None])
 def test_rows_only(name, spark):
     fn, _ = QUERIES[name]
-    df = fn(spark, SF)
-    assert df.count() > 0
-    assert len(df.columns) >= 2
+    before = _persisted(spark)
+    with cache_scope():
+        df = fn(spark, SF)
+        assert df.count() > 0
+        assert len(df.columns) >= 2
+    assert _persisted(spark) == before
 
 
 def test_media_features_survives_driver_canon(spark):
