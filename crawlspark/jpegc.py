@@ -1,29 +1,22 @@
 """JPEG (ITU-T T.81) codec — stdlib + numpy.
 
 Closes the multimodal dispatch seam's last NotImplementedError for
-images: `image/jpeg` payloads decode for real. Scope: baseline
-sequential (SOF0) AND progressive (SOF2, r4: full spectral selection
-+ successive approximation for DC and AC — EOB runs, buffered
-correction bits, the libjpeg scan structure), 8-bit, grayscale or
-YCbCr at any uniform sampling-factor layout — 4:4:4, 4:2:0 (the
-dominant web layout; generic interleaved-MCU decode with
-sample-replication upsampling, and the encoder can emit it via
-subsampling='420'), 4:2:2, and restart intervals in BOTH modes (r5:
-progressive too) — DRI/RSTn markers with byte re-alignment,
-DC-predictor reset and per-scan AC-state (EOB-run/correction-bit)
-flush, on both encode and decode.
-encode_jpeg_progressive exists so the progressive decode paths are
-round-trip-testable without external fixtures: its output decodes
-BIT-IDENTICALLY to the baseline encoding of the same image (same
-quantized coefficients, same IDCT) — pinned in tests across all
-subsampling layouts, odd dims, and noise channels.
-The encoder emits spec-valid
-JFIF any reader decodes: quant + Huffman tables are EMBEDDED (DQT /
-DHT), so the canonical fixed-length Huffman tables used here (DC: all
-12 symbols at 4 bits; AC: all 162 symbols at 8 bits — both satisfy
-Kraft and the no-all-ones rule) are as valid as Annex K's, and the
-decoder reads whatever tables the stream declares, so it also accepts
-standard-table baseline files.
+images: `image/jpeg` payloads decode for real. Scope: the one stream
+shape the `media_features` entry writes and reads — baseline
+sequential (SOF0), 8-bit, grayscale or YCbCr with every sampling
+factor 1x1 (4:4:4), no restart interval. Anything else that arrives
+as bytes is refused, not guessed at: other SOF types (progressive
+SOF2 among them), a component sampling byte other than 0x11 (4:2:0,
+4:2:2, ...) and a DRI segment raise NotImplementedError; a truncated
+or corrupt stream (a scan before the frame header, a missing quant or
+Huffman table, entropy data cut short) raises ValueError.
+
+The encoder emits spec-valid JFIF any reader decodes: quant + Huffman
+tables are EMBEDDED (DQT / DHT), so the canonical fixed-length Huffman
+tables used here (DC: all 12 symbols at 4 bits; AC: all 162 symbols at
+8 bits — both satisfy Kraft and the no-all-ones rule) are as valid as
+Annex K's, and the decoder reads whatever tables the stream declares,
+so it also accepts standard-table baseline 4:4:4 files.
 
 Reference parity note: the reference crawler stores scraped images as
 opaque bytes and never decodes; this codec exists for the task brief's
@@ -79,11 +72,6 @@ _AC_SYMS = [0x00, 0xF0] + [(r << 4) | s for r in range(16)
                            for s in range(1, 11)]
 _DC_SPEC = ([0, 0, 0, 12] + [0] * 12, list(range(12)))
 _AC_SPEC = ([0] * 7 + [len(_AC_SYMS)] + [0] * 8, sorted(_AC_SYMS))
-# progressive AC scans additionally need the EOBn symbols
-# ((r<<4)|0 for r=0..14; 0xF0 stays ZRL): 176 symbols still fit one
-# 8-bit canonical level (codes 0..175, all-ones unused, Kraft < 1)
-_AC_PROG_SYMS = sorted(set(_AC_SYMS) | {r << 4 for r in range(16)})
-_AC_PROG_SPEC = ([0] * 7 + [len(_AC_PROG_SYMS)] + [0] * 8, _AC_PROG_SYMS)
 
 
 def _canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
@@ -119,14 +107,6 @@ class _BitWriter:
             self.write(0x7F, 7 - ((self.n - 1) % 8) + 1)  # pad with 1s
         return bytes(self.buf)
 
-    def restart(self, n: int):
-        """Byte-align (1-padded) and emit RSTn — the marker bytes are
-        written raw: markers are never byte-stuffed."""
-        if self.n:
-            self.write(0x7F, 8 - self.n)
-        self.buf.append(0xFF)
-        self.buf.append(0xD0 + (n & 7))
-
 
 def _magnitude(v: int) -> tuple[int, int]:
     """(size, value-bits) per the spec's signed magnitude coding."""
@@ -140,9 +120,8 @@ def _seg(marker: int, body: bytes) -> bytes:
 
 
 def _encode_block_coef(wtr, qz, dc, ac, pred: int) -> int:
-    """Huffman-code one precomputed zigzag-order quantized block
-    (sequential DC-diff + AC run-length); returns the new DC
-    predictor."""
+    """Huffman-code one zigzag-order quantized block (sequential
+    DC-diff + AC run-length); returns the new DC predictor."""
     size, bits = _magnitude(int(qz[0]) - pred)
     c, ln = dc[size]
     wtr.write(c, ln)
@@ -171,20 +150,14 @@ def _encode_block_coef(wtr, qz, dc, ac, pred: int) -> int:
     return int(qz[0])
 
 
-def _plan_blocks(pixels: np.ndarray, subsampling: str):
-    """Shared front half of every encoder: color transform, subsample,
-    pad, DCT, quantize. Returns (h, w, gray, yh, yv, comps) where each
-    comp is {'coef': int64 (nby, nbx, 64) zigzag-order quantized
-    blocks (MCU-padded dims), 'tq': quant table id}."""
+def encode_jpeg(pixels: np.ndarray) -> bytes:
+    """HxW (gray) or HxWx3 (RGB) uint8 -> baseline 4:4:4 JFIF bytes:
+    color transform, edge-pad to whole 8x8 blocks, DCT, quantize, and
+    one block per component per MCU."""
     gray = pixels.ndim == 2
-    factors = {"444": (1, 1), "420": (2, 2), "422": (2, 1)}
-    if subsampling not in factors:
-        raise NotImplementedError(f"subsampling {subsampling}")
-    yh, yv = factors[subsampling] if not gray else (1, 1)
     h, w = pixels.shape[:2]
-    ph, pw = -h % (8 * yv), -w % (8 * yh)
     px = np.pad(pixels.astype(np.float64),
-                ((0, ph), (0, pw)) + (() if gray else ((0, 0),)),
+                ((0, -h % 8), (0, -w % 8)) + (() if gray else ((0, 0),)),
                 mode="edge")
     if gray:
         planes = [px]
@@ -193,62 +166,18 @@ def _plan_blocks(pixels: np.ndarray, subsampling: str):
         planes = [0.299 * r + 0.587 * g + 0.114 * b,
                   -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0,
                   0.5 * r - 0.418688 * g - 0.081312 * b + 128.0]
-        if (yh, yv) != (1, 1):
-            for ci in (1, 2):
-                p = planes[ci]
-                acc = sum(p[v::yv, hh::yh] for v in range(yv)
-                          for hh in range(yh))
-                planes[ci] = acc / (yv * yh)
-    comps = []
-    for ci, plane in enumerate(planes):
-        q = _QL if ci == 0 else _QC
-        nby, nbx = plane.shape[0] // 8, plane.shape[1] // 8
-        coef = np.zeros((nby, nbx, 64), dtype=np.int64)
-        for by in range(nby):
-            for bx in range(nbx):
-                blk = plane[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] - 128.0
-                coef[by, bx] = np.round(
-                    (_D @ blk @ _DT) / q).astype(np.int64).ravel()[_ZZ]
-        comps.append({"coef": coef, "tq": 0 if ci == 0 else 1})
-    return h, w, gray, yh, yv, comps
-
-
-def encode_jpeg(pixels: np.ndarray, subsampling: str = "444",
-                restart_interval: int = 0) -> bytes:
-    """HxW (gray) or HxWx3 (RGB) uint8 -> baseline JFIF bytes.
-
-    subsampling: '444' (one block per component per MCU), '420' (the
-    dominant web-JPEG layout: 16x16 MCUs of 4 Y blocks + 1 Cb + 1 Cr,
-    chroma 2x2 box-averaged) or '422' (16x8 MCUs, chroma averaged
-    horizontally). Ignored for grayscale.
-
-    restart_interval: emit DRI + an RSTn marker (byte-aligned, DC
-    predictors reset) every N MCUs — the error-resilience feature
-    camera/stream encoders use; 0 disables."""
-    h, w, gray, yh, yv, comps = _plan_blocks(pixels, subsampling)
+    ncomp = len(planes)
     dc = _canonical_codes(*_DC_SPEC)
     ac = _canonical_codes(*_AC_SPEC)
     wtr = _BitWriter()
-    ncomp = 1 if gray else 3
-    samp_of = [(yh, yv) if ci == 0 else (1, 1) for ci in range(ncomp)]
-    mxn = comps[0]["coef"].shape[1] // yh
-    myn = comps[0]["coef"].shape[0] // yv
-    preds = [0, 0, 0]
-    rst_n = 0
-    for mcu_i in range(myn * mxn):
-        my, mx = divmod(mcu_i, mxn)
-        for ci in range(ncomp):
-            hs, vs = samp_of[ci]
-            for v in range(vs):
-                for hh in range(hs):
-                    preds[ci] = _encode_block_coef(
-                        wtr, comps[ci]["coef"][my * vs + v, mx * hs + hh],
-                        dc, ac, preds[ci])
-        if (restart_interval and (mcu_i + 1) % restart_interval == 0
-                and mcu_i + 1 < myn * mxn):
-            wtr.restart(rst_n)
-            rst_n = (rst_n + 1) & 7
-            preds = [0, 0, 0]
+    preds = [0] * ncomp
+    for by in range(px.shape[0] // 8):
+        for bx in range(px.shape[1] // 8):
+            for ci, plane in enumerate(planes):
+                blk = plane[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] - 128.0
+                qz = np.round((_D @ blk @ _DT) / (_QL if ci == 0 else _QC)
+                              ).astype(np.int64).ravel()[_ZZ]
+                preds[ci] = _encode_block_coef(wtr, qz, dc, ac, preds[ci])
     out = [b"\xFF\xD8",
            _seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")]
     out.append(_seg(0xFFDB, b"\x00" + bytes(_QL.ravel()[_ZZ].astype(np.uint8))))
@@ -256,270 +185,19 @@ def encode_jpeg(pixels: np.ndarray, subsampling: str = "444",
         out.append(_seg(0xFFDB, b"\x01" + bytes(_QC.ravel()[_ZZ].astype(np.uint8))))
     sof = struct.pack(">BHHB", 8, h, w, ncomp)
     for ci in range(ncomp):
-        samp = (yh << 4) | yv if ci == 0 else 0x11
-        sof += bytes([ci + 1, samp, 0 if ci == 0 else 1])
+        sof += bytes([ci + 1, 0x11, 0 if ci == 0 else 1])
     out.append(_seg(0xFFC0, sof))
     for tc_th, (bits, vals) in ((0x00, _DC_SPEC), (0x10, _AC_SPEC)):
         out.append(_seg(0xFFC4, bytes([tc_th]) + bytes(bits) + bytes(vals)))
     if not gray:
         for tc_th, (bits, vals) in ((0x01, _DC_SPEC), (0x11, _AC_SPEC)):
             out.append(_seg(0xFFC4, bytes([tc_th]) + bytes(bits) + bytes(vals)))
-    if restart_interval:
-        out.append(_seg(0xFFDD, struct.pack(">H", restart_interval)))
     sos = bytes([ncomp])
     for ci in range(ncomp):
         sos += bytes([ci + 1, 0x00 if ci == 0 else 0x11])
     sos += b"\x00\x3F\x00"
     out.append(_seg(0xFFDA, sos))
     out.append(wtr.flush())
-    out.append(b"\xFF\xD9")
-    return b"".join(out)
-
-
-# -- progressive encoder ----------------------------------------------------
-def _shr(v: int, n: int) -> int:
-    """Arithmetic shift with C semantics (Python >> already floors,
-    which is what libjpeg relies on for negative DC values)."""
-    return v >> n
-
-
-def _ac_point(v: int, al: int) -> int:
-    """AC successive-approximation point transform: magnitude shift,
-    sign preserved (T.81 G.1.2.1 — truncation toward zero)."""
-    return (abs(v) >> al) * (1 if v >= 0 else -1)
-
-
-class _ProgAcState:
-    """EOB-run + buffered-correction-bit state shared across blocks of
-    one AC scan (first or refinement)."""
-
-    def __init__(self, wtr, ac):
-        self.wtr, self.ac = wtr, ac
-        self.eobrun = 0
-        self.bits: list[int] = []
-
-    def flush(self):
-        if self.eobrun > 0:
-            nbits = self.eobrun.bit_length() - 1
-            c, ln = self.ac[nbits << 4]
-            self.wtr.write(c, ln)
-            if nbits:
-                self.wtr.write(self.eobrun - (1 << nbits), nbits)
-            self.eobrun = 0
-        for b in self.bits:
-            self.wtr.write(b, 1)
-        self.bits = []
-
-
-def _enc_ac_first(st: _ProgAcState, band: np.ndarray, al: int):
-    vals = [_ac_point(int(v), al) for v in band]
-    nz = [i for i, v in enumerate(vals) if v]
-    if not nz:
-        st.eobrun += 1
-        if st.eobrun == 0x7FFF:
-            st.flush()
-        return
-    st.flush()
-    run, last = 0, nz[-1]
-    for i, v in enumerate(vals[:last + 1]):
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            c, ln = st.ac[0xF0]
-            st.wtr.write(c, ln)
-            run -= 16
-        size, bits = _magnitude(v)
-        c, ln = st.ac[(run << 4) | size]
-        st.wtr.write(c, ln)
-        st.wtr.write(bits, size)
-        run = 0
-    if last < len(vals) - 1:
-        st.eobrun += 1
-        if st.eobrun == 0x7FFF:
-            st.flush()
-
-
-def _enc_ac_refine(st: _ProgAcState, band: np.ndarray, al: int):
-    """T.81 G.1.2.3 (libjpeg encode_mcu_AC_refine): newly-nonzero
-    coefficients emit (run,1)+sign, history coefficients ride as
-    buffered correction bits after the next symbol/EOB-run."""
-    absv = [abs(int(v)) >> al for v in band]
-    eob = -1
-    for i, t in enumerate(absv):
-        if t == 1:
-            eob = i
-    run, pend = 0, []
-    for i, t in enumerate(absv):
-        if t == 0:
-            run += 1
-            continue
-        # the ZRL check precedes the history branch (libjpeg order):
-        # buffered bits must never span past 16 zeros, or the
-        # decoder's run-walk would consume them misaligned
-        while run > 15 and i <= eob:
-            st.flush()
-            c, ln = st.ac[0xF0]
-            st.wtr.write(c, ln)
-            for b in pend:
-                st.wtr.write(b, 1)
-            pend = []
-            run -= 16
-        if t > 1:
-            pend.append(t & 1)
-            continue
-        # newly nonzero at this precision
-        st.flush()
-        c, ln = st.ac[(run << 4) | 1]
-        st.wtr.write(c, ln)
-        st.wtr.write(1 if int(band[i]) >= 0 else 0, 1)
-        for b in pend:
-            st.wtr.write(b, 1)
-        pend = []
-        run = 0
-    if run > 0 or pend:
-        st.eobrun += 1
-        st.bits.extend(pend)
-        if st.eobrun == 0x7FFF:
-            st.flush()
-
-
-def encode_jpeg_progressive(pixels: np.ndarray, subsampling: str = "444",
-                            restart_interval: int = 0) -> bytes:
-    """Progressive (SOF2) JFIF with spectral selection AND successive
-    approximation — the libjpeg-style scan script, so every decoder
-    path (DC first/refine, AC first/refine, EOB runs, buffered
-    correction bits) is exercised by round-trip tests:
-
-      1. DC, interleaved, Al=1        4. AC refine 1-5,  Ah=1->Al=0
-      2. AC first 1-5,  Al=1 (/comp)  5. AC refine 6-63, Ah=1->Al=0
-      3. AC first 6-63, Al=1 (/comp)  6. DC refine, interleaved
-
-    restart_interval (r5, closing the progressive+restarts gate): emit
-    DRI + RSTn every N restart units in EVERY scan — units are MCUs in
-    the interleaved DC scans and blocks in the per-component AC scans
-    (T.81 E.2.4). At each restart the AC state flushes first (EOB runs
-    and buffered correction bits may not span a restart), the writer
-    byte-aligns, DC predictors reset; the RSTn index restarts at 0 per
-    scan."""
-    h, w, gray, yh, yv, comps = _plan_blocks(pixels, subsampling)
-    dc = _canonical_codes(*_DC_SPEC)
-    ac = _canonical_codes(*_AC_PROG_SPEC)
-    ncomp = 1 if gray else 3
-
-    out = [b"\xFF\xD8",
-           _seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")]
-    out.append(_seg(0xFFDB, b"\x00" + bytes(_QL.ravel()[_ZZ].astype(np.uint8))))
-    if not gray:
-        out.append(_seg(0xFFDB, b"\x01" + bytes(_QC.ravel()[_ZZ].astype(np.uint8))))
-    sof = struct.pack(">BHHB", 8, h, w, ncomp)
-    for ci in range(ncomp):
-        samp = (yh << 4) | yv if ci == 0 else 0x11
-        sof += bytes([ci + 1, samp, 0 if ci == 0 else 1])
-    out.append(_seg(0xFFC2, sof))
-    for tc_th, (bits, vals) in ((0x00, _DC_SPEC), (0x10, _AC_PROG_SPEC),
-                                (0x01, _DC_SPEC), (0x11, _AC_PROG_SPEC)):
-        out.append(_seg(0xFFC4, bytes([tc_th]) + bytes(bits) + bytes(vals)))
-    if restart_interval:
-        out.append(_seg(0xFFDD, struct.pack(">H", restart_interval)))
-
-    def scan(header_comps, body_bits, ss, se, ah, al):
-        sos = bytes([len(header_comps)])
-        for cid, td, ta in header_comps:
-            sos += bytes([cid, (td << 4) | ta])
-        sos += bytes([ss, se, (ah << 4) | al])
-        out.append(_seg(0xFFDA, sos))
-        out.append(body_bits)
-
-    samp_of = [(yh, yv) if ci == 0 else (1, 1) for ci in range(ncomp)]
-    mx_n = comps[0]["coef"].shape[1] // yh
-    my_n = comps[0]["coef"].shape[0] // yv
-
-    def maybe_restart(wtr, rst, unit_i, total, preds=None, st=None):
-        """Close a restart interval mid-scan: flush AC state, byte-
-        align + RSTn, reset DC predictors; returns the next RSTn
-        index. No-op after the final unit (no trailing RSTn)."""
-        if (not restart_interval or (unit_i + 1) % restart_interval
-                or unit_i + 1 >= total):
-            return rst
-        if st is not None:
-            st.flush()
-        wtr.restart(rst)
-        if preds is not None:
-            preds[:] = [0] * len(preds)
-        return (rst + 1) & 7
-
-    # 1. DC first (interleaved when ncomp > 1), Al=1
-    wtr = _BitWriter()
-    preds = [0] * ncomp
-    rst = 0
-    for mcu_i in range(my_n * mx_n):
-        my, mx = divmod(mcu_i, mx_n)
-        for ci in range(ncomp):
-            hs, vs = samp_of[ci]
-            for v in range(vs):
-                for hh in range(hs):
-                    c0 = _shr(int(comps[ci]["coef"][my * vs + v,
-                                                    mx * hs + hh, 0]), 1)
-                    size, bits = _magnitude(c0 - preds[ci])
-                    preds[ci] = c0
-                    cde, ln = dc[size]
-                    wtr.write(cde, ln)
-                    if size:
-                        wtr.write(bits, size)
-        rst = maybe_restart(wtr, rst, mcu_i, my_n * mx_n, preds=preds)
-    scan([(ci + 1, 0, 0) for ci in range(ncomp)], wtr.flush(), 0, 0, 0, 1)
-
-    # non-interleaved grids exclude MCU padding blocks (T.81 A.2.2)
-    def comp_grid(ci):
-        hs, vs = samp_of[ci]
-        hmax, vmax = yh, yv
-        cw = -(-w * hs // hmax)
-        ch = -(-h * vs // vmax)
-        return -(-ch // 8), -(-cw // 8)
-
-    # 2+3. AC first scans per comp, split bands, Al=1
-    for ss, se in ((1, 5), (6, 63)):
-        for ci in range(ncomp):
-            wtr = _BitWriter()
-            st = _ProgAcState(wtr, ac)
-            hb, wb = comp_grid(ci)
-            rst = 0
-            for bi in range(hb * wb):
-                by, bx = divmod(bi, wb)
-                _enc_ac_first(st, comps[ci]["coef"][by, bx, ss:se + 1], 1)
-                rst = maybe_restart(wtr, rst, bi, hb * wb, st=st)
-            st.flush()
-            scan([(ci + 1, 0, 0)], wtr.flush(), ss, se, 0, 1)
-
-    # 4+5. AC refinement scans per comp, Ah=1 -> Al=0
-    for ss, se in ((1, 5), (6, 63)):
-        for ci in range(ncomp):
-            wtr = _BitWriter()
-            st = _ProgAcState(wtr, ac)
-            hb, wb = comp_grid(ci)
-            rst = 0
-            for bi in range(hb * wb):
-                by, bx = divmod(bi, wb)
-                _enc_ac_refine(st, comps[ci]["coef"][by, bx, ss:se + 1], 0)
-                rst = maybe_restart(wtr, rst, bi, hb * wb, st=st)
-            st.flush()
-            scan([(ci + 1, 0, 0)], wtr.flush(), ss, se, 1, 0)
-
-    # 6. DC refinement (raw bits, no Huffman)
-    wtr = _BitWriter()
-    rst = 0
-    for mcu_i in range(my_n * mx_n):
-        my, mx = divmod(mcu_i, mx_n)
-        for ci in range(ncomp):
-            hs, vs = samp_of[ci]
-            for v in range(vs):
-                for hh in range(hs):
-                    wtr.write(int(comps[ci]["coef"][my * vs + v,
-                                                    mx * hs + hh, 0]) & 1, 1)
-        rst = maybe_restart(wtr, rst, mcu_i, my_n * mx_n)
-    scan([(ci + 1, 0, 0) for ci in range(ncomp)], wtr.flush(), 0, 0, 1, 0)
-
     out.append(b"\xFF\xD9")
     return b"".join(out)
 
@@ -542,8 +220,7 @@ class _BitReader:
                     self.pos += 1
                 else:
                     # a marker mid-symbol = the stream is truncated or
-                    # the decoder lost alignment (e.g. an RSTn where
-                    # none was expected)
+                    # the decoder lost alignment
                     raise ValueError(
                         f"unexpected marker 0xFF{nxt:02X} in entropy data")
             self.acc = b
@@ -556,16 +233,6 @@ class _BitReader:
         for _ in range(k):
             v = (v << 1) | self.bit()
         return v
-
-    def restart(self):
-        """Consume an RSTn marker: drop pad bits, verify, re-align."""
-        self.n = 0
-        while self.d[self.pos] != 0xFF:
-            self.pos += 1
-        m = self.d[self.pos + 1]
-        if not (0xD0 <= m <= 0xD7):
-            raise ValueError(f"expected RSTn, got 0xFF{m:02X}")
-        self.pos += 2
 
 
 def _huff_decoder(bits: list[int], vals: list[int]):
@@ -597,179 +264,12 @@ def _extend(bits: int, size: int) -> int:
 
 
 def decode_jpeg(data: bytes) -> np.ndarray:
-    """Baseline (SOF0) or progressive (SOF2) JFIF -> HxW (gray) or
-    HxWx3 (RGB) uint8."""
+    """Baseline (SOF0) 4:4:4 or grayscale JFIF -> HxW (gray) or HxWx3
+    (RGB) uint8."""
     try:
         return _decode_jpeg(data)
     except (IndexError, struct.error) as e:
         raise ValueError(f"truncated/corrupt JPEG: {e}") from e
-
-
-def _next_marker(data: bytes, start: int) -> int:
-    """Index of the next real marker (0xFF followed by non-0x00,
-    skipping fill bytes) at or after start."""
-    i = start
-    while i < len(data) - 1:
-        if data[i] == 0xFF and data[i + 1] != 0x00:
-            while data[i + 1] == 0xFF:
-                i += 1
-            return i
-        i += 1
-    return len(data)
-
-
-def _decode_prog_scan(data: bytes, pos: int, body: bytes, comps, huff,
-                      store, h: int, w: int, restart_int: int = 0) -> int:
-    """Decode ONE progressive scan into the coefficient store; returns
-    the position of the next marker. Implements T.81 G.2 (libjpeg
-    jdphuff structure): DC first/refine (interleaved or single), AC
-    first/refine with EOB runs and buffered correction bits.
-
-    restart_int (r5, closing the last progressive gate): every
-    restart_int restart units — MCUs in an interleaved DC scan, blocks
-    in a single-component scan (T.81 E.2.4 restart-interval
-    definition) — an RSTn marker terminates the entropy segment:
-    byte-align, verify the marker, reset DC predictors AND the EOB run
-    (an encoder must end EOB runs at a restart; reset is defensive)."""
-    ns = body[0]
-    scomp = []  # (comp index, td, ta) in scan order
-    for i in range(ns):
-        cid = body[1 + 2 * i]
-        td, ta = body[2 + 2 * i] >> 4, body[2 + 2 * i] & 0xF
-        ci = next(j for j, c in enumerate(comps) if c["id"] == cid)
-        scomp.append((ci, td, ta))
-    ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
-    ah, al = body[3 + 2 * ns] >> 4, body[3 + 2 * ns] & 0xF
-    r = _BitReader(data[pos:])
-    hmax = max(c["hs"] for c in comps)
-    vmax = max(c["vs"] for c in comps)
-
-    def at_restart(unit_i: int, total: int) -> bool:
-        """True when unit_i+1 closes a restart interval with units
-        still to come (the last interval ends at the scan's own end —
-        no trailing RSTn)."""
-        return (restart_int and (unit_i + 1) % restart_int == 0
-                and unit_i + 1 < total)
-
-    def grid(ci):
-        """Non-interleaved block dims (no MCU padding — T.81 A.2.2)."""
-        c = comps[ci]
-        return (-(-(-(-h * c["vs"] // vmax)) // 8),
-                -(-(-(-w * c["hs"] // hmax)) // 8))
-
-    if ss == 0:
-        # DC scan. Interleaved iterates MCUs (covers padding blocks);
-        # a single-component scan iterates the component's own grid.
-        preds = {ci: 0 for ci, _, _ in scomp}
-
-        def dc_one(ci, td, by, bx):
-            if ah == 0:
-                size = _read_symbol(r, huff[td])
-                diff = _extend(r.bits(size), size) if size else 0
-                preds[ci] += diff
-                store[ci][by, bx, 0] = preds[ci] << al
-            else:
-                if r.bit():
-                    store[ci][by, bx, 0] |= 1 << al
-
-        if ns > 1:
-            mxn = -(-w // (8 * hmax))
-            myn = -(-h // (8 * vmax))
-            for mcu_i in range(myn * mxn):
-                my, mx = divmod(mcu_i, mxn)
-                for ci, td, _ in scomp:
-                    c = comps[ci]
-                    for v in range(c["vs"]):
-                        for hh in range(c["hs"]):
-                            dc_one(ci, td, my * c["vs"] + v,
-                                   mx * c["hs"] + hh)
-                if at_restart(mcu_i, myn * mxn):
-                    r.restart()
-                    preds = {k: 0 for k in preds}
-        else:
-            ci, td, _ = scomp[0]
-            hb, wb = grid(ci)
-            for bi in range(hb * wb):
-                dc_one(ci, td, *divmod(bi, wb))
-                if at_restart(bi, hb * wb):
-                    r.restart()
-                    preds = {k: 0 for k in preds}
-    else:
-        # AC scan: always single-component
-        ci, _, ta = scomp[0]
-        act = huff[0x10 | ta]
-        hb, wb = grid(ci)
-        eobrun = 0
-        p1, m1 = 1 << al, -(1 << al)
-        for bi in range(hb * wb):
-            # loop-TOP restart check (the body's EOB-run skip uses
-            # `continue`, which would jump an end-of-iteration check)
-            if restart_int and bi and bi % restart_int == 0:
-                r.restart()
-                eobrun = 0
-            by, bx = divmod(bi, wb)
-            coef = store[ci][by, bx]
-            if ah == 0:
-                if eobrun > 0:
-                    eobrun -= 1
-                    continue
-                k = ss
-                while k <= se:
-                    rs = _read_symbol(r, act)
-                    run, size = rs >> 4, rs & 0xF
-                    if size == 0:
-                        if run != 15:
-                            eobrun = (1 << run) - 1
-                            if run:
-                                eobrun += r.bits(run)
-                            break
-                        k += 16
-                        continue
-                    k += run
-                    coef[k] = _extend(r.bits(size), size) << al
-                    k += 1
-            else:
-                # AC refinement (G.2, libjpeg decode_mcu_AC_refine)
-                def correct(k):
-                    if r.bit() and (coef[k] & p1) == 0:
-                        coef[k] += p1 if coef[k] >= 0 else m1
-
-                k = ss
-                if eobrun == 0:
-                    while k <= se:
-                        rs = _read_symbol(r, act)
-                        run, size = rs >> 4, rs & 0xF
-                        newval = 0
-                        if size == 0:
-                            if run != 15:
-                                eobrun = (1 << run)
-                                if run:
-                                    eobrun += r.bits(run)
-                                break
-                            # run == 15: ZRL, no new coefficient
-                        else:
-                            newval = p1 if r.bit() else m1
-                        while k <= se:
-                            if coef[k] != 0:
-                                correct(k)
-                            else:
-                                if run == 0:
-                                    if newval:
-                                        coef[k] = newval
-                                    k += 1
-                                    break
-                                run -= 1
-                            k += 1
-                        # outer while re-reads a symbol at new k
-                if eobrun > 0:
-                    # remainder of this block (and whole subsequent
-                    # EOB-run blocks) still carries correction bits
-                    while k <= se:
-                        if coef[k] != 0:
-                            correct(k)
-                        k += 1
-                    eobrun -= 1
-    return _next_marker(data, pos + max(r.pos - 1, 0))
 
 
 def _decode_jpeg(data: bytes) -> np.ndarray:
@@ -780,9 +280,6 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
     huff: dict[int, dict] = {}
     comps = None
     h = w = 0
-    progressive = False
-    store = None  # progressive: per-comp (nby, nbx, 64) zigzag coefs
-    restart_int = 0
     while pos < len(data):
         if data[pos] != 0xFF:
             raise ValueError("bad marker")
@@ -798,9 +295,9 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
                 pq, tq = body[p] >> 4, body[p] & 0xF
                 if pq:
                     raise NotImplementedError("16-bit quant tables")
-                tbl = np.zeros(64, dtype=np.int64)
-                tbl[_ZZ] = np.frombuffer(body[p + 1:p + 65], dtype=np.uint8)
-                qt[tq] = tbl.reshape(8, 8)
+                # kept in zigzag order, the order the DQT body stores
+                qt[tq] = np.frombuffer(body[p + 1:p + 65],
+                                       dtype=np.uint8).astype(np.int64)
                 p += 65
         elif marker == 0xC4:
             p = 0
@@ -811,129 +308,74 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
                 vals = list(body[p + 17:p + 17 + nv])
                 huff[tc_th] = _huff_decoder(bits, vals)
                 p += 17 + nv
-        elif marker in (0xC0, 0xC2):
-            prec, h, w, nc = struct.unpack(">BHHB", body[:6])
+        elif marker == 0xC0:
+            _, h, w, nc = struct.unpack(">BHHB", body[:6])
             comps = []
             for i in range(nc):
                 cid, samp, tq = body[6 + 3 * i:9 + 3 * i]
-                comps.append({"id": cid, "tq": tq,
-                              "hs": samp >> 4, "vs": samp & 0xF})
-            # the generic MCU/upsample path assumes every factor
-            # divides the max (true of 4:4:4/4:2:0/4:2:2/4:1:1 and
-            # every layout JFIF writers emit); gate the exotic
-            # non-dividing layouts (e.g. Y=3x1) explicitly rather than
-            # crashing later with an unrelated shape error
-            hmax = max(c["hs"] for c in comps)
-            vmax = max(c["vs"] for c in comps)
-            for c in comps:
-                if (c["hs"] <= 0 or c["vs"] <= 0 or hmax % c["hs"]
-                        or vmax % c["vs"]):
+                if samp != 0x11:
                     raise NotImplementedError(
-                        f"non-dividing sampling factors "
-                        f"{c['hs']}x{c['vs']} (max {hmax}x{vmax})")
-            progressive = marker == 0xC2
-        elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7,
+                        f"sampling factors {samp >> 4}x{samp & 0xF} "
+                        "(only 4:4:4 / grayscale)")
+                comps.append((cid, tq))
+        elif marker in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7,
                         0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
             raise NotImplementedError(
-                "only baseline (SOF0) / progressive (SOF2)")
+                f"SOF 0xFF{marker:02X}: only baseline (SOF0)")
         elif marker == 0xDD:
-            (restart_int,) = struct.unpack(">H", body[:2])
+            raise NotImplementedError("restart intervals (DRI)")
         elif marker == 0xDA:
-            if progressive:
-                if store is None:
-                    hmax = max(c["hs"] for c in comps)
-                    vmax = max(c["vs"] for c in comps)
-                    mxn = -(-w // (8 * hmax))
-                    myn = -(-h // (8 * vmax))
-                    store = [np.zeros((myn * c["vs"], mxn * c["hs"], 64),
-                                      dtype=np.int64) for c in comps]
-                pos = _decode_prog_scan(data, pos, body, comps, huff,
-                                        store, h, w, restart_int)
-                continue
-            ns = body[0]
-            scan = {body[1 + 2 * i]: (body[2 + 2 * i] >> 4, body[2 + 2 * i] & 0xF)
-                    for i in range(ns)}
-            r = _BitReader(data[pos:])
-            # generic interleaved sampling: an MCU spans 8*hmax x 8*vmax
-            # pixels and carries hs x vs blocks per component — covers
-            # 4:4:4 (1,1,1), 4:2:0 (Y=2x2), 4:2:2 (Y=2x1) uniformly
-            hmax = max(c["hs"] for c in comps)
-            vmax = max(c["vs"] for c in comps)
-            mx_n = -(-w // (8 * hmax))
-            my_n = -(-h // (8 * vmax))
-            planes = [np.zeros((my_n * 8 * c["vs"], mx_n * 8 * c["hs"]))
-                      for c in comps]
-            preds = [0] * len(comps)
-            mcu_i = 0
-            for my in range(my_n):
-                for mx in range(mx_n):
-                    if (restart_int and mcu_i
-                            and mcu_i % restart_int == 0):
-                        r.restart()
-                        preds = [0] * len(comps)
-                    mcu_i += 1
-                    for ci, comp in enumerate(comps):
-                        td, ta = scan[comp["id"]]
-                        dct, act = huff[td], huff[0x10 | ta]
-                        q = qt[comp["tq"]]
-                        for v in range(comp["vs"]):
-                            for hh in range(comp["hs"]):
-                                qz = np.zeros(64, dtype=np.int64)
-                                size = _read_symbol(r, dct)
-                                diff = (_extend(r.bits(size), size)
-                                        if size else 0)
-                                preds[ci] += diff
-                                qz[0] = preds[ci]
-                                k = 1
-                                while k < 64:
-                                    rs = _read_symbol(r, act)
-                                    run, size = rs >> 4, rs & 0xF
-                                    if rs == 0x00:
-                                        break
-                                    if rs == 0xF0:
-                                        k += 16
-                                        continue
-                                    k += run
-                                    qz[k] = _extend(r.bits(size), size)
-                                    k += 1
-                                coef = np.zeros(64)
-                                coef[_ZZ] = qz * q.ravel()[_ZZ]
-                                blk = _DT @ coef.reshape(8, 8) @ _D + 128.0
-                                y0 = (my * comp["vs"] + v) * 8
-                                x0 = (mx * comp["hs"] + hh) * 8
-                                planes[ci][y0:y0 + 8, x0:x0 + 8] = blk
-            return _finish_planes(planes, comps, hmax, vmax, h, w)
-    if progressive and store is not None:
-        # all scans consumed: dequantize + IDCT the coefficient store
-        planes = []
-        for ci, comp in enumerate(comps):
-            nby, nbx, _ = store[ci].shape
-            q = qt[comp["tq"]].ravel()[_ZZ]
-            plane = np.zeros((nby * 8, nbx * 8))
-            for by in range(nby):
-                for bx in range(nbx):
-                    coef = np.zeros(64)
-                    coef[_ZZ] = store[ci][by, bx] * q
-                    plane[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = \
-                        _DT @ coef.reshape(8, 8) @ _D + 128.0
-            planes.append(plane)
-        hmax = max(c["hs"] for c in comps)
-        vmax = max(c["vs"] for c in comps)
-        return _finish_planes(planes, comps, hmax, vmax, h, w)
+            return _decode_scan(data[pos:], body, comps, qt, huff, h, w)
     raise ValueError("no scan found")
 
 
-def _finish_planes(planes, comps, hmax, vmax, h, w) -> np.ndarray:
-    """Upsample subsampled components (sample replication — the spec's
-    suggested simple filter), crop, and color-convert."""
-    full = []
-    for ci, comp in enumerate(comps):
-        p = planes[ci]
-        if comp["vs"] != vmax or comp["hs"] != hmax:
-            p = np.repeat(np.repeat(p, vmax // comp["vs"], axis=0),
-                          hmax // comp["hs"], axis=1)
-        full.append(p)
-    planes = full
+def _decode_scan(entropy: bytes, body: bytes, comps, qt, huff,
+                 h: int, w: int) -> np.ndarray:
+    """Decode the one interleaved baseline scan (one block per
+    component per MCU), crop to h x w and color-convert."""
+    if comps is None:
+        raise ValueError("corrupt JPEG: scan before frame header")
+    ns = body[0]
+    scan = {body[1 + 2 * i]: (body[2 + 2 * i] >> 4, body[2 + 2 * i] & 0xF)
+            for i in range(ns)}
+    tables = []
+    for cid, tq in comps:
+        if cid not in scan:
+            raise ValueError(
+                f"corrupt JPEG: component {cid} missing from the scan")
+        td, ta = scan[cid]
+        if td not in huff or 0x10 | ta not in huff:
+            raise ValueError("corrupt JPEG: missing Huffman table")
+        if tq not in qt:
+            raise ValueError("corrupt JPEG: missing quantization table")
+        tables.append((huff[td], huff[0x10 | ta], qt[tq]))
+    r = _BitReader(entropy)
+    mx_n, my_n = -(-w // 8), -(-h // 8)
+    planes = [np.zeros((my_n * 8, mx_n * 8)) for _ in comps]
+    preds = [0] * len(comps)
+    for my in range(my_n):
+        for mx in range(mx_n):
+            for ci, (dct, act, q) in enumerate(tables):
+                qz = np.zeros(64, dtype=np.int64)
+                size = _read_symbol(r, dct)
+                preds[ci] += _extend(r.bits(size), size) if size else 0
+                qz[0] = preds[ci]
+                k = 1
+                while k < 64:
+                    rs = _read_symbol(r, act)
+                    if rs == 0x00:
+                        break
+                    if rs == 0xF0:
+                        k += 16
+                        continue
+                    run, size = rs >> 4, rs & 0xF
+                    k += run
+                    qz[k] = _extend(r.bits(size), size)
+                    k += 1
+                coef = np.zeros(64)
+                coef[_ZZ] = qz * q
+                planes[ci][my * 8:my * 8 + 8, mx * 8:mx * 8 + 8] = (
+                    _DT @ coef.reshape(8, 8) @ _D + 128.0)
     if len(comps) == 1:
         return np.clip(planes[0][:h, :w].round(), 0, 255).astype(np.uint8)
     y, cb, cr = (p[:h, :w] for p in planes)

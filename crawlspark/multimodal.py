@@ -19,10 +19,9 @@ self-contained stdlib+numpy implementations of real formats:
   decoder would keep identical).
 
 - **JPEG (baseline sequential)** — real encoder+decoder in jpegc.py
-  (DCT, canonical Huffman, spec-valid JFIF; grayscale, 4:4:4, and
-  r4: 4:2:0 / 4:2:2 chroma subsampling via the generic
-  interleaved-MCU path, and PROGRESSIVE (SOF2) decode with full
-  spectral selection + successive approximation).
+  (DCT, canonical Huffman, spec-valid JFIF; grayscale and 4:4:4).
+  Progressive, chroma-subsampled and restart-interval streams raise
+  NotImplementedError in the decoder.
 
 Anything else (mp3, ...) raises
 NotImplementedError at the same seam — swapping PIL/torchaudio/pyav in is a per-mime dispatch entry,
@@ -243,8 +242,13 @@ def audio_feature(samples: np.ndarray, rate: int,
     return [round(f, 6) for f in feat]
 
 
+# a video contributes every FRAME_STRIDE-th frame to its feature
+FRAME_STRIDE = 10
+
+
 def decode_and_featurize(payload: bytes, kind: str, mime: str,
-                         frame_stride: int = 10) -> tuple[list[float], int]:
+                         frame_stride: int = FRAME_STRIDE
+                         ) -> tuple[list[float], int]:
     """The per-item decode seam: real codecs for png/ppm/wav/CSV1;
     exotic mimes raise (swap PIL/torchaudio/pyav per mime here)."""
     if kind == "image":
@@ -269,7 +273,7 @@ def decode_and_featurize(payload: bytes, kind: str, mime: str,
     raise NotImplementedError(f"no codec for {kind}/{mime} in this sandbox")
 
 
-def extract_features(media: DataFrame, frame_stride: int = 10) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Decode + resize + featurize (+ video frame-sampling) via
     mapInPandas: Arrow batches in, one FEATURE_DIM row per item out;
     payloads never survive past this stage."""
@@ -279,7 +283,7 @@ def extract_features(media: DataFrame, frame_stride: int = 10) -> DataFrame:
             for payload, kind, mime in zip(pdf["payload"], pdf["kind"],
                                            pdf["mime"]):
                 raw = bytes(payload) if payload is not None else b""
-                f, n = decode_and_featurize(raw, kind, mime, frame_stride)
+                f, n = decode_and_featurize(raw, kind, mime, FRAME_STRIDE)
                 feats.append(f)
                 frames.append(n)
             yield pd.DataFrame({

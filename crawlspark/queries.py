@@ -894,12 +894,34 @@ ORDER BY id_a, id_b
 """
 
 
+def _lsh_pairs(docs):
+    """The catalog's near-dup pair list: MinHash+LSH with 8 perm, 4
+    bands, jaccard >= 0.5 (the banding SQL_DOC_LSH_PAIRS replays)."""
+    return X.minhash_lsh_pairs(docs, num_perm=8, bands=4,
+                               jaccard_threshold=0.5)
+
+
+def _dup_labels(docs):
+    """(key, cluster) near-dup components over `_lsh_pairs`."""
+    pairs = _lsh_pairs(docs).select(F.col("id_a").alias("key_a"),
+                                    F.col("id_b").alias("key_b"))
+    return D.dup_clusters(docs.select(F.col("doc_id").alias("key")), pairs)
+
+
+def _keep_best(docs):
+    """(key, cluster, quality, kept): the best-quality doc per
+    `_dup_labels` component is kept."""
+    labels = _dup_labels(docs)
+    scores = docs.select(F.col("doc_id").alias("key"),
+                         X.quality_score(F.col("text")).alias("quality"))
+    return D.keep_best_per_cluster(labels, scores)
+
+
 def q_doc_lsh_pairs(spark, sf):
     """MinHash+LSH near-dup pairs (8 perm, 4 bands, jaccard >= 0.5),
     oracle replicates the identical banding scheme in SQL."""
     docs = _t(spark, sf, "documents")
-    return (X.minhash_lsh_pairs(docs, num_perm=8, bands=4,
-                                jaccard_threshold=0.5)
+    return (_lsh_pairs(docs)
             .select(F.col("id_a").cast("long").alias("id_a"),
                     F.col("id_b").cast("long").alias("id_b"), "jaccard")
             .orderBy("id_a", "id_b"))
@@ -954,13 +976,7 @@ def q_doc_dup_clusters(spark, sf):
     every doc gets the minimum doc_id reachable through near-dup
     edges. The oracle replays the same components with a recursive
     CTE over the identical SQL-banded pair list."""
-    docs = _t(spark, sf, "documents")
-    pairs = (X.minhash_lsh_pairs(docs, num_perm=8, bands=4,
-                                 jaccard_threshold=0.5)
-             .select(F.col("id_a").alias("key_a"),
-                     F.col("id_b").alias("key_b")))
-    nodes = docs.select(F.col("doc_id").alias("key"))
-    return (D.dup_clusters(nodes, pairs)
+    return (_dup_labels(_t(spark, sf, "documents"))
             .select(F.col("key").cast("long").alias("doc_id"),
                     F.col("cluster").cast("long").alias("cluster"))
             .orderBy("doc_id"))
@@ -2393,16 +2409,7 @@ def q_dedup_keep_best(spark, sf):
     max_by (partial-agg'd, mega-cluster-safe), never a per-cluster
     window sort. The oracle replays components with the recursive CTE
     and the argmax with a row_number window."""
-    docs = _t(spark, sf, "documents")
-    pairs = (X.minhash_lsh_pairs(docs, num_perm=8, bands=4,
-                                 jaccard_threshold=0.5)
-             .select(F.col("id_a").alias("key_a"),
-                     F.col("id_b").alias("key_b")))
-    nodes = docs.select(F.col("doc_id").alias("key"))
-    labels = D.dup_clusters(nodes, pairs)
-    scores = docs.select(F.col("doc_id").alias("key"),
-                         X.quality_score(F.col("text")).alias("quality"))
-    return (D.keep_best_per_cluster(labels, scores)
+    return (_keep_best(_t(spark, sf, "documents"))
             .select(F.col("key").cast("long").alias("doc_id"),
                     F.col("cluster").cast("long").alias("cluster"),
                     "quality", "kept")
@@ -2617,16 +2624,8 @@ def q_dedup_report(spark, sf):
     owner reads to see which source was boilerplate. One join + one
     grouped aggregate over the retention verdicts."""
     docs = _t(spark, sf, "documents")
-    pairs = (X.minhash_lsh_pairs(docs, num_perm=8, bands=4,
-                                 jaccard_threshold=0.5)
-             .select(F.col("id_a").alias("key_a"),
-                     F.col("id_b").alias("key_b")))
-    nodes = docs.select(F.col("doc_id").alias("key"))
-    labels = D.dup_clusters(nodes, pairs)
-    scores = docs.select(F.col("doc_id").alias("key"),
-                         X.quality_score(F.col("text")).alias("quality"))
-    kept = D.keep_best_per_cluster(labels, scores)
-    return (X.dedup_report(kept, docs.withColumnRenamed("doc_id", "key"),
+    return (X.dedup_report(_keep_best(docs),
+                           docs.withColumnRenamed("doc_id", "key"),
                            key_col="key")
             .orderBy("source"))
 

@@ -28,8 +28,6 @@ ROOT_DEFS = [("driver", "WaveDriver"), ("queries", "QUERIES")]
 # qualified name -> why it stays although only tests reach it
 REFERENCE_ONLY = {
     "__init__.__version__": "package version string",
-    "jpegc.encode_jpeg_progressive":
-        "fixture for the progressive decoder, which reads media from outside",
     "politeness.parse_robots_txt": "parses robots.txt text from outside",
     "dedup.simhash64_py": "reference twin of simhash64_expr",
     "dedup.simhash_near_dups": "reference for simhash_dup_classes",

@@ -1,12 +1,13 @@
 """Static guard: every setting on the crawl path has a caller.
 
 A defaulted parameter is a setting. On the functions a wave and the
-``crawl`` command run (``SCOPE``), each one must be passed, by keyword
-or by position, at some call site outside ``tests/``: in the package or
-an entry script (``bench.py``, ``bench_extra.py``, ``oracle_sweep.py``,
-``__spark_entry__.py``, ``perfbench/*.py``). A setting that only its
-default ever reaches is a constant, and one that only tests set keeps a
-branch alive for them alone. Call sites are matched by function name (a
+``crawl`` command run, and on the media codec path the
+``media_features`` entry runs (``SCOPE``), each one must be passed, by
+keyword or by position, at some call site outside ``tests/``: in the
+package or an entry script (``bench.py``, ``bench_extra.py``,
+``oracle_sweep.py``, ``__spark_entry__.py``, ``perfbench/*.py``). A
+setting that only its default ever reaches is a constant, and one that
+only tests set keeps a branch alive for them alone. Call sites are matched by function name (a
 class call counts for its ``__init__``; a method called on an object
 skips ``self``). A setting without such a caller fails this test unless
 ``ALLOWED`` lists it with its reason.
@@ -22,7 +23,8 @@ SOURCES = (sorted(PKG.glob("*.py"))
                                  "oracle_sweep.py", "__spark_entry__.py")]
            + sorted((ROOT / "perfbench").glob("*.py")))
 
-# module -> crawl-path functions; a class stands for all its methods
+# module -> crawl-path and media-path functions; a class stands for all
+# its methods
 SCOPE = {
     "driver": ["WaveDriver"],
     "tables": ["SnapshotStore"],
@@ -32,6 +34,8 @@ SCOPE = {
               "bloom_might_contain", "classify_with_bloom"],
     "extract": ["extract_pages"],
     "frontier": ["priority_expr"],
+    "jpegc": ["encode_jpeg", "decode_jpeg"],
+    "multimodal": ["decode_and_featurize", "extract_features"],
 }
 
 # module.function.parameter -> why it stays although no caller sets it
