@@ -451,8 +451,7 @@ def _banded_pairs(base: DataFrame, bands: int, max_hamming: int) -> DataFrame:
                  .select("key_a", "key_b", "hamming"))
 
 
-def dup_clusters(nodes: DataFrame, pairs: DataFrame,
-                 max_iter: int = 25) -> DataFrame:
+def dup_clusters(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     """Connected components over near-dup pairs — the step that turns
     pairwise LSH/simhash hits into KEEP-ONE-PER-CLUSTER decisions (a
     reference dedup pass keeps the minimum key of each component;
@@ -500,7 +499,7 @@ def dup_clusters(nodes: DataFrame, pairs: DataFrame,
                                     F.coalesce(F.col("nlbl"), F.col("key")))
                             .alias("lbl")))
     persisted = labels  # unpersist must hit the EXACT persisted plan
-    for _ in range(max_iter):
+    for _ in range(25):  # round cap; near-dup components need 2-4
         nbr = (edges.join(labels, edges["b"] == labels["key"])
                .groupBy("a").agg(F.min("lbl").alias("nlbl")))
         staged = cached(labels.join(nbr, labels["key"] == nbr["a"], "left")
@@ -528,8 +527,7 @@ def dup_clusters(nodes: DataFrame, pairs: DataFrame,
 
 
 def simhash_dup_classes(df: DataFrame, text_col: str = "text",
-                        key_col: str = "url", bands: int = 4,
-                        max_hamming: int = 3
+                        key_col: str = "url"
                         ) -> tuple[DataFrame, DataFrame]:
     """D5 under EXTREME duplication — the hot-bucket form.
 
@@ -547,7 +545,8 @@ def simhash_dup_classes(df: DataFrame, text_col: str = "text",
       classes: (key, rep, group_size) — every doc assigned to its
         exact-dup class (rep = min key of the class);
       rep_pairs: (key_a, key_b, hamming) — near-dup pairs BETWEEN
-        class representatives, verified on the full 64-bit hash.
+        class representatives (4 bands, hamming <= 3), verified on the
+        full 64-bit hash.
     """
     base = simhash64_frame(df, text_col, key_col)
     w = Window.partitionBy("sh")
@@ -555,7 +554,7 @@ def simhash_dup_classes(df: DataFrame, text_col: str = "text",
                .withColumn("group_size", F.count("*").over(w)))
     reps = (classes.filter(F.col("key") == F.col("rep"))
             .select(F.col("key").alias("k"), "sh"))
-    rep_pairs = _banded_pairs(reps, bands, max_hamming)
+    rep_pairs = _banded_pairs(reps, bands=4, max_hamming=3)
     return classes.select("key", "rep", "group_size"), rep_pairs
 
 

@@ -12,7 +12,6 @@ self-contained stdlib+numpy implementations of real formats:
   and decoder (inflate + scanline unfilter, filter types 0-4 per the
   PNG spec). Features = per-channel mean/std + 8-bin luma histogram;
   resize = nearest-neighbor to a thumbnail before featurizing.
-- **PPM (P6)** — trivial binary RGB.
 - **video** — a deterministic length-prefixed PNG-frame container
   (``CSV1``); the decode stage frame-samples every k-th frame and
   averages frame features (the mapInPandas shape a pyav-backed
@@ -143,18 +142,6 @@ def decode_png(data: bytes) -> np.ndarray:
     return out.reshape(h, w) if channels == 1 else out.reshape(h, w, 3)
 
 
-def encode_ppm(pixels: np.ndarray) -> bytes:
-    h, w, _ = pixels.shape
-    return f"P6 {w} {h} 255\n".encode() + pixels.tobytes()
-
-
-def decode_ppm(data: bytes) -> np.ndarray:
-    head, _, body = data.partition(b"\n")
-    parts = head.split()
-    w, h = int(parts[1]), int(parts[2])
-    return np.frombuffer(body, dtype=np.uint8)[: h * w * 3].reshape(h, w, 3)
-
-
 def resize_nearest(pixels: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
     """Nearest-neighbor resize (the thumbnail step before featurize)."""
     h, w = pixels.shape[:2]
@@ -210,10 +197,10 @@ def iter_video_frames(data: bytes) -> Iterator[bytes]:
 # ---------------------------------------------------------------------------
 # Feature kernels
 # ---------------------------------------------------------------------------
-def image_feature(pixels: np.ndarray, thumb: int = 16) -> list[float]:
-    """Per-channel mean/std (of a nearest-neighbor thumbnail — the
-    resize stage) + 8-bin luminance histogram, all in [0,1]."""
-    t = resize_nearest(pixels, thumb, thumb).astype(np.float64) / 255.0
+def image_feature(pixels: np.ndarray) -> list[float]:
+    """Per-channel mean/std (of a 16x16 nearest-neighbor thumbnail —
+    the resize stage) + 8-bin luminance histogram, all in [0,1]."""
+    t = resize_nearest(pixels, 16, 16).astype(np.float64) / 255.0
     if t.ndim == 2:
         t = np.stack([t, t, t], axis=-1)
     means = t.mean(axis=(0, 1))
@@ -224,19 +211,18 @@ def image_feature(pixels: np.ndarray, thumb: int = 16) -> list[float]:
     return [round(float(x), 6) for x in np.concatenate([means, stds, hist])]
 
 
-def audio_feature(samples: np.ndarray, rate: int,
-                  bands: int = 8) -> list[float]:
-    """RMS + zero-crossing rate + log-energy in `bands` linear FFT
-    bands, zero-padded to FEATURE_DIM."""
+def audio_feature(samples: np.ndarray, rate: int) -> list[float]:
+    """RMS + zero-crossing rate + log-energy in 8 linear FFT bands,
+    zero-padded to FEATURE_DIM."""
     x = samples.astype(np.float64) / 32768.0
     if x.size == 0:
         return [0.0] * FEATURE_DIM
     rms = float(np.sqrt(np.mean(x * x)))
     zcr = float(np.mean(np.abs(np.diff(np.signbit(x).astype(np.int8)))))
     spec = np.abs(np.fft.rfft(x)) ** 2
-    bounds = np.linspace(0, spec.size, bands + 1).astype(int)
+    bounds = np.linspace(0, spec.size, 9).astype(int)  # 8 equal bands
     energies = [float(np.log1p(spec[bounds[i]:bounds[i + 1]].sum()))
-                for i in range(bands)]
+                for i in range(8)]
     feat = [rms, zcr] + energies
     feat += [0.0] * (FEATURE_DIM - len(feat))
     return [round(f, 6) for f in feat]
@@ -249,8 +235,8 @@ FRAME_STRIDE = 10
 def decode_and_featurize(payload: bytes, kind: str, mime: str,
                          frame_stride: int = FRAME_STRIDE
                          ) -> tuple[list[float], int]:
-    """The per-item decode seam: real codecs for png/ppm/wav/CSV1;
-    exotic mimes raise (swap PIL/torchaudio/pyav per mime here)."""
+    """The per-item decode seam: real codecs for png/jpeg/wav/CSV1;
+    other mimes raise (swap PIL/torchaudio/pyav per mime here)."""
     if kind == "image":
         if mime == "image/png":
             return image_feature(decode_png(payload)), 1
@@ -258,8 +244,6 @@ def decode_and_featurize(payload: bytes, kind: str, mime: str,
             from .jpegc import decode_jpeg
 
             return image_feature(decode_jpeg(payload)), 1
-        if mime == "image/x-portable-pixmap":
-            return image_feature(decode_ppm(payload)), 1
     elif kind == "audio":
         if mime == "audio/wav":
             return audio_feature(*decode_wav(payload)), 1

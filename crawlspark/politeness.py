@@ -65,8 +65,7 @@ def join_robots(frontier: DataFrame, robots: DataFrame) -> DataFrame:
     return fr.withColumn("_disallowed", disallowed)
 
 
-def schedule(frontier: DataFrame, robots: DataFrame, wave_start,
-             two_phase: bool = False) -> DataFrame:
+def schedule(frontier: DataFrame, robots: DataFrame, wave_start) -> DataFrame:
     """Assign (slot, scheduled_ts, state) per (host[, delay-class]) group.
 
     state: 'scheduled' (fetch this wave) | 'deferred' (budget exhausted)
@@ -76,26 +75,10 @@ def schedule(frontier: DataFrame, robots: DataFrame, wave_start,
     Scale note (10^10 frontier, Zipf hosts): the slot window sorts each
     host's PENDING rows, so one mega-host backlog lands in one sort
     task. The budget bounds what a wave FETCHES, not the backlog.
-    ``two_phase=True`` enables the exact-equivalent mitigation for a
-    host accumulating ~10^8 pending rows: phase 1 ranks allowed rows
-    per (group, INPUT PARTITION) — the window key includes
-    spark_partition_id(), so the mega-host's backlog splits across its
-    source partitions and no task ever sorts more than one partition's
-    share — and keeps only each partition's top-``tokens``; a row
-    outside its partition's local top-budget cannot be in the global
-    top-budget, so dropping it to 'deferred' is EXACT. Phase 2 runs
-    the ordinary global window on the survivors (<= tokens x
-    n_partitions rows per group, bounded regardless of backlog).
-
-    Equivalence contract (test-pinned): scheduled rows, their slots
-    and scheduled_ts, and the deferred/disallowed row SETS are
-    identical to the single-window form. The two forms differ only in
-    what DEFERRED rows carry: the single-window form gives them their
-    global slot and a scheduled_ts, this form gives slot = -1 and a
-    NULL scheduled_ts — no consumer reads either (the wave driver
-    drops both columns for every non-scheduled row). The
-    single-window form stays the default: closed-world backlogs are
-    wave-bounded and skip one shuffle.
+    Closed-world backlogs are wave-bounded, so one window suffices. A
+    host with ~10^8 pending rows would need the exact two-phase form
+    textops.group_topk runs: rank per (group, INPUT PARTITION) first,
+    keep each partition's top budget, then rank the survivors.
     """
     fr = join_robots(frontier, robots)
     keep_cols = [f.name for f in frontier.schema.fields if f.name != "state"]
@@ -123,38 +106,6 @@ def schedule(frontier: DataFrame, robots: DataFrame, wave_start,
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     allowed = ~F.coalesce(F.col("_disallowed"), F.lit(False))
     ws_ms = F.unix_millis(F.to_timestamp(F.lit(str(pd.Timestamp(wave_start)))))
-
-    if two_phase:
-        wl = (Window.partitionBy(*part_cols, F.spark_partition_id())
-              .orderBy(*order)
-              .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        base = (fr.withColumn("_lr", F.sum(allowed.cast("long")).over(wl))
-                .withColumn("_alw", allowed)
-                .withColumn("_tok", tokens))
-        no_slot = [F.lit(-1).alias("slot"),
-                   F.lit(None).cast("timestamp").alias("scheduled_ts")]
-        disallowed_out = (base.filter(~F.col("_alw"))
-                          .select(*keep_cols, *no_slot,
-                                  F.lit("disallowed").alias("state")))
-        dropped = (base.filter(F.col("_alw") & (F.col("_lr") > F.col("_tok")))
-                   .select(*keep_cols, *no_slot,
-                           F.lit("deferred").alias("state")))
-        surv = base.filter(F.col("_alw") & (F.col("_lr") <= F.col("_tok")))
-        slot2 = (F.sum(F.lit(1)).over(w) - 1)
-        scheduled = (surv.withColumn("_slot", slot2)
-                     .select(
-                         *keep_cols,
-                         F.when(F.col("_slot") < F.col("_tok"),
-                                F.col("_slot")).otherwise(F.lit(-1))
-                         .cast("int").alias("slot"),
-                         F.when(F.col("_slot") < F.col("_tok"),
-                                F.timestamp_millis(ws_ms
-                                                   + F.col("_slot") * delay))
-                         .alias("scheduled_ts"),
-                         F.when(F.col("_slot") < F.col("_tok"),
-                                F.lit("scheduled")).otherwise(F.lit("deferred"))
-                         .alias("state")))
-        return scheduled.unionByName(dropped).unionByName(disallowed_out)
 
     slot_raw = F.sum(allowed.cast("long")).over(w) - 1
     slot = F.when(allowed, slot_raw).otherwise(F.lit(-1)).cast("int")

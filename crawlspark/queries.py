@@ -1815,8 +1815,11 @@ SELECT * FROM (
 """
 
 
-def _sql_ann_lsh(dim: int = 64, n_planes: int = 6,
-                 probe_hamming: int = 2, k: int = 10) -> str:
+# the multi-probe LSH shape q_ann_lsh runs and SQL_ANN_LSH replays
+ANN_LSH = {"n_planes": 6, "probe_hamming": 2, "k": 10}
+
+
+def _sql_ann_lsh() -> str:
     """DuckDB replication of the ENTIRE multi-probe LSH path: the same
     splitmix64 hyperplanes (textops._hyperplanes — deterministic, no RNG
     state), sign-bit bucket packing, hamming-ball probe (bit_count of
@@ -1826,7 +1829,9 @@ def _sql_ann_lsh(dim: int = 64, n_planes: int = 6,
     inlined for the fixture dim (64, all sf dirs)."""
     from .textops import _hyperplanes
 
-    planes = _hyperplanes(dim, n_planes)
+    n_planes, probe_hamming, k = (ANN_LSH["n_planes"],
+                                  ANN_LSH["probe_hamming"], ANN_LSH["k"])
+    planes = _hyperplanes(64, n_planes)
 
     def lit_list(v):
         return "[" + ",".join(repr(float(x)) for x in v) + "]"
@@ -1854,7 +1859,7 @@ SQL_ANN_LSH = _sql_ann_lsh()
 # -- rows-only entries (genuinely non-SQL ops: pUDF / engine state) --------
 
 
-_ANN_INDEX_CACHE: dict[tuple[str, int], str] = {}
+_ANN_INDEX_CACHE: dict[str, str] = {}
 
 
 def _idx_fingerprint(src_file: str, params: str) -> str:
@@ -1869,7 +1874,7 @@ def _idx_fingerprint(src_file: str, params: str) -> str:
         .encode()).hexdigest()[:12]
 
 
-def _ann_index(spark, sf, n_planes: int = 6) -> str:
+def _ann_index(spark, sf) -> str:
     """Build (once per DATA fingerprint) the bucket-partitioned LSH
     index — the storage-layer scale path; queries prune to their probe
     buckets. Reuses an on-disk build across processes (the _SUCCESS
@@ -1877,9 +1882,10 @@ def _ann_index(spark, sf, n_planes: int = 6) -> str:
     path protects against stale data/params), so a fresh process pays
     a directory stat, not a rebuild — index construction is an offline
     operation, not part of any query."""
-    if (sf, n_planes) not in _ANN_INDEX_CACHE:
+    if sf not in _ANN_INDEX_CACHE:
         import tempfile
 
+        n_planes = ANN_LSH["n_planes"]
         src = f"{sf.rstrip('/')}/embeddings.parquet"
         key = _idx_fingerprint(src, f"lsh_p{n_planes}_seed42")
         path = f"{tempfile.gettempdir()}/crawlspark_annidx_{key}"
@@ -1887,8 +1893,8 @@ def _ann_index(spark, sf, n_planes: int = 6) -> str:
             emb = _t(spark, sf, "embeddings")
             dim = len(emb.select("embedding").first()["embedding"])
             X.build_ann_index(emb, path, dim, n_planes=n_planes)
-        _ANN_INDEX_CACHE[(sf, n_planes)] = path
-    return _ANN_INDEX_CACHE[(sf, n_planes)]
+        _ANN_INDEX_CACHE[sf] = path
+    return _ANN_INDEX_CACHE[sf]
 
 
 _IVF_INDEX_CACHE: dict[str, str] = {}
@@ -1923,7 +1929,7 @@ def warm_ann_indices(spark, sf) -> float:
     import time
 
     t0 = time.time()
-    _ann_index(spark, sf, n_planes=6)
+    _ann_index(spark, sf)
     path = _ivf_index(spark, sf)
     _verify_ivf_index(spark, sf, path)
     return time.time() - t0
@@ -2008,9 +2014,10 @@ def q_ann_lsh(spark, sf):
     buckets + hamming-ball probe + cosine in DuckDB."""
     emb = _t(spark, sf, "embeddings")
     q = [float(x) for x in emb.orderBy("vec_id").first()["embedding"]]
-    idx = _ann_index(spark, sf, n_planes=6)
-    return (X.ann_topk_lsh_indexed(spark, idx, q, k=10, n_planes=6,
-                                   probe_hamming=2)
+    idx = _ann_index(spark, sf)
+    return (X.ann_topk_lsh_indexed(spark, idx, q, k=ANN_LSH["k"],
+                                   n_planes=ANN_LSH["n_planes"],
+                                   probe_hamming=ANN_LSH["probe_hamming"])
             .select(F.col("vec_id").cast("long").alias("vec_id"), "cosine"))
 
 
@@ -2963,6 +2970,10 @@ ORDER BY doc_id
 """
 
 
+# the SemDeDup shape q_semdedup runs and SQL_SEMDEDUP replays
+SEMDEDUP = {"n_planes": 4, "threshold": 0.3}
+
+
 def q_semdedup(spark, sf):
     """SemDeDup-style per-vector dedup verdict (textops.semantic_dedup):
     deterministic LSH-bucket clusters (the splitmix64 hyperplanes the
@@ -2970,21 +2981,23 @@ def q_semdedup(spark, sf):
     cosine >= 0.3 neighbors. Full oracle: DuckDB recomputes the
     hyperplane buckets, the pair join, and the drop rule."""
     emb = _t(spark, sf, "embeddings")
-    return (X.semantic_dedup(emb, threshold=0.3, n_planes=4)
+    return (X.semantic_dedup(emb, threshold=SEMDEDUP["threshold"],
+                             n_planes=SEMDEDUP["n_planes"])
             .select(F.col("vec_id").cast("long").alias("vec_id"),
                     "cluster", "kept")
             .orderBy("vec_id"))
 
 
-def _sql_semdedup(dim: int = 64, n_planes: int = 4,
-                  threshold: float = 0.3) -> str:
+def _sql_semdedup() -> str:
     """DuckDB replication of semantic_dedup: identical hyperplanes
     (textops._hyperplanes), sign-bit bucket, within-bucket pair
     cosines rounded to 6 (array-order folds agree bit-for-bit — the
-    emb_near_dups/ann_lsh precedent), min-id-wins drop set."""
+    emb_near_dups/ann_lsh precedent), min-id-wins drop set. Plane
+    constants are inlined for the fixture dim (64, all sf dirs)."""
     from .textops import _hyperplanes
 
-    planes = _hyperplanes(dim, n_planes)
+    n_planes, threshold = SEMDEDUP["n_planes"], SEMDEDUP["threshold"]
+    planes = _hyperplanes(64, n_planes)
 
     def lit_list(v):
         return "[" + ",".join(repr(float(x)) for x in v) + "]"

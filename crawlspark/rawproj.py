@@ -78,8 +78,7 @@ def _schema_from_mapping(mapping: dict[str, tuple[str, str]]):
 
 def project_api_items(df: DataFrame, json_col: str,
                       mapping: dict[str, tuple[str, str]],
-                      keep: list[str] | None = None,
-                      single_parse: bool = True) -> DataFrame:
+                      keep: list[str] | None = None) -> DataFrame:
     """Flatten a JSON API payload column into typed raw columns.
 
     mapping: {out_col: (json_path, sql_type)}. Absent paths project to
@@ -87,13 +86,14 @@ def project_api_items(df: DataFrame, json_col: str,
     normalizer's zero-value coalescing exactly like the reference's
     ``map[string]any`` pulls.
 
-    single_parse (default): compile the mapping to ONE from_json over
-    a derived schema + struct field selects — the payload is parsed
-    once per row instead of once per mapped column (len(mapping)×
-    cheaper on wide mappings). single_parse=False keeps the
-    get_json_object-per-path form (supports array indexing paths)."""
+    The mapping compiles to ONE from_json over a derived schema +
+    struct field selects — the payload is parsed once per row instead
+    of once per mapped column (len(mapping)× cheaper on wide
+    mappings). A mapping with array-index paths, or with paths that
+    conflict (``$.a`` and ``$.a.b``), has no such schema and keeps the
+    get_json_object-per-path form."""
     keep_cols = [F.col(c) for c in (keep or [])]
-    if single_parse and all("[" not in p for p, _ in mapping.values()):
+    if all("[" not in p for p, _ in mapping.values()):
         try:
             schema = _schema_from_mapping(mapping)
         except ValueError:
@@ -110,7 +110,6 @@ def project_api_items(df: DataFrame, json_col: str,
 
 
 def explode_api_items(df: DataFrame, body_col: str,
-                      items_path: str = "$.data",
                       keep: list[str] | None = None) -> DataFrame:
     """S6 dual-shape API body tolerance (api_extractor.go:88-146): an
     API response body parses as EITHER a bare array ``[{...}, ...]``
@@ -127,7 +126,7 @@ def explode_api_items(df: DataFrame, body_col: str,
     v = F.try_parse_json(F.col(body_col))
     items = F.coalesce(
         F.try_variant_get(v, "$", "array<variant>"),
-        F.try_variant_get(v, items_path, "array<variant>"))
+        F.try_variant_get(v, "$.data", "array<variant>"))
     keep_cols = [F.col(c) for c in (keep or [])]
     return (df.select(*keep_cols, F.explode(items).alias("item"))
             .withColumn("item_json", F.to_json("item"))

@@ -137,8 +137,7 @@ def entity_rank(edges: DataFrame, iters: int = 5,
 
 def interval_join(points: DataFrame, intervals: DataFrame, on: str,
                   point_ts: str, start_col: str, end_col: str,
-                  bucket_us: int = 600_000_000,
-                  suffix: str = "_i") -> DataFrame:
+                  bucket_us: int = 600_000_000) -> DataFrame:
     """Range (interval-containment) join: each point row pairs with
     every interval row of the same ``on`` key whose
     [start, end) contains its timestamp — half-open, end exclusive.
@@ -159,7 +158,7 @@ def interval_join(points: DataFrame, intervals: DataFrame, on: str,
     the default), while points never duplicate — so the blow-up sits
     on the (usually far smaller) interval side.
 
-    Returns point rows + interval payload columns (suffixed); points
+    Returns point rows + interval payload columns (suffixed _i); points
     inside k overlapping intervals appear k times — aggregate on the
     interval key downstream for per-interval rollups."""
     b = F.lit(int(bucket_us))
@@ -175,5 +174,5 @@ def interval_join(points: DataFrame, intervals: DataFrame, on: str,
          .filter((F.col(point_ts) >= F.col(f"_ipay.{start_col}"))
                  & (F.col(point_ts) < F.col(f"_ipay.{end_col}"))))
     out = [F.col(c) for c in points.columns] \
-        + [F.col(f"_ipay.{c}").alias(f"{c}{suffix}") for c in ipay]
+        + [F.col(f"_ipay.{c}").alias(f"{c}_i") for c in ipay]
     return j.select(*out)

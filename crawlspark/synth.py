@@ -89,8 +89,8 @@ def _h(ids: np.ndarray, salt: int, seed: int) -> np.ndarray:
     return _splitmix64(ids.astype(np.uint64) ^ np.uint64(mix))
 
 
-def _zipf_probs(n: int = N_HOSTS, s: float = ZIPF_S) -> np.ndarray:
-    w = 1.0 / np.arange(1, n + 1) ** s
+def _zipf_probs() -> np.ndarray:
+    w = 1.0 / np.arange(1, N_HOSTS + 1) ** ZIPF_S
     return w / w.sum()
 
 
@@ -100,7 +100,7 @@ def assign_hosts(ids: np.ndarray, seed: int) -> np.ndarray:
     return np.searchsorted(np.cumsum(_zipf_probs()), u).astype(np.int32)
 
 
-def fifo_positions(ids: np.ndarray, host_idx: np.ndarray, per_page: int = PER_PAGE):
+def fifo_positions(ids: np.ndarray, host_idx: np.ndarray):
     """(page, rank) of each detail id within its host, FIFO by id order.
 
     This is the reference's list-API ordering: page N of host H lists
@@ -113,8 +113,8 @@ def fifo_positions(ids: np.ndarray, host_idx: np.ndarray, per_page: int = PER_PA
     change = np.r_[True, sorted_hosts[1:] != sorted_hosts[:-1]]
     grp_start = np.maximum.accumulate(np.where(change, np.arange(len(ids)), 0))
     pos[order] = np.arange(len(ids)) - grp_start
-    page = (pos // per_page + 1).astype(np.int32)
-    rank = (pos % per_page + 1).astype(np.int32)
+    page = (pos // PER_PAGE + 1).astype(np.int32)
+    rank = (pos % PER_PAGE + 1).astype(np.int32)
     return page, rank
 
 
@@ -247,13 +247,13 @@ def _description_html(title: str, i: int, h_noise: int, upd: bool, wave: int) ->
     return desc
 
 
-def _body_filler(i: int, h_noise: int, kb: int = 6) -> str:
+def _body_filler(i: int, h_noise: int) -> str:
     """Deterministic page bloat: real Common-Crawl job pages run
     50-100 KB of nav/boilerplate; extraction must scan past it."""
     para = (f"<div class=\"related\"><span>Việc làm liên quan {h_noise % 97}</span> "
             + " ".join(f"<a href=\"/tag-{(h_noise + j) % 53}\">từ khóa {j}</a>"
                        for j in range(8)) + "</div>")
-    reps = max(1, (kb * 1024) // len(para.encode("utf-8")))
+    reps = max(1, (6 * 1024) // len(para.encode("utf-8")))
     return para * reps
 
 
@@ -383,8 +383,7 @@ def gen_detail_chunk(ids: np.ndarray, seed: int = 42, wave: int = 1) -> pd.DataF
     })
 
 
-def gen_list_chunk(n: int, seed: int = 42, wave: int = 1,
-                   hosts_subset: list[int] | None = None) -> pd.DataFrame:
+def gen_list_chunk(n: int, seed: int = 42, wave: int = 1) -> pd.DataFrame:
     """List pages for the corpus of n base detail ids (+10% new on wave>=2).
 
     Each list page embeds its items as <div class="job-item"><a
@@ -402,8 +401,6 @@ def gen_list_chunk(n: int, seed: int = 42, wave: int = 1,
     items: dict[tuple[int, int], list[tuple[int, str]]] = {}
     for idx, i in enumerate(ids.tolist()):
         h = int(host_idx[idx])
-        if hosts_subset is not None and h not in hosts_subset:
-            continue
         slug = ("private-" if disallowed[idx] else "") + f["slug"][idx]
         durl = detail_url(host_name(h), slug, i)
         a = (f'<div class="job-item"><a class="job-link" href="{durl}" '
@@ -440,11 +437,10 @@ def gen_pages_pandas(n: int, seed: int = 42, wave: int = 1) -> pd.DataFrame:
     return pd.concat([lists, details], ignore_index=True)
 
 
-def gen_pages_spark(spark, n: int, seed: int = 42, wave: int = 1, parallelism: int = 32):
-    """Distributed pages generation via mapInPandas (bench scale)."""
+def gen_pages_spark(spark, n: int, parallelism: int = 32):
+    """Distributed wave-1 pages generation via mapInPandas (bench
+    scale); the same rows as gen_pages_pandas(n)."""
     from .schemas import PAGES_SCHEMA
-
-    hi = n if wave == 1 else n_total_ids(n)
 
     def gen(iterator):
         for pdf in iterator:
@@ -452,13 +448,13 @@ def gen_pages_spark(spark, n: int, seed: int = 42, wave: int = 1, parallelism: i
                 lo, high = int(row["lo"]), int(row["hi"])
                 ids = np.arange(lo, high, dtype=np.int64)
                 if len(ids):
-                    yield gen_detail_chunk(ids, seed, wave)
+                    yield gen_detail_chunk(ids)
 
-    chunk = max(1, (hi + parallelism - 1) // parallelism)
-    bounds = [(i * chunk + 1, min((i + 1) * chunk, hi) + 1) for i in range(parallelism)]
+    chunk = max(1, (n + parallelism - 1) // parallelism)
+    bounds = [(i * chunk + 1, min((i + 1) * chunk, n) + 1) for i in range(parallelism)]
     bdf = spark.createDataFrame([(lo, h) for lo, h in bounds], "lo long, hi long")
     details = bdf.repartition(parallelism, "lo").mapInPandas(gen, schema=PAGES_SCHEMA)
-    lists = spark.createDataFrame(gen_list_chunk(n, seed, wave), schema=PAGES_SCHEMA)
+    lists = spark.createDataFrame(gen_list_chunk(n), schema=PAGES_SCHEMA)
     return lists.unionByName(details)
 
 

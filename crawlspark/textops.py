@@ -7,6 +7,10 @@ codegen) and each designed to be DuckDB-oracle-checkable: hashing uses
 md5 (identical hex in Spark and DuckDB), float outputs are rounded,
 tokenization is plain whitespace-split so both engines agree byte-wise.
 
+Document operators read the catalog ``documents`` columns (``doc_id``,
+``text``, ``source``); embedding operators read the ``embeddings``
+columns (``vec_id``, ``embedding``).
+
 Scale notes per op are inline; the common theme: shingle/token
 explosion happens once, aggregates are partial+final (map-side
 combine), self-joins go through equality on band/bucket keys (hash
@@ -103,12 +107,12 @@ def vi_char_count(text: Column) -> Column:
     return F.length(t) - F.length(F.regexp_replace(t, f"[{_VI_CHARS}]", ""))
 
 
-def lang_id(text: Column, threshold: float = 0.02) -> Column:
+def lang_id(text: Column) -> Column:
     """n-gram-free heuristic language ID: diacritic density => vi,
     else en. (The corpus is vi/en; extend the char tables per language
     to generalize.)"""
     density = vi_char_count(text) / F.greatest(F.length(F.coalesce(text, F.lit(""))), F.lit(1))
-    return F.when(density >= threshold, F.lit("vi")).otherwise(F.lit("en"))
+    return F.when(density >= 0.02, F.lit("vi")).otherwise(F.lit("en"))
 
 
 def quality_score(text: Column) -> Column:
@@ -166,19 +170,18 @@ def doc_fingerprint(text: Column, k: int = 8) -> Column:
 # ---------------------------------------------------------------------------
 # Dedup family
 # ---------------------------------------------------------------------------
-def exact_dup_groups(df: DataFrame, text_col: str = "text",
-                     key_col: str = "doc_id") -> DataFrame:
+def exact_dup_groups(df: DataFrame) -> DataFrame:
     """Exact-hash dedup: md5 groups with >1 member -> (hash, n_dups,
     keep = min key). One hash-aggregate."""
-    return (df.select(F.md5(F.col(text_col)).alias("text_hash"),
-                      F.col(key_col))
+    return (df.select(F.md5(F.col("text")).alias("text_hash"),
+                      F.col("doc_id"))
             .groupBy("text_hash")
-            .agg(F.count("*").alias("n_dups"), F.min(key_col).alias("keep_id"))
+            .agg(F.count("*").alias("n_dups"),
+                 F.min("doc_id").alias("keep_id"))
             .filter(F.col("n_dups") > 1))
 
 
-def minhash_signature(df: DataFrame, text_col: str = "text",
-                      key_col: str = "doc_id", num_perm: int = 8,
+def minhash_signature(df: DataFrame, num_perm: int = 8,
                       shingle_n: int = 2) -> DataFrame:
     """MinHash signatures via lexicographic MIN over md5('<i>:'||shingle)
     — md5 is a uniform hash, so per-permutation lexicographic min is a
@@ -194,15 +197,14 @@ def minhash_signature(df: DataFrame, text_col: str = "text",
     (min over STRING buffers cannot hash-aggregate). When the result
     feeds a self-join, callers persist it rather than re-deriving it
     per branch (minhash_lsh_pairs)."""
-    sh = df.select(F.col(key_col), F.explode(word_shingles(F.col(text_col), shingle_n)).alias("s"))
+    sh = df.select(F.col("doc_id"), F.explode(
+        word_shingles(F.col("text"), shingle_n)).alias("s"))
     aggs = [F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("s")))).alias(f"mh{i}")
             for i in range(num_perm)]
-    return sh.groupBy(key_col).agg(*aggs)
+    return sh.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
-                      key_col: str = "doc_id", num_perm: int = 8,
-                      bands: int = 4, shingle_n: int = 2,
+def minhash_lsh_pairs(df: DataFrame, num_perm: int = 8, bands: int = 4,
                       jaccard_threshold: float = 0.5) -> DataFrame:
     """MinHash+LSH near-dup pairs: band signatures -> equality join ->
     exact Jaccard verification of candidates only.
@@ -232,16 +234,16 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     # twice cold). The frame is (key, num_perm hashes) — tiny relative
     # to the corpus at any scale. It and cand below stay cached for
     # the consumer's action; the caller's cache_scope releases both.
-    sig = cached(minhash_signature(df, text_col, key_col, num_perm,
-                                   shingle_n))
+    sig = cached(minhash_signature(df, num_perm))
     band_structs = [
         F.struct(F.lit(b).alias("band"),
                  F.concat_ws("|", *[F.col(f"mh{b * rows_per_band + r}")
                                     for r in range(rows_per_band)]).alias("val"))
         for b in range(bands)
     ]
-    banded = (sig.select(F.col(key_col), F.explode(F.array(*band_structs)).alias("bv"))
-              .select(key_col, "bv.band", "bv.val"))
+    banded = (sig.select(F.col("doc_id"),
+                         F.explode(F.array(*band_structs)).alias("bv"))
+              .select("doc_id", "bv.band", "bv.val"))
     a, b = banded.alias("a"), banded.alias("b")
     # persisted: the verify references the candidate frame 3x (two id
     # prunes + the pair join), and every UNcached reference would
@@ -250,9 +252,9 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     # contract, so the cache is tiny.
     cand = cached(a.join(b, (F.col("a.band") == F.col("b.band"))
                          & (F.col("a.val") == F.col("b.val"))
-                         & (F.col(f"a.{key_col}") < F.col(f"b.{key_col}")))
-                  .select(F.col(f"a.{key_col}").alias("id_a"),
-                          F.col(f"b.{key_col}").alias("id_b"))
+                         & (F.col("a.doc_id") < F.col("b.doc_id")))
+                  .select(F.col("a.doc_id").alias("id_a"),
+                          F.col("b.doc_id").alias("id_b"))
                   .distinct())
     # r5 scale fix: shingle ONLY candidate members. The previous form
     # shingled the ENTIRE corpus on both verify sides — O(corpus)
@@ -261,11 +263,11 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     # nothing. The id prune is a broadcast semi-join off the cached
     # candidate frame. (Measured at sf0.1: full pipeline 2.9 -> 1.8 s
     # warm; the win grows linearly with corpus/candidate ratio.)
-    ids = (cand.select(F.col("id_a").alias(key_col))
-           .union(cand.select(F.col("id_b").alias(key_col)))
+    ids = (cand.select(F.col("id_a").alias("doc_id"))
+           .union(cand.select(F.col("id_b").alias("doc_id")))
            .distinct())
-    cand_docs = df.join(F.broadcast(ids), key_col)
-    jac = ngram_jaccard(cand_docs, text_col, key_col, shingle_n, cand)
+    cand_docs = df.join(F.broadcast(ids), "doc_id")
+    jac = ngram_jaccard(cand_docs, cand)
     return jac.filter(F.col("jaccard") >= jaccard_threshold)
 
 
@@ -315,15 +317,14 @@ def ngram_jaccard_for_pairs(df: DataFrame, pairs: DataFrame,
     return inter.select("id_a", "id_b", jac.alias("jaccard"))
 
 
-def ngram_jaccard(docs: DataFrame, text_col: str, key_col: str,
-                  shingle_n: int, pairs: DataFrame) -> DataFrame:
-    """Exact n-gram Jaccard for given (id_a, id_b) pairs of ``docs`` —
-    array form: the verify step minhash_lsh_pairs runs on
+def ngram_jaccard(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Exact word-bigram Jaccard for given (id_a, id_b) pairs of
+    ``docs`` — array form: the verify step minhash_lsh_pairs runs on
     broadcast-sized candidate sets. ngram_jaccard_for_pairs (count
     form) is the fallback for pair sets too large to broadcast; nothing
     calls it yet."""
-    sh = (docs.select(F.col(key_col).alias("_id"),
-                      word_shingles(F.col(text_col), shingle_n).alias("_sh"))
+    sh = (docs.select(F.col("doc_id").alias("_id"),
+                      word_shingles(F.col("text"), 2).alias("_sh"))
           .withColumn("_n", F.size("_sh")))
     a = sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a"),
                   F.col("_n").alias("n_a"))
@@ -346,8 +347,7 @@ def ngram_jaccard(docs: DataFrame, text_col: str, key_col: str,
         F.round(inter / F.greatest(union, F.lit(1)), 4).alias("jaccard"))
 
 
-def ngram_jaccard_all_pairs(df: DataFrame, text_col: str = "text",
-                            key_col: str = "doc_id", shingle_n: int = 2,
+def ngram_jaccard_all_pairs(df: DataFrame, shingle_n: int = 2,
                             threshold: float = 0.5) -> DataFrame:
     """Exact Jaccard >= threshold pairs, COUNT-based: |A∩B| comes
     straight off the inverted-index self-join as a map-side-combined
@@ -361,21 +361,21 @@ def ngram_jaccard_all_pairs(df: DataFrame, text_col: str = "text",
     The join's intrinsic output is Σ_s df(s)² rows — exact all-pairs
     Jaccard is inherently quadratic in hot shingles; at web scale use
     minhash_lsh_pairs, which bounds candidates by banding."""
-    sh = df.select(F.col(key_col),
-                   F.explode(word_shingles(F.col(text_col), shingle_n)).alias("s"))
+    sh = df.select(F.col("doc_id"), F.explode(
+        word_shingles(F.col("text"), shingle_n)).alias("s"))
     # |A| straight off the shingle array — no second explode + shuffle
-    counts = (df.select(F.col(key_col),
-                        F.size(word_shingles(F.col(text_col), shingle_n))
+    counts = (df.select(F.col("doc_id"),
+                        F.size(word_shingles(F.col("text"), shingle_n))
                         .alias("_n"))
               .filter(F.col("_n") > 0))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (a.join(b, (F.col("a.s") == F.col("b.s"))
-                    & (F.col(f"a.{key_col}") < F.col(f"b.{key_col}")))
-             .select(F.col(f"a.{key_col}").alias("id_a"),
-                     F.col(f"b.{key_col}").alias("id_b"))
+                    & (F.col("a.doc_id") < F.col("b.doc_id")))
+             .select(F.col("a.doc_id").alias("id_a"),
+                     F.col("b.doc_id").alias("id_b"))
              .groupBy("id_a", "id_b").agg(F.count("*").alias("_i")))
-    na = counts.select(F.col(key_col).alias("id_a"), F.col("_n").alias("_na"))
-    nb = counts.select(F.col(key_col).alias("id_b"), F.col("_n").alias("_nb"))
+    na = counts.select(F.col("doc_id").alias("id_a"), F.col("_n").alias("_na"))
+    nb = counts.select(F.col("doc_id").alias("id_b"), F.col("_n").alias("_nb"))
     jac = F.round(F.col("_i") / (F.col("_na") + F.col("_nb") - F.col("_i")), 4)
     return (inter.join(F.broadcast(na), "id_a").join(F.broadcast(nb), "id_b")
             .select("id_a", "id_b", jac.alias("jaccard"))
@@ -497,24 +497,20 @@ def cosine_pair_sim(a: Column, b: Column) -> Column:
     return dot / (na * nb)
 
 
-def _embedding_dim(df: DataFrame, vec_col: str, dim: int | None) -> int:
-    """``dim`` if given, else the length of the first vector; an empty
-    frame (or a null first vector) has no dimension to infer, so it
-    fails loudly instead of with a TypeError on a None subscript."""
-    if dim is not None:
-        return dim
-    head = df.select(vec_col).first()
-    if head is None or head[vec_col] is None:
+def _embedding_dim(df: DataFrame) -> int:
+    """The length of the first vector; an empty frame (or a null first
+    vector) has no dimension to infer, so it fails loudly instead of
+    with a TypeError on a None subscript."""
+    head = df.select("embedding").first()
+    if head is None or head["embedding"] is None:
         raise ValueError("cannot infer the embedding dim from an empty "
-                         "DataFrame; pass dim= explicitly")
-    return len(head[vec_col])
+                         "DataFrame")
+    return len(head["embedding"])
 
 
 def embedding_near_dups(df: DataFrame, threshold: float = 0.9,
-                        vec_col: str = "embedding",
-                        key_col: str = "vec_id",
-                        n_planes: int = 8, seed: int = 42,
-                        exact: bool = False, dim: int | None = None) -> DataFrame:
+                        n_planes: int = 8, exact: bool = False,
+                        dim: int | None = None) -> DataFrame:
     """Embedding-cosine near-dup pairs (id_a < id_b, cosine >= τ).
 
     Scale path (default): candidates = same-LSH-bucket pairs (equi
@@ -524,17 +520,20 @@ def embedding_near_dups(df: DataFrame, threshold: float = 0.9,
     exact=True: full pair join for bounded corpora / oracle checks.
     """
     if exact:
-        a = df.select(F.col(key_col).alias("id_a"), F.col(vec_col).alias("va"))
-        b = df.select(F.col(key_col).alias("id_b"), F.col(vec_col).alias("vb"))
+        a = df.select(F.col("vec_id").alias("id_a"),
+                      F.col("embedding").alias("va"))
+        b = df.select(F.col("vec_id").alias("id_b"),
+                      F.col("embedding").alias("vb"))
         pairs = a.join(b, F.col("id_a") < F.col("id_b"))
     else:
-        dim = _embedding_dim(df, vec_col, dim)
+        if dim is None:
+            dim = _embedding_dim(df)
         bucketed = df.withColumn(
-            "_b", lsh_bucket(F.col(vec_col), dim, n_planes, seed))
-        a = bucketed.select(F.col(key_col).alias("id_a"),
-                            F.col(vec_col).alias("va"), "_b")
-        b = bucketed.select(F.col(key_col).alias("id_b"),
-                            F.col(vec_col).alias("vb"), "_b")
+            "_b", lsh_bucket(F.col("embedding"), dim, n_planes))
+        a = bucketed.select(F.col("vec_id").alias("id_a"),
+                            F.col("embedding").alias("va"), "_b")
+        b = bucketed.select(F.col("vec_id").alias("id_b"),
+                            F.col("embedding").alias("vb"), "_b")
         pairs = a.join(b, "_b").filter(F.col("id_a") < F.col("id_b"))
     cos = F.round(cosine_pair_sim(F.col("va"), F.col("vb")), 6)
     return (pairs.select("id_a", "id_b", cos.alias("cosine"))
@@ -542,27 +541,25 @@ def embedding_near_dups(df: DataFrame, threshold: float = 0.9,
 
 
 def build_ann_index(df: DataFrame, path: str, dim: int,
-                    vec_col: str = "embedding", key_col: str = "vec_id",
-                    n_planes: int = 12, seed: int = 42) -> None:
+                    n_planes: int = 12) -> None:
     """Materialize the LSH index: embeddings written PARTITIONED BY
     bucket. A query then reads only its probe buckets' directories
     (Catalyst partition pruning — pinned in tests/test_plans.py); at
     10^10 vectors with 12 planes a 1-hamming probe touches 13/4096 of
     storage instead of scanning everything."""
-    (df.withColumn("_bucket", lsh_bucket(F.col(vec_col), dim, n_planes, seed))
+    (df.withColumn("_bucket", lsh_bucket(F.col("embedding"), dim, n_planes))
      .write.mode("overwrite").partitionBy("_bucket").parquet(path))
 
 
 def ann_topk_lsh_indexed(spark, path: str, query: list[float], k: int = 10,
-                         vec_col: str = "embedding", key_col: str = "vec_id",
-                         n_planes: int = 12, probe_hamming: int = 1,
-                         seed: int = 42) -> DataFrame:
+                         n_planes: int = 12,
+                         probe_hamming: int = 1) -> DataFrame:
     """Approximate top-k against a build_ann_index directory: the
     bucket filter is a partition-column predicate, so only the probe
     buckets' files are read."""
-    probes = probe_buckets(query, n_planes, probe_hamming, seed)
+    probes = probe_buckets(query, n_planes, probe_hamming)
     cand = spark.read.parquet(path).filter(F.col("_bucket").isin(probes))
-    return brute_force_topk(cand, query, k, vec_col, key_col)
+    return brute_force_topk(cand, query, k)
 
 
 # ---------------------------------------------------------------------------
@@ -576,13 +573,13 @@ def _l2_normalize(vec: Column) -> Column:
     return F.transform(v, lambda x: x / F.when(n > 0, n).otherwise(F.lit(1.0)))
 
 
-def _kmeans_fit(X, k: int, iters: int = 10, seed: int = 42):
+def _kmeans_fit(X, k: int, iters: int = 10):
     """Deterministic Lloyd k-means on a numpy sample (the quantizer
     TRAINING step — FAISS-style IVF trains on a bounded sample
     driver-side; only the assignment pass is distributed)."""
     import numpy as np
 
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(42)
     idx = rng.permutation(len(X))[:k]
     C = X[idx].copy()
     for _ in range(iters):
@@ -596,9 +593,7 @@ def _kmeans_fit(X, k: int, iters: int = 10, seed: int = 42):
 
 
 def build_ivf_index(df: DataFrame, path: str, n_centroids: int = 64,
-                    vec_col: str = "embedding", key_col: str = "vec_id",
-                    seed: int = 42, max_iter: int = 10,
-                    max_train: int = 100_000) -> None:
+                    max_iter: int = 10) -> None:
     """Materialize an IVF index: a k-means coarse quantizer assigns
     every vector to its nearest centroid and the vectors are written
     PARTITIONED BY centroid id; the centroid table (tiny: n_centroids
@@ -622,11 +617,11 @@ def build_ivf_index(df: DataFrame, path: str, n_centroids: int = 64,
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    unit = _l2_normalize(F.col(vec_col))
+    unit = _l2_normalize(F.col("embedding"))
     sample = (df.select(unit.alias("_u"))
-              .orderBy(F.col(key_col)).limit(max_train).toPandas())
+              .orderBy(F.col("vec_id")).limit(100_000).toPandas())
     X = np.asarray([np.asarray(v, dtype=np.float64) for v in sample["_u"]])
-    C = _kmeans_fit(X, n_centroids, iters=max_iter, seed=seed)
+    C = _kmeans_fit(X, n_centroids, iters=max_iter)
 
     @pandas_udf("int")
     def nearest(vs: pd.Series) -> pd.Series:
@@ -645,8 +640,7 @@ def build_ivf_index(df: DataFrame, path: str, n_centroids: int = 64,
 
 
 def ann_topk_ivf(spark, path: str, query: list[float], k: int = 10,
-                 nprobe: int = 4, vec_col: str = "embedding",
-                 key_col: str = "vec_id") -> DataFrame:
+                 nprobe: int = 4) -> DataFrame:
     """Approximate top-k against a build_ivf_index directory: rank
     centroids by distance to the query DRIVER-side (n_centroids rows —
     never a Spark job over the corpus), read only the nprobe nearest
@@ -661,7 +655,7 @@ def ann_topk_ivf(spark, path: str, query: list[float], k: int = 10,
                     key=lambda r: float(np.linalg.norm(np.asarray(r["center"]) - q)))
     probes = [int(r["centroid_id"]) for r in ranked[:nprobe]]
     cand = spark.read.parquet(path).filter(F.col("_centroid").isin(probes))
-    return brute_force_topk(cand, query, k, vec_col, key_col)
+    return brute_force_topk(cand, query, k)
 
 
 # ---------------------------------------------------------------------------
@@ -687,8 +681,7 @@ def _top_gram_frac(grams: Column) -> Column:
     return F.when(m > 0, F.round(best / m, 4)).otherwise(F.lit(0.0))
 
 
-def repetition_metrics(df: DataFrame, text_col: str = "text",
-                       key_col: str = "doc_id",
+def repetition_metrics(df: DataFrame,
                        include_trigram: bool = True) -> DataFrame:
     """Gopher/RefinedWeb-style repetition signals per document:
 
@@ -725,15 +718,15 @@ def repetition_metrics(df: DataFrame, text_col: str = "text",
                                               F.slice(F.col("_toks"), i, n)))
         return F.when(cnt >= n, g).otherwise(F.array().cast("array<string>"))
 
-    staged = df.select(F.col(key_col), tokens_expr(F.col(text_col))
+    staged = df.select(F.col("doc_id"), tokens_expr(F.col("text"))
                        .alias("_toks"))
-    mids = [F.col(key_col), F.col("_toks"), grams_of(2).alias("_w2")]
+    mids = [F.col("doc_id"), F.col("_toks"), grams_of(2).alias("_w2")]
     if include_trigram:
         mids.append(grams_of(3).alias("_w3"))
     staged = staged.select(*mids)
     nw = F.size(F.col("_toks"))
     cols = [
-        F.col(key_col),
+        F.col("doc_id"),
         nw.cast("long").alias("n_words"),
         F.when(nw > 0, F.round(F.size(F.array_distinct("_toks")) / nw, 4))
         .otherwise(F.lit(0.0)).alias("distinct_ratio"),
@@ -745,9 +738,14 @@ def repetition_metrics(df: DataFrame, text_col: str = "text",
     return staged.select(*cols)
 
 
-def decontaminate(df: DataFrame, eval_df: DataFrame, n: int = 8,
-                  text_col: str = "text", key_col: str = "doc_id",
-                  broadcast_limit_tokens: int = 2_000_000) -> DataFrame:
+# decontaminate's size gate: an eval side with more tokens than this
+# (2M n-grams ~ a few hundred MB of strings) is shuffle-joined, not
+# broadcast
+EVAL_BROADCAST_LIMIT_TOKENS = 2_000_000
+
+
+def decontaminate(df: DataFrame, eval_df: DataFrame,
+                  n: int = 8) -> DataFrame:
     """Train/test decontamination: flag documents sharing >=1 distinct
     word n-gram (default 8 — the common eval-overlap window) with any
     document of the held-out eval set.
@@ -760,42 +758,38 @@ def decontaminate(df: DataFrame, eval_df: DataFrame, n: int = 8,
     SIZE GATE (round-4 verdict: the unconditional broadcast was the
     last one in the pipeline): the eval side's n-gram count is bounded
     by its token count, measured with one cheap narrow scan of eval
-    texts (no shuffle, no explode). Above `broadcast_limit_tokens`
-    (default 2M n-grams ~ a few hundred MB of strings — past any sane
-    driver/executor broadcast budget) the join falls back to a
-    shuffle-hash join on the n-gram key: both sides exchange, which is
-    exactly the right trade once the eval set is itself corpus-sized.
-    Set the limit to 0 to force the fallback (tests pin path equality
-    and the no-BroadcastHashJoin plan shape).
+    texts (no shuffle, no explode). Above EVAL_BROADCAST_LIMIT_TOKENS
+    (past any sane driver/executor broadcast budget) the join falls
+    back to a shuffle-hash join on the n-gram key: both sides
+    exchange, which is exactly the right trade once the eval set is
+    itself corpus-sized.
 
     Returns every corpus doc: (key, n_overlap, contaminated). Eval
     docs present in df flag themselves (full self-overlap) — that is
     the right answer for 'is this training doc contaminated'."""
-    corpus = df.select(F.col(key_col),
-                       F.explode(word_shingles(F.col(text_col), n))
+    corpus = df.select(F.col("doc_id"),
+                       F.explode(word_shingles(F.col("text"), n))
                        .alias("g"))
-    evalg = (eval_df.select(F.explode(word_shingles(F.col(text_col), n))
+    evalg = (eval_df.select(F.explode(word_shingles(F.col("text"), n))
                             .alias("g"))
              .distinct())
     eval_tokens = (eval_df.select(
         F.sum(F.size(F.filter(
-            F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
+            F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))),
                     r"\s+"), lambda x: x != F.lit("")))).alias("t"))
         .first()["t"] or 0)
-    if eval_tokens <= broadcast_limit_tokens:
+    if eval_tokens <= EVAL_BROADCAST_LIMIT_TOKENS:
         joined = corpus.join(F.broadcast(evalg), "g")
     else:
         joined = corpus.join(evalg.hint("shuffle_hash"), "g")
-    hits = joined.groupBy(key_col).agg(F.count("*").alias("n_overlap"))
-    return (df.select(key_col).join(hits, key_col, "left")
-            .select(key_col,
+    hits = joined.groupBy("doc_id").agg(F.count("*").alias("n_overlap"))
+    return (df.select("doc_id").join(hits, "doc_id", "left")
+            .select("doc_id",
                     F.coalesce("n_overlap", F.lit(0)).alias("n_overlap"))
             .withColumn("contaminated", F.col("n_overlap") > 0))
 
 
-def paragraph_dedup(df: DataFrame, text_col: str = "text",
-                    key_col: str = "doc_id",
-                    para_tokens: int = 0) -> DataFrame:
+def paragraph_dedup(df: DataFrame, para_tokens: int = 0) -> DataFrame:
     """RefinedWeb-style CORPUS-LEVEL exact paragraph dedup: a
     paragraph survives only at its first location — the minimum
     (key, position) over every occurrence in the corpus — and every
@@ -818,10 +812,10 @@ def paragraph_dedup(df: DataFrame, text_col: str = "text",
     re-aggregate. collect_list order is engine-nondeterministic;
     array_sort on (pos, p) structs restores it deterministically."""
     if para_tokens > 0:
-        paras = _token_chunks(F.col(text_col), para_tokens)
+        paras = _token_chunks(F.col("text"), para_tokens)
     else:
-        paras = F.split(F.coalesce(F.col(text_col), F.lit("")), r"\n+")
-    ex = (df.select(F.col(key_col).alias("key"),
+        paras = F.split(F.coalesce(F.col("text"), F.lit("")), r"\n+")
+    ex = (df.select(F.col("doc_id").alias("key"),
                     F.posexplode(paras).alias("pos", "p"))
           .filter(F.col("p") != ""))
     w = Window.partitionBy("p")
@@ -836,16 +830,14 @@ def paragraph_dedup(df: DataFrame, text_col: str = "text",
                 F.array_sort(F.collect_list(
                     F.when(F.col("_keep"), F.struct("pos", "p")))),
                 lambda x: x["p"]), " ").alias("clean_text"))
-    return (df.select(F.col(key_col).alias("key")).join(agg, "key", "left")
+    return (df.select(F.col("doc_id").alias("key")).join(agg, "key", "left")
             .select("key",
                     F.coalesce("n_paras", F.lit(0)).alias("n_paras"),
                     F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
                     F.coalesce("clean_text", F.lit("")).alias("clean_text")))
 
 
-def lm_quality_score(df: DataFrame, text_col: str = "text",
-                     key_col: str = "doc_id",
-                     vocab_k: int = 1000) -> DataFrame:
+def lm_quality_score(df: DataFrame, vocab_k: int = 1000) -> DataFrame:
     """CCNet-shape unigram LM quality score: per-document mean
     self-information -log2(p(w)) under the corpus's own unigram
     distribution — the cheap stand-in for the KenLM perplexity filter
@@ -865,8 +857,8 @@ def lm_quality_score(df: DataFrame, text_col: str = "text",
     0.0. lm_score is rounded to 4 decimals: the per-token float sums
     run in partition order (and the oracle's in its own), so the
     guaranteed-identical digits are well inside 1e-4."""
-    toks = df.select(F.col(key_col),
-                     F.explode(tokens_expr(F.col(text_col))).alias("w"))
+    toks = df.select(F.col("doc_id"),
+                     F.explode(tokens_expr(F.col("text"))).alias("w"))
     # persisted: `counts` feeds the total action AND the vocab top-K —
     # unpersisted, the vocab reference re-runs the corpus explode+agg
     # a second time (and the scoring join a third). With the cache the
@@ -880,34 +872,34 @@ def lm_quality_score(df: DataFrame, text_col: str = "text",
                      .alias("_info")))
     oov = -__import__("math").log2(1.0 / total)
     scored = (toks.join(F.broadcast(vocab), "w", "left")
-              .groupBy(key_col)
+              .groupBy("doc_id")
               .agg(F.count("*").alias("n_scored"),
                    F.round(F.avg(F.coalesce("_info", F.lit(oov))), 4)
                    .alias("lm_score")))
-    return (df.select(key_col).join(scored, key_col, "left")
-            .select(key_col,
+    return (df.select("doc_id").join(scored, "doc_id", "left")
+            .select("doc_id",
                     F.coalesce("n_scored", F.lit(0)).alias("n_scored"),
                     F.coalesce("lm_score", F.lit(0.0)).alias("lm_score")))
 
 
 def stratified_sample(df: DataFrame, rates: dict[str, float],
-                      strat_col: str = "lang", key_col: str = "doc_id",
-                      default_rate: float = 0.0,
-                      salt: str = "s42") -> DataFrame:
+                      strat_col: str = "lang",
+                      default_rate: float = 0.0) -> DataFrame:
     """DETERMINISTIC stratified sampling — the training-mix primitive
     (upsample rare languages / downsample the head) done as a pure
     hash filter, so the sample is reproducible across runs, cluster
     sizes and engines (df.sample() is seed+partition-layout dependent
     and NOT reproducible under repartitioning; this is).
 
-    A row survives iff md5(salt|stratum|key) mod 10^6 < rate * 10^6.
+    A row survives iff md5('s42|' || stratum || '|' || key) mod 10^6
+    < rate * 10^6.
     Pure projection+filter: no shuffle, no state; the per-stratum rate
     table is a literal CASE chain (strata are few by definition).
     The hash is the same '0x'+hex-prefix construction the oracles
     replay, so DuckDB draws the identical sample."""
-    h = _hash60(F.concat(F.lit(salt + "|"),
+    h = _hash60(F.concat(F.lit("s42|"),
                          F.coalesce(F.col(strat_col), F.lit("")),
-                         F.lit("|"), F.col(key_col).cast("string")))
+                         F.lit("|"), F.col("doc_id").cast("string")))
     bucket = F.pmod(h, F.lit(1_000_000))
     rate = F.lit(float(default_rate))
     for stratum, r in sorted(rates.items()):
@@ -917,9 +909,7 @@ def stratified_sample(df: DataFrame, rates: dict[str, float],
 
 
 def mix_corpus(df: DataFrame, weights: dict[str, float],
-               budget_tokens: int, source_col: str = "source",
-               text_col: str = "text", key_col: str = "doc_id",
-               salt: str = "m42") -> DataFrame:
+               budget_tokens: int) -> DataFrame:
     """Static data-mixture sampling (the pretraining 'mix' step):
     given per-source weights and a total token budget, each source s
     gets desired tokens D_s = budget * w_s / Σw and keep rate
@@ -935,9 +925,9 @@ def mix_corpus(df: DataFrame, weights: dict[str, float],
     computed driver-side so the only in-engine float op is D_s / T_s
     (bit-identical in any IEEE engine, oracle included)."""
     w_sum = float(sum(weights.values()))
-    toks = df.select(F.col(source_col).alias("_src"),
-                     F.col(key_col).alias("key"),
-                     token_count(F.col(text_col)).cast("long")
+    toks = df.select(F.col("source").alias("_src"),
+                     F.col("doc_id").alias("key"),
+                     token_count(F.col("text")).cast("long")
                      .alias("n_tokens"))
     totals = toks.groupBy("_src").agg(F.sum("n_tokens").alias("_T"))
     des = F.lit(None).cast("double")
@@ -948,7 +938,7 @@ def mix_corpus(df: DataFrame, weights: dict[str, float],
         "rate",
         F.when(des.isNull() | (F.col("_T") <= 0), F.lit(0.0))
          .otherwise(F.least(F.lit(1.0), des / F.col("_T").cast("double"))))
-    h = _hash60(F.concat(F.lit(salt + "|"), F.col("_src"), F.lit("|"),
+    h = _hash60(F.concat(F.lit("m42|"), F.col("_src"), F.lit("|"),
                          F.col("key").cast("string")))
     return (toks.join(F.broadcast(rates.select("_src", "rate")), "_src")
             .filter(F.pmod(h, F.lit(1_000_000)) < F.col("rate") * 1_000_000)
@@ -956,8 +946,7 @@ def mix_corpus(df: DataFrame, weights: dict[str, float],
                     "rate"))
 
 
-def pack_sequences(df: DataFrame, budget: int, text_col: str = "text",
-                   key_col: str = "doc_id",
+def pack_sequences(df: DataFrame, budget: int,
                    num_partitions: int | None = None) -> DataFrame:
     """Training-sequence packing: documents are concatenated in key
     order and addressed into fixed-budget token windows — for every
@@ -975,8 +964,8 @@ def pack_sequences(df: DataFrame, budget: int, text_col: str = "text",
     Returns (key, n_tokens, seq_id, seq_offset) where seq_id =
     floor(start / budget) and seq_offset = start % budget, start
     being the doc's first-token position in the global concat."""
-    counts = df.select(F.col(key_col).alias("key"),
-                       token_count(F.col(text_col)).cast("long")
+    counts = df.select(F.col("doc_id").alias("key"),
+                       token_count(F.col("text")).cast("long")
                        .alias("n_tokens"),
                        F.lit("all").alias("_g"))
     summed = _prefix_sum(counts, "_g", ["key"], F.col("n_tokens"),
@@ -988,9 +977,8 @@ def pack_sequences(df: DataFrame, budget: int, text_col: str = "text",
         F.pmod(start, F.lit(budget)).cast("long").alias("seq_offset"))
 
 
-def chunk_documents(df: DataFrame, size: int = 512, overlap: int = 64,
-                    text_col: str = "text",
-                    key_col: str = "doc_id") -> DataFrame:
+def chunk_documents(df: DataFrame, size: int = 512,
+                    overlap: int = 64) -> DataFrame:
     """RAG-style fixed-size character chunking with overlap: each doc
     yields windows of `size` chars whose starts step by
     `size - overlap`. A trailing window is emitted only if it extends
@@ -1005,11 +993,11 @@ def chunk_documents(df: DataFrame, size: int = 512, overlap: int = 64,
     if not 0 <= overlap < size:
         raise ValueError("need 0 <= overlap < size")
     step = size - overlap
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     n = F.when(F.length(t) == 0, F.lit(0)).otherwise(
         F.greatest(F.lit(1),
                    F.ceil((F.length(t) - F.lit(overlap)) / F.lit(step))))
-    staged = df.select(F.col(key_col).alias("key"), t.alias("_t"),
+    staged = df.select(F.col("doc_id").alias("key"), t.alias("_t"),
                        n.cast("int").alias("_n"))
     # posexplode of an empty sequence drops the row: 0-chunk docs vanish
     ex = staged.select(
@@ -1027,8 +1015,7 @@ def chunk_documents(df: DataFrame, size: int = 512, overlap: int = 64,
         F.md5(chunk).alias("chunk_md5"))
 
 
-def quantize_embeddings(df: DataFrame, vec_col: str = "embedding",
-                        key_col: str = "vec_id") -> DataFrame:
+def quantize_embeddings(df: DataFrame) -> DataFrame:
     """Symmetric per-vector int8 quantization (the storage/serving
     compression step for an embedding corpus): scale = max|x| / 127
     in DOUBLE, code = round(x / scale) ∈ [-127, 127]; zero or empty
@@ -1039,12 +1026,12 @@ def quantize_embeddings(df: DataFrame, vec_col: str = "embedding",
     and codes. Pure per-row HOF transform — zero shuffle; codes are
     emitted as a comma-joined string (the driver's pandas
     canonicalization cannot hash list cells)."""
-    v = F.transform(F.coalesce(F.col(vec_col),
+    v = F.transform(F.coalesce(F.col("embedding"),
                                F.array().cast("array<float>")),
                     lambda x: x.cast("double"))
     # stage _v and _m as named columns: multi-referenced non-cheap
     # expressions get NO CSE otherwise (SPARK-36718)
-    staged = (df.select(F.col(key_col).alias("key"), v.alias("_v"))
+    staged = (df.select(F.col("vec_id").alias("key"), v.alias("_v"))
               .withColumn("_m", F.coalesce(
                   F.array_max(F.transform("_v", F.abs)), F.lit(0.0))))
     scale = F.col("_m") / F.lit(127.0)
@@ -1061,8 +1048,7 @@ def quantize_embeddings(df: DataFrame, vec_col: str = "embedding",
                                 ","), F.lit("")).alias("codes"))
 
 
-def tfidf_topk(df: DataFrame, k: int = 3, text_col: str = "text",
-               key_col: str = "doc_id") -> DataFrame:
+def tfidf_topk(df: DataFrame, k: int = 3) -> DataFrame:
     """Per-document top-k keywords by smoothed tf-idf:
     idf = ln((N + 1) / (df + 1)) + 1 over whitespace tokens of
     lower(text), score = tf * idf, ties broken by term so the top-k
@@ -1074,11 +1060,11 @@ def tfidf_topk(df: DataFrame, k: int = 3, text_col: str = "text",
     vocab is orders of magnitude smaller than the tf table, so Spark
     broadcasts it when small and shuffle-joins otherwise. The top-k
     window partitions by doc (never a global sort)."""
-    toks = df.select(F.col(key_col).alias("key"),
-                     F.explode(tokens_expr(F.col(text_col))).alias("term"))
+    toks = df.select(F.col("doc_id").alias("key"),
+                     F.explode(tokens_expr(F.col("text"))).alias("term"))
     tf = toks.groupBy("key", "term").agg(F.count("*").alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
-    ndocs = df.agg(F.count_distinct(F.col(key_col)).alias("_n"))
+    ndocs = df.agg(F.count_distinct(F.col("doc_id")).alias("_n"))
     scored = (tf.join(dfreq, "term")
               .crossJoin(F.broadcast(ndocs))
               .withColumn("_score",
@@ -1099,8 +1085,7 @@ PII_PHONE_RX = r"\+[0-9]{1,2}-[0-9]{3}-[0-9]{4}"
 PII_IPV4_RX = r"[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}"
 
 
-def pii_scrub(df: DataFrame, text_col: str = "text",
-              key_col: str = "doc_id") -> DataFrame:
+def pii_scrub(df: DataFrame) -> DataFrame:
     """PII redaction for training corpora: emails, intl-format phone
     numbers and IPv4 literals replaced with typed placeholder tokens,
     plus a per-doc redaction count (the audit metric a scrubbing run
@@ -1108,7 +1093,7 @@ def pii_scrub(df: DataFrame, text_col: str = "text",
     not be half-eaten by the IP rule via its dotted domain), then
     phones, then IPs. Pure regexp_replace/regexp_count — JVM codegen,
     embarrassingly parallel, no shuffle."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     n_pii = (F.regexp_count(t, F.lit(PII_EMAIL_RX))
              + F.regexp_count(t, F.lit(PII_PHONE_RX))
              + F.regexp_count(
@@ -1119,15 +1104,14 @@ def pii_scrub(df: DataFrame, text_col: str = "text",
             F.regexp_replace(t, PII_EMAIL_RX, "<EMAIL>"),
             PII_PHONE_RX, "<PHONE>"),
         PII_IPV4_RX, "<IP>")
-    return df.select(F.col(key_col), clean.alias("clean_text"),
+    return df.select(F.col("doc_id"), clean.alias("clean_text"),
                      n_pii.cast("long").alias("n_pii"))
 
 
 # ---------------------------------------------------------------------------
 # Exact duplicate-substring spans / per-group caps
 # ---------------------------------------------------------------------------
-def duplicate_spans(df: DataFrame, n: int = 8, text_col: str = "text",
-                    key_col: str = "doc_id") -> DataFrame:
+def duplicate_spans(df: DataFrame, n: int = 8) -> DataFrame:
     """ExactSubstr-style duplicate-span detection (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better", at
     n-gram granularity): every position whose n-token gram occurs
@@ -1148,13 +1132,13 @@ def duplicate_spans(df: DataFrame, n: int = 8, text_col: str = "text",
     row_number is constant within a consecutive run) -> one grouped
     agg per island. Two shuffles total (gram key, then doc key), both
     on bounded partitions."""
-    toks = tokens_expr(F.col(text_col))
+    toks = tokens_expr(F.col("text"))
     grams = F.when(
         F.size(toks) >= n,
         F.transform(F.sequence(F.lit(0), F.size(toks) - n),
                     lambda i: F.array_join(F.slice(toks, i + 1, n), " "))
     ).otherwise(F.array().cast("array<string>"))
-    ex = df.select(F.col(key_col).alias("key"),
+    ex = df.select(F.col("doc_id").alias("key"),
                    F.posexplode(grams).alias("pos", "g"))
     wg = Window.partitionBy("g")
     dup = (ex.withColumn("_first", F.min(F.struct("key", "pos")).over(wg))
@@ -1181,8 +1165,7 @@ def group_topk(df: DataFrame, group_col: str, order_cols: list[Column],
     key) — with ties at rank k the two phases could keep different
     row sets.
 
-    Two-phase, exact (same argument as politeness.schedule's
-    two_phase budget): phase 1 ranks per (group, INPUT PARTITION) —
+    Two-phase, exact: phase 1 ranks per (group, INPUT PARTITION) —
     a row outside its partition's local top-k cannot be in the global
     top-k, so it is dropped before any corpus-wide exchange; phase 2
     ranks the <= k x n_partitions survivors per group. With
@@ -1201,7 +1184,7 @@ def group_topk(df: DataFrame, group_col: str, order_cols: list[Column],
 # ---------------------------------------------------------------------------
 # Search-index + corpus-shape operators (round 5, session 3)
 # ---------------------------------------------------------------------------
-def length_histogram(df: DataFrame, text_col: str = "text") -> Column:
+def length_histogram(df: DataFrame) -> Column:
     """Power-of-two token-length histogram — the sequence-length
     planning table (how many docs land in each 2^k token band drives
     the packing budget and the truncation loss estimate before a
@@ -1213,7 +1196,7 @@ def length_histogram(df: DataFrame, text_col: str = "text") -> Column:
     flip the floor against the oracle. One map-side-combined
     aggregate over a narrow projection; no shuffle beyond the final
     |buckets|-row exchange. Scales trivially."""
-    n = token_count(F.col(text_col)).cast("long")
+    n = token_count(F.col("text")).cast("long")
     bucket = (F.length(F.bin(F.greatest(n, F.lit(1)))) - 1).cast("long")
     return (df.select(bucket.alias("bucket"), n.alias("_n"))
             .groupBy("bucket")
@@ -1223,8 +1206,7 @@ def length_histogram(df: DataFrame, text_col: str = "text") -> Column:
                  F.max("_n").cast("long").alias("max_tokens")))
 
 
-def build_inverted_index(df: DataFrame, text_col: str = "text",
-                         key_col: str = "doc_id",
+def build_inverted_index(df: DataFrame,
                          df_cap: int | None = None) -> DataFrame:
     """Positional inverted index: token -> (df, cf, postings) where
     postings = ";"-joined "doc:tf:p0|p1|..." entries in doc order —
@@ -1245,8 +1227,8 @@ def build_inverted_index(df: DataFrame, text_col: str = "text",
     postings string is deterministic: positions sorted numerically,
     entries sorted by doc id."""
     toks = df.select(
-        F.col(key_col).alias("_id"),
-        F.posexplode(tokens_expr(F.col(text_col))).alias("pos", "w"))
+        F.col("doc_id").alias("_id"),
+        F.posexplode(tokens_expr(F.col("text"))).alias("pos", "w"))
     per_doc = (toks.groupBy("w", "_id")
                .agg(F.count("*").cast("long").alias("tf"),
                     F.array_join(F.array_sort(F.collect_list("pos")),
@@ -1354,8 +1336,7 @@ def grouped_rank(df: DataFrame, part_col: str, order_cols: list[str],
             .withColumnRenamed("_tot", "n_group"))
 
 
-def pmi_bigrams(df: DataFrame, text_col: str = "text",
-                min_count: int = 5, k: int = 50) -> DataFrame:
+def pmi_bigrams(df: DataFrame, min_count: int = 5, k: int = 50) -> DataFrame:
     """Top-k adjacent-bigram collocations by pointwise mutual
     information — the phrase-mining / tokenizer-vocab-seeding analysis
     (Mikolov et al.'s phrase detection runs exactly this shape).
@@ -1370,7 +1351,7 @@ def pmi_bigrams(df: DataFrame, text_col: str = "text",
     and tie-broken by bigram text, so the top-k row SET is stable
     across engines and parallelism (an unrounded float order could
     flip the k-boundary on a last-ulp libm difference)."""
-    t = F.col(text_col)
+    t = F.col("text")
     toks = df.select(F.explode(tokens_expr(t)).alias("w"))
     # uni is referenced 3x (total + both join sides) and big 2x
     # (total + the candidate rows) — without a persist each reference
@@ -1399,9 +1380,7 @@ def pmi_bigrams(df: DataFrame, text_col: str = "text",
 
 
 def group_quantiles(df: DataFrame, part_col: str, value_col: str,
-                    key_col: str,
-                    q_pcts: tuple[int, ...] = (25, 50, 75),
-                    num_partitions: int | None = None) -> DataFrame:
+                    key_col: str) -> DataFrame:
     """Exact per-group discrete quantiles — the corpus-QA table
     ("p25/p50/p75 quality per language") that decides filter
     thresholds before a training run. Lower discrete quantile
@@ -1411,13 +1390,12 @@ def group_quantiles(df: DataFrame, part_col: str, value_col: str,
 
     Built on grouped_rank, so no per-group window sort: a mega-group
     (English = half a 100 TB corpus) spreads over every partition.
-    The quantile targets join as a broadcast |q_pcts|-row frame.
-    Returns (part_col, q_pct, value) — one row per (group, q)."""
+    The quantile targets (p25, p50, p75) join as a broadcast 3-row
+    frame. Returns (part_col, q_pct, value) — one row per (group, q)."""
     base = df.select(part_col, value_col, key_col)
-    ranked = grouped_rank(base, part_col, [value_col, key_col],
-                          num_partitions)
+    ranked = grouped_rank(base, part_col, [value_col, key_col])
     sess = df.sparkSession
-    qdf = sess.createDataFrame([(int(q),) for q in q_pcts], "q_pct int")
+    qdf = sess.createDataFrame([(25,), (50,), (75,)], "q_pct int")
     # integer ceil: (n*q + 99) div 100
     target = F.expr("(n_group * q_pct + 99) div 100")
     return (ranked.crossJoin(F.broadcast(qdf))
@@ -1425,27 +1403,31 @@ def group_quantiles(df: DataFrame, part_col: str, value_col: str,
             .select(part_col, "q_pct", F.col(value_col).alias("value")))
 
 
-def vocab_coverage(df: DataFrame, text_col: str = "text",
-                   ks: tuple[int, ...] = (1, 16, 256, 4096)) -> DataFrame:
+# the candidate vocab sizes vocab_coverage reports
+VOCAB_COVERAGE_KS = (1, 16, 256, 4096)
+
+
+def vocab_coverage(df: DataFrame) -> DataFrame:
     """Tokenizer-vocabulary sizing curve: for each candidate vocab
-    size k, the fraction of all corpus token OCCURRENCES covered by
-    the top-k most frequent tokens (count desc, token asc ties). The
-    table every tokenizer-budget decision reads first.
+    size k in VOCAB_COVERAGE_KS, the fraction of all corpus token
+    OCCURRENCES covered by the top-k most frequent tokens (count desc,
+    token asc ties). The table every tokenizer-budget decision reads
+    first.
 
     Corpus side is ONE partial-agg'd token count; the ranking is a
-    TakeOrderedAndProject of max(ks) rows (vocab-sized, never the
-    corpus) whose cumulative sums then run over that bounded frame;
+    TakeOrderedAndProject of max(VOCAB_COVERAGE_KS) rows (vocab-sized,
+    never the corpus) whose cumulative sums then run over that bounded frame;
     the corpus total joins as a 1-row broadcast. Coverage is rounded
     to 6 before comparison."""
-    kmax = max(ks)
-    toks = df.select(F.explode(tokens_expr(F.col(text_col))).alias("w"))
+    toks = df.select(F.explode(tokens_expr(F.col("text"))).alias("w"))
     uni = cached(toks.groupBy("w").agg(F.count("*").cast("long").alias("c")))
     total = uni.agg(F.sum("c").cast("double").alias("_total"))
-    top = uni.orderBy(F.col("c").desc(), F.col("w")).limit(int(kmax))
+    top = uni.orderBy(F.col("c").desc(), F.col("w")).limit(
+        max(VOCAB_COVERAGE_KS))
     wr = Window.orderBy(F.col("c").desc(), F.col("w"))
     ranked = top.withColumn("_r", F.row_number().over(wr))
     sess = df.sparkSession
-    kdf = sess.createDataFrame([(int(k),) for k in ks], "k int")
+    kdf = sess.createDataFrame([(k,) for k in VOCAB_COVERAGE_KS], "k int")
     return (ranked.crossJoin(F.broadcast(kdf))
             .filter(F.col("_r") <= F.col("k"))
             .groupBy("k")
@@ -1483,26 +1465,27 @@ def shard_plan(df: DataFrame, key_col: str, shard_size: int,
         .alias("pos_in_shard"))
 
 
-def vocab_growth(df: DataFrame, text_col: str = "text",
-                 key_col: str = "doc_id",
-                 checkpoints: tuple[int, ...] = (16, 64, 256, 1024)) \
-        -> DataFrame:
+# the document counts vocab_growth reports the vocabulary size at
+VOCAB_GROWTH_CHECKPOINTS = (16, 64, 256, 1024)
+
+
+def vocab_growth(df: DataFrame) -> DataFrame:
     """Heaps'-law vocabulary growth curve: distinct token types seen
-    within the first k documents (by ``key_col`` order) for each
-    checkpoint k — the curve that says whether a corpus is still
-    contributing new vocabulary or has gone redundant (the empirical
-    V ∝ N^beta check papers run before scaling a crawl).
+    within the first k documents (doc_id <= k) for each checkpoint k
+    in VOCAB_GROWTH_CHECKPOINTS — the curve that says whether a corpus
+    is still contributing new vocabulary or has gone redundant (the
+    empirical V ∝ N^beta check papers run before scaling a crawl).
 
     One partial-agg'd min: each token's FIRST document (min key), a
-    vocab-sized table; checkpoints then join as a broadcast |ks|-row
-    frame and reduce to |ks| counters. The corpus is tokenized once;
+    vocab-sized table; the checkpoints then join as a broadcast frame
+    of a few rows and reduce to one counter each. The corpus is tokenized once;
     nothing corpus-sized crosses a second shuffle. Scales."""
-    first = (df.select(F.col(key_col).alias("_k"),
-                       F.explode(tokens_expr(F.col(text_col))).alias("w"))
+    first = (df.select(F.col("doc_id").alias("_k"),
+                       F.explode(tokens_expr(F.col("text"))).alias("w"))
              .groupBy("w")
              .agg(F.min("_k").alias("_first")))
     sess = df.sparkSession
-    kdf = sess.createDataFrame([(int(k),) for k in checkpoints],
+    kdf = sess.createDataFrame([(k,) for k in VOCAB_GROWTH_CHECKPOINTS],
                                "k_docs long")
     return (first.crossJoin(F.broadcast(kdf))
             .filter(F.col("_first") <= F.col("k_docs"))
@@ -1511,20 +1494,19 @@ def vocab_growth(df: DataFrame, text_col: str = "text",
 
 
 def dedup_report(kept: DataFrame, meta: DataFrame,
-                 key_col: str = "doc_id",
-                 group_col: str = "source") -> DataFrame:
+                 key_col: str = "doc_id") -> DataFrame:
     """Per-source dedup attrition report over keep_best_per_cluster
     output (``kept``: key, kept bool): docs in, docs kept, docs
     dropped, and the token mass kept/dropped — the table a corpus
     owner reads after a dedup pass to see which sources were mostly
-    boilerplate. ``meta`` supplies (key_col, group_col, text).
+    boilerplate. ``meta`` supplies (key_col, source, text).
 
     One broadcast-or-shuffle equi-join on the doc key plus one
     grouped aggregate (all sums partial-agg'd). Scales."""
-    j = (meta.select(F.col(key_col).alias("key"), group_col,
+    j = (meta.select(F.col(key_col).alias("key"), "source",
                      token_count(F.col("text")).alias("_tok"))
          .join(kept.select("key", "kept"), "key"))
-    return (j.groupBy(group_col)
+    return (j.groupBy("source")
             .agg(F.count("*").cast("long").alias("docs_in"),
                  F.sum(F.when(F.col("kept"), 1).otherwise(0))
                  .cast("long").alias("docs_kept"),
@@ -1536,9 +1518,7 @@ def dedup_report(kept: DataFrame, meta: DataFrame,
                  .cast("long").alias("tokens_dropped")))
 
 
-def bigram_lm_score(df: DataFrame, text_col: str = "text",
-                    key_col: str = "doc_id",
-                    alpha: float = 0.5) -> DataFrame:
+def bigram_lm_score(df: DataFrame) -> DataFrame:
     """Per-document mean conditional log-probability under the
     corpus's OWN add-alpha-smoothed bigram model — the next step up
     from the unigram lm_quality_score toward the KenLM perplexity
@@ -1556,8 +1536,8 @@ def bigram_lm_score(df: DataFrame, text_col: str = "text",
     pairs + a grouped mean. alpha=0.5 is binary-exact so the smoothing
     adds no cross-engine float noise; the mean is rounded to 4 (float
     sums run in partition order). Docs with <2 tokens score 0.0."""
-    t = F.col(text_col)
-    pairs = cached(df.select(F.col(key_col),
+    t = F.col("text")
+    pairs = cached(df.select(F.col("doc_id"),
                              F.explode(ngrams_all(t, 2)).alias("bg")))
     big = cached(pairs.groupBy("bg")
                  .agg(F.count("*").cast("long").alias("c12")))
@@ -1569,15 +1549,15 @@ def bigram_lm_score(df: DataFrame, text_col: str = "text",
              .join(w1s, "_w1")
              .crossJoin(F.broadcast(v))
              .select("bg",
-                     F.log2((F.col("c12") + F.lit(float(alpha)))
-                            / (F.col("c1") + F.lit(float(alpha))
+                     F.log2((F.col("c12") + F.lit(0.5))
+                            / (F.col("c1") + F.lit(0.5)
                                * F.col("_v"))).alias("_lp")))
     scored = (pairs.join(model, "bg")
-              .groupBy(key_col)
+              .groupBy("doc_id")
               .agg(F.count("*").cast("long").alias("n_pairs"),
                    F.round(F.avg("_lp"), 4).alias("bigram_lp")))
-    return (df.select(key_col).join(scored, key_col, "left")
-            .select(key_col,
+    return (df.select("doc_id").join(scored, "doc_id", "left")
+            .select("doc_id",
                     F.coalesce("n_pairs", F.lit(0)).alias("n_pairs"),
                     F.coalesce("bigram_lp", F.lit(0.0))
                     .alias("bigram_lp")))
@@ -1586,8 +1566,7 @@ def bigram_lm_score(df: DataFrame, text_col: str = "text",
 # ---------------------------------------------------------------------------
 # Corpus-cardinality + encoding-health operators (round 5, session 4)
 # ---------------------------------------------------------------------------
-def kmv_distinct(df: DataFrame, text_col: str = "text",
-                 group_col: str = "source", k: int = 128) -> DataFrame:
+def kmv_distinct(df: DataFrame, k: int = 128) -> DataFrame:
     """Per-group distinct-token cardinality via a K-Minimum-Values
     sketch (Bar-Yossef et al. 2002): hash every distinct token to a
     uniform 60-bit value, keep the k smallest per group, estimate
@@ -1602,8 +1581,8 @@ def kmv_distinct(df: DataFrame, text_col: str = "text",
     aggregate, no extra scan) and is returned beside the estimate as
     the accuracy exhibit; drop it at 100 TB if only the sketch is
     wanted. 2^60 as a double literal is exact."""
-    toks = (df.select(F.col(group_col).alias("grp"),
-                      F.explode(tokens_expr(F.col(text_col))).alias("w"))
+    toks = (df.select(F.col("source").alias("grp"),
+                      F.explode(tokens_expr(F.col("text"))).alias("w"))
             .distinct())
     hashed = toks.select("grp", _hash60(F.col("w")).alias("h"))
     wk = Window.partitionBy("grp").orderBy("h")
@@ -1617,13 +1596,12 @@ def kmv_distinct(df: DataFrame, text_col: str = "text",
                  F.col("n_exact").cast("double")) \
            .otherwise(F.round(F.lit(float(k - 1)) * two60
                               / F.col("_hk").cast("double"), 2))
-    return (agg.select(F.col("grp").alias(group_col), "n_exact",
+    return (agg.select(F.col("grp").alias("source"), "n_exact",
                        est.alias("kmv_est"))
             .withColumn("kmv_k", F.lit(k).cast("long")))
 
 
-def zipf_slope(df: DataFrame, text_col: str = "text",
-               group_col: str = "source", top: int = 200) -> DataFrame:
+def zipf_slope(df: DataFrame, top: int = 200) -> DataFrame:
     """Per-group Zipf-law fit: the least-squares slope of
     ln(count) ~ ln(rank) over the group's top-N token types. Natural
     web text sits near -1; a source whose slope is far shallower
@@ -1637,8 +1615,8 @@ def zipf_slope(df: DataFrame, text_col: str = "text",
     group from the window, so the final agg reuses the exchange.
     Rounded to 4: the two engines sum <=N doubles in different
     orders, which perturbs at ~1e-13 relative."""
-    counts = (df.select(F.col(group_col).alias("grp"),
-                        F.explode(tokens_expr(F.col(text_col))).alias("w"))
+    counts = (df.select(F.col("source").alias("grp"),
+                        F.explode(tokens_expr(F.col("text"))).alias("w"))
               .groupBy("grp", "w")
               .agg(F.count("*").cast("long").alias("c")))
     wk = Window.partitionBy("grp").orderBy(F.desc("c"), F.asc("w"))
@@ -1650,11 +1628,10 @@ def zipf_slope(df: DataFrame, text_col: str = "text",
             .agg(F.count("*").cast("long").alias("n_types"),
                  F.round(F.covar_pop(x, y) / F.var_pop(x), 4)
                  .alias("zipf_slope"))
-            .withColumnRenamed("grp", group_col))
+            .withColumnRenamed("grp", "source"))
 
 
-def utf8_stats(df: DataFrame, text_col: str = "text",
-               key_col: str = "doc_id") -> DataFrame:
+def utf8_stats(df: DataFrame) -> DataFrame:
     """Per-document encoding-health profile: byte/char counts, the
     UTF-8 width histogram, ASCII ratio, and a control-character
     count — the mojibake / binary-garbage detector every crawled
@@ -1669,7 +1646,7 @@ def utf8_stats(df: DataFrame, text_col: str = "text",
     arithmetic, no float drift. Both engines count code points (not
     UTF-16 units) for length(), so the identities hold. Narrow
     projection, no shuffle, whole-stage codegen."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     n_bytes = F.octet_length(t).cast("long")
     n_chars = F.length(t).cast("long")
     n_ascii = F.regexp_count(t, F.lit(r"[\x00-\x7f]")).cast("long")
@@ -1680,7 +1657,7 @@ def utf8_stats(df: DataFrame, text_col: str = "text",
         t, F.lit(r"[\x00-\x08\x0b\x0c\x0e-\x1f]")).cast("long")
     n_repl = F.regexp_count(t, F.lit("�")).cast("long")
     return df.select(
-        F.col(key_col),
+        F.col("doc_id"),
         n_bytes.alias("n_bytes"), n_chars.alias("n_chars"),
         n_ascii.alias("n_ascii"), n_2b.alias("n_2byte"),
         n_3b.alias("n_3byte"), n_4b.alias("n_4byte"),
@@ -1690,8 +1667,7 @@ def utf8_stats(df: DataFrame, text_col: str = "text",
         n_ctrl.alias("n_ctrl"), n_repl.alias("n_replacement"))
 
 
-def source_reputation(df: DataFrame, text_col: str = "text",
-                      group_col: str = "source") -> DataFrame:
+def source_reputation(df: DataFrame) -> DataFrame:
     """Domain-level reputation filter (the FineWeb/C4 move of scoring
     the SITE, not just the page): mean per-doc quality_score per
     source, compared against the corpus-wide mean; a source below the
@@ -1704,14 +1680,14 @@ def source_reputation(df: DataFrame, text_col: str = "text",
     and no second corpus scan) and joins back as a 1-row broadcast.
     The group aggregate is map-side combined; at 100 TB the shuffle
     carries |sources| rows."""
-    q = quality_score(F.col(text_col))
-    per = (df.select(F.col(group_col).alias("grp"), q.alias("_q"))
+    q = quality_score(F.col("text"))
+    per = (df.select(F.col("source").alias("grp"), q.alias("_q"))
            .groupBy("grp")
            .agg(F.count("*").cast("long").alias("n_docs"),
                 F.sum("_q").alias("_qsum")))
     glob = per.agg((F.sum("_qsum") / F.sum("n_docs")).alias("_gmean"))
     return (per.crossJoin(F.broadcast(glob))
-            .select(F.col("grp").alias(group_col), "n_docs",
+            .select(F.col("grp").alias("source"), "n_docs",
                     F.round(F.col("_qsum") / F.col("n_docs"), 4)
                     .alias("src_quality"),
                     F.round(F.col("_gmean"), 4).alias("corpus_quality"),
@@ -1719,8 +1695,7 @@ def source_reputation(df: DataFrame, text_col: str = "text",
                     .alias("low_rep")))
 
 
-def line_dedup(df: DataFrame, text_col: str = "text",
-               key_col: str = "doc_id", line_tokens: int = 2) -> DataFrame:
+def line_dedup(df: DataFrame, line_tokens: int = 2) -> DataFrame:
     """WITHIN-document repeated-line removal (the C4 move of dropping
     duplicated lines inside a page — nav bars, cookie banners, footer
     text repeated mid-page) — the per-doc complement of the
@@ -1733,17 +1708,16 @@ def line_dedup(df: DataFrame, text_col: str = "text",
     projection: array_distinct preserves first-occurrence order in
     Spark, so there is NO explode, NO window, NO shuffle — a 100 TB
     corpus runs this entirely inside whole-stage codegen."""
-    lines = _token_chunks(F.col(text_col), line_tokens)
+    lines = _token_chunks(F.col("text"), line_tokens)
     uniq = F.array_distinct(lines)
     return df.select(
-        F.col(key_col),
+        F.col("doc_id"),
         F.size(lines).cast("long").alias("n_lines"),
         F.size(uniq).cast("long").alias("n_kept"),
         F.array_join(uniq, " ").alias("clean_text"))
 
 
-def vocab_prune_stats(df: DataFrame, k: int = 16, text_col: str = "text",
-                      key_col: str = "doc_id") -> DataFrame:
+def vocab_prune_stats(df: DataFrame, k: int = 16) -> DataFrame:
     """Fixed-vocab UNK analysis: prune the vocabulary to the top-k
     types (count desc, token asc — a total order), then report per
     document how many token occurrences fall outside it — the
@@ -1755,18 +1729,18 @@ def vocab_prune_stats(df: DataFrame, k: int = 16, text_col: str = "text",
     BROADCAST left join of the exploded corpus against the k-row head
     (never a shuffle join: the corpus side stays where it is), then a
     per-doc re-aggregate keyed by the doc id."""
-    toks = df.select(F.col(key_col),
-                     F.explode(tokens_expr(F.col(text_col))).alias("w"))
+    toks = df.select(F.col("doc_id"),
+                     F.explode(tokens_expr(F.col("text"))).alias("w"))
     head = (toks.groupBy("w").agg(F.count("*").alias("c"))
             .orderBy(F.desc("c"), F.asc("w")).limit(k)
             .select("w", F.lit(1).alias("_in")))
     scored = (toks.join(F.broadcast(head), "w", "left")
-              .groupBy(key_col)
+              .groupBy("doc_id")
               .agg(F.count("*").cast("long").alias("n_tokens"),
                    F.sum(F.when(F.col("_in").isNull(), 1).otherwise(0))
                    .cast("long").alias("n_unk")))
-    return (df.select(key_col).join(scored, key_col, "left")
-            .select(F.col(key_col),
+    return (df.select("doc_id").join(scored, "doc_id", "left")
+            .select(F.col("doc_id"),
                     F.coalesce("n_tokens", F.lit(0)).alias("n_tokens"),
                     F.coalesce("n_unk", F.lit(0)).alias("n_unk"),
                     F.round(F.coalesce("n_unk", F.lit(0)).cast("double")
@@ -1776,9 +1750,7 @@ def vocab_prune_stats(df: DataFrame, k: int = 16, text_col: str = "text",
 
 
 def semantic_dedup(df: DataFrame, threshold: float = 0.5,
-                   vec_col: str = "embedding", key_col: str = "vec_id",
-                   n_planes: int = 4, seed: int = 42,
-                   dim: int | None = None) -> DataFrame:
+                   n_planes: int = 4) -> DataFrame:
     """SemDeDup-style embedding-level dedup VERDICT per vector: cluster
     by the deterministic splitmix64 LSH bucket (the same hyperplanes
     the ANN path replays in SQL), and within a cluster drop any vector
@@ -1798,21 +1770,19 @@ def semantic_dedup(df: DataFrame, threshold: float = 0.5,
     BUCKET — never cartesian — and its cosine verify); the verdict is
     a left join against it. At 100 TB the bucket join is the only
     corpus-wide exchange."""
-    dim = _embedding_dim(df, vec_col, dim)
-    drops = (embedding_near_dups(df, threshold, vec_col, key_col, n_planes,
-                                 seed, dim=dim)
-             .select(F.col("id_b").alias(key_col)).distinct()
+    dim = _embedding_dim(df)
+    drops = (embedding_near_dups(df, threshold, n_planes, dim=dim)
+             .select(F.col("id_b").alias("vec_id")).distinct()
              .withColumn("_drop", F.lit(1)))
-    return (df.select(F.col(key_col),
-                      lsh_bucket(F.col(vec_col), dim, n_planes, seed)
+    return (df.select(F.col("vec_id"),
+                      lsh_bucket(F.col("embedding"), dim, n_planes)
                       .alias("cluster"))
-            .join(drops, key_col, "left")
-            .select(F.col(key_col), "cluster",
+            .join(drops, "vec_id", "left")
+            .select(F.col("vec_id"), "cluster",
                     F.col("_drop").isNull().alias("kept")))
 
 
-def cdc_chunks(df: DataFrame, modulus: int = 8, text_col: str = "text",
-               key_col: str = "doc_id") -> DataFrame:
+def cdc_chunks(df: DataFrame, modulus: int = 8) -> DataFrame:
     """Content-defined chunking (the rsync/LBFS/casync storage-dedup
     primitive, token-level): a token OPENS a new chunk when
     md5(token) % modulus == 0, so chunk boundaries depend only on
@@ -1832,15 +1802,15 @@ def cdc_chunks(df: DataFrame, modulus: int = 8, text_col: str = "text",
     (no corpus-wide key). Production rolling hashes (gear/buzhash)
     are cheaper per byte; md5-per-token is chosen because both
     engines replay it bit-for-bit (the simhash/KMV precedent)."""
-    toks = tokens_expr(F.col(text_col))
-    ex = (df.select(F.col(key_col),
+    toks = tokens_expr(F.col("text"))
+    ex = (df.select(F.col("doc_id"),
                     F.posexplode(toks).alias("pos", "w"))
           .withColumn("_flag", (_hash60(F.col("w")) % modulus == 0)
                       .cast("int")))
-    wc = (Window.partitionBy(key_col).orderBy("pos")
+    wc = (Window.partitionBy("doc_id").orderBy("pos")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     chunked = ex.withColumn("chunk_idx", F.sum("_flag").over(wc))
-    return (chunked.groupBy(key_col, "chunk_idx")
+    return (chunked.groupBy("doc_id", "chunk_idx")
             .agg(F.count("*").cast("long").alias("n_tokens"),
                  F.md5(F.concat_ws(
                      " ", F.transform(F.array_sort(F.collect_list(
@@ -1849,8 +1819,8 @@ def cdc_chunks(df: DataFrame, modulus: int = 8, text_col: str = "text",
             .withColumn("chunk_idx", F.col("chunk_idx").cast("long")))
 
 
-def cms_frequencies(df: DataFrame, depth: int = 4, width: int = 64,
-                    text_col: str = "text") -> DataFrame:
+def cms_frequencies(df: DataFrame, depth: int = 4,
+                    width: int = 64) -> DataFrame:
     """Count-Min sketch frequency estimation (Cormode-Muthukrishnan),
     verified against exact counts: a depth x width counter matrix
     where row j buckets tokens by md5(j:token); a token's estimate is
@@ -1873,7 +1843,7 @@ def cms_frequencies(df: DataFrame, depth: int = 4, width: int = 64,
         (_hash60(F.concat_ws(":", F.lit(str(j)), F.col("w"))) % width)
         .alias(f"b{j}")
         for j in range(depth)])
-    vocab = (df.select(F.explode(tokens_expr(F.col(text_col))).alias("w"))
+    vocab = (df.select(F.explode(tokens_expr(F.col("text"))).alias("w"))
              .groupBy("w").agg(F.count("*").cast("long").alias("exact")))
     vb = (vocab.select("w", "exact",
                        F.posexplode(buckets).alias("row", "bucket")))
@@ -1888,8 +1858,8 @@ def cms_frequencies(df: DataFrame, depth: int = 4, width: int = 64,
 
 
 @cache_scope()
-def bpe_learn(df: DataFrame, n_merges: int = 8,
-              text_col: str = "text") -> list[tuple[int, str, str, int]]:
+def bpe_learn(df: DataFrame,
+              n_merges: int = 8) -> list[tuple[int, str, str, int]]:
     """Learn the top-N byte-pair-encoding merges from the corpus —
     the tokenizer-training step of an LLM data pipeline (Sennrich et
     al. 2016). Classic char-level BPE over the WORD FREQUENCY table:
@@ -1912,7 +1882,7 @@ def bpe_learn(df: DataFrame, n_merges: int = 8,
     # child materialized, so every merge re-ran the corpus scan +
     # word-count shuffle — the ADVICE-flagged contradiction of the
     # 'corpus is scanned exactly once' contract).
-    words = cached(df.select(F.explode(tokens_expr(F.col(text_col))).alias("w"))
+    words = cached(df.select(F.explode(tokens_expr(F.col("text"))).alias("w"))
                    .groupBy("w").agg(F.count("*").cast("long").alias("c")))
     chars = F.filter(F.split(F.col("w"), ""), lambda s: s != "")
     seqs = cached(words.select(
@@ -1957,9 +1927,7 @@ def bpe_learn(df: DataFrame, n_merges: int = 8,
     return merges
 
 
-def minhash_accuracy(df: DataFrame, text_col: str = "text",
-                     key_col: str = "doc_id", num_perm: int = 8,
-                     shingle_n: int = 2,
+def minhash_accuracy(df: DataFrame, num_perm: int = 8,
                      min_jaccard: float = 0.1) -> DataFrame:
     """MinHash sketch-accuracy audit (the third of the sketch trilogy,
     after KMV cardinality and CMS frequency): for every pair above
@@ -1975,27 +1943,27 @@ def minhash_accuracy(df: DataFrame, text_col: str = "text",
     sample. Signatures and shingle sets compute once each; est/exact
     arithmetic is per-pair expressions; est uses /num_perm (a power of
     two) so the division is float-exact in both engines."""
-    sig = minhash_signature(df, text_col, key_col, num_perm, shingle_n)
-    sh = df.select(F.col(key_col),
-                   F.array_distinct(word_shingles(F.col(text_col),
-                                                  shingle_n)).alias("sh")) \
+    sig = minhash_signature(df, num_perm)
+    sh = df.select(F.col("doc_id"),
+                   F.array_distinct(word_shingles(F.col("text"), 2))
+                   .alias("sh")) \
            .filter(F.size("sh") > 0)
     # persisted: the all-pairs self-join references base on BOTH sides;
     # unpersisted, the signature aggregate and the shingle arrays are
     # each computed twice. The frame is |subset| rows (the caller caps
     # the input), so the cache is audit-sized. The caller's
     # cache_scope releases it.
-    base = cached(sig.join(sh, key_col))
+    base = cached(sig.join(sh, "doc_id"))
     a = base.select(*[F.col(c).alias(f"a_{c}") for c in base.columns])
     b = base.select(*[F.col(c).alias(f"b_{c}") for c in base.columns])
-    pairs = a.join(b, F.col(f"a_{key_col}") < F.col(f"b_{key_col}"))
+    pairs = a.join(b, F.col("a_doc_id") < F.col("b_doc_id"))
     eq = sum(F.when(F.col(f"a_mh{i}") == F.col(f"b_mh{i}"), 1).otherwise(0)
              for i in range(num_perm))
     inter = F.size(F.array_intersect("a_sh", "b_sh"))
     union = F.size("a_sh") + F.size("b_sh") - inter
     exact = inter.cast("double") / union.cast("double")
-    return (pairs.select(F.col(f"a_{key_col}").alias("id_a"),
-                         F.col(f"b_{key_col}").alias("id_b"),
+    return (pairs.select(F.col("a_doc_id").alias("id_a"),
+                         F.col("b_doc_id").alias("id_b"),
                          F.round(eq.cast("double") / num_perm, 4)
                          .alias("est_jaccard"),
                          F.round(exact, 4).alias("exact_jaccard"))

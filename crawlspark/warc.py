@@ -42,25 +42,23 @@ CHUNK_DOCS = 32
 PARSED_SCHEMA = ("rec_id long, content_length long, payload_md5 string")
 
 
-def build_warc_chunks(df: DataFrame, text_col: str = "text",
-                      key_col: str = "doc_id",
-                      chunk_docs: int = CHUNK_DOCS) -> DataFrame:
-    """(chunk_id, blob): concatenated WARC/1.0 records, chunk_docs
+def build_warc_chunks(df: DataFrame) -> DataFrame:
+    """(chunk_id, blob): concatenated WARC/1.0 records, CHUNK_DOCS
     records per blob, built entirely JVM-side. Content-Length is the
     PAYLOAD BYTE count (octet_length — not the char count; the two
     diverge on any multibyte text). Records within a blob are ordered
     by key so the blob bytes are deterministic at any parallelism."""
-    t = F.col(text_col)
+    t = F.col("text")
     rec = F.concat(
         F.lit("WARC/1.0\r\nWARC-Type: response\r\nWARC-Record-ID: "),
-        F.col(key_col).cast("string"),
+        F.col("doc_id").cast("string"),
         F.lit("\r\nContent-Length: "),
         F.octet_length(t).cast("string"),
         F.lit("\r\n\r\n"), t, F.lit("\r\n\r\n"))
     return (df.filter(t.isNotNull())
-            .select((F.col(key_col) / chunk_docs).cast("long")
+            .select((F.col("doc_id") / CHUNK_DOCS).cast("long")
                     .alias("chunk_id"),
-                    F.struct(F.col(key_col).alias("k"),
+                    F.struct(F.col("doc_id").alias("k"),
                              rec.alias("rec")).alias("s"))
             .groupBy("chunk_id")
             .agg(F.array_join(F.transform(F.array_sort(

@@ -270,8 +270,7 @@ class TestSimhashHotBuckets:
             [("zz1", base + " qq"),   # hamming 2 from the group (near-dup)
              ("zz2", "hoan toan khac van ban nay day")],
             "url string, text string")
-        classes, rep_pairs = simhash_dup_classes(
-            dup.unionByName(distinct), bands=4, max_hamming=3)
+        classes, rep_pairs = simhash_dup_classes(dup.unionByName(distinct))
 
         cl = classes.groupBy("rep").agg(
             F.count("*").alias("n"), F.max("group_size").alias("gs")).collect()

@@ -1,6 +1,7 @@
 """Codec round-trips for the self-contained multimodal decoders:
-PNG (encode/decode incl. non-zero scanline filters), PPM, PCM16 WAV,
-the CSV1 video container, and the resize kernel."""
+PNG (encode/decode incl. non-zero scanline filters), PCM16 WAV, the
+CSV1 video container, baseline JPEG and the resize kernel; any other
+mime raises at the decode seam."""
 
 import struct
 import zlib
@@ -64,11 +65,6 @@ class TestPng:
 
 
 class TestOtherCodecs:
-    def test_ppm_roundtrip(self):
-        rng = np.random.default_rng(10)
-        px = rng.integers(0, 256, (7, 11, 3), dtype=np.uint8)
-        assert np.array_equal(M.decode_ppm(M.encode_ppm(px)), px)
-
     def test_wav_roundtrip(self):
         t = np.arange(4000)
         samples = (12000 * np.sin(2 * np.pi * 440 * t / 16000)).astype(np.int16)
@@ -86,6 +82,19 @@ class TestOtherCodecs:
                                          frame_stride=4)
         assert n == 3  # frames 0, 4, 8
         assert len(feat) == M.FEATURE_DIM
+
+    @pytest.mark.parametrize("kind,mime", [
+        ("image", "image/x-portable-pixmap"),
+        ("image", "image/gif"),
+        ("video", "video/mp4"),
+    ])
+    def test_mimes_without_a_codec_raise(self, kind, mime):
+        """The catalog writes PNG, JPEG, WAV and CSV1 only; any other
+        mime raises at the decode seam instead of decoding."""
+        px = np.zeros((2, 2, 3), dtype=np.uint8)
+        payload = b"P6 2 2 255\n" + px.tobytes()
+        with pytest.raises(NotImplementedError):
+            M.decode_and_featurize(payload, kind, mime)
 
     def test_resize_nearest(self):
         px = np.arange(64, dtype=np.uint8).reshape(8, 8)

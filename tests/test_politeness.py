@@ -195,81 +195,3 @@ Disallow: /everything/
                for r in P.schedule(fr, robots, "2026-01-01").collect()}
         assert out == {"/private/jobs/1": "scheduled",
                        "/private/x": "disallowed", "/ok": "scheduled"}
-
-
-class TestTwoPhase:
-    """The mega-host mitigation (schedule(two_phase=True)): exact
-    equivalence with the single-window form, and bounded per-task sort
-    input for a host holding a huge backlog."""
-
-    def _robots(self, spark):
-        return spark.createDataFrame(
-            [("mega.vn", 1000, ["/private-"], 7),
-             ("small.vn", 3000, None, 100)],
-            "host string, crawl_delay_ms int, "
-            "disallow_prefixes array<string>, tokens_per_wave int")
-
-    def test_exact_equivalence_with_single_window(self, spark):
-        import random
-
-        rng = random.Random(7)
-        rows = []
-        for i in range(4000):                       # zipf-ish skew
-            host = "mega.vn" if i % 10 else "small.vn"
-            pref = "/private-" if rng.random() < 0.08 else "/jobs/"
-            rows.append((f"https://{host}{pref}{i}", host, "s", str(i),
-                         None, rng.randint(0, 1), rng.randint(0, 3),
-                         rng.randint(0, 9), rng.randint(0, 999),
-                         rng.random(), "pending", 0))
-        fr = _frontier(spark, rows).repartition(16)  # many source splits
-        robots = self._robots(spark)
-        one = politeness.schedule(fr, robots, "2026-01-01").collect()
-        two = politeness.schedule(fr, robots, "2026-01-01",
-                                  two_phase=True).collect()
-
-        def sched_set(res):
-            return {(r.url, r.slot, str(r.scheduled_ts)) for r in res
-                    if r.state == "scheduled"}
-
-        def state_sets(res):
-            out = {}
-            for r in res:
-                out.setdefault(r.state, set()).add(r.url)
-            return out
-
-        assert sched_set(one) == sched_set(two)
-        assert state_sets(one) == state_sets(two)
-        assert len(one) == len(two) == len(rows)
-
-    def test_mega_host_bounded_task_input(self, spark):
-        """1e6 pending rows on ONE host: phase 1 must split the sort
-        across source partitions (window keyed by spark_partition_id)
-        and phase 2 must see at most tokens x n_partitions survivors."""
-        n = 1_000_000
-        fr = (spark.range(n)
-              .select(F.concat(F.lit("https://mega.vn/jobs/"), F.col("id"))
-                      .alias("url"),
-                      F.lit("mega.vn").alias("host"), F.lit("s").alias("source"),
-                      F.col("id").cast("string").alias("id"),
-                      F.lit(None).cast("string").alias("last_updated_on"),
-                      F.lit(1).alias("depth"), F.lit(0).alias("wave"),
-                      F.lit(0).alias("page"),
-                      (F.col("id") % 100000).cast("int").alias("rank"),
-                      F.lit(0.0).alias("priority"),
-                      F.lit("pending").alias("state"), F.lit(0).alias("attempts"))
-              .repartition(32))
-        robots = self._robots(spark)
-        out = politeness.schedule(fr, robots, "2026-01-01", two_phase=True)
-        # the plan's phase-1 window partitions by SPARK_PARTITION_ID —
-        # that is the bounded-task-input guarantee (each sort task holds
-        # one source partition's share of the mega host, ~n/32 rows)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "SPARK_PARTITION_ID" in plan.upper()
-        agg = {r["state"]: r["n"] for r in
-               out.groupBy("state").agg(F.count("*").alias("n")).collect()}
-        assert agg["scheduled"] == 7                   # the budget
-        assert agg["deferred"] == n - 7
-        # FIFO head: rank asc, then url — rank 0 ids are 0,100000,...
-        top = {r.url for r in out.filter(F.col("state") == "scheduled")
-               .collect()}
-        assert "https://mega.vn/jobs/0" in top

@@ -1,5 +1,6 @@
 """E11 raw-projection: single-parse from_json compilation, per-path
-fallback, null/malformed tolerance."""
+form for array-index and conflicting paths, null/malformed
+tolerance."""
 
 import pandas as pd
 import pytest
@@ -13,7 +14,8 @@ from crawlspark.rawproj import (VIECLAM24H_API_MAPPING, _schema_from_mapping,
 def payloads(spark):
     rows = [
         '{"id": "1", "title": "T1", "employer_info": {"name": "Co"}, '
-        '"salary_from": 5000000, "rate_response": 0.42, "total_views": "77"}',
+        '"salary_from": 5000000, "rate_response": 0.42, "total_views": "77", '
+        '"tags": ["remote", "senior"]}',
         '{"id": "2", "title": "", "salary_from": "not-a-number"}',
         "{broken json",
         None,
@@ -31,11 +33,23 @@ MAPPING = {
 }
 
 
+# an array-index path has no from_json schema: the mapping projects
+# through the per-path get_json_object form
+INDEXED = {**MAPPING, "firstTag": ("$.tags[0]", "string")}
+
+
 class TestProjection:
     @pytest.mark.parametrize("single_parse", [True, False])
     def test_typed_pulls_and_tolerance(self, spark, payloads, single_parse):
-        out = project_api_items(payloads, "raw", MAPPING,
-                                single_parse=single_parse).collect()
+        """Both projection forms pull the same values: MAPPING compiles
+        to one from_json, INDEXED keeps the per-path form."""
+        mapping = MAPPING if single_parse else INDEXED
+        df = project_api_items(payloads, "raw", mapping)
+        if not single_parse:
+            plan = df._jdf.queryExecution().analyzed().toString()
+            assert "get_json_object" in plan
+            assert "from_json" not in plan
+        out = df.collect()
         r1 = next(r for r in out if r["id"] == "1")
         assert r1["companyName"] == "Co"
         assert r1["salaryFrom"] == 5000000
@@ -46,6 +60,9 @@ class TestProjection:
         assert r2["companyName"] is None     # absent -> NULL
         # broken json + NULL payload -> all-NULL rows, never an error
         assert sum(1 for r in out if r["id"] is None) == 2
+        if not single_parse:
+            assert r1["firstTag"] == "remote"
+            assert r2["firstTag"] is None
 
     def test_single_parse_plan_has_one_from_json(self, spark, payloads):
         # analyzed plan (the optimizer constant-folds LocalRelations):

@@ -40,7 +40,6 @@ REFERENCE_ONLY = {
     "extract.extract_jsonld_blobs":
         "oracle the extraction parity tests compare the audit blobs against",
     "textops.ngram_jaccard_for_pairs": "fallback for ngram_jaccard's broadcast",
-    "multimodal.encode_ppm": "test fixture: PPM image payloads",
     "multimodal.gen_media_pandas": "test fixture: media corpus",
     "rawproj.VIECLAM24H_API_MAPPING": "test fixture: raw API field map",
 }

@@ -1,52 +1,40 @@
-"""Static guard: every setting on the crawl path has a caller.
+"""Static guard: every setting in crawlspark/ has a caller.
 
-A defaulted parameter is a setting. On the functions a wave and the
-``crawl`` command run, and on the media codec path the
-``media_features`` entry runs (``SCOPE``), each one must be passed, by
-keyword or by position, at some call site outside ``tests/``: in the
-package or an entry script (``bench.py``, ``bench_extra.py``,
-``oracle_sweep.py``, ``__spark_entry__.py``, ``perfbench/*.py``). A
-setting that only its default ever reaches is a constant, and one that
-only tests set keeps a branch alive for them alone. Call sites are matched by function name (a
-class call counts for its ``__init__``; a method called on an object
-skips ``self``). A setting without such a caller fails this test unless
-``ALLOWED`` lists it with its reason.
+A defaulted parameter of a top-level function, or of a method of a
+top-level class, in ``crawlspark/*.py`` is a setting. Each one must be
+passed, by keyword or by position, at some call site outside
+``tests/``: in the package or an entry script (``ENTRY_SCRIPTS`` of
+``test_reachability``). A setting that only its default ever reaches is
+a constant, and one that only tests set keeps a branch alive for them
+alone. The reference twins that ``test_reachability.REFERENCE_ONLY``
+keeps for the tests are left out. Call sites are matched by function
+name (a class call counts for its ``__init__``; a method called on an
+object skips ``self``). A setting without such a caller fails this test
+unless ``ALLOWED`` lists it with its reason.
 """
 
 import ast
 from pathlib import Path
 
+from tests.test_reachability import ENTRY_SCRIPTS, REFERENCE_ONLY
+
 ROOT = Path(__file__).resolve().parents[1]
 PKG = ROOT / "crawlspark"
-SOURCES = (sorted(PKG.glob("*.py"))
-           + [ROOT / p for p in ("bench.py", "bench_extra.py",
-                                 "oracle_sweep.py", "__spark_entry__.py")]
-           + sorted((ROOT / "perfbench").glob("*.py")))
-
-# module -> crawl-path and media-path functions; a class stands for all
-# its methods
-SCOPE = {
-    "driver": ["WaveDriver"],
-    "tables": ["SnapshotStore"],
-    "politeness": ["schedule"],
-    "dedup": ["salt_of", "seen_live", "classify", "expires_at_expr",
-              "seen_delta", "bloom_params", "build_blooms",
-              "bloom_might_contain", "classify_with_bloom"],
-    "extract": ["extract_pages"],
-    "frontier": ["priority_expr"],
-    "jpegc": ["encode_jpeg", "decode_jpeg"],
-    "multimodal": ["decode_and_featurize", "extract_features"],
-}
+SOURCES = sorted(PKG.glob("*.py")) + [ROOT / p for p in ENTRY_SCRIPTS]
 
 # module.function.parameter -> why it stays although no caller sets it
 ALLOWED = {
-    "politeness.schedule.two_phase":
-        "mega-host scheduling path, chosen once a benchmark workload "
-        "has a mega-host backlog",
     "dedup.classify.broadcast":
         "shuffle-join escape hatch, to fold into a bounded-broadcast helper",
     "tables.SnapshotStore.read.snapshot_id": "snapshot time travel",
     "tables.SnapshotStore.read_split.snapshot_id": "snapshot time travel",
+    "textops.pack_sequences.num_partitions":
+        "tests vary it to pin partition invariance",
+    "textops.grouped_ntile.num_partitions":
+        "tests vary it to pin partition invariance",
+    "textops.shard_plan.num_partitions":
+        "tests vary it to pin partition invariance",
+    "__main__.main.argv": "tests drive the CLI in-process",
 }
 
 
@@ -62,22 +50,23 @@ def _defaulted(fn):
 
 
 def _scoped():
-    """qualified name -> (call name, skips self, defaulted parameters)."""
+    """qualified name -> (call name, skips self, defaulted parameters)
+    for every top-level function and method of a top-level class."""
     out = {}
-    for mod, names in SCOPE.items():
-        tree = ast.parse((PKG / f"{mod}.py").read_text())
-        top = {n.name: n for n in tree.body
-               if isinstance(n, (ast.FunctionDef, ast.ClassDef))}
-        for name in names:
-            node = top[name]
-            if isinstance(node, ast.FunctionDef):
-                out[f"{mod}.{name}"] = (name, False, _defaulted(node))
+    for path in sorted(PKG.glob("*.py")):
+        mod = path.stem
+        for node in ast.parse(path.read_text()).body:
+            if f"{mod}.{getattr(node, 'name', '')}" in REFERENCE_ONLY:
                 continue
-            for m in node.body:
-                if isinstance(m, ast.FunctionDef):
-                    call = name if m.name == "__init__" else m.name
-                    out[f"{mod}.{name}.{m.name}"] = (call, True,
-                                                     _defaulted(m))
+            if isinstance(node, ast.FunctionDef):
+                out[f"{mod}.{node.name}"] = (node.name, False,
+                                             _defaulted(node))
+            elif isinstance(node, ast.ClassDef):
+                for m in node.body:
+                    if isinstance(m, ast.FunctionDef):
+                        call = node.name if m.name == "__init__" else m.name
+                        out[f"{mod}.{node.name}.{m.name}"] = (
+                            call, True, _defaulted(m))
     return out
 
 

@@ -212,13 +212,13 @@ class TestEmbeddingNearDups:
 
     def test_empty_frame_needs_dim(self, spark):
         """With no rows there is no dimension to infer: both LSH
-        operators say so with a ValueError, and run once dim= is
-        given."""
+        operators say so with a ValueError; embedding_near_dups runs
+        once dim= is given."""
         empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
         for op in (X.embedding_near_dups, X.semantic_dedup):
-            with pytest.raises(ValueError, match="pass dim="):
+            with pytest.raises(ValueError, match="cannot infer"):
                 op(empty)
-            assert op(empty, dim=8).count() == 0
+        assert X.embedding_near_dups(empty, dim=8).count() == 0
 
 
 class TestIVF:
@@ -269,7 +269,7 @@ class TestJaccardForms:
                 .select(F.col("a.doc_id").alias("id_a"),
                         F.col("b.doc_id").alias("id_b")).distinct())
         exp = {(r.id_a, r.id_b, r.jaccard) for r in
-               X.ngram_jaccard(docs, "text", "doc_id", 2, cand)
+               X.ngram_jaccard(docs, cand)
                .filter(F.col("jaccard") >= 0.3).collect()}
         assert got == exp and len(got) > 0
 
@@ -286,7 +286,7 @@ class TestJaccardForms:
         cand = spark.createDataFrame(pair_rows, "id_a long, id_b long")
         got = {(r.id_a, r.id_b, r.jaccard) for r in
                X.ngram_jaccard_for_pairs(docs, cand).collect()}
-        arr = X.ngram_jaccard(docs, "text", "doc_id", 2, cand).collect()
+        arr = X.ngram_jaccard(docs, cand).collect()
         exp_pos = {(r.id_a, r.id_b, r.jaccard) for r in arr if r.jaccard > 0}
         exp_zero = {(r.id_a, r.id_b) for r in arr if r.jaccard == 0}
         assert got == exp_pos
@@ -301,7 +301,7 @@ class TestJaccardForms:
         docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         got = {(r.id_a, r.id_b, r.jaccard) for r in
                X.minhash_lsh_pairs(docs).collect()}
-        sig = X.minhash_signature(docs, "text", "doc_id", 8, 2)
+        sig = X.minhash_signature(docs, 8, 2)
         bands, rpb = 4, 2
         bs = [F.struct(F.lit(b).alias("band"),
                        F.concat_ws("|", *[F.col(f"mh{b * rpb + r}")
@@ -316,7 +316,7 @@ class TestJaccardForms:
                 .select(F.col("a.doc_id").alias("id_a"),
                         F.col("b.doc_id").alias("id_b")).distinct())
         exp = {(r.id_a, r.id_b, r.jaccard) for r in
-               X.ngram_jaccard(docs, "text", "doc_id", 2, cand)
+               X.ngram_jaccard(docs, cand)
                .filter(F.col("jaccard") >= 0.5).collect()}
         assert got == exp and len(got) > 0
 
@@ -355,7 +355,7 @@ class TestCorpusHygiene:
         assert got[1][0] == 3          # the shared prefix ones
         assert got[2] == (0, False)
 
-    def test_decontaminate_size_gated_fallback(self, spark):
+    def test_decontaminate_size_gated_fallback(self, spark, monkeypatch):
         """r5 (VERDICT r4 §5): above the token bound the eval side must
         NOT broadcast — the join falls back to a shuffle join on the
         n-gram key. Pins (a) result equality between the two paths on
@@ -366,7 +366,8 @@ class TestCorpusHygiene:
         docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         ev = docs.filter(F.col("doc_id") % 97 == 0)
         bc = X.decontaminate(docs, ev, n=8)
-        shuf = X.decontaminate(docs, ev, n=8, broadcast_limit_tokens=0)
+        monkeypatch.setattr(X, "EVAL_BROADCAST_LIMIT_TOKENS", 0)
+        shuf = X.decontaminate(docs, ev, n=8)
         a = sorted(tuple(r) for r in bc.collect())
         b = sorted(tuple(r) for r in shuf.collect())
         assert a == b and len(a) > 100
@@ -670,14 +671,17 @@ class TestCorpusShapeOps:
                        ("b", 25, 42.0), ("b", 50, 42.0), ("b", 75, 42.0)]
 
     def test_vocab_coverage_counts(self, spark):
-        # counts: x:6, y:3, z:1 (total 10); ranks x=1,y=2,z=3
-        rows = [(1, "x x x y"), (2, "x x x y y z")]
+        # counts: x:6, y:3, then 18 singletons (total 27); ranks x=1,
+        # y=2, singletons by token: w00..w16, z
+        singles = " ".join(f"w{i:02d}" for i in range(17)) + " z"
+        rows = [(1, "x x x y"), (2, "x x x y y"), (3, singles)]
         df = spark.createDataFrame(rows, "doc_id long, text string")
         got = {r.k: (r.vocab_used, r.covered_tokens, r.coverage) for r in
-               X.vocab_coverage(df, ks=(1, 2, 16)).collect()}
-        assert got[1] == (1, 6, 0.6)
-        assert got[2] == (2, 9, 0.9)
-        assert got[16] == (3, 10, 1.0)
+               X.vocab_coverage(df).collect()}
+        assert X.VOCAB_COVERAGE_KS == (1, 16, 256, 4096)
+        assert got[1] == (1, 6, 0.222222)
+        assert got[16] == (16, 23, 0.851852)  # x, y + w00..w13
+        assert got[256] == got[4096] == (20, 27, 1.0)
 
     def test_shard_plan_shapes_and_parallelism_invariance(self, spark):
         df = spark.createDataFrame([(i,) for i in range(200)],
@@ -700,12 +704,15 @@ class TestCorpusShapeOps:
         assert len({(sh, pos) for _, sh, pos in a}) == 200
 
     def test_vocab_growth_first_occurrence(self, spark):
-        # doc 1 brings {a,b}; doc 2 repeats a; doc 3 brings {c}
-        rows = [(1, "a b a"), (2, "a a"), (3, "c a")]
+        # doc 1 brings {a,b}; doc 16 repeats a; doc 17 brings {c};
+        # doc 64 brings {d}; doc 300 brings {e}
+        rows = [(1, "a b a"), (16, "a a"), (17, "c a"), (64, "d b"),
+                (300, "e")]
         df = spark.createDataFrame(rows, "doc_id long, text string")
         got = {r.k_docs: r.vocab_size for r in
-               X.vocab_growth(df, checkpoints=(1, 2, 3)).collect()}
-        assert got == {1: 2, 2: 2, 3: 3}
+               X.vocab_growth(df).collect()}
+        assert X.VOCAB_GROWTH_CHECKPOINTS == (16, 64, 256, 1024)
+        assert got == {16: 2, 64: 4, 256: 4, 1024: 5}
 
     def test_dedup_report_token_mass(self, spark):
         kept = spark.createDataFrame(
