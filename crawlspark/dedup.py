@@ -168,14 +168,13 @@ def content_hash(col: Column) -> Column:
     return F.substring(F.sha2(col, 256), 1, 32)
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text",
-                key_col: str = "url") -> DataFrame:
-    """Content-hash exact dedup: keep the minimum-key row per content
+def exact_dedup(df: DataFrame) -> DataFrame:
+    """Content-hash exact dedup: keep the minimum-url row per text
     hash (deterministic winner), one hash-aggregate shuffle."""
-    h = content_hash(F.col(text_col)).alias("_chash")
-    winners = (df.select(h, F.col(key_col).alias("_k"))
-                 .groupBy("_chash").agg(F.min("_k").alias(key_col)))
-    return df.join(winners, key_col, "left_semi")
+    h = content_hash(F.col("text")).alias("_chash")
+    winners = (df.select(h, F.col("url").alias("_k"))
+                 .groupBy("_chash").agg(F.min("_k").alias("url")))
+    return df.join(winners, "url", "left_semi")
 
 
 # ---------------------------------------------------------------------------
@@ -397,36 +396,34 @@ def simhash64_expr(text_col) -> "F.Column":
     return F.aggregate(terms, F.lit(0).cast("long"), lambda a, x: a + x)
 
 
-def simhash64_frame(df: DataFrame, text_col: str = "text",
-                    key_col: str = "url") -> DataFrame:
-    """(key, sh) via simhash64_expr — a pure zero-shuffle projection,
-    so input multiplicity is preserved natively (every row hashes its
-    own text; no grouped collapse, no join-back). simhash64_py is the
-    cross-checked pure-Python twin."""
+def simhash64_frame(df: DataFrame, key_col: str = "url") -> DataFrame:
+    """(key, sh) with sh the simhash64_expr of the text column — a pure
+    zero-shuffle projection, so input multiplicity is preserved natively
+    (every row hashes its own text; no grouped collapse, no join-back).
+    simhash64_py is the cross-checked pure-Python twin."""
     return df.select(F.col(key_col).alias("key"),
-                     simhash64_expr(F.col(text_col)).alias("sh"))
+                     simhash64_expr(F.col("text")).alias("sh"))
 
 
-def simhash_near_dups(df: DataFrame, text_col: str = "text",
-                      key_col: str = "url", bands: int = 4,
-                      max_hamming: int = 3) -> DataFrame:
-    """Banded simhash near-dup pairs: split the 64-bit simhash into
-    `bands` 16-bit bands; candidate pairs share >=1 band (pigeonhole:
-    hamming<=3 over 4 bands guarantees one identical band); verify
-    hamming distance on the full hash. Returns (key_a, key_b, hamming).
+def simhash_near_dups(df: DataFrame) -> DataFrame:
+    """Banded simhash near-dup pairs over (url, text): split the 64-bit
+    simhash into 4 16-bit bands; candidate pairs share >=1 band
+    (pigeonhole: hamming<=3 over 4 bands guarantees one identical
+    band); verify hamming <= 3 on the full hash. Returns (key_a, key_b,
+    hamming).
 
     Scale: the groupBy(band, band_val) shuffle is the only wide op;
     intra-bucket pairing is bounded by bucket size (hot buckets can be
     additionally length-salted upstream if text duplication is extreme).
     """
-    base = (simhash64_frame(df, text_col, key_col)
-            .withColumnRenamed("key", "k"))
-    return _banded_pairs(base, bands, max_hamming)
+    base = simhash64_frame(df).withColumnRenamed("key", "k")
+    return _banded_pairs(base)
 
 
-def _banded_pairs(base: DataFrame, bands: int, max_hamming: int) -> DataFrame:
-    """Banded self-join over a (k, sh) frame -> (key_a, key_b, hamming)."""
-    band_width = 64 // bands
+def _banded_pairs(base: DataFrame) -> DataFrame:
+    """Banded self-join over a (k, sh) frame -> (key_a, key_b, hamming):
+    4 bands of 16 bits, verified at hamming <= 3."""
+    bands, band_width = 4, 16
     mask = (1 << band_width) - 1
     bands_df = base.select(
         "k", "sh",
@@ -447,7 +444,7 @@ def _banded_pairs(base: DataFrame, bands: int, max_hamming: int) -> DataFrame:
              .distinct())
     hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
     return (pairs.withColumn("hamming", hamming)
-                 .filter(F.col("hamming") <= max_hamming)
+                 .filter(F.col("hamming") <= 3)
                  .select("key_a", "key_b", "hamming"))
 
 
@@ -526,10 +523,10 @@ def dup_clusters(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     return labels.select("key", F.col("lbl").alias("cluster"))
 
 
-def simhash_dup_classes(df: DataFrame, text_col: str = "text",
-                        key_col: str = "url"
+def simhash_dup_classes(df: DataFrame, key_col: str = "url"
                         ) -> tuple[DataFrame, DataFrame]:
-    """D5 under EXTREME duplication — the hot-bucket form.
+    """D5 under EXTREME duplication — the hot-bucket form, over the
+    text column.
 
     simhash_near_dups emits every qualifying pair, which is inherently
     O(g^2) OUTPUT for a group of g byte-identical docs (10k identical
@@ -548,13 +545,13 @@ def simhash_dup_classes(df: DataFrame, text_col: str = "text",
         class representatives (4 bands, hamming <= 3), verified on the
         full 64-bit hash.
     """
-    base = simhash64_frame(df, text_col, key_col)
+    base = simhash64_frame(df, key_col)
     w = Window.partitionBy("sh")
     classes = (base.withColumn("rep", F.min("key").over(w))
                .withColumn("group_size", F.count("*").over(w)))
     reps = (classes.filter(F.col("key") == F.col("rep"))
             .select(F.col("key").alias("k"), "sh"))
-    rep_pairs = _banded_pairs(reps, bands=4, max_hamming=3)
+    rep_pairs = _banded_pairs(reps)
     return classes.select("key", "rep", "group_size"), rep_pairs
 
 

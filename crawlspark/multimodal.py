@@ -281,7 +281,7 @@ def extract_features(media: DataFrame) -> DataFrame:
             .mapInPandas(run, schema=FEATURE_SCHEMA))
 
 
-def gen_media_rows(n: int, seed: int = 42) -> list:
+def gen_media_rows(n: int) -> list:
     """Deterministic synthetic media table with REAL payloads: PNG
     images (gradient+noise), PCM16 WAV tones, CSV1 video clips.
 
@@ -294,7 +294,7 @@ def gen_media_rows(n: int, seed: int = 42) -> list:
     that is session-config-independent."""
     rows = []
     for i in range(n):
-        rng = np.random.default_rng(seed * 1_000_003 + i)
+        rng = np.random.default_rng(42 * 1_000_003 + i)
         kind = ("image", "audio", "video")[i % 3]
         if kind == "image":
             h, w = 24 + i % 3 * 8, 32 + i % 5 * 8
@@ -327,12 +327,12 @@ def gen_media_rows(n: int, seed: int = 42) -> list:
     return rows
 
 
-def gen_media_pandas(n: int, seed: int = 42) -> pd.DataFrame:
+def gen_media_pandas(n: int) -> pd.DataFrame:
     """Pandas view of gen_media_rows for local inspection. Do NOT feed
     this to createDataFrame: without Arrow the fallback path runs
     to_records(), which coerces nullable Int32 back to float64 and the
     schema verifier throws. Use gen_media_rows + MEDIA_SCHEMA."""
-    pdf = pd.DataFrame(gen_media_rows(n, seed),
+    pdf = pd.DataFrame(gen_media_rows(n),
                        columns=["media_id", "kind", "payload", "mime",
                                 "width", "height", "duration_ms"])
     for col in ("width", "height", "duration_ms"):

@@ -122,13 +122,11 @@ def schedule(frontier: DataFrame, robots: DataFrame, wave_start) -> DataFrame:
 # ---------------------------------------------------------------------------
 # robots.txt parsing (RFC 9309) — raw text -> the robots table
 # ---------------------------------------------------------------------------
-def parse_robots_txt(df: DataFrame, user_agent: str,
-                     txt_col: str = "robots_txt",
-                     host_col: str = "host",
-                     wave_ms: int = 3_600_000) -> DataFrame:
-    """Parse raw robots.txt bodies into the politeness robots table
-    (host, crawl_delay_ms, disallow_prefixes, allow_prefixes,
-    tokens_per_wave) — pure Column expressions, no UDF.
+def parse_robots_txt(df: DataFrame, user_agent: str) -> DataFrame:
+    """Parse raw robots.txt bodies (host, robots_txt) into the
+    politeness robots table (host, crawl_delay_ms, disallow_prefixes,
+    allow_prefixes, tokens_per_wave over a one-hour wave) — pure Column
+    expressions, no UDF.
 
     RFC 9309 semantics implemented:
     - lines split, comments (#...) stripped, keys case-insensitive;
@@ -149,8 +147,8 @@ def parse_robots_txt(df: DataFrame, user_agent: str,
     the scheduler applies (matching colly's permissive default).
     """
     ua = user_agent.lower()
-    lines = (df.select(host_col,
-                       F.posexplode(F.split(F.col(txt_col), "\n"))
+    lines = (df.select("host",
+                       F.posexplode(F.split(F.col("robots_txt"), "\n"))
                        .alias("_i", "_line"))
              .withColumn("_line",
                          F.trim(F.regexp_replace("_line", "#.*$", "")))
@@ -159,14 +157,14 @@ def parse_robots_txt(df: DataFrame, user_agent: str,
                  F.regexp_extract("_line", r"^([^:]+):", 1))))
              .withColumn("_val", F.trim(
                  F.regexp_extract("_line", r"^[^:]+:(.*)$", 1))))
-    w = Window.partitionBy(host_col).orderBy("_i")
+    w = Window.partitionBy("host").orderBy("_i")
     is_ua = (F.col("_key") == "user-agent").cast("int")
     starts = ((is_ua == 1)
               & (F.coalesce(F.lag(is_ua).over(w), F.lit(0)) == 0)).cast("int")
     grouped = lines.withColumn("_grp", F.sum(starts).over(
         w.rowsBetween(Window.unboundedPreceding, 0)))
 
-    gw = Window.partitionBy(host_col, "_grp")
+    gw = Window.partitionBy("host", "_grp")
     ua_val = F.when(is_ua == 1, F.lower(F.col("_val")))
     # a group applies when one of its UA lines names this crawler's
     # product token (equal or a non-empty prefix of it — the practical
@@ -176,11 +174,11 @@ def parse_robots_txt(df: DataFrame, user_agent: str,
                  .when(ua_val == "*", 1).otherwise(0))
     rules = (grouped.withColumn("_spec", F.max(line_spec).over(gw))
              .withColumn("_best", F.max(F.col("_spec")).over(
-                 Window.partitionBy(host_col)))
+                 Window.partitionBy("host")))
              .filter((F.col("_spec") == F.col("_best"))
                      & (F.col("_spec") > 0)))
 
-    out = (rules.groupBy(host_col).agg(
+    out = (rules.groupBy("host").agg(
         F.sort_array(F.collect_set(F.when(
             (F.col("_key") == "disallow") & (F.col("_val") != ""),
             F.col("_val")))).alias("disallow_prefixes"),
@@ -194,8 +192,8 @@ def parse_robots_txt(df: DataFrame, user_agent: str,
         F.coalesce((F.col("_delay_s") * 1000).cast("int"),
                    F.lit(DEFAULT_DELAY_MS))).drop("_delay_s")
     # hosts whose robots named no applicable group: permissive default
-    all_hosts = df.select(host_col).distinct()
-    out = (all_hosts.join(out, host_col, "left")
+    all_hosts = df.select("host").distinct()
+    out = (all_hosts.join(out, "host", "left")
            .withColumn("crawl_delay_ms",
                        F.coalesce("crawl_delay_ms", F.lit(DEFAULT_DELAY_MS)))
            .withColumn("disallow_prefixes",
@@ -206,7 +204,7 @@ def parse_robots_txt(df: DataFrame, user_agent: str,
                                   F.array().cast("array<string>"))))
     return out.withColumn(
         "tokens_per_wave",
-        (F.lit(wave_ms) / F.col("crawl_delay_ms")).cast("int"))
+        (F.lit(3_600_000) / F.col("crawl_delay_ms")).cast("int"))
 
 
 def robots_allows(path: Column, disallow_prefixes: Column,

@@ -834,7 +834,7 @@ FROM corpus GROUP BY 1 HAVING count(*) > 1 ORDER BY text_hash
 def q_doc_minhash(spark, sf):
     """MinHash signatures (4 permutations, 2-gram shingles)."""
     docs = _t(spark, sf, "documents")
-    return (X.minhash_signature(docs, num_perm=4, shingle_n=2)
+    return (X.minhash_signature(docs, num_perm=4)
             .orderBy("doc_id"))
 
 
@@ -863,7 +863,7 @@ def q_ngram_jaccard(spark, sf):
     scale path. Oracle replicates shingling, self-join and the
     |A∩B|/|A∪B| arithmetic in SQL."""
     docs = _t(spark, sf, "documents").filter(F.col("doc_id") % 3 == 0)
-    return (X.ngram_jaccard_all_pairs(docs, shingle_n=2, threshold=0.3)
+    return (X.ngram_jaccard_all_pairs(docs, threshold=0.3)
             .select(F.col("id_a").cast("long").alias("id_a"),
                     F.col("id_b").cast("long").alias("id_b"), "jaccard")
             .orderBy("id_a", "id_b"))
@@ -897,8 +897,7 @@ ORDER BY id_a, id_b
 def _lsh_pairs(docs):
     """The catalog's near-dup pair list: MinHash+LSH with 8 perm, 4
     bands, jaccard >= 0.5 (the banding SQL_DOC_LSH_PAIRS replays)."""
-    return X.minhash_lsh_pairs(docs, num_perm=8, bands=4,
-                               jaccard_threshold=0.5)
+    return X.minhash_lsh_pairs(docs)
 
 
 def _dup_labels(docs):
@@ -1051,7 +1050,7 @@ def q_doc_lm_score(spark, sf):
     filter shape. Oracle rebuilds the identical model and scoring in
     DuckDB (round(4) absorbs libm last-ulp and sum-order drift)."""
     docs = _t(spark, sf, "documents")
-    return (X.lm_quality_score(docs, vocab_k=1000)
+    return (X.lm_quality_score(docs)
             .select(F.col("doc_id").cast("long").alias("doc_id"),
                     F.col("n_scored").cast("long").alias("n_scored"),
                     "lm_score")
@@ -1092,8 +1091,7 @@ def q_corpus_sample(spark, sf):
     languages). Pure filter, no shuffle; the oracle draws the
     IDENTICAL sample from the same hash arithmetic."""
     docs = _t(spark, sf, "documents")
-    return (X.stratified_sample(docs, _SAMPLE_RATES, strat_col="lang",
-                                default_rate=0.1)
+    return (X.stratified_sample(docs, _SAMPLE_RATES, default_rate=0.1)
             .select(F.col("doc_id").cast("long").alias("doc_id"), "lang")
             .orderBy("doc_id"))
 
@@ -1191,7 +1189,7 @@ def q_doc_chunks(spark, sf):
     64-char overlap, md5 per chunk so the expanded corpus never ships.
     Zero-shuffle posexplode row expansion."""
     docs = _t(spark, sf, "documents")
-    return (X.chunk_documents(docs, size=512, overlap=64)
+    return (X.chunk_documents(docs)
             .select(F.col("key").cast("long").alias("doc_id"),
                     "chunk_idx", "chunk_start", "chunk_len", "chunk_md5")
             .orderBy("doc_id", "chunk_idx"))
@@ -1255,7 +1253,7 @@ def q_tfidf_topk(spark, sf):
     round(4) on the score absorbs libm ulp between Java log and
     DuckDB ln, ranks are exact (ties broken by term)."""
     docs = _t(spark, sf, "documents")
-    return (X.tfidf_topk(docs, k=3)
+    return (X.tfidf_topk(docs)
             .select(F.col("key").cast("long").alias("doc_id"),
                     "term", "tf", "df", "tfidf", "rank")
             .orderBy("doc_id", "rank"))
@@ -1296,7 +1294,7 @@ def q_span_dedup(spark, sf):
     The oracle replays the identical gram stream, first-occurrence
     window and gaps-and-islands merge in DuckDB."""
     docs = _t(spark, sf, "documents")
-    return (X.duplicate_spans(docs, n=8)
+    return (X.duplicate_spans(docs)
             .select(F.col("key").cast("long").alias("doc_id"),
                     F.col("span_start").cast("long").alias("span_start"),
                     F.col("span_end").cast("long").alias("span_end"),
@@ -1450,7 +1448,7 @@ def q_entity_rank(spark, sf):
         F.struct(F.col("src"), F.col("dst")),
         F.struct(F.col("dst").alias("src"), F.col("src").alias("dst"))))
         .alias("_e")).select("_e.src", "_e.dst").distinct())
-    return (R.entity_rank(edges, iters=5, damping=0.85)
+    return (R.entity_rank(edges)
             .select("node", F.round("rank", 6).alias("rank"))
             .orderBy("node"))
 
@@ -1499,8 +1497,7 @@ def q_range_join(spark, sf):
     clicks = (e.filter(F.col("event_type") == "click")
               .select("user_id", us.alias("p_ts"), "value"))
     j = R.interval_join(clicks, errors, on="user_id", point_ts="p_ts",
-                        start_col="w_start", end_col="w_end",
-                        bucket_us=600_000_000)
+                        start_col="w_start", end_col="w_end")
     agg = (j.groupBy(F.col("win_id_i").alias("win_id"))
            .agg(F.count("*").alias("n_clicks"),
                 F.round(F.sum("value"), 2).alias("click_value")))
@@ -1595,7 +1592,7 @@ def q_doc_fingerprint(spark, sf):
     """Rolling-hash document fingerprint (char 8-grams, min-md5)."""
     docs = _t(spark, sf, "documents")
     return (docs.select("doc_id",
-                        X.doc_fingerprint(F.col("text"), 8).alias("fingerprint"))
+                        X.doc_fingerprint(F.col("text")).alias("fingerprint"))
             .orderBy("doc_id"))
 
 
@@ -1633,7 +1630,7 @@ def q_doc_simhash(spark, sf):
     SQL: per-token h = int(md5(tok)[:16],16), votes = sum(bit?+1:-1)
     per bit position, signed 64-bit reassembly."""
     docs = _t(spark, sf, "documents")
-    return (D.simhash64_frame(docs, "text", "doc_id")
+    return (D.simhash64_frame(docs, "doc_id")
             .select(F.col("key").cast("long").alias("doc_id"),
                     F.col("sh").alias("simhash"))
             .orderBy("doc_id"))
@@ -1672,8 +1669,7 @@ def q_doc_dup_classes(spark, sf):
     pinned by tests/test_dedup.py. Oracle replays the md5 bit-vote
     simhash in SQL and derives the same classes by window."""
     docs = _t(spark, sf, "documents")
-    classes, _ = D.simhash_dup_classes(docs, text_col="text",
-                                       key_col="doc_id")
+    classes, _ = D.simhash_dup_classes(docs, key_col="doc_id")
     return (classes.select(F.col("key").cast("long").alias("key"),
                            F.col("rep").cast("long").alias("rep"),
                            F.col("group_size").cast("long").alias("group_size"))
@@ -1944,7 +1940,7 @@ def q_ann_ivf(spark, sf):
     emb = _t(spark, sf, "embeddings")
     q = [float(x) for x in emb.orderBy("vec_id").first()["embedding"]]
     path = _ivf_index(spark, sf)
-    out = (X.ann_topk_ivf(spark, path, q, k=10, nprobe=4)
+    out = (X.ann_topk_ivf(spark, path, q, nprobe=4)
            .select(F.col("vec_id").cast("long").alias("vec_id"), "cosine"))
     if path in _IVF_VERIFIED:
         # contract already held for this immutable (fingerprint-keyed)
@@ -1982,14 +1978,14 @@ def _verify_ivf_index(spark, sf, path, probe_rows=None):
     emb = _t(spark, sf, "embeddings")
     q = [float(x) for x in emb.orderBy("vec_id").first()["embedding"]]
     if probe_rows is None:
-        probe_rows = (X.ann_topk_ivf(spark, path, q, k=10, nprobe=4)
+        probe_rows = (X.ann_topk_ivf(spark, path, q, nprobe=4)
                       .select(F.col("vec_id").cast("long").alias("vec_id"),
                               "cosine"))
     ref = {r["vec_id"]: r["cosine"]
            for r in X.brute_force_topk(emb, q, k=50)
            .select(F.col("vec_id").cast("long").alias("vec_id"), "cosine")
            .collect()}
-    full = (X.ann_topk_ivf(spark, path, q, k=10, nprobe=16)
+    full = (X.ann_topk_ivf(spark, path, q, nprobe=16)
             .select(F.col("vec_id").cast("long").alias("vec_id"), "cosine")
             .collect())
     top10 = sorted(ref.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
@@ -2118,7 +2114,7 @@ def q_doc_decontaminate(spark, sf):
     the case decontamination exists for."""
     docs = _t(spark, sf, "documents")
     eval_df = docs.filter(F.col("doc_id") % 97 == 0)
-    return (X.decontaminate(docs, eval_df, n=8)
+    return (X.decontaminate(docs, eval_df)
             .select(F.col("doc_id").cast("long").alias("doc_id"),
                     F.col("n_overlap").cast("long").alias("n_overlap"),
                     "contaminated")
@@ -2226,7 +2222,7 @@ def q_corpus_filter(spark, sf):
               .filter(F.col("doc_id") != F.col("_keep"))
               .select("doc_id").withColumn("_dup", F.lit(True)))
     eval_df = docs.filter(F.col("doc_id") % 97 == 0)
-    cont = (X.decontaminate(docs, eval_df, n=8)
+    cont = (X.decontaminate(docs, eval_df)
             .select("doc_id", "contaminated"))
     j = (rep.withColumnRenamed("doc_id", "doc_id")
          .join(losers, "doc_id", "left")
@@ -2375,11 +2371,10 @@ def q_lm_buckets(spark, sf):
     closed form — never a one-task-per-language window sort. The
     oracle is DuckDB's own ntile(3) window over the identical score."""
     docs = _t(spark, sf, "documents")
-    scored = (X.lm_quality_score(docs, vocab_k=1000)
+    scored = (X.lm_quality_score(docs)
               .join(docs.select("doc_id", "lang"), "doc_id")
               .select("doc_id", "lang", "lm_score"))
-    labeled = X.grouped_ntile(scored, "lang", ["lm_score", "doc_id"],
-                              n_buckets=3)
+    labeled = X.grouped_ntile(scored, "lang", ["lm_score", "doc_id"])
     return (labeled.select(
                 F.col("doc_id").cast("long").alias("doc_id"), "lang",
                 "lm_score",
@@ -2474,7 +2469,7 @@ def q_pmi_bigrams(spark, sf):
     broken by bigram text — the top-k set is engine- and parallelism-
     stable. Oracle replays the identical probability arithmetic."""
     docs = _t(spark, sf, "documents")
-    return X.pmi_bigrams(docs, min_count=5, k=50)
+    return X.pmi_bigrams(docs)
 
 
 SQL_PMI_BIGRAMS = r"""
@@ -2705,7 +2700,7 @@ def q_distinct_kmv(spark, sf):
     deterministic alternative to HLL, so the DuckDB oracle replays the
     estimator hash-for-hash (same md5→60-bit scheme as simhash)."""
     docs = _t(spark, sf, "documents")
-    return X.kmv_distinct(docs, k=128).orderBy("source")
+    return X.kmv_distinct(docs).orderBy("source")
 
 
 SQL_DISTINCT_KMV = r"""
@@ -2739,7 +2734,7 @@ def q_zipf_fit(spark, sf):
     boilerplate/spam shape detector. Oracle uses DuckDB's native
     regr_slope against Spark's covar_pop/var_pop formulation."""
     docs = _t(spark, sf, "documents")
-    return X.zipf_slope(docs, top=200).orderBy("source")
+    return X.zipf_slope(docs).orderBy("source")
 
 
 SQL_ZIPF_FIT = r"""
@@ -2903,7 +2898,7 @@ def q_line_dedup(spark, sf):
     only. Zero shuffle — array_distinct inside codegen; oracle keeps
     min-position per (doc, line) and re-joins in order."""
     docs = _t(spark, sf, "documents")
-    return (X.line_dedup(docs, line_tokens=2)
+    return (X.line_dedup(docs)
             .select(F.col("doc_id").cast("long").alias("doc_id"),
                     "n_lines", "n_kept", "clean_text")
             .orderBy("doc_id"))
@@ -2944,7 +2939,7 @@ def q_vocab_prune(spark, sf):
     occurrences and ratio — the capped-vocab tokenizer rehearsal.
     The head is TakeOrdered; scoring is a broadcast join."""
     docs = _t(spark, sf, "documents")
-    return X.vocab_prune_stats(docs, k=16).orderBy("doc_id")
+    return X.vocab_prune_stats(docs).orderBy("doc_id")
 
 
 SQL_VOCAB_PRUNE = r"""
@@ -3032,7 +3027,7 @@ def q_cdc_chunks(spark, sf):
     key a recrawl store would use. Oracle replays the boundary rule
     and the window-sum chunk ids in SQL."""
     docs = _t(spark, sf, "documents")
-    return (X.cdc_chunks(docs, modulus=8)
+    return (X.cdc_chunks(docs)
             .select(F.col("doc_id").cast("long").alias("doc_id"),
                     "chunk_idx", "n_tokens", "chunk_md5")
             .orderBy("doc_id", "chunk_idx"))
@@ -3069,7 +3064,7 @@ def q_cms_freq(spark, sf):
     the oracle rebuilds the 4x64 sketch bucket-for-bucket and the
     one-sided-error invariant (est >= exact) is a visible column."""
     docs = _t(spark, sf, "documents")
-    return X.cms_frequencies(docs, depth=4, width=64).orderBy("w")
+    return X.cms_frequencies(docs).orderBy("w")
 
 
 SQL_CMS_FREQ = r"""
@@ -3153,7 +3148,7 @@ def q_bpe_merges(spark, sf):
     BPE reference in tests/test_textops.py and is deterministic via
     the (count desc, pair asc) total-order argmax."""
     docs = _t(spark, sf, "documents")
-    merges = X.bpe_learn(docs, n_merges=8)
+    merges = X.bpe_learn(docs)
     return spark.createDataFrame(
         [(r, a, b, c) for (r, a, b, c) in merges],
         "rank long, lhs string, rhs string, pair_count long")
@@ -3169,7 +3164,7 @@ def q_minhash_acc(spark, sf):
     the arithmetic."""
     docs = _t(spark, sf, "documents").filter(
         (F.col("doc_id") % 5 == 0) & (F.col("doc_id") < 3300))
-    return (X.minhash_accuracy(docs, num_perm=8, min_jaccard=0.1)
+    return (X.minhash_accuracy(docs)
             .select(F.col("id_a").cast("long").alias("id_a"),
                     F.col("id_b").cast("long").alias("id_b"),
                     "est_jaccard", "exact_jaccard", "abs_err")

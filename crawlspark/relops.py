@@ -79,10 +79,9 @@ def asof_join(left: DataFrame, right: DataFrame, on: str,
     return matched.select(*out_cols)
 
 
-def entity_rank(edges: DataFrame, iters: int = 5,
-                damping: float = 0.85) -> DataFrame:
-    """Fixed-iteration PageRank over an edge list (src, dst) — the
-    host-rank term of the reference frontier's priority
+def entity_rank(edges: DataFrame) -> DataFrame:
+    """5-iteration PageRank (damping 0.85) over an edge list
+    (src, dst) — the host-rank term of the reference frontier's priority
     (BASELINE north_star: priority = depth x host-rank x recrawl-age;
     the reference hard-codes per-site behaviour via its static module
     config, internal/config/config.go — here rank is computed from
@@ -122,7 +121,8 @@ def entity_rank(edges: DataFrame, iters: int = 5,
     anchored = cached(nodes.crossJoin(ncnt))
 
     ranks = anchored.select("node", (F.lit(1.0) / F.col("_n")).alias("rank"))
-    for _ in range(iters):
+    damping = 0.85
+    for _ in range(5):
         contrib = (e.join(ranks, e["src"] == ranks["node"])
                    .select(F.col("dst").alias("node"),
                            (F.col("rank") / F.col("_deg")).alias("_c"))
@@ -136,8 +136,7 @@ def entity_rank(edges: DataFrame, iters: int = 5,
 
 
 def interval_join(points: DataFrame, intervals: DataFrame, on: str,
-                  point_ts: str, start_col: str, end_col: str,
-                  bucket_us: int = 600_000_000) -> DataFrame:
+                  point_ts: str, start_col: str, end_col: str) -> DataFrame:
     """Range (interval-containment) join: each point row pairs with
     every interval row of the same ``on`` key whose
     [start, end) contains its timestamp — half-open, end exclusive.
@@ -147,21 +146,21 @@ def interval_join(points: DataFrame, intervals: DataFrame, on: str,
     a nested-loop join (per key it is O(points x intervals) — at
     crawl-log scale that is the plan that never finishes). This is the
     standard bucketed decomposition instead: points hash to
-    floor(ts / bucket_us); intervals EXPLODE onto every bucket their
+    floor(ts / 600 s); intervals EXPLODE onto every 600 s bucket their
     span overlaps; the pair join is then a plain equi-join on
     (key, bucket) with the exact containment predicate as a cheap
     post-filter. Equi-join => hash shuffle + whole-stage codegen, and
     AQE can split skewed buckets.
 
-    Pick ``bucket_us`` near the typical interval length: an interval
-    explodes onto span/bucket_us + 1 rows (duplication factor ~2 at
-    the default), while points never duplicate — so the blow-up sits
-    on the (usually far smaller) interval side.
+    The bucket sits near the typical interval length: an interval
+    explodes onto span/600 s + 1 rows (duplication factor ~2), while
+    points never duplicate — so the blow-up sits on the (usually far
+    smaller) interval side.
 
     Returns point rows + interval payload columns (suffixed _i); points
     inside k overlapping intervals appear k times — aggregate on the
     interval key downstream for per-interval rollups."""
-    b = F.lit(int(bucket_us))
+    b = F.lit(600_000_000)
     ipay = [c for c in intervals.columns if c != on]
     iex = intervals.select(
         F.col(on),

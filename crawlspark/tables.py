@@ -22,10 +22,11 @@ manifest points at the previous snapshot's directory) — no data copy,
 like Iceberg manifests reusing unchanged data files.
 
 One write path and one read path: every table a commit touches is its
-own parquet write (submitted concurrently), and a read is a plain
-parquet union of the table's directories. A snapshot records ``sid``,
-``wave``, ``tables``, ``layout`` and ``committed_at``; readers ignore
-any other key (older manifests carry an empty ``select`` map).
+own parquet write (submitted concurrently), and a read is the union of
+the table's base (read on its own, whatever its directory partitioning)
+and its append deltas. A snapshot records ``sid``, ``wave``, ``tables``
+and ``committed_at``; readers ignore any other key (older manifests
+carry an empty ``select`` map and a ``layout`` map).
 
 Schemas live in the manifest, as Iceberg keeps them in table metadata:
 a top-level ``schemas`` map holds each table's schema as of its latest
@@ -69,13 +70,18 @@ class SnapshotStore:
         return None if s is None else s["wave"]
 
     # -- read -------------------------------------------------------------
-    def _entry(self, spark: SparkSession, table: str,
-               snapshot_id: int | None = None):
-        """(paths, base_partition_cols, reader) for a table at a
-        snapshot, or None. paths[0] is the base (last overwrite); the
-        rest are the append deltas committed since, oldest first. The
-        reader carries the manifest schema when there is one. An unknown
-        snapshot_id raises KeyError — never mistaken for "table absent"."""
+    def _split(self, spark: SparkSession, table: str,
+               snapshot_id: int | None = None
+               ) -> tuple[DataFrame | None, DataFrame | None]:
+        """(base, deltas) of a table at a snapshot, (None, None) if
+        absent. The base is the first directory of the manifest entry
+        (the last overwrite), read on its own so its directory
+        partitioning needs no bookkeeping; deltas are the append
+        directories committed since, oldest first, or None. Reads carry
+        the manifest schema when there is one. An unknown snapshot_id
+        raises KeyError — never mistaken for "table absent". ``read`` and
+        ``read_split`` each call it (not one the other), so a tracer that
+        wraps both times every read once."""
         manifest = self._read_manifest()
         snaps = manifest["snapshots"]
         if snapshot_id is not None:
@@ -85,14 +91,18 @@ class SnapshotStore:
         for s in reversed(snaps):
             if table in s["tables"]:
                 entry = s["tables"][table]
-                paths = entry if isinstance(entry, list) else [entry]
-                part = s.get("layout", {}).get(table, [])
+                paths = [str(self.root / p) for p in
+                         (entry if isinstance(entry, list) else [entry])]
                 schema = manifest.get("schemas", {}).get(table)
                 reader = spark.read
                 if schema is not None:
                     reader = reader.schema(schema)
-                return [str(self.root / p) for p in paths], part, reader
-        return None
+                base = reader.parquet(paths[0])
+                if len(paths) == 1:
+                    return base, None
+                deltas = reader.parquet(*paths[1:])
+                return base.select(*deltas.columns), deltas
+        return None, None
 
     def read(self, spark: SparkSession, table: str,
              snapshot_id: int | None = None) -> DataFrame | None:
@@ -101,19 +111,11 @@ class SnapshotStore:
 
         Append-mode tables resolve to the union of all their batch
         directories (manifest entry is a list) — the parquet-sandbox
-        equivalent of an Iceberg table's data-file list. A partitioned
-        base (e.g. seen bucketed by salt) is read separately from the
-        flat deltas and unioned by name.
+        equivalent of an Iceberg table's data-file list: the union by
+        name of ``read_split``'s two halves.
         """
-        got = self._entry(spark, table, snapshot_id)
-        if got is None:
-            return None
-        paths, part, reader = got
-        if len(paths) == 1 or not part:
-            return reader.parquet(*paths)
-        deltas = reader.parquet(*paths[1:])
-        return deltas.unionByName(
-            reader.parquet(paths[0]).select(*deltas.columns))
+        base, deltas = self._split(spark, table, snapshot_id)
+        return base if deltas is None else deltas.unionByName(base)
 
     def read_split(self, spark: SparkSession, table: str,
                    snapshot_id: int | None = None
@@ -125,15 +127,7 @@ class SnapshotStore:
         ONLY the deltas and anti-join the base — the read-side exchange
         is O(delta chain), never O(total state) (Iceberg MoR analogue;
         the delta chain is bounded by compact_every)."""
-        got = self._entry(spark, table, snapshot_id)
-        if got is None:
-            return None, None
-        paths, _, reader = got
-        base = reader.parquet(paths[0])
-        if len(paths) == 1:
-            return base, None
-        deltas = reader.parquet(*paths[1:])
-        return base.select(*deltas.columns), deltas
+        return self._split(spark, table, snapshot_id)
 
     # -- commit -----------------------------------------------------------
     def commit(self, wave: int, tables: dict[str, DataFrame],
@@ -153,20 +147,15 @@ class SnapshotStore:
         sid = (prev["sid"] + 1) if prev else 1
 
         entry_tables: dict = dict(prev["tables"]) if prev else {}
-        # base layout registry: which tables' BASE directory is written
-        # with directory partitioning (e.g. seen bucketed by salt) —
-        # readers must read such a base separately from the flat deltas
-        layout: dict = dict(prev.get("layout", {})) if prev else {}
 
         def _write(item):
             name, df = item
             rel = f"data/{sid}/{name}"
-            part_cols = (partition_by or {}).get(name, [])
             writer = df.write.mode("overwrite")
-            for col in part_cols:
+            for col in (partition_by or {}).get(name, []):
                 writer = writer.partitionBy(col)
             writer.parquet(str(self.root / rel))
-            return name, rel, part_cols
+            return name, rel
 
         appends = appends or {}
 
@@ -186,21 +175,16 @@ class SnapshotStore:
         manifest.setdefault("schemas", {}).update(
             (name, df.schema.toDDL()) for name, df in all_items)
         with ThreadPoolExecutor(max_workers=max(1, len(all_items))) as pool:
-            for name, rel, part_cols in pool.map(_write, all_items):
+            for name, rel in pool.map(_write, all_items):
                 if name in appends:
                     _append_entry(name, rel)
                 else:
                     entry_tables[name] = rel
-                    if part_cols:
-                        layout[name] = part_cols
-                    else:
-                        layout.pop(name, None)
 
         manifest["snapshots"].append({
             "sid": sid,
             "wave": wave,
             "tables": entry_tables,
-            "layout": layout,
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         })
         # durable before visible: fsync the tmp file, swap, then fsync

@@ -157,13 +157,13 @@ def word_shingles(text: Column, n: int = 2) -> Column:
     return F.array_distinct(ngrams_all(text, n))
 
 
-def doc_fingerprint(text: Column, k: int = 8) -> Column:
-    """Rolling-hash document fingerprint: min over character k-grams of
+def doc_fingerprint(text: Column) -> Column:
+    """Rolling-hash document fingerprint: min over character 8-grams of
     md5 (a 1-hash winnowing; collision-robust dedup key for near-exact
     clones differing in whitespace tails). Built-in only."""
     t = F.coalesce(text, F.lit(""))
-    n = F.greatest(F.length(t) - (k - 1), F.lit(1))
-    grams = F.transform(F.sequence(F.lit(1), n), lambda i: F.md5(F.substring(t, i, k)))
+    n = F.greatest(F.length(t) - 7, F.lit(1))
+    grams = F.transform(F.sequence(F.lit(1), n), lambda i: F.md5(F.substring(t, i, 8)))
     return F.array_min(grams)
 
 
@@ -181,11 +181,11 @@ def exact_dup_groups(df: DataFrame) -> DataFrame:
             .filter(F.col("n_dups") > 1))
 
 
-def minhash_signature(df: DataFrame, num_perm: int = 8,
-                      shingle_n: int = 2) -> DataFrame:
-    """MinHash signatures via lexicographic MIN over md5('<i>:'||shingle)
-    — md5 is a uniform hash, so per-permutation lexicographic min is a
-    valid min-wise scheme, and it is exactly reproducible in SQL.
+def minhash_signature(df: DataFrame, num_perm: int = 8) -> DataFrame:
+    """MinHash signatures over word bigrams via lexicographic MIN over
+    md5('<i>:'||shingle) — md5 is a uniform hash, so per-permutation
+    lexicographic min is a valid min-wise scheme, and it is exactly
+    reproducible in SQL.
 
     One explode + one grouped aggregate with num_perm partial mins
     (map-side combined). Measured anti-results, kept for the record:
@@ -198,16 +198,16 @@ def minhash_signature(df: DataFrame, num_perm: int = 8,
     feeds a self-join, callers persist it rather than re-deriving it
     per branch (minhash_lsh_pairs)."""
     sh = df.select(F.col("doc_id"), F.explode(
-        word_shingles(F.col("text"), shingle_n)).alias("s"))
+        word_shingles(F.col("text"))).alias("s"))
     aggs = [F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("s")))).alias(f"mh{i}")
             for i in range(num_perm)]
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_lsh_pairs(df: DataFrame, num_perm: int = 8, bands: int = 4,
-                      jaccard_threshold: float = 0.5) -> DataFrame:
-    """MinHash+LSH near-dup pairs: band signatures -> equality join ->
-    exact Jaccard verification of candidates only.
+def minhash_lsh_pairs(df: DataFrame) -> DataFrame:
+    """MinHash+LSH near-dup pairs: 8 permutations in 4 bands of 2 rows
+    -> band-equality join -> exact bigram Jaccard verification of
+    candidates only, keeping Jaccard >= 0.5.
 
     Scale: the band join is an equi hash join on (band, band_val);
     candidate count ~ true-dup count + banding false positives.
@@ -227,14 +227,14 @@ def minhash_lsh_pairs(df: DataFrame, num_perm: int = 8, bands: int = 4,
     (id, s) shuffle is pure overhead. Crossover: when the candidate
     set is too large to broadcast, switch the verify to
     ngram_jaccard_for_pairs."""
-    rows_per_band = num_perm // bands
+    bands, rows_per_band = 4, 2
     # persisted: the band self-join references the signature frame on
     # BOTH sides — unpersisted, each side re-runs the whole shingle
     # explode + grouped-min pipeline (and pays its Janino compile
-    # twice cold). The frame is (key, num_perm hashes) — tiny relative
-    # to the corpus at any scale. It and cand below stay cached for
-    # the consumer's action; the caller's cache_scope releases both.
-    sig = cached(minhash_signature(df, num_perm))
+    # twice cold). The frame is (key, 8 hashes) — tiny relative to the
+    # corpus at any scale. It and cand below stay cached for the
+    # consumer's action; the caller's cache_scope releases both.
+    sig = cached(minhash_signature(df))
     band_structs = [
         F.struct(F.lit(b).alias("band"),
                  F.concat_ws("|", *[F.col(f"mh{b * rows_per_band + r}")
@@ -268,14 +268,11 @@ def minhash_lsh_pairs(df: DataFrame, num_perm: int = 8, bands: int = 4,
            .distinct())
     cand_docs = df.join(F.broadcast(ids), "doc_id")
     jac = ngram_jaccard(cand_docs, cand)
-    return jac.filter(F.col("jaccard") >= jaccard_threshold)
+    return jac.filter(F.col("jaccard") >= 0.5)
 
 
-def ngram_jaccard_for_pairs(df: DataFrame, pairs: DataFrame,
-                            text_col: str = "text",
-                            key_col: str = "doc_id",
-                            shingle_n: int = 2) -> DataFrame:
-    """Exact n-gram Jaccard restricted to a candidate pair set,
+def ngram_jaccard_for_pairs(df: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Exact word-bigram Jaccard restricted to a candidate pair set,
     COUNT-based: same inverted-index form as ngram_jaccard_all_pairs
     (measured 9x faster than the array_intersect verify, BENCH.md),
     but the exploded shingle frame is first semi-joined against the
@@ -302,12 +299,12 @@ def ngram_jaccard_for_pairs(df: DataFrame, pairs: DataFrame,
     Pairs with ZERO shingle intersection produce no row (the array
     twin emits jaccard=0.0 for them) — callers filter on a positive
     threshold, so the sets agree wherever jaccard > 0."""
-    sh = (df.select(F.col(key_col),
-                    word_shingles(F.col(text_col), shingle_n).alias("_sh"))
-          .select(F.col(key_col), F.size("_sh").alias("_n"),
+    sh = (df.select(F.col("doc_id"),
+                    word_shingles(F.col("text")).alias("_sh"))
+          .select(F.col("doc_id"), F.size("_sh").alias("_n"),
                   F.explode("_sh").alias("s")))
-    a = sh.select(F.col(key_col).alias("id_a"), F.col("_n").alias("_na"), "s")
-    b = sh.select(F.col(key_col).alias("id_b"), F.col("_n").alias("_nb"), "s")
+    a = sh.select(F.col("doc_id").alias("id_a"), F.col("_n").alias("_na"), "s")
+    b = sh.select(F.col("doc_id").alias("id_b"), F.col("_n").alias("_nb"), "s")
     j1 = F.broadcast(pairs).join(a, "id_a")
     inter = (j1.join(b, ["id_b", "s"])
              .groupBy("id_a", "id_b")
@@ -347,10 +344,10 @@ def ngram_jaccard(docs: DataFrame, pairs: DataFrame) -> DataFrame:
         F.round(inter / F.greatest(union, F.lit(1)), 4).alias("jaccard"))
 
 
-def ngram_jaccard_all_pairs(df: DataFrame, shingle_n: int = 2,
+def ngram_jaccard_all_pairs(df: DataFrame,
                             threshold: float = 0.5) -> DataFrame:
-    """Exact Jaccard >= threshold pairs, COUNT-based: |A∩B| comes
-    straight off the inverted-index self-join as a map-side-combined
+    """Exact word-bigram Jaccard >= threshold pairs, COUNT-based: |A∩B|
+    comes straight off the inverted-index self-join as a map-side-combined
     ``groupBy(pair).count()`` (shingles are distinct per doc), then two
     tiny per-doc-size joins give |A∪B| = n_a + n_b - inter. No shingle
     ARRAYS ever join or shuffle — the round-3 profile showed the
@@ -362,10 +359,10 @@ def ngram_jaccard_all_pairs(df: DataFrame, shingle_n: int = 2,
     Jaccard is inherently quadratic in hot shingles; at web scale use
     minhash_lsh_pairs, which bounds candidates by banding."""
     sh = df.select(F.col("doc_id"), F.explode(
-        word_shingles(F.col("text"), shingle_n)).alias("s"))
+        word_shingles(F.col("text"))).alias("s"))
     # |A| straight off the shingle array — no second explode + shuffle
     counts = (df.select(F.col("doc_id"),
-                        F.size(word_shingles(F.col("text"), shingle_n))
+                        F.size(word_shingles(F.col("text")))
                         .alias("_n"))
               .filter(F.col("_n") > 0))
     a, b = sh.alias("a"), sh.alias("b")
@@ -398,25 +395,24 @@ def cosine_sim(vec: Column, query: list[float]) -> Column:
     return dot / (nv * F.lit(nq))
 
 
-def brute_force_topk(df: DataFrame, query: list[float], k: int = 10,
-                     vec_col: str = "embedding",
-                     key_col: str = "vec_id") -> DataFrame:
-    """Exact top-k by cosine — the ANN baseline. orderBy+limit compiles
-    to TakeOrderedAndProject (per-partition heaps + driver merge of k
-    rows), not a global sort."""
-    return (df.select(F.col(key_col),
-                      F.round(cosine_sim(F.col(vec_col), query), 6).alias("cosine"))
-            .orderBy(F.col("cosine").desc(), F.col(key_col))
+def brute_force_topk(df: DataFrame, query: list[float],
+                     k: int = 10) -> DataFrame:
+    """Exact top-k vec_id by cosine of embedding — the ANN baseline.
+    orderBy+limit compiles to TakeOrderedAndProject (per-partition heaps
+    + driver merge of k rows), not a global sort."""
+    return (df.select(F.col("vec_id"),
+                      F.round(cosine_sim(F.col("embedding"), query), 6).alias("cosine"))
+            .orderBy(F.col("cosine").desc(), F.col("vec_id"))
             .limit(k))
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int = 42):
-    """Deterministic pseudo-random hyperplanes from splitmix64 — no RNG
-    state, reproducible across any parallelism."""
+def _hyperplanes(dim: int, n_planes: int):
+    """Deterministic pseudo-random hyperplanes from splitmix64 seeded
+    with 42 — no RNG state, reproducible across any parallelism."""
     import numpy as np
 
     idx = np.arange(dim * n_planes, dtype=np.uint64)
-    mix = (seed * 0x9E3779B97F4A7C15) & 0xFFFFFFFFFFFFFFFF
+    mix = (42 * 0x9E3779B97F4A7C15) & 0xFFFFFFFFFFFFFFFF
     x = (idx + np.uint64(mix)) & np.uint64(0xFFFFFFFFFFFFFFFF)
     z = x
     z = ((z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)) & np.uint64(0xFFFFFFFFFFFFFFFF)
@@ -426,12 +422,11 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42):
     return (u.reshape(n_planes, dim) * 2.0 - 1.0)
 
 
-def lsh_bucket(vec: Column, dim: int, n_planes: int = 12,
-               seed: int = 42) -> Column:
+def lsh_bucket(vec: Column, dim: int, n_planes: int = 12) -> Column:
     """Random-hyperplane (SimHash-for-vectors) bucket id: sign bits of
     n_planes dot products packed into a long. Same-bucket vectors are
     cosine-close with high probability."""
-    planes = _hyperplanes(dim, n_planes, seed)
+    planes = _hyperplanes(dim, n_planes)
     v = vec.cast("array<double>")
     bit_terms = []
     for p in range(n_planes):
@@ -446,13 +441,13 @@ def lsh_bucket(vec: Column, dim: int, n_planes: int = 12,
 
 
 def probe_buckets(query: list[float], n_planes: int = 12,
-                  probe_hamming: int = 1, seed: int = 42) -> list[int]:
+                  probe_hamming: int = 1) -> list[int]:
     """Multi-probe bucket set for a query: its own bucket plus every
     bucket within probe_hamming sign flips."""
     import itertools
 
     dim = len(query)
-    planes = _hyperplanes(dim, n_planes, seed)
+    planes = _hyperplanes(dim, n_planes)
     qsig = 0
     for p in range(n_planes):
         if float(sum(planes[p][i] * query[i] for i in range(dim))) >= 0:
@@ -467,21 +462,19 @@ def probe_buckets(query: list[float], n_planes: int = 12,
     return sorted(int(x) for x in probes)
 
 
-def ann_topk_lsh(df: DataFrame, query: list[float], k: int = 10,
-                 vec_col: str = "embedding", key_col: str = "vec_id",
-                 n_planes: int = 12, probe_hamming: int = 1,
-                 seed: int = 42) -> DataFrame:
-    """Approximate top-k over an UN-indexed frame: buckets computed on
+def ann_topk_lsh(df: DataFrame, query: list[float], n_planes: int = 12,
+                 probe_hamming: int = 1) -> DataFrame:
+    """Approximate top-10 over an UN-indexed frame: buckets computed on
     the fly, so the probe filter still scans the corpus — the bounded
     one-shot path. The scale path is build_ann_index +
     ann_topk_lsh_indexed, where the same probe prunes at the storage
     layer (partition pruning) and reads ~(1+n_planes)/2^n_planes of
     the files."""
-    probes = probe_buckets(query, n_planes, probe_hamming, seed)
+    probes = probe_buckets(query, n_planes, probe_hamming)
     bucketed = df.withColumn(
-        "_bucket", lsh_bucket(F.col(vec_col), len(query), n_planes, seed))
+        "_bucket", lsh_bucket(F.col("embedding"), len(query), n_planes))
     cand = bucketed.filter(F.col("_bucket").isin(probes))
-    return brute_force_topk(cand, query, k, vec_col, key_col)
+    return brute_force_topk(cand, query)
 
 
 def cosine_pair_sim(a: Column, b: Column) -> Column:
@@ -639,9 +632,9 @@ def build_ivf_index(df: DataFrame, path: str, n_centroids: int = 64,
      .coalesce(1).write.mode("overwrite").parquet(path + "_centroids"))
 
 
-def ann_topk_ivf(spark, path: str, query: list[float], k: int = 10,
+def ann_topk_ivf(spark, path: str, query: list[float],
                  nprobe: int = 4) -> DataFrame:
-    """Approximate top-k against a build_ivf_index directory: rank
+    """Approximate top-10 against a build_ivf_index directory: rank
     centroids by distance to the query DRIVER-side (n_centroids rows —
     never a Spark job over the corpus), read only the nprobe nearest
     cells via the partition-column predicate, exact-cosine rerank.
@@ -655,7 +648,7 @@ def ann_topk_ivf(spark, path: str, query: list[float], k: int = 10,
                     key=lambda r: float(np.linalg.norm(np.asarray(r["center"]) - q)))
     probes = [int(r["centroid_id"]) for r in ranked[:nprobe]]
     cand = spark.read.parquet(path).filter(F.col("_centroid").isin(probes))
-    return brute_force_topk(cand, query, k)
+    return brute_force_topk(cand, query)
 
 
 # ---------------------------------------------------------------------------
@@ -744,11 +737,10 @@ def repetition_metrics(df: DataFrame,
 EVAL_BROADCAST_LIMIT_TOKENS = 2_000_000
 
 
-def decontaminate(df: DataFrame, eval_df: DataFrame,
-                  n: int = 8) -> DataFrame:
+def decontaminate(df: DataFrame, eval_df: DataFrame) -> DataFrame:
     """Train/test decontamination: flag documents sharing >=1 distinct
-    word n-gram (default 8 — the common eval-overlap window) with any
-    document of the held-out eval set.
+    word 8-gram (the common eval-overlap window) with any document of
+    the held-out eval set.
 
     Shape: distinct n-grams per side (word_shingles is distinct),
     exploded; when the eval side is benchmark-sized (the normal case)
@@ -768,9 +760,9 @@ def decontaminate(df: DataFrame, eval_df: DataFrame,
     docs present in df flag themselves (full self-overlap) — that is
     the right answer for 'is this training doc contaminated'."""
     corpus = df.select(F.col("doc_id"),
-                       F.explode(word_shingles(F.col("text"), n))
+                       F.explode(word_shingles(F.col("text"), 8))
                        .alias("g"))
-    evalg = (eval_df.select(F.explode(word_shingles(F.col("text"), n))
+    evalg = (eval_df.select(F.explode(word_shingles(F.col("text"), 8))
                             .alias("g"))
              .distinct())
     eval_tokens = (eval_df.select(
@@ -837,7 +829,7 @@ def paragraph_dedup(df: DataFrame, para_tokens: int = 0) -> DataFrame:
                     F.coalesce("clean_text", F.lit("")).alias("clean_text")))
 
 
-def lm_quality_score(df: DataFrame, vocab_k: int = 1000) -> DataFrame:
+def lm_quality_score(df: DataFrame) -> DataFrame:
     """CCNet-shape unigram LM quality score: per-document mean
     self-information -log2(p(w)) under the corpus's own unigram
     distribution — the cheap stand-in for the KenLM perplexity filter
@@ -845,7 +837,7 @@ def lm_quality_score(df: DataFrame, vocab_k: int = 1000) -> DataFrame:
     gibberish/rare-boilerplate candidate; low = stereotypical text).
 
     Two-pass shape: (1) one grouped count builds the unigram table;
-    the TOP-vocab_k rows (ties broken by word — deterministic) are the
+    the TOP-1000 rows (ties broken by word — deterministic) are the
     model and BROADCAST — at 100 TB the vocabulary's heavy head is
     what matters and a bounded-K model is the standard trade
     (everything outside the head scores as OOV at the 1/total floor,
@@ -867,7 +859,7 @@ def lm_quality_score(df: DataFrame, vocab_k: int = 1000) -> DataFrame:
     # cache_scope releases it.
     counts = cached(toks.groupBy("w").agg(F.count("*").alias("c")))
     total = counts.agg(F.sum("c")).first()[0] or 1
-    vocab = (counts.orderBy(F.col("c").desc(), "w").limit(vocab_k)
+    vocab = (counts.orderBy(F.col("c").desc(), "w").limit(1000)
              .select("w", (-F.log2(F.col("c") / F.lit(float(total))))
                      .alias("_info")))
     oov = -__import__("math").log2(1.0 / total)
@@ -883,7 +875,6 @@ def lm_quality_score(df: DataFrame, vocab_k: int = 1000) -> DataFrame:
 
 
 def stratified_sample(df: DataFrame, rates: dict[str, float],
-                      strat_col: str = "lang",
                       default_rate: float = 0.0) -> DataFrame:
     """DETERMINISTIC stratified sampling — the training-mix primitive
     (upsample rare languages / downsample the head) done as a pure
@@ -891,19 +882,19 @@ def stratified_sample(df: DataFrame, rates: dict[str, float],
     sizes and engines (df.sample() is seed+partition-layout dependent
     and NOT reproducible under repartitioning; this is).
 
-    A row survives iff md5('s42|' || stratum || '|' || key) mod 10^6
-    < rate * 10^6.
+    The stratum is the lang column. A row survives iff
+    md5('s42|' || stratum || '|' || key) mod 10^6 < rate * 10^6.
     Pure projection+filter: no shuffle, no state; the per-stratum rate
     table is a literal CASE chain (strata are few by definition).
     The hash is the same '0x'+hex-prefix construction the oracles
     replay, so DuckDB draws the identical sample."""
     h = _hash60(F.concat(F.lit("s42|"),
-                         F.coalesce(F.col(strat_col), F.lit("")),
+                         F.coalesce(F.col("lang"), F.lit("")),
                          F.lit("|"), F.col("doc_id").cast("string")))
     bucket = F.pmod(h, F.lit(1_000_000))
     rate = F.lit(float(default_rate))
     for stratum, r in sorted(rates.items()):
-        rate = F.when(F.col(strat_col) == stratum, F.lit(float(r))) \
+        rate = F.when(F.col("lang") == stratum, F.lit(float(r))) \
                 .otherwise(rate)
     return df.filter(bucket < rate * 1_000_000)
 
@@ -977,21 +968,19 @@ def pack_sequences(df: DataFrame, budget: int,
         F.pmod(start, F.lit(budget)).cast("long").alias("seq_offset"))
 
 
-def chunk_documents(df: DataFrame, size: int = 512,
-                    overlap: int = 64) -> DataFrame:
+def chunk_documents(df: DataFrame) -> DataFrame:
     """RAG-style fixed-size character chunking with overlap: each doc
-    yields windows of `size` chars whose starts step by
-    `size - overlap`. A trailing window is emitted only if it extends
-    past its predecessor (chars remaining > overlap), so no chunk is
-    fully contained in the previous one; null/empty text yields zero
-    chunks. n_chunks = max(1, ceil((len - overlap) / step)).
+    yields windows of 512 chars whose starts step by 448 (a 64-char
+    overlap). A trailing window is emitted only if it extends past its
+    predecessor (chars remaining > overlap), so no chunk is fully
+    contained in the previous one; null/empty text yields zero chunks.
+    n_chunks = max(1, ceil((len - 64) / 448)).
 
     Plan: sequence + posexplode + substring — pure whole-stage-codegen
     row expansion, ZERO shuffle, so it scales as a map over the corpus.
     Emits md5(chunk) rather than the chunk text so downstream compares
     and dedup never ship the expanded corpus."""
-    if not 0 <= overlap < size:
-        raise ValueError("need 0 <= overlap < size")
+    size, overlap = 512, 64
     step = size - overlap
     t = F.coalesce(F.col("text"), F.lit(""))
     n = F.when(F.length(t) == 0, F.lit(0)).otherwise(
@@ -1048,17 +1037,17 @@ def quantize_embeddings(df: DataFrame) -> DataFrame:
                                 ","), F.lit("")).alias("codes"))
 
 
-def tfidf_topk(df: DataFrame, k: int = 3) -> DataFrame:
-    """Per-document top-k keywords by smoothed tf-idf:
+def tfidf_topk(df: DataFrame) -> DataFrame:
+    """Per-document top-3 keywords by smoothed tf-idf:
     idf = ln((N + 1) / (df + 1)) + 1 over whitespace tokens of
-    lower(text), score = tf * idf, ties broken by term so the top-k
+    lower(text), score = tf * idf, ties broken by term so the top-3
     cut is deterministic.
 
     Shape at scale: explode + two partial-agg'd groupBys (tf by
     (doc, term), df by term); the doc count N rides a 1-row broadcast
     cross join (no driver action); the df-side join is term-keyed —
     vocab is orders of magnitude smaller than the tf table, so Spark
-    broadcasts it when small and shuffle-joins otherwise. The top-k
+    broadcasts it when small and shuffle-joins otherwise. The top-3
     window partitions by doc (never a global sort)."""
     toks = df.select(F.col("doc_id").alias("key"),
                      F.explode(tokens_expr(F.col("text"))).alias("term"))
@@ -1072,7 +1061,7 @@ def tfidf_topk(df: DataFrame, k: int = 3) -> DataFrame:
                                                (F.col("df") + 1.0)) + 1.0)))
     w = Window.partitionBy("key").orderBy(F.desc("_score"), F.asc("term"))
     return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+            .filter(F.col("rank") <= 3)
             .select("key", "term", "tf", "df",
                     F.round("_score", 4).alias("tfidf"),
                     F.col("rank").cast("long").alias("rank")))
@@ -1111,10 +1100,10 @@ def pii_scrub(df: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Exact duplicate-substring spans / per-group caps
 # ---------------------------------------------------------------------------
-def duplicate_spans(df: DataFrame, n: int = 8) -> DataFrame:
+def duplicate_spans(df: DataFrame) -> DataFrame:
     """ExactSubstr-style duplicate-span detection (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better", at
-    n-gram granularity): every position whose n-token gram occurs
+    8-gram granularity): every position whose 8-token gram occurs
     anywhere earlier in the corpus — an earlier (key, pos), including
     earlier in the SAME doc — is a duplicate position; consecutive
     duplicate positions merge into maximal spans. Returns one row per
@@ -1132,6 +1121,7 @@ def duplicate_spans(df: DataFrame, n: int = 8) -> DataFrame:
     row_number is constant within a consecutive run) -> one grouped
     agg per island. Two shuffles total (gram key, then doc key), both
     on bounded partitions."""
+    n = 8
     toks = tokens_expr(F.col("text"))
     grams = F.when(
         F.size(toks) >= n,
@@ -1249,13 +1239,12 @@ def build_inverted_index(df: DataFrame,
 
 
 def grouped_ntile(df: DataFrame, part_col: str, order_cols: list[str],
-                  n_buckets: int = 3,
                   num_partitions: int | None = None) -> DataFrame:
-    """Exact per-group ntile WITHOUT a one-task-per-group window — the
-    CCNet head/middle/tail perplexity bucketing step (Wenzek et al.,
-    'CCNet: Extracting High Quality Monolingual Datasets from Web
-    Crawl Data': per-language terciles of LM score decide what is
-    kept, what is mined, what is dropped).
+    """Exact per-group tercile (ntile 3) WITHOUT a one-task-per-group
+    window — the CCNet head/middle/tail perplexity bucketing step
+    (Wenzek et al., 'CCNet: Extracting High Quality Monolingual
+    Datasets from Web Crawl Data': per-language terciles of LM score
+    decide what is kept, what is mined, what is dropped).
 
     `Window.partitionBy(lang)` puts each language in ONE sort task —
     at 100 TB the English partition is ~half the corpus through a
@@ -1273,8 +1262,8 @@ def grouped_ntile(df: DataFrame, part_col: str, order_cols: list[str],
 
     ``order_cols`` must totally order rows (ties across engines would
     otherwise bucket nondeterministically). Returns df + (rank,
-    bucket), rank 1-based within part_col, bucket in [1, n_buckets]."""
-    nb = int(n_buckets)
+    bucket), rank 1-based within part_col, bucket in [1, 3]."""
+    nb = 3
     bucket = F.expr(
         f"CASE WHEN n_group div {nb} = 0 THEN rank "
         f"WHEN rank <= (n_group % {nb}) * (n_group div {nb} + 1) "
@@ -1336,10 +1325,11 @@ def grouped_rank(df: DataFrame, part_col: str, order_cols: list[str],
             .withColumnRenamed("_tot", "n_group"))
 
 
-def pmi_bigrams(df: DataFrame, min_count: int = 5, k: int = 50) -> DataFrame:
-    """Top-k adjacent-bigram collocations by pointwise mutual
-    information — the phrase-mining / tokenizer-vocab-seeding analysis
-    (Mikolov et al.'s phrase detection runs exactly this shape).
+def pmi_bigrams(df: DataFrame) -> DataFrame:
+    """Top-50 adjacent-bigram collocations (seen >= 5 times) by
+    pointwise mutual information — the phrase-mining /
+    tokenizer-vocab-seeding analysis (Mikolov et al.'s phrase
+    detection runs exactly this shape).
     PMI(a,b) = log2( p(a,b) / (p(a) p(b)) ), bigram probabilities over
     adjacent pairs, unigram over tokens.
 
@@ -1347,10 +1337,10 @@ def pmi_bigrams(df: DataFrame, min_count: int = 5, k: int = 50) -> DataFrame:
     joins of the bigram table against the unigram counts (vocab-sized,
     orders of magnitude under the corpus), totals via 1-row broadcast
     cross joins (the tfidf_topk pattern), then a TakeOrderedAndProject
-    top-k — never a global sort. PMI is ROUNDED BEFORE the ordering
-    and tie-broken by bigram text, so the top-k row SET is stable
+    top-50 — never a global sort. PMI is ROUNDED BEFORE the ordering
+    and tie-broken by bigram text, so the top-50 row SET is stable
     across engines and parallelism (an unrounded float order could
-    flip the k-boundary on a last-ulp libm difference)."""
+    flip the cut on a last-ulp libm difference)."""
     t = F.col("text")
     toks = df.select(F.explode(tokens_expr(t)).alias("w"))
     # uni is referenced 3x (total + both join sides) and big 2x
@@ -1364,7 +1354,7 @@ def pmi_bigrams(df: DataFrame, min_count: int = 5, k: int = 50) -> DataFrame:
                  .groupBy("bg").agg(F.count("*").cast("long").alias("cb")))
     nu = uni.agg(F.sum("c").cast("double").alias("_nu"))
     nb = big.agg(F.sum("cb").cast("double").alias("_nb"))
-    sp = (big.filter(F.col("cb") >= min_count)
+    sp = (big.filter(F.col("cb") >= 5)
           .withColumn("_w1", F.split("bg", " ")[0])
           .withColumn("_w2", F.split("bg", " ")[1]))
     u1 = uni.select(F.col("w").alias("_w1"), F.col("c").alias("_c1"))
@@ -1376,7 +1366,7 @@ def pmi_bigrams(df: DataFrame, min_count: int = 5, k: int = 50) -> DataFrame:
             .join(u1, "_w1").join(u2, "_w2")
             .select(F.col("bg").alias("bigram"),
                     F.col("cb").alias("n"), pmi.alias("pmi"))
-            .orderBy(F.col("pmi").desc(), "bigram").limit(k))
+            .orderBy(F.col("pmi").desc(), "bigram").limit(50))
 
 
 def group_quantiles(df: DataFrame, part_col: str, value_col: str,
@@ -1566,11 +1556,11 @@ def bigram_lm_score(df: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Corpus-cardinality + encoding-health operators (round 5, session 4)
 # ---------------------------------------------------------------------------
-def kmv_distinct(df: DataFrame, k: int = 128) -> DataFrame:
+def kmv_distinct(df: DataFrame) -> DataFrame:
     """Per-group distinct-token cardinality via a K-Minimum-Values
-    sketch (Bar-Yossef et al. 2002): hash every distinct token to a
-    uniform 60-bit value, keep the k smallest per group, estimate
-    |distinct| = (k-1) / u_k with u_k the k-th smallest hash
+    sketch (Bar-Yossef et al. 2002) with k = 128: hash every distinct
+    token to a uniform 60-bit value, keep the k smallest per group,
+    estimate |distinct| = (k-1) / u_k with u_k the k-th smallest hash
     normalized to (0,1]. Unlike HLL the estimator is DETERMINISTIC
     given the hash, so a SQL oracle replays it bit-for-bit (_hash60).
 
@@ -1581,6 +1571,7 @@ def kmv_distinct(df: DataFrame, k: int = 128) -> DataFrame:
     aggregate, no extra scan) and is returned beside the estimate as
     the accuracy exhibit; drop it at 100 TB if only the sketch is
     wanted. 2^60 as a double literal is exact."""
+    k = 128
     toks = (df.select(F.col("source").alias("grp"),
                       F.explode(tokens_expr(F.col("text"))).alias("w"))
             .distinct())
@@ -1601,9 +1592,9 @@ def kmv_distinct(df: DataFrame, k: int = 128) -> DataFrame:
             .withColumn("kmv_k", F.lit(k).cast("long")))
 
 
-def zipf_slope(df: DataFrame, top: int = 200) -> DataFrame:
+def zipf_slope(df: DataFrame) -> DataFrame:
     """Per-group Zipf-law fit: the least-squares slope of
-    ln(count) ~ ln(rank) over the group's top-N token types. Natural
+    ln(count) ~ ln(rank) over the group's top-200 token types. Natural
     web text sits near -1; a source whose slope is far shallower
     (flat counts = templated boilerplate) or steeper (one token
     dominates = navigation spam) is a mixture-weight red flag — the
@@ -1611,9 +1602,9 @@ def zipf_slope(df: DataFrame, top: int = 200) -> DataFrame:
 
     Shape: one vocab aggregate, a rank window over the vocab frame
     (partitioned by group), the regression as covar_pop/var_pop over
-    <= N rows per group — the frame is already hash-partitioned by
+    <= 200 rows per group — the frame is already hash-partitioned by
     group from the window, so the final agg reuses the exchange.
-    Rounded to 4: the two engines sum <=N doubles in different
+    Rounded to 4: the two engines sum <=200 doubles in different
     orders, which perturbs at ~1e-13 relative."""
     counts = (df.select(F.col("source").alias("grp"),
                         F.explode(tokens_expr(F.col("text"))).alias("w"))
@@ -1621,7 +1612,7 @@ def zipf_slope(df: DataFrame, top: int = 200) -> DataFrame:
               .agg(F.count("*").cast("long").alias("c")))
     wk = Window.partitionBy("grp").orderBy(F.desc("c"), F.asc("w"))
     ranked = (counts.withColumn("r", F.row_number().over(wk))
-              .filter(F.col("r") <= top))
+              .filter(F.col("r") <= 200))
     x = F.log(F.col("r").cast("double"))
     y = F.log(F.col("c").cast("double"))
     return (ranked.groupBy("grp")
@@ -1695,7 +1686,7 @@ def source_reputation(df: DataFrame) -> DataFrame:
                     .alias("low_rep")))
 
 
-def line_dedup(df: DataFrame, line_tokens: int = 2) -> DataFrame:
+def line_dedup(df: DataFrame) -> DataFrame:
     """WITHIN-document repeated-line removal (the C4 move of dropping
     duplicated lines inside a page — nav bars, cookie banners, footer
     text repeated mid-page) — the per-doc complement of the
@@ -1703,12 +1694,12 @@ def line_dedup(df: DataFrame, line_tokens: int = 2) -> DataFrame:
     position; survivors rejoin in original order.
 
     The fixture corpus is single-line word soup, so 'lines' are
-    deterministic fixed-size token chunks (same device as
-    paragraph_dedup's para_tokens). The whole operator is ONE per-row
+    deterministic 2-token chunks (same device as paragraph_dedup's
+    para_tokens). The whole operator is ONE per-row
     projection: array_distinct preserves first-occurrence order in
     Spark, so there is NO explode, NO window, NO shuffle — a 100 TB
     corpus runs this entirely inside whole-stage codegen."""
-    lines = _token_chunks(F.col("text"), line_tokens)
+    lines = _token_chunks(F.col("text"), 2)
     uniq = F.array_distinct(lines)
     return df.select(
         F.col("doc_id"),
@@ -1717,22 +1708,22 @@ def line_dedup(df: DataFrame, line_tokens: int = 2) -> DataFrame:
         F.array_join(uniq, " ").alias("clean_text"))
 
 
-def vocab_prune_stats(df: DataFrame, k: int = 16) -> DataFrame:
-    """Fixed-vocab UNK analysis: prune the vocabulary to the top-k
+def vocab_prune_stats(df: DataFrame) -> DataFrame:
+    """Fixed-vocab UNK analysis: prune the vocabulary to the top-16
     types (count desc, token asc — a total order), then report per
     document how many token occurrences fall outside it — the
     '<unk> rate' a tokenizer with a capped vocab would see, the
     pre-training sanity check for vocab-size selection.
 
-    Shape: one vocab aggregate; the head is TakeOrdered (k rows — the
+    Shape: one vocab aggregate; the head is TakeOrdered (16 rows — the
     full vocab is never globally sorted or windowed); scoring is a
-    BROADCAST left join of the exploded corpus against the k-row head
+    BROADCAST left join of the exploded corpus against the 16-row head
     (never a shuffle join: the corpus side stays where it is), then a
     per-doc re-aggregate keyed by the doc id."""
     toks = df.select(F.col("doc_id"),
                      F.explode(tokens_expr(F.col("text"))).alias("w"))
     head = (toks.groupBy("w").agg(F.count("*").alias("c"))
-            .orderBy(F.desc("c"), F.asc("w")).limit(k)
+            .orderBy(F.desc("c"), F.asc("w")).limit(16)
             .select("w", F.lit(1).alias("_in")))
     scored = (toks.join(F.broadcast(head), "w", "left")
               .groupBy("doc_id")
@@ -1782,14 +1773,14 @@ def semantic_dedup(df: DataFrame, threshold: float = 0.5,
                     F.col("_drop").isNull().alias("kept")))
 
 
-def cdc_chunks(df: DataFrame, modulus: int = 8) -> DataFrame:
+def cdc_chunks(df: DataFrame) -> DataFrame:
     """Content-defined chunking (the rsync/LBFS/casync storage-dedup
     primitive, token-level): a token OPENS a new chunk when
-    md5(token) % modulus == 0, so chunk boundaries depend only on
+    md5(token) % 8 == 0, so chunk boundaries depend only on
     LOCAL content — insert one word at the front of a page and every
     chunk after the next boundary still hashes identically, which is
     what makes CDC dedupe recrawls where fixed-size chunking cannot.
-    Expected chunk length ~= modulus tokens.
+    Expected chunk length ~= 8 tokens.
 
     Returns exploded rows (key, chunk_idx, n_tokens, chunk_md5) —
     chunk_md5 over the space-joined chunk text is the dedup key a
@@ -1805,7 +1796,7 @@ def cdc_chunks(df: DataFrame, modulus: int = 8) -> DataFrame:
     toks = tokens_expr(F.col("text"))
     ex = (df.select(F.col("doc_id"),
                     F.posexplode(toks).alias("pos", "w"))
-          .withColumn("_flag", (_hash60(F.col("w")) % modulus == 0)
+          .withColumn("_flag", (_hash60(F.col("w")) % 8 == 0)
                       .cast("int")))
     wc = (Window.partitionBy("doc_id").orderBy("pos")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -1819,20 +1810,19 @@ def cdc_chunks(df: DataFrame, modulus: int = 8) -> DataFrame:
             .withColumn("chunk_idx", F.col("chunk_idx").cast("long")))
 
 
-def cms_frequencies(df: DataFrame, depth: int = 4,
-                    width: int = 64) -> DataFrame:
+def cms_frequencies(df: DataFrame) -> DataFrame:
     """Count-Min sketch frequency estimation (Cormode-Muthukrishnan),
-    verified against exact counts: a depth x width counter matrix
-    where row j buckets tokens by md5(j:token); a token's estimate is
+    verified against exact counts: a 4 x 64 counter matrix where row
+    j buckets tokens by md5(j:token) % 64; a token's estimate is
     the MIN over rows of its bucket sums. Deterministic given the
     hash, so — like the KMV sketch — the DuckDB oracle replays the
     whole sketch bucket-for-bucket. The CMS invariant est >= exact
     (one-sided error) is returned as a checkable column.
 
     Shape: ONE corpus explode into the exact vocab count (map-side
-    combined); every vocab row fans out to its depth (row, bucket)
-    pairs (a posexplode over a depth-sized array — depth x vocab, still
-    map-local). The sketch is a depth*width-row grouped sum of
+    combined); every vocab row fans out to its 4 (row, bucket) pairs
+    (a posexplode over a 4-element array — 4 x vocab, still
+    map-local). The sketch is a 256-row grouped sum of
     ``exact`` over those pairs — a cell is the sum over its bucket's
     words of their counts, the same total as counting raw tokens —
     tiny and broadcast back; vocab estimates join it per row and take
@@ -1840,9 +1830,9 @@ def cms_frequencies(df: DataFrame, depth: int = 4,
     corpus is read once and nothing is persisted. At 100 TB the sketch
     stays 256 counters — that IS the point of the sketch."""
     buckets = F.array(*[
-        (_hash60(F.concat_ws(":", F.lit(str(j)), F.col("w"))) % width)
+        (_hash60(F.concat_ws(":", F.lit(str(j)), F.col("w"))) % 64)
         .alias(f"b{j}")
-        for j in range(depth)])
+        for j in range(4)])
     vocab = (df.select(F.explode(tokens_expr(F.col("text"))).alias("w"))
              .groupBy("w").agg(F.count("*").cast("long").alias("exact")))
     vb = (vocab.select("w", "exact",
@@ -1858,9 +1848,8 @@ def cms_frequencies(df: DataFrame, depth: int = 4,
 
 
 @cache_scope()
-def bpe_learn(df: DataFrame,
-              n_merges: int = 8) -> list[tuple[int, str, str, int]]:
-    """Learn the top-N byte-pair-encoding merges from the corpus —
+def bpe_learn(df: DataFrame) -> list[tuple[int, str, str, int]]:
+    """Learn the top-8 byte-pair-encoding merges from the corpus —
     the tokenizer-training step of an LLM data pipeline (Sennrich et
     al. 2016). Classic char-level BPE over the WORD FREQUENCY table:
     each iteration counts adjacent symbol pairs weighted by word
@@ -1889,7 +1878,7 @@ def bpe_learn(df: DataFrame,
         "c", F.concat(chars, F.array(F.lit("</w>"))).alias("syms")))
     prev = None
     merges: list[tuple[int, str, str, int]] = []
-    for rank in range(n_merges):
+    for rank in range(8):
         pairs = seqs.select(
             "c", F.explode(F.when(
                 F.size("syms") >= 2,
@@ -1927,23 +1916,23 @@ def bpe_learn(df: DataFrame,
     return merges
 
 
-def minhash_accuracy(df: DataFrame, num_perm: int = 8,
-                     min_jaccard: float = 0.1) -> DataFrame:
+def minhash_accuracy(df: DataFrame) -> DataFrame:
     """MinHash sketch-accuracy audit (the third of the sketch trilogy,
-    after KMV cardinality and CMS frequency): for every pair above
-    min_jaccard EXACT shingle Jaccard, report the signature-equality
-    estimate (matching slots / num_perm) beside the exact value and
-    the absolute error — the table that justifies a chosen num_perm
-    before an LSH campaign. E[est] = exact by min-wise hashing; with
-    num_perm=8 the estimate quantizes to eighths.
+    after KMV cardinality and CMS frequency): for every pair with
+    EXACT bigram Jaccard >= 0.1, report the 8-permutation
+    signature-equality estimate (matching slots / 8) beside the exact
+    value and the absolute error — the table that justifies a
+    permutation count before an LSH campaign. E[est] = exact by
+    min-wise hashing; with 8 permutations the estimate quantizes to
+    eighths.
 
     Caller bounds the input (modulo subset — the ngram_jaccard
     precedent): the pair join is all-pairs BY DESIGN because the audit
     wants true negatives too, and all-pairs is only sane on a bounded
     sample. Signatures and shingle sets compute once each; est/exact
-    arithmetic is per-pair expressions; est uses /num_perm (a power of
-    two) so the division is float-exact in both engines."""
-    sig = minhash_signature(df, num_perm)
+    arithmetic is per-pair expressions; est uses /8 (a power of two)
+    so the division is float-exact in both engines."""
+    sig = minhash_signature(df)
     sh = df.select(F.col("doc_id"),
                    F.array_distinct(word_shingles(F.col("text"), 2))
                    .alias("sh")) \
@@ -1958,16 +1947,16 @@ def minhash_accuracy(df: DataFrame, num_perm: int = 8,
     b = base.select(*[F.col(c).alias(f"b_{c}") for c in base.columns])
     pairs = a.join(b, F.col("a_doc_id") < F.col("b_doc_id"))
     eq = sum(F.when(F.col(f"a_mh{i}") == F.col(f"b_mh{i}"), 1).otherwise(0)
-             for i in range(num_perm))
+             for i in range(8))
     inter = F.size(F.array_intersect("a_sh", "b_sh"))
     union = F.size("a_sh") + F.size("b_sh") - inter
     exact = inter.cast("double") / union.cast("double")
     return (pairs.select(F.col("a_doc_id").alias("id_a"),
                          F.col("b_doc_id").alias("id_b"),
-                         F.round(eq.cast("double") / num_perm, 4)
+                         F.round(eq.cast("double") / 8, 4)
                          .alias("est_jaccard"),
                          F.round(exact, 4).alias("exact_jaccard"))
-            .filter(F.col("exact_jaccard") >= min_jaccard)
+            .filter(F.col("exact_jaccard") >= 0.1)
             .withColumn("abs_err",
                         F.round(F.abs(F.col("est_jaccard")
                                       - F.col("exact_jaccard")), 4)))

@@ -123,7 +123,7 @@ class TestSimhash:
                 ("b", "spark engine web crawl dedup pipeline batch wave"),
                 ("c", "a completely different document about cooking recipes")]
         df = spark.createDataFrame(rows, "url string, text string")
-        pairs = D.simhash_near_dups(df, max_hamming=3).collect()
+        pairs = D.simhash_near_dups(df).collect()
         assert len(pairs) == 1
         assert (pairs[0]["key_a"], pairs[0]["key_b"]) == ("a", "b")
         assert pairs[0]["hamming"] == 0
@@ -136,9 +136,9 @@ class TestSimhash:
                  "  padded   runs\tof\nwhitespace  ", "single",
                  "UPPER lower MiXeD case TOKENS here now"]
         rows = [(i, t) for i, t in enumerate(texts)]
-        df = spark.createDataFrame(rows, "doc_id long, t string")
+        df = spark.createDataFrame(rows, "doc_id long, text string")
         got = {r["key"]: r["sh"]
-               for r in D.simhash64_frame(df, "t", "doc_id").collect()}
+               for r in D.simhash64_frame(df, "doc_id").collect()}
         exp = {i: D.simhash64_py(t) for i, t in enumerate(texts)}
         assert got == exp
 
@@ -146,7 +146,7 @@ class TestSimhash:
         docs = spark.read.parquet(
             "/root/testdata/sf0.001/documents.parquet")
         got = {r["key"]: r["sh"]
-               for r in D.simhash64_frame(docs, "text", "doc_id").collect()}
+               for r in D.simhash64_frame(docs, "doc_id").collect()}
         exp = {r["doc_id"]: D.simhash64_py(r["text"])
                for r in docs.select("doc_id", "text").collect()}
         assert got == exp and len(got) > 100
@@ -154,8 +154,8 @@ class TestSimhash:
     def test_jvm_frame_plan_has_no_python_stage(self, spark):
         """The round-3 verdict's ask: no Python stage in the simhash
         plan — the md5 bit-vote runs entirely in JVM codegen."""
-        df = spark.createDataFrame([(1, "a b c")], "doc_id long, t string")
-        out = D.simhash64_frame(df, "t", "doc_id")
+        df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+        out = D.simhash64_frame(df, "doc_id")
         plan = out._jdf.queryExecution().executedPlan().toString()
         for marker in ("ArrowEvalPython", "BatchEvalPython",
                        "FlatMapGroupsInPandas", "MapInPandas"):
@@ -333,7 +333,7 @@ class TestSimhashMultiplicity:
         rows = [("u1", "alpha beta gamma"), ("u1", "alpha beta gamma"),
                 ("u2", "other words here")]
         df = spark.createDataFrame(rows, "url string, text string")
-        out = D.simhash64_frame(df, "text", "url").collect()
+        out = D.simhash64_frame(df).collect()
         assert len(out) == 3
         hashes = sorted((r["key"], r["sh"]) for r in out)
         expected = D.simhash64_py("alpha beta gamma")

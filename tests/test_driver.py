@@ -175,9 +175,11 @@ class TestResume:
     def test_resume_from_manifest_with_select_key(self, spark, tmp_path,
                                                   world):
         """A warehouse written before the folded-commit path was removed
-        carries an (always empty) `select` map in every snapshot. It
-        still reads, resumes to the same state as an uninterrupted run,
-        and new snapshots carry only the current keys."""
+        carries an (always empty) `select` map in every snapshot, and one
+        written before reads stopped consulting the base's directory
+        partitioning carries a `layout` map. It still reads, resumes to
+        the same state as an uninterrupted run, and new snapshots carry
+        only the current keys."""
         crawl_all(world)
         drvA = world["drv"]
         hA = (table_hash(drvA.frontier_view()), table_hash(drvA.seen_view()),
@@ -190,6 +192,7 @@ class TestResume:
         manifest = json.loads(storeB._manifest_path.read_text())
         for snap in manifest["snapshots"]:
             snap["select"] = {}
+            snap["layout"] = {}
         storeB._manifest_path.write_text(json.dumps(manifest, indent=1))
         n_old = len(manifest["snapshots"])
         assert storeB.read(spark, "frontier", snapshot_id=1).count() > 0
@@ -202,8 +205,7 @@ class TestResume:
         new = drvB2.store.snapshots()[n_old:]
         assert new
         for snap in new:
-            assert set(snap) == {"sid", "wave", "tables", "layout",
-                                 "committed_at"}
+            assert set(snap) == {"sid", "wave", "tables", "committed_at"}
 
     def test_resume_without_manifest_schemas(self, spark, tmp_path, world):
         """A warehouse whose manifest carries no `schemas` map reads by
@@ -427,7 +429,7 @@ class TestDeltaState:
         store.commit(1, {}, appends={"seen": delta})
         drv.compact()
         snap = store.latest()
-        assert snap["layout"]["seen"] == ["salt"]
+        assert "layout" not in snap
         assert not any((store.root / snap["tables"]["seen"]).rglob("*.parquet"))
         assert drv.seen_view().count() == 0
 

@@ -159,7 +159,7 @@ class TestR5Shapes:
 
         docs = spark.read.parquet(f"{SF}/documents.parquet")
         emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-        for df in (X.chunk_documents(docs, 512, 64),
+        for df in (X.chunk_documents(docs),
                    X.quantize_embeddings(emb)):
             assert "Exchange" not in plan_of(df)
 
@@ -171,7 +171,7 @@ class TestR5Shapes:
         docs = spark.read.parquet(f"{SF}/documents.parquet")
         from crawlspark import dedup as D
 
-        plan = plan_of(D.simhash64_frame(docs, "text", "doc_id"))
+        plan = plan_of(D.simhash64_frame(docs, "doc_id"))
         for banned in ("Exchange", "Generate", "HashAggregate",
                        "ArrowEvalPython", "BatchEvalPython"):
             assert banned not in plan, banned
@@ -195,8 +195,7 @@ class TestR5Shapes:
         docs = spark.read.parquet(f"{SF}/documents.parquet")
         from crawlspark import textops as X
 
-        plan = plan_of(X.minhash_lsh_pairs(docs, num_perm=8, bands=4,
-                                           jaccard_threshold=0.5))
+        plan = plan_of(X.minhash_lsh_pairs(docs))
         # the two id-prune joins + the pair join all broadcast
         assert plan.count("BroadcastHashJoin") >= 3
         assert "InMemoryTableScan" in plan  # cand persisted, not re-run
@@ -236,7 +235,7 @@ class TestAnnIndex:
         path = str(tmp_path / "annidx2")
         X.build_ann_index(emb, path, dim=len(q), n_planes=6)
         a = [(r["vec_id"], r["cosine"]) for r in
-             X.ann_topk_lsh(emb, q, k=10, n_planes=6, probe_hamming=2).collect()]
+             X.ann_topk_lsh(emb, q, n_planes=6, probe_hamming=2).collect()]
         b = [(r["vec_id"], r["cosine"]) for r in
              X.ann_topk_lsh_indexed(spark, path, q, k=10, n_planes=6,
                                     probe_hamming=2).collect()]
@@ -325,7 +324,7 @@ class TestCorpusShapePlans:
                [("b", i, float(i % 5)) for i in range(20)]
         df = spark.createDataFrame(rows,
                                    "lang string, doc_id long, s double")
-        plan = plan_of(X.grouped_ntile(df, "lang", ["s", "doc_id"], 3))
+        plan = plan_of(X.grouped_ntile(df, "lang", ["s", "doc_id"]))
         assert "SinglePartition" not in plan, plan
         assert "BroadcastHashJoin" in plan
         assert "rangepartitioning" in plan
@@ -409,7 +408,7 @@ class TestRound5Session4Plans:
         from crawlspark import textops as X
 
         docs = spark.read.parquet(f"{SF}/documents.parquet")
-        plan = plan_of(X.line_dedup(docs, line_tokens=2))
+        plan = plan_of(X.line_dedup(docs))
         for banned in ("Exchange", "Generate", "ArrowEvalPython",
                        "BatchEvalPython"):
             assert banned not in plan, banned
@@ -420,7 +419,7 @@ class TestRound5Session4Plans:
         from crawlspark import textops as X
 
         docs = spark.read.parquet(f"{SF}/documents.parquet")
-        plan = plan_of(X.vocab_prune_stats(docs, k=16))
+        plan = plan_of(X.vocab_prune_stats(docs))
         assert "TakeOrderedAndProject" in plan, plan
         assert "BroadcastHashJoin" in plan, plan
 

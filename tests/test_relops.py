@@ -96,7 +96,7 @@ def test_entity_rank_matches_numpy(spark):
     edges = spark.createDataFrame(
         [(f"n{a}", f"n{b}") for a, b in sym], "src string, dst string")
     got = {r.node: r.rank
-           for r in R.entity_rank(edges, iters=5, damping=0.85).collect()}
+           for r in R.entity_rank(edges).collect()}
 
     n = 4
     A = np.zeros((n, n))
@@ -156,7 +156,7 @@ def test_duplicate_spans_known_corpus(spark):
          (2, "p q r s t u v w distinct1 distinct2 p q r s t u v w"),
          (3, "totally different words with no overlap at all here ok")],
         "doc_id long, text string")
-    out = X.duplicate_spans(docs, n=8).orderBy("key", "span_start").collect()
+    out = X.duplicate_spans(docs).orderBy("key", "span_start").collect()
     spans = [(r.key, r.span_start, r.span_end, r.n_grams) for r in out]
     # doc 1: grams starting at token 3..5 repeat doc 0's -> span [3, 12]
     assert (1, 3, 12, 3) in spans
@@ -170,32 +170,38 @@ def test_duplicate_spans_short_and_empty_docs(spark):
         [(0, "one two three"), (1, ""), (2, None),
          (3, "a b c d e f g h"), (4, "a b c d e f g h")],
         "doc_id long, text string")
-    out = X.duplicate_spans(docs, n=8).collect()
+    out = X.duplicate_spans(docs).collect()
     assert [(r.key, r.span_start, r.span_end, r.n_grams)
             for r in out] == [(4, 0, 7, 1)]
 
 
+# one 600 s interval_join bucket is 1000 of these units
+UNIT_US = 600_000
+
+
 def test_interval_join_matches_naive(spark):
     """Bucketed decomposition equals the naive theta join, including
-    intervals spanning multiple buckets, overlapping intervals
-    (point duplication), boundary semantics, and empty windows."""
+    intervals spanning multiple 600 s buckets (up to 1.8 h long),
+    overlapping intervals (point duplication), boundary semantics, and
+    empty windows."""
     import numpy as np
     import pandas as pd
 
     rng = np.random.RandomState(11)
     pts = pd.DataFrame({
         "k": rng.randint(0, 5, 600).astype("int64"),
-        "t": rng.randint(0, 10_000, 600).astype("int64"),
+        "t": rng.randint(0, 10_000, 600).astype("int64") * UNIT_US,
         "pid": np.arange(600).astype("int64")})
     s = rng.randint(0, 9_500, 80).astype("int64")
     iv = pd.DataFrame({
         "k": rng.randint(0, 5, 80).astype("int64"),
-        "s": s, "e": s + rng.randint(1, 3_000, 80).astype("int64"),
+        "s": s * UNIT_US,
+        "e": (s + rng.randint(1, 3_000, 80).astype("int64")) * UNIT_US,
         "iid": np.arange(80).astype("int64")})
+    assert ((iv.e - 1) // 600_000_000 - iv.s // 600_000_000).max() >= 2
     got = (R.interval_join(spark.createDataFrame(pts),
                            spark.createDataFrame(iv), on="k",
-                           point_ts="t", start_col="s", end_col="e",
-                           bucket_us=1000)
+                           point_ts="t", start_col="s", end_col="e")
            .select("pid", "iid_i").toPandas())
     naive = pts.merge(iv, on="k")
     naive = naive[(naive.t >= naive.s) & (naive.t < naive.e)]
@@ -204,28 +210,31 @@ def test_interval_join_matches_naive(spark):
 
 
 def test_interval_join_boundary_semantics(spark):
-    """start inclusive, end exclusive — points exactly at the edges."""
-    pts = spark.createDataFrame([(1, 100, 0), (1, 200, 1), (1, 199, 2)],
+    """start inclusive, end exclusive — points exactly at the edges of
+    an interval spanning three 600 s buckets."""
+    s, e = 900_000_000, 2_100_000_000    # buckets 1, 2 and 3
+    pts = spark.createDataFrame([(1, s, 0), (1, e, 1), (1, e - 1, 2)],
                                 "k long, t long, pid long")
-    iv = spark.createDataFrame([(1, 100, 200, 7)],
+    iv = spark.createDataFrame([(1, s, e, 7)],
                                "k long, s long, e long, iid long")
     got = sorted(r.pid for r in R.interval_join(
-        pts, iv, on="k", point_ts="t", start_col="s", end_col="e",
-        bucket_us=50).collect())
+        pts, iv, on="k", point_ts="t", start_col="s", end_col="e").collect())
     assert got == [0, 2]
 
 
 def test_interval_join_is_equi_join_in_plan(spark):
     """The physical plan must be a hash/sort-merge equi-join — never
     the nested-loop plan the bare containment predicate produces."""
+    u = 6 * UNIT_US   # 100 of these units make one 600 s bucket
     pts = spark.range(100).select(
-        (F.col("id") % 3).alias("k"), (F.col("id") * 37 % 1000).alias("t"),
+        (F.col("id") % 3).alias("k"), (F.col("id") * 37 % 1000 * u).alias("t"),
         F.col("id").alias("pid"))
     iv = spark.range(10).select(
-        (F.col("id") % 3).alias("k"), (F.col("id") * 91 % 800).alias("s"),
-        (F.col("id") * 91 % 800 + 120).alias("e"), F.col("id").alias("iid"))
+        (F.col("id") % 3).alias("k"), (F.col("id") * 91 % 800 * u).alias("s"),
+        ((F.col("id") * 91 % 800 + 120) * u).alias("e"),
+        F.col("id").alias("iid"))
     plan = R.interval_join(pts, iv, on="k", point_ts="t", start_col="s",
-                           end_col="e", bucket_us=100) \
+                           end_col="e") \
         ._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan

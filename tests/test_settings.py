@@ -2,15 +2,18 @@
 
 A defaulted parameter of a top-level function, or of a method of a
 top-level class, in ``crawlspark/*.py`` is a setting. Each one must be
-passed, by keyword or by position, at some call site outside
-``tests/``: in the package or an entry script (``ENTRY_SCRIPTS`` of
-``test_reachability``). A setting that only its default ever reaches is
-a constant, and one that only tests set keeps a branch alive for them
-alone. The reference twins that ``test_reachability.REFERENCE_ONLY``
-keeps for the tests are left out. Call sites are matched by function
+set, by keyword or by position, at some call site outside ``tests/``:
+in the package or an entry script (``ENTRY_SCRIPTS`` of
+``test_reachability``). A call sets a parameter when it passes anything
+but the default literal; a non-literal argument counts as setting it.
+A setting that only its default ever reaches is a constant, and one
+that only tests set keeps a branch alive for them alone. The reference
+twins that ``test_reachability.REFERENCE_ONLY`` keeps for the tests are
+left out. Call sites are matched by function
 name (a class call counts for its ``__init__``; a method called on an
 object skips ``self``). A setting without such a caller fails this test
-unless ``ALLOWED`` lists it with its reason.
+unless ``ALLOWED`` lists it with its reason; the failure names each call
+site that passes it only at its default as ``file:line``.
 """
 
 import ast
@@ -39,14 +42,25 @@ ALLOWED = {
 
 
 def _defaulted(fn):
-    """(name, positional index or None) of each defaulted parameter."""
+    """(name, positional index or None, default node) of each defaulted
+    parameter."""
     a = fn.args
     pos = a.posonlyargs + a.args
-    out = [(p.arg, i) for i, p in
-           enumerate(pos) if i >= len(pos) - len(a.defaults)]
-    out += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults)
+    first = len(pos) - len(a.defaults)
+    out = [(p.arg, i, a.defaults[i - first])
+           for i, p in enumerate(pos) if i >= first]
+    out += [(p.arg, None, d) for p, d in zip(a.kwonlyargs, a.kw_defaults)
             if d is not None]
     return out
+
+
+def _literal(node):
+    """(type, value) of a literal node, or None when it is not one."""
+    try:
+        v = ast.literal_eval(node)
+    except ValueError:
+        return None
+    return type(v), v
 
 
 def _scoped():
@@ -71,45 +85,59 @@ def _scoped():
 
 
 def _calls():
-    """call name -> (positional count, keyword names) per call site; a
-    call that unpacks ``*args`` or ``**kwargs`` sets nothing knowable."""
+    """call name -> (site, positional args, keyword args) per call site;
+    a call that unpacks ``*args`` or ``**kwargs`` sets nothing knowable."""
     out = {}
     for path in SOURCES:
+        rel = path.relative_to(ROOT)
         for n in ast.walk(ast.parse(path.read_text(), str(path))):
             if not isinstance(n, ast.Call):
                 continue
             f = n.func
             name = (f.id if isinstance(f, ast.Name)
                     else f.attr if isinstance(f, ast.Attribute) else None)
-            npos = sum(not isinstance(a, ast.Starred) for a in n.args)
-            kws = {k.arg for k in n.keywords if k.arg is not None}
-            out.setdefault(name, []).append((npos, kws))
+            args = [a for a in n.args if not isinstance(a, ast.Starred)]
+            kws = {k.arg: k.value for k in n.keywords if k.arg is not None}
+            out.setdefault(name, []).append((f"{rel}:{n.lineno}", args, kws))
     return out
 
 
 def _uncalled():
-    """Qualified names of the in-scope settings no call site sets."""
+    """In-scope setting no call site sets -> the call sites that pass it
+    at its default literal."""
     calls = _calls()
-    out = set()
+    out = {}
     for qual, (call, method, params) in _scoped().items():
-        sites = calls.get(call, [])
-        for arg, idx in params:
+        for arg, idx, default in params:
             pos = None if idx is None else idx - method
-            if not any(arg in kws or (pos is not None and npos > pos)
-                       for npos, kws in sites):
-                out.add(f"{qual}.{arg}")
+            at_default = []
+            for site, args, kws in calls.get(call, []):
+                node = (kws[arg] if arg in kws else args[pos]
+                        if pos is not None and len(args) > pos else None)
+                if node is None:
+                    continue
+                lit = _literal(node)
+                if lit is None or lit != _literal(default):
+                    break
+                at_default.append(site)
+            else:
+                out[f"{qual}.{arg}"] = at_default
     return out
 
 
 def _settings():
     return {f"{q}.{arg}" for q, (_, _, params) in _scoped().items()
-            for arg, _ in params}
+            for arg, _, _ in params}
 
 
 def test_every_crawl_path_setting_has_a_caller():
-    assert sorted(_uncalled() - set(ALLOWED)) == []
+    bad = {q: sites for q, sites in _uncalled().items() if q not in ALLOWED}
+    assert not bad, "settings no call site sets:\n" + "\n".join(
+        f"  {q}: " + (", ".join(sorted(sites)) + " pass only the default"
+                      if sites else "no call site passes it")
+        for q, sites in sorted(bad.items()))
 
 
 def test_allowed_entries_are_settings_without_a_caller():
     assert sorted(set(ALLOWED) - _settings()) == []
-    assert sorted(set(ALLOWED) - _uncalled()) == []
+    assert sorted(set(ALLOWED) - set(_uncalled())) == []

@@ -1,5 +1,7 @@
 """Training-data ops over the real testdata tables + DuckDB cross-checks."""
 
+import math
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -53,7 +55,7 @@ class TestDedup:
         assert got == want
 
     def test_minhash_signature_matches_duckdb(self, docs):
-        sig = X.minhash_signature(docs, num_perm=4, shingle_n=2)
+        sig = X.minhash_signature(docs, num_perm=4)
         got = {r["doc_id"]: tuple(r[f"mh{i}"] for i in range(4))
                for r in sig.collect()}
         want = {}
@@ -80,7 +82,7 @@ class TestDedup:
                 (3, "the quick brown fox jumps over the lazy cat today"),
                 (4, "completely unrelated text about spark partitions and shuffles")]
         df = spark.createDataFrame(rows, "doc_id long, text string")
-        pairs = X.minhash_lsh_pairs(df, num_perm=8, bands=4, jaccard_threshold=0.5)
+        pairs = X.minhash_lsh_pairs(df)
         got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pairs.collect()}
         assert (1, 2) in got and got[(1, 2)] == 1.0
         assert all(a != 4 and b != 4 for a, b in got)
@@ -98,7 +100,7 @@ class TestDedup:
 class TestFingerprint:
     def test_matches_duckdb(self, docs):
         got = {r["doc_id"]: r["fp"] for r in docs.select(
-            "doc_id", X.doc_fingerprint(F.col("text"), 8).alias("fp")).collect()}
+            "doc_id", X.doc_fingerprint(F.col("text")).alias("fp")).collect()}
         want = dict(duckdb.sql(f"""
             with t as (select doc_id, text from '{SF}/documents.parquet')
             select doc_id, min(md5(substr(text, i, 8)))
@@ -129,7 +131,7 @@ class TestANN:
         q = [float(x) for x in emb.orderBy("vec_id").first()["embedding"]]
         exact = {r["vec_id"] for r in X.brute_force_topk(emb, q, k=10).collect()}
         approx = {r["vec_id"] for r in
-                  X.ann_topk_lsh(emb, q, k=10, n_planes=6, probe_hamming=2).collect()}
+                  X.ann_topk_lsh(emb, q, n_planes=6, probe_hamming=2).collect()}
         assert len(exact & approx) / 10 >= 0.5  # multi-probe recall
 
     def test_lsh_bucket_deterministic(self, emb):
@@ -234,13 +236,13 @@ class TestIVF:
         exact = {(r.vec_id, r.cosine)
                  for r in X.brute_force_topk(emb, q, k=10).collect()}
         full = {(r.vec_id, r.cosine)
-                for r in X.ann_topk_ivf(spark, path, q, k=10, nprobe=8).collect()}
+                for r in X.ann_topk_ivf(spark, path, q, nprobe=8).collect()}
         assert full == exact
 
         # a narrow probe reads ONLY its cells (partition pruning) and
         # still finds the query's own vector plus mostly-right results
         import re
-        df = X.ann_topk_ivf(spark, path, q, k=10, nprobe=3)
+        df = X.ann_topk_ivf(spark, path, q, nprobe=3)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert re.search(r"PartitionFilters: \[.*_centroid.*\]", plan)
         got = {r.vec_id for r in df.collect()}
@@ -301,7 +303,7 @@ class TestJaccardForms:
         docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         got = {(r.id_a, r.id_b, r.jaccard) for r in
                X.minhash_lsh_pairs(docs).collect()}
-        sig = X.minhash_signature(docs, 8, 2)
+        sig = X.minhash_signature(docs, 8)
         bands, rpb = 4, 2
         bs = [F.struct(F.lit(b).alias("band"),
                        F.concat_ws("|", *[F.col(f"mh{b * rpb + r}")
@@ -349,7 +351,7 @@ class TestCorpusHygiene:
         df = spark.createDataFrame(rows, "doc_id long, text string")
         ev = df.filter(F.col("doc_id") == 0)
         got = {r.doc_id: (r.n_overlap, r.contaminated)
-               for r in X.decontaminate(df, ev, n=8).collect()}
+               for r in X.decontaminate(df, ev).collect()}
         assert got[0][1] and got[1][1] and not got[2][1]
         assert got[0][0] == 3          # 10 words -> 3 distinct 8-grams
         assert got[1][0] == 3          # the shared prefix ones
@@ -365,9 +367,9 @@ class TestCorpusHygiene:
 
         docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         ev = docs.filter(F.col("doc_id") % 97 == 0)
-        bc = X.decontaminate(docs, ev, n=8)
+        bc = X.decontaminate(docs, ev)
         monkeypatch.setattr(X, "EVAL_BROADCAST_LIMIT_TOKENS", 0)
-        shuf = X.decontaminate(docs, ev, n=8)
+        shuf = X.decontaminate(docs, ev)
         a = sorted(tuple(r) for r in bc.collect())
         b = sorted(tuple(r) for r in shuf.collect())
         assert a == b and len(a) > 100
@@ -412,19 +414,46 @@ class TestCorpusHygiene:
 
     def test_lm_score_rare_tokens_score_higher(self, spark):
         """Docs made of corpus-rare tokens carry more self-information
-        than docs of head tokens; empty docs stay total at 0.0."""
+        than docs of head tokens; empty docs stay total at 0.0. The
+        corpus has 1,108 distinct words, so the 1000-word model cuts
+        through the count-2 fillers: w0994 is the last word inside it
+        (5 head words + w0000..w0994), w0995 scores at the OOV floor.
+        Every score equals a pure-Python replay."""
+        import math
+
         from crawlspark import textops as X
 
         common = "the and of to in " * 20
+        fillers = [f"w{j:04d}" for j in range(1100)]
+        bulk = " ".join(w for w in fillers if w not in ("w0994", "w0995"))
         rows = [(0, common), (1, common), (2, common),
                 (3, "zyzzyva qwyjibo floccinaucinihilipilification"),
-                (4, None)]
+                (4, None), (5, bulk), (6, bulk),
+                (7, "w0994 w0994"), (8, "w0995 w0995")]
         df = spark.createDataFrame(rows, "doc_id long, text string")
         got = {r.doc_id: (r.n_scored, r.lm_score)
-               for r in X.lm_quality_score(df, vocab_k=5).collect()}
+               for r in X.lm_quality_score(df).collect()}
         assert got[4] == (0, 0.0)
         assert got[3][1] > got[0][1]          # rare >> head tokens
         assert got[0] == got[1] == got[2]     # identical docs, same score
+        assert got[8][1] > got[7][1]          # w0995 falls outside the cut
+
+        counts = {}
+        for _, t in rows:
+            for w in (t or "").split():
+                counts[w] = counts.get(w, 0) + 1
+        assert len(counts) > 1000
+        total = sum(counts.values())
+        vocab = sorted(counts, key=lambda w: (-counts[w], w))[:1000]
+        info = {w: -math.log2(counts[w] / total) for w in vocab}
+        oov = -math.log2(1.0 / total)
+        for doc_id, t in rows:
+            toks = (t or "").split()
+            if not toks:
+                continue
+            want = sum(info.get(w, oov) for w in toks) / len(toks)
+            assert got[doc_id][0] == len(toks)
+            assert got[doc_id][1] == pytest.approx(want, abs=1e-4)
 
     def test_stratified_sample_deterministic_and_rated(self, spark):
         """The sample must be identical under repartitioning (the
@@ -519,30 +548,30 @@ class TestCorpusHygiene:
         and empties vanish, and the plan never shuffles."""
         from crawlspark import textops as X
 
-        rows = [(0, None), (1, ""), (2, "a" * 5), (3, "a" * 10),
-                (4, "a" * 11), (5, "a" * 18), (6, "a" * 19)]
+        rows = [(0, None), (1, ""), (2, "a" * 5), (3, "a" * 512),
+                (4, "a" * 513), (5, "a" * 960), (6, "a" * 961)]
         df = spark.createDataFrame(rows, "doc_id long, text string")
         out = {r["key"]: r for r in
-               X.chunk_documents(df, size=10, overlap=2)
+               X.chunk_documents(df)
                .groupBy("key").agg(F.count("*").alias("n"),
                                    F.max("chunk_start").alias("last"))
                .collect()}
-        # step = 8; n = max(1, ceil((L-2)/8)); L<=10 -> 1 chunk
+        # size 512, overlap 64, step 448; n = max(1, ceil((L-64)/448))
         assert 0 not in out and 1 not in out
         assert (out[2]["n"], out[3]["n"]) == (1, 1)
-        # L=11: chunk at 8 covers 3 chars > overlap -> 2 chunks
-        assert (out[4]["n"], out[4]["last"]) == (2, 8)
-        # L=18: chars past start 16 = 2 == overlap -> contained, still 2
+        # L=513: chunk at 448 covers 65 chars > overlap -> 2 chunks
+        assert (out[4]["n"], out[4]["last"]) == (2, 448)
+        # L=960: chars past start 896 = 64 == overlap -> contained, still 2
         assert out[5]["n"] == 2
-        assert (out[6]["n"], out[6]["last"]) == (3, 16)
+        assert (out[6]["n"], out[6]["last"]) == (3, 896)
         # offsets+lens tile the doc: sum(len) - overlap*(n-1) == L
-        chunks = X.chunk_documents(df, size=10, overlap=2).collect()
+        chunks = X.chunk_documents(df).collect()
         import collections
         tot = collections.Counter()
         for r in chunks:
             tot[r["key"]] += r["chunk_len"]
-        assert tot[6] == 19 + 2 * (out[6]["n"] - 1)
-        plan = (X.chunk_documents(df, size=10, overlap=2)
+        assert tot[6] == 961 + 64 * (out[6]["n"] - 1)
+        plan = (X.chunk_documents(df)
                 ._jdf.queryExecution().executedPlan().toString())
         assert "Exchange" not in plan, plan
 
@@ -565,18 +594,20 @@ class TestCorpusHygiene:
 
     def test_tfidf_topk_ranking(self, spark):
         """A corpus-wide stopword must rank below a doc-unique term
-        even at lower tf; ties break by term alphabetically."""
+        even at lower tf; ties break by term alphabetically, and only
+        the top 3 terms of a doc survive."""
         from crawlspark import textops as X
 
-        rows = [(0, "the the the zebra"), (1, "the apple"),
+        rows = [(0, "the the the zebra yak xylo"), (1, "the apple"),
                 (2, "the banana banana")]
         df = spark.createDataFrame(rows, "doc_id long, text string")
-        out = X.tfidf_topk(df, k=2).collect()
+        out = X.tfidf_topk(df).collect()
         by_doc = {}
         for r in out:
             by_doc.setdefault(r["key"], []).append((r["rank"], r["term"]))
-        # 'the' has df=3 -> idf=1+ln(4/4)=1; uniques have idf=1+ln(2)
-        assert sorted(by_doc[0]) == [(1, "the"), (2, "zebra")]  # tf=3 wins
+        # 'the' has df=3 -> idf=1+ln(4/4)=1; uniques have idf=1+ln(2);
+        # tf=3 wins, the three tied uniques break by term, zebra is cut
+        assert sorted(by_doc[0]) == [(1, "the"), (2, "xylo"), (3, "yak")]
         assert sorted(by_doc[1])[0] == (1, "apple")
         assert sorted(by_doc[2])[0] == (1, "banana")
 
@@ -645,19 +676,32 @@ class TestCorpusShapeOps:
         for p in (1, 8):
             got = sorted(
                 (r.lang, r.doc_id, r.bucket) for r in
-                X.grouped_ntile(df, "lang", ["s", "doc_id"], 3,
+                X.grouped_ntile(df, "lang", ["s", "doc_id"],
                                 num_partitions=p).collect())
             assert got == want, p
 
     def test_pmi_bigrams_math(self, spark):
-        # unigrams: a,b,c,d x5 each (N=20); bigrams: "a b" x5, "c d" x5
-        # (NB=10). pmi("a b") = log2((5/10)/((5/20)^2)) = log2(8) = 3.0
-        rows = [(i, "a b") for i in range(5)] + \
-               [(i + 5, "c d") for i in range(5)]
+        # one bigram "xI yI" per doc, seen n times: unigram counts n
+        # each, so pmi = log2((n/NB) / (n/N)^2) = log2(4 NB / n) with
+        # N = 2 NB — rarer bigrams score higher. The four n=4 bigrams
+        # would top the list but fall under the 5-count floor; the 40
+        # n=5 bigrams come next, then the n=6 ones by text until the
+        # top-50 cut (b00..b09 of b00..b19).
+        pairs = ([(f"d{j} e{j}", 4) for j in range(4)]
+                 + [(f"a{j:02d} c{j:02d}", 5) for j in range(40)]
+                 + [(f"b{j:02d} f{j:02d}", 6) for j in range(20)])
+        rows = [(i, t) for i, t in
+                enumerate(t for t, n in pairs for _ in range(n))]
         df = spark.createDataFrame(rows, "doc_id long, text string")
-        got = {r.bigram: (r.n, r.pmi) for r in
-               X.pmi_bigrams(df, min_count=5, k=10).collect()}
-        assert got == {"a b": (5, 3.0), "c d": (5, 3.0)}
+        got = [(r.bigram, r.n, r.pmi) for r in X.pmi_bigrams(df).collect()]
+        nb = sum(n for _, n in pairs)
+        want = sorted(((t, n, round(math.log(4 * nb / n) / math.log(2), 4))
+                       for t, n in pairs if n >= 5),
+                      key=lambda r: (-r[2], r[0]))[:50]
+        assert [g[:2] for g in got] == [w[:2] for w in want]
+        assert got[-1][0] == "b09 f09"
+        for g, w in zip(got, want):
+            assert g[2] == pytest.approx(w[2], abs=1e-4)
 
     def test_group_quantiles_exact_lower_discrete(self, spark):
         # lang a: values 1..10 -> p25 = ceil(10*.25)=rank 3 -> 3.0,
@@ -751,7 +795,7 @@ class TestCorpusHealthOps:
         rows = [(i, "s", " ".join(f"w{j}" for j in range(10)))
                 for i in range(5)]
         df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-        r = X.kmv_distinct(df, k=128).collect()[0]
+        r = X.kmv_distinct(df).collect()[0]
         assert r.n_exact == 10 and r.kmv_est == 10.0
 
     def test_kmv_estimate_within_tolerance(self, spark):
@@ -761,11 +805,11 @@ class TestCorpusHealthOps:
         rows = [(i, "s", " ".join(f"tok{i}_{j}" for j in range(50)))
                 for i in range(100)]
         df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-        r = X.kmv_distinct(df, k=128).collect()[0]
+        r = X.kmv_distinct(df).collect()[0]
         assert r.n_exact == 5000
         assert abs(r.kmv_est - 5000) / 5000 < 0.36
         # parallelism-invariant (the sketch is order-free)
-        r2 = X.kmv_distinct(df.repartition(13), k=128).collect()[0]
+        r2 = X.kmv_distinct(df.repartition(13)).collect()[0]
         assert (r2.n_exact, r2.kmv_est) == (r.n_exact, r.kmv_est)
 
     def test_zipf_slope_shapes(self, spark):
@@ -822,29 +866,33 @@ class TestLineVocabSemOps:
         # lines of 2 tokens: "a b | c d | a b | e f" -> dup "a b" dropped
         df = spark.createDataFrame([(1, "a b c d a b e f"), (2, None)],
                                    "doc_id long, text string")
-        got = {r.doc_id: r for r in X.line_dedup(df, line_tokens=2).collect()}
+        got = {r.doc_id: r for r in X.line_dedup(df).collect()}
         assert got[1].n_lines == 4 and got[1].n_kept == 3
         assert got[1].clean_text == "a b c d e f"
         assert got[2].n_lines == 0 and got[2].clean_text == ""
 
     def test_line_dedup_ragged_tail(self, spark):
-        # 5 tokens at line_tokens=2 -> 3 lines, last is the 1-token tail
+        # 5 tokens in 2-token lines -> 3 lines, last is the 1-token tail
         df = spark.createDataFrame([(1, "a b a b x")],
                                    "doc_id long, text string")
-        r = X.line_dedup(df, line_tokens=2).collect()[0]
+        r = X.line_dedup(df).collect()[0]
         assert r.n_lines == 3 and r.n_kept == 2 and r.clean_text == "a b x"
 
     def test_vocab_prune_unk_accounting(self, spark):
-        # vocab head k=2 -> {"a" (4x), "b" (3x)}; "z","q" are UNK
+        # 17 types seen 3+ times: h00, h01 (4x), h02..h15 and x (3x);
+        # the 16-type head ties x with h02..h15 at 3 and breaks by
+        # token, so x is UNK beside the singletons z and q
+        hs = " ".join(f"h{j:02d}" for j in range(16))
         df = spark.createDataFrame(
-            [(1, "a a b z"), (2, "a b q q"), (3, "a b"), (4, None)],
+            [(1, hs), (2, hs), (3, hs), (4, "x x x z"), (5, "h00 h01 q q"),
+             (6, None)],
             "doc_id long, text string")
         got = {r.doc_id: (r.n_tokens, r.n_unk, r.unk_ratio)
-               for r in X.vocab_prune_stats(df, k=2).collect()}
-        assert got[1] == (4, 1, 0.25)
-        assert got[2] == (4, 2, 0.5)
-        assert got[3] == (2, 0, 0.0)
-        assert got[4] == (0, 0, 0.0)
+               for r in X.vocab_prune_stats(df).collect()}
+        assert got[1] == got[2] == got[3] == (16, 0, 0.0)
+        assert got[4] == (4, 4, 1.0)
+        assert got[5] == (4, 2, 0.5)
+        assert got[6] == (0, 0, 0.0)
 
     def test_semantic_dedup_drop_rule(self, spark):
         # identical vectors share a bucket and cosine 1.0 -> only the
@@ -882,23 +930,32 @@ class TestLineVocabSemOps:
 class TestCdcChunks:
     def test_boundary_shift_invariance(self, spark):
         # CDC's defining property: prepending tokens changes only the
-        # chunks before the next boundary — later chunk hashes survive
+        # chunks before the next boundary — later chunk hashes survive.
+        # At md5 % 8, "epsilon" and "prefix" open chunks: the base has
+        # six boundaries, the edited doc one more (plus its lead chunk)
         base = "alpha beta gamma delta epsilon zeta eta theta " * 6
         df = spark.createDataFrame(
             [(1, base), (2, "INSERTED PREFIX " + base)],
             "doc_id long, text string")
-        got = X.cdc_chunks(df, modulus=4).collect()
+        got = X.cdc_chunks(df).collect()
         h1 = {r.chunk_md5 for r in got if r.doc_id == 1}
         h2 = {r.chunk_md5 for r in got if r.doc_id == 2}
         shared = h1 & h2
         # everything after the first boundary downstream of the edit
         # is identical content -> most chunks must be shared
         assert len(shared) >= len(h1) - 2, (len(shared), len(h1))
+        def chunks(doc):
+            return [r.chunk_md5 for r in sorted(got, key=lambda r: r.chunk_idx)
+                    if r.doc_id == doc]
+        # past the base's lead chunk and the edit's two, every chunk matches
+        assert len(chunks(1)) == 7 and chunks(1)[1:] == chunks(2)[2:]
 
     def test_chunks_partition_the_tokens(self, spark):
-        df = spark.createDataFrame([(1, "a b c d e f g h i j")],
+        # "epsilon" and "prefix" open chunks at md5 % 8 == 0 ("f" does at % 4)
+        df = spark.createDataFrame([(1, "a b epsilon d e prefix f h i j")],
                                    "doc_id long, text string")
-        rows = X.cdc_chunks(df, modulus=4).collect()
+        rows = X.cdc_chunks(df).collect()
+        assert sorted(r.n_tokens for r in rows) == [2, 3, 5]
         assert sum(r.n_tokens for r in rows) == 10
         idx = sorted(r.chunk_idx for r in rows)
         assert idx == list(range(idx[0], idx[0] + len(idx)))
@@ -939,7 +996,7 @@ def _bpe_reference(word_counts, n_merges):
 
 class TestSketchAndBpe:
     def test_cms_one_sided_error(self, spark, docs):
-        rows = X.cms_frequencies(docs, depth=4, width=64).collect()
+        rows = X.cms_frequencies(docs).collect()
         assert len(rows) == 31  # the fixture vocab
         for r in rows:
             assert r.cms_est >= r.exact and r.overcount == r.cms_est - r.exact
@@ -961,32 +1018,40 @@ class TestSketchAndBpe:
         for _, t in rows:
             for w in t.split():
                 wc[w] = wc.get(w, 0) + 1
-        want = _bpe_reference(wc, 6)
-        got = X.bpe_learn(df, n_merges=6)
-        assert got == want, (got, want)
+        want = _bpe_reference(wc, 8)
+        got = X.bpe_learn(df)
+        assert len(got) == 8 and got == want, (got, want)
 
     def test_bpe_parallelism_invariant(self, spark):
         df = spark.createDataFrame(
             [(i, "alpha beta beta gamma") for i in range(20)],
             "doc_id long, text string")
-        assert X.bpe_learn(df, 4) == X.bpe_learn(df.repartition(9), 4)
+        got = X.bpe_learn(df)
+        assert len(got) == 8 and got == X.bpe_learn(df.repartition(9))
 
 
 class TestMinhashAccuracy:
     def test_identical_docs_estimate_one(self, spark):
+        # bigram sets: doc 1 = doc 2 (5), doc 4 (9) shares only "a b"
+        # with them (1/13 < 0.1), doc 5 (4) shares "a b" (1/8 >= 0.1)
+        # and sits inside doc 4 (4/9)
         df = spark.createDataFrame(
-            [(1, "a b c d e f"), (2, "a b c d e f"), (3, "z y x w v u")],
+            [(1, "a b c d e f"), (2, "a b c d e f"), (3, "z y x w v u"),
+             (4, "a b g h i j k l m n"), (5, "a b g h i")],
             "doc_id long, text string")
         rows = {(r.id_a, r.id_b): r
-                for r in X.minhash_accuracy(df, min_jaccard=0.01).collect()}
+                for r in X.minhash_accuracy(df).collect()}
         r = rows[(1, 2)]
         assert r.est_jaccard == 1.0 and r.exact_jaccard == 1.0
         assert r.abs_err == 0.0
         assert (1, 3) not in rows and (2, 3) not in rows  # disjoint shingles
+        assert (1, 4) not in rows and (2, 4) not in rows  # under 0.1
+        assert rows[(1, 5)].exact_jaccard == rows[(2, 5)].exact_jaccard == 0.125
+        assert rows[(4, 5)].exact_jaccard == round(4 / 9, 4)
 
     def test_estimate_bounded_and_quantized(self, spark, docs):
         sub = docs.filter(F.col("doc_id") % 5 == 0)
-        rows = X.minhash_accuracy(sub, num_perm=8, min_jaccard=0.1).collect()
+        rows = X.minhash_accuracy(sub).collect()
         assert rows, "no pairs above 0.1 exact jaccard"
         for r in rows:
             assert 0.0 <= r.est_jaccard <= 1.0
