@@ -20,12 +20,13 @@ Scale design (10^10-URL frontier):
   keys plus one append layer per enqueuing wave, each sized to that
   wave's seen delta — a wave writes O(delta) bloom bytes, never the
   whole filter. Probed via COGROUP on salt: the cogroup hash-exchanges
-  EVERY stored layer row, bit arrays included, on every probe — also
-  on a wave with no candidate key (a detail wave) — and each probe
-  task then deserializes its own salt's layers. At 10^10 keys and fpp
-  0.01 (~9.6 bits/key) the base is ~12 GB across N_SALTS = 16 salts =>
-  ~6.3e8 keys and ~750 MB per salt bucket per task — never collected
-  to the driver, but the whole filter crosses a shuffle per probe.
+  EVERY stored layer row, bit arrays included, on every probe (the
+  driver probes only on a wave with list links, the one side that has
+  candidate keys), and each probe task then deserializes its own
+  salt's layers. At 10^10 keys and fpp 0.01 (~9.6 bits/key) the base
+  is ~12 GB across N_SALTS = 16 salts => ~6.3e8 keys and ~750 MB per
+  salt bucket per task — never collected to the driver, but the whole
+  filter crosses a shuffle per probe.
 - TTL without Redis: lazy expiry — reads filter expires_at >= now;
   a compaction wave physically drops expired rows (same observable
   semantics as Redis per-key TTL, deduplicator.go:76-84) and rebuilds
@@ -268,11 +269,10 @@ def bloom_might_contain(candidates: DataFrame, blooms: DataFrame) -> DataFrame:
 
     Distribution: candidates COGROUP blooms on salt. Both sides are
     hash-exchanged on salt, so every probe shuffles every stored layer
-    row (the whole filter), also when ``candidates`` is empty; each task
-    then deserializes its salt's bit arrays (no driver collect, no
-    closure capture). On the 120-page world's detail wave, which has no
-    candidate key, the bloom still adds 3 jobs and 3 executed stages
-    (34 vs 31 with ``use_bloom=False``)."""
+    row (the whole filter), also when ``candidates`` is empty, so the
+    driver calls it only on a wave with list links; each task then
+    deserializes its salt's bit arrays (no driver collect, no closure
+    capture)."""
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in candidates.schema.fields
     ) + ", might_contain boolean"

@@ -48,15 +48,16 @@ Scale notes:
 - the fetch keeps ONE capture per url (latest ``warc_ts``, ties broken
   by the html hash), so the extraction cache is 1:1 with the fetched
   urls and every url-keyed output is the same at any partition layout.
-- ONE driver-side action per wave before the commit: a count per
-  (partition, kind, retry class) over the three cached frames
-  (processed rows, classified rows by status, scheduled rows by state).
-  Collecting it fills the schedule, extraction and bloom-probe caches
-  beneath it (serializing the Python stage so the commit's concurrent
-  writes cannot duplicate it); every wave stat and the lineage rows are
-  sums over what it returns (``missing`` is scheduled minus fetched).
-  Loop control is exact arithmetic over the stats, never a frontier
-  re-read.
+- a wave runs only the work it has rows for. One count per (partition,
+  kind, retry class, list page) over the cached scheduled and processed
+  rows, plus the list links, fills the schedule and extraction caches
+  (serializing the Python stage so the commit's concurrent writes cannot
+  duplicate it). Only a wave with list links reads seen and blooms and
+  classifies (its classified rows counted by status in a second action);
+  seen and blooms are appended only when it enqueued, jobs, extracted
+  and jsonld_audit only when it fetched a detail page. Wave stats and
+  lineage rows are sums over the counts; loop control is exact
+  arithmetic over the stats, never a frontier re-read.
 """
 
 from __future__ import annotations
@@ -88,9 +89,6 @@ _SEEN_COLS = [f.name for f in SEEN_SCHEMA.fields]
 
 _STAT_KEYS = ("fetched", "missing", "missing_retryable", "deferred",
               "disallowed", "enqueued", "new", "updated", "unchanged")
-# aggregate kinds a lineage row counts (sched states only feed the stats)
-_LINEAGE_KINDS = ("fetched", D.STATUS_NEW, D.STATUS_UPDATED,
-                  D.STATUS_UNCHANGED)
 
 
 def _obs_get(obs: Observation, names: list[str], fallback: DataFrame,
@@ -98,7 +96,7 @@ def _obs_get(obs: Observation, names: list[str], fallback: DataFrame,
     """Observation metrics with a deterministic fallback.
 
     No engine code calls this since the wave counts ``missing`` from
-    its one aggregate; it is kept only because perfbench's tracer
+    its pre-commit aggregate; it is kept only because perfbench's tracer
     (``perfbench/tracing.py``) patches it by name, and goes with the
     next tracer change.
 
@@ -294,7 +292,7 @@ class WaveDriver:
         # the scope releases the wave's caches however the wave ends
         with cache_scope():
             # persist shared lineage: sched, processed and classified are
-            # each read by several writes and by the wave's one aggregate
+            # each read by several writes and by the count that fills them
             sched = cached(politeness.schedule(pending, robots, ws))
             to_fetch = sched.filter(F.col("state") == "scheduled").drop("slot", "scheduled_ts")
             # deferred rows stay pending: no delta row, counted by the aggregate
@@ -349,37 +347,6 @@ class WaveDriver:
                              F.col("l.rank").alias("rank"))
                      .withColumn("host", host_of(F.col("url"))))
 
-            seen = self.seen_view() or spark.createDataFrame([], SEEN_SCHEMA)
-            blooms_prev = self.store.read(spark, "blooms") if self.use_bloom else None
-            if blooms_prev is not None:
-                classified = D.classify_with_bloom(links, seen, blooms_prev, now_ts)
-            else:
-                classified = D.classify(links, seen, now_ts)
-            classified = cached(classified)
-
-            changed = classified.filter(F.col("status") != D.STATUS_UNCHANGED)
-            enqueue = (changed.drop("status")
-                       .withColumn("priority", F.lit(0.0))
-                       .withColumn("state", F.lit("pending"))
-                       .withColumn("attempts", F.lit(0))
-                       .select(*_FRONTIER_COLS))
-
-            # publish-then-mark, atomically: the seen DELTA commits in the
-            # same snapshot as the frontier delta (O(delta), no anti-join
-            # against the stored seen set). One row per (source,id): a wave
-            # that lists the same item twice keeps the earliest FIFO
-            # discovery — the same deterministic tie-break as frontier_delta,
-            # so resolved seen values stay parallelism/resume-invariant.
-            seen_new = (D.seen_delta(
-                _first_per_key(changed, ["source", "id"],
-                               F.col("page").asc_nulls_last(),
-                               F.col("rank").asc_nulls_last(),
-                               F.col("last_updated_on").asc_nulls_last(),
-                               F.col("url").asc())
-                .select("source", "id", "host", "last_updated_on"),
-                now_ts)
-                .withColumn("_wseq", F.lit(wave)))
-
             # ---- detail pages -> extract -> normalize -> jobs append ---------
             details = processed.filter(F.col("depth") > 0)
             staged = (details
@@ -410,53 +377,97 @@ class WaveDriver:
             # ---- frontier delta (O(changed rows), never a rewrite) -----------
             fetched_rows = (to_fetch.join(got, "url", "left_semi")
                             .withColumn("state", F.lit("fetched")))
-            state_changes = (fetched_rows.select(*_FRONTIER_COLS)
-                             .unionByName(missing.select(*_FRONTIER_COLS))
-                             .unionByName(disallowed.select(*_FRONTIER_COLS))
-                             .withColumn("_pri", F.lit(0)))
-            # Within-wave resolution: one row per url. An enqueue beats a
-            # state update (an UPDATED link re-pends a just-fetched url for
-            # recrawl — publisher.go:30-83 re-push semantics); duplicate
-            # enqueues keep the earliest FIFO discovery (page, rank).
-            wave_delta = state_changes.unionByName(
-                enqueue.withColumn("_pri", F.lit(1)))
-            frontier_delta = (_first_per_key(
-                wave_delta, ["url"], F.col("_pri").desc(),
-                F.col("page").asc_nulls_last(), F.col("rank").asc_nulls_last(),
-                F.col("last_updated_on").asc_nulls_last(), F.col("id").asc())
-                .drop("_pri")
-                .withColumn("_wseq", F.lit(wave)))
+            wave_delta = (fetched_rows.select(*_FRONTIER_COLS)
+                          .unionByName(missing.select(*_FRONTIER_COLS))
+                          .unionByName(disallowed.select(*_FRONTIER_COLS))
+                          .withColumn("_pri", F.lit(0)))
 
-            # ---- THE pre-commit action (one per wave) ---------------------------
-            # One aggregate over the three cached frames, each row tagged
-            # with its partition, its kind and its retry class: "fetched"
-            # for processed rows, the dedup status for classified rows, the
-            # schedule state for sched rows. Collecting it fills every cache
-            # beneath it — sched, the Python extraction stage and the bloom
-            # probe — so the commit's concurrent writes see only cached
-            # frames, and both the wave stats and the lineage rows are sums
-            # over what it returns. A url re-pended as missing stays
+            # ---- THE pre-commit aggregate: what the wave has rows for ---------
+            # A count over the two cached frames per partition, kind
+            # ("fetched" for processed rows, the schedule state for sched
+            # rows), retry class and list flag, plus the list pages' links.
+            # Collecting it fills the caches beneath it (sched, the Python
+            # extraction stage), so the commit's writes see only cached
+            # frames; the stats, the lineage rows and which sides of the wave
+            # run are sums over it. A url re-pended as missing stays
             # retryable while attempts + 1 < max_retries.
             pid = F.spark_partition_id().alias("partition_id")
             retry = (F.col("attempts") + 1 < self.max_retries).alias("retry")
-            tagged = (processed.select(pid, F.lit("fetched").alias("kind"), retry)
-                      .unionByName(classified.select(pid, F.col("status").alias("kind"),
-                                                     F.lit(False).alias("retry")))
-                      .unionByName(sched.select(pid, F.col("state").alias("kind"), retry)))
+            is_list = (F.col("depth") == 0).alias("list")
+            tagged = (processed.select(pid, F.lit("fetched").alias("kind"), retry,
+                                       is_list, F.size("_links").alias("links"))
+                      .unionByName(sched.select(pid, F.col("state").alias("kind"),
+                                                retry, is_list, F.lit(0).alias("links"))))
             total, retryable = Counter(), Counter()
             per_part: dict[int, Counter] = defaultdict(Counter)
-            for part, kind, r, rows in (tagged.groupBy("partition_id", "kind", "retry")
-                                        .count().collect()):
+            n_links = n_details = 0
+            for part, kind, r, lst, rows, part_links in (
+                    tagged.groupBy("partition_id", "kind", "retry", "list")
+                    .agg(F.count("*"), F.sum("links")).collect()):
                 total[kind] += rows
                 retryable[kind] += rows if r else 0
-                if kind in _LINEAGE_KINDS:
+                if kind == "fetched":
                     per_part[part][kind] += rows
+                    n_links += part_links if lst else 0
+                    n_details += 0 if lst else rows
+
+            # ---- dedup classify (layered bloom + seen join) -------------------
+            # Only list links are candidate keys (as only the reference's
+            # list crawler consults the URL-seen set, crawler.go:98): a wave
+            # without any reads neither seen nor blooms. The classified
+            # rows' own count fills their cache (and runs the bloom probe).
+            if n_links:
+                seen = self.seen_view() or spark.createDataFrame([], SEEN_SCHEMA)
+                blooms_prev = self.store.read(spark, "blooms") if self.use_bloom else None
+                classified = cached(
+                    D.classify(links, seen, now_ts) if blooms_prev is None
+                    else D.classify_with_bloom(links, seen, blooms_prev, now_ts))
+                for part, status, rows in (classified.groupBy(pid, "status")
+                                           .count().collect()):
+                    total[status] += rows
+                    per_part[part][status] += rows
+
+                changed = classified.filter(F.col("status") != D.STATUS_UNCHANGED)
+                enqueue = (changed.drop("status")
+                           .withColumn("priority", F.lit(0.0))
+                           .withColumn("state", F.lit("pending"))
+                           .withColumn("attempts", F.lit(0))
+                           .select(*_FRONTIER_COLS))
+                wave_delta = wave_delta.unionByName(enqueue.withColumn("_pri", F.lit(1)))
+
+                # publish-then-mark, atomically: the seen DELTA commits in
+                # the same snapshot as the frontier delta (O(delta), no
+                # anti-join against the stored seen set). One row per
+                # (source,id): a wave that lists the same item twice keeps
+                # the earliest FIFO discovery — the same deterministic
+                # tie-break as frontier_delta, so resolved seen values stay
+                # parallelism/resume-invariant.
+                seen_new = (D.seen_delta(
+                    _first_per_key(changed, ["source", "id"],
+                                   F.col("page").asc_nulls_last(),
+                                   F.col("rank").asc_nulls_last(),
+                                   F.col("last_updated_on").asc_nulls_last(),
+                                   F.col("url").asc())
+                    .select("source", "id", "host", "last_updated_on"),
+                    now_ts)
+                    .withColumn("_wseq", F.lit(wave)))
             counted = {k: total[k] for k in ("fetched", "deferred", "disallowed")}
             counted.update(new=total[D.STATUS_NEW], updated=total[D.STATUS_UPDATED],
                            unchanged=total[D.STATUS_UNCHANGED],
                            enqueued=total[D.STATUS_NEW] + total[D.STATUS_UPDATED],
                            missing=total["scheduled"] - total["fetched"],
                            missing_retryable=retryable["scheduled"] - retryable["fetched"])
+
+            # Within-wave resolution: one row per url. An enqueue beats a
+            # state update (an UPDATED link re-pends a just-fetched url for
+            # recrawl — publisher.go:30-83 re-push semantics); duplicate
+            # enqueues keep the earliest FIFO discovery (page, rank).
+            frontier_delta = (_first_per_key(
+                wave_delta, ["url"], F.col("_pri").desc(),
+                F.col("page").asc_nulls_last(), F.col("rank").asc_nulls_last(),
+                F.col("last_updated_on").asc_nulls_last(), F.col("id").asc())
+                .drop("_pri")
+                .withColumn("_wseq", F.lit(wave)))
 
             # ---- lineage (per-partition metrics, north_rule) ------------------
             # from the collected counts; one file per wave. wall_ms is the
@@ -468,14 +479,17 @@ class WaveDriver:
                  for part, c in sorted(per_part.items())],
                 LINEAGE_SCHEMA).coalesce(1)
 
-            # bloom maintenance: one layer per salt sized to the seen
-            # delta, appended like the delta itself; skipped on waves that
-            # marked nothing new (detail waves)
-            appends = {"frontier": frontier_delta, "seen": seen_new,
-                       "jobs": jobs_batch, "extracted": extracted_batch,
-                       "lineage": lineage_new, "jsonld_audit": audit}
-            if self.use_bloom and counted["enqueued"] > 0:
-                appends["blooms"] = D.build_blooms(seen_new)
+            # a wave appends only the frames it has rows for: seen and one
+            # bloom layer per salt (sized to the seen delta) when it
+            # enqueued, the detail outputs when it fetched a detail page
+            appends = {"frontier": frontier_delta, "lineage": lineage_new}
+            if counted["enqueued"]:
+                appends["seen"] = seen_new
+                if self.use_bloom:
+                    appends["blooms"] = D.build_blooms(seen_new)
+            if n_details:
+                appends.update(jobs=jobs_batch, extracted=extracted_batch,
+                               jsonld_audit=audit)
             self.store.commit(wave, {}, appends=appends)
         stats = {"wave": wave, **{k: int(counted[k]) for k in _STAT_KEYS}}
         # exact pending-work indicator: deferred rows stay pending,

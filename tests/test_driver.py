@@ -210,7 +210,8 @@ class TestResume:
     def test_resume_without_manifest_schemas(self, spark, tmp_path, world):
         """A warehouse whose manifest carries no `schemas` map reads by
         schema inference and resumes bit-identical to an uninterrupted
-        run; the next commit records the schemas of what it writes."""
+        run; the next commits record the schemas of what they write (the
+        first wave fetches list pages only, so it writes no jobs)."""
         crawl_all(world)
         hA = state_hashes(spark, world["drv"])
 
@@ -219,15 +220,18 @@ class TestResume:
         drvB.bootstrap(world["seeds"])
         drvB.run_wave(world["pages"], world["robots"], world["ranks"])
         manifest = json.loads(storeB._manifest_path.read_text())
-        assert set(manifest.pop("schemas")) >= {"frontier", "seen", "jobs"}
+        assert set(manifest.pop("schemas")) == {"frontier", "seen", "lineage",
+                                                "blooms"}
         storeB._manifest_path.write_text(json.dumps(manifest, indent=1))
         assert storeB.read(spark, "frontier").count() > 0
 
         drvB2 = WaveDriver(spark, SnapshotStore(storeB.root), num_partitions=4)
         drvB2.run_until_done(world["pages"], world["robots"], world["ranks"], 6)
         assert state_hashes(spark, drvB2) == hA
+        # the resumed waves fetch detail pages only: no seen or blooms write
         schemas = json.loads(storeB._manifest_path.read_text())["schemas"]
-        assert {"frontier", "seen", "jobs", "extracted"} <= set(schemas)
+        assert set(schemas) == {"frontier", "lineage", "jobs", "extracted",
+                                "jsonld_audit"}
         for snap in drvB2.store.snapshots():
             assert "schemas" not in snap  # top level only
 
@@ -645,9 +649,9 @@ def _jobs_by_execution(spark, ids: set[int]) -> dict[str, int]:
 class TestJobBudget:
     # Spark jobs run by run_until_done on the 120-page world below
     # (bootstrap excluded): 2 waves plus the initial pending count
-    MAX_JOBS = 65
+    MAX_JOBS = 47
     # ... and by reseed plus run_until_done of the recrawl below
-    MAX_RECRAWL_JOBS = 86
+    MAX_RECRAWL_JOBS = 72
 
     def test_wave_loop_job_budget(self, spark, tmp_path):
         """Job-count guard on the wave loop, counted as
@@ -697,6 +701,86 @@ class TestJobBudget:
         assert stats[0]["unchanged"] > 0  # a bloom-probed list wave
         assert len(ran) <= self.MAX_RECRAWL_JOBS, json.dumps(
             _jobs_by_execution(spark, ran), indent=1)
+
+
+class TestWaveSides:
+    """A wave runs only the sides it has rows for: classification when
+    it fetched list links, the detail outputs when it fetched a detail
+    page."""
+
+    @pytest.fixture()
+    def classify_calls(self, monkeypatch):
+        """Names of the dedup classify entry points called, in order."""
+        from crawlspark import dedup as D
+
+        calls = []
+        for name in ("classify", "classify_with_bloom"):
+            def spy(*args, _real=getattr(D, name), _name=name, **kwargs):
+                calls.append(_name)
+                return _real(*args, **kwargs)
+            monkeypatch.setattr(D, name, spy)
+        return calls
+
+    def test_list_and_detail_waves_write_only_their_tables(
+            self, spark, tmp_path, classify_calls):
+        """On the 120-page world the first wave fetches list pages only
+        and the second detail pages only: the list wave classifies and
+        writes no jobs, extracted or jsonld_audit directory; the detail
+        wave calls no classify and writes no seen or blooms directory."""
+        store = SnapshotStore(tmp_path / "wh")
+        drv = WaveDriver(spark, store, num_partitions=4)
+        drv.bootstrap(synth.gen_seed_list(120))
+        pages = spark.createDataFrame(synth.gen_pages_pandas(120))
+        robots = spark.createDataFrame(synth.gen_robots())
+        ranks = spark.createDataFrame(synth.gen_host_rank())
+
+        waves = []
+        for _ in range(2):
+            n_calls = len(classify_calls)
+            stats = drv.run_wave(pages, robots, ranks)
+            written = {d.name for d in
+                       (store.root / "data" / str(store.latest()["sid"])).iterdir()}
+            waves.append((stats, classify_calls[n_calls:], written))
+        (list_stats, list_calls, list_written), \
+            (detail_stats, detail_calls, detail_written) = waves
+
+        assert list_stats["enqueued"] > 0 and list_calls
+        assert list_written == {"frontier", "seen", "blooms", "lineage"}
+        assert detail_stats["fetched"] > 0 and detail_calls == []
+        assert detail_written == {"frontier", "lineage", "jobs", "extracted",
+                                  "jsonld_audit"}
+        assert not detail_stats["work_remains"]
+
+    def test_mixed_wave_classifies_links_and_writes_details(self, spark,
+                                                             tmp_path):
+        """Under a binding budget a reseed mid-crawl gives a wave that
+        fetches list and detail pages: it classifies exactly the links
+        of its list pages and appends one jobs row per detail page."""
+        from crawlspark.extract import extract_links
+
+        pdf = synth.gen_pages_pandas(300)
+        pages = spark.createDataFrame(pdf)
+        robots = spark.createDataFrame(synth.gen_robots(wave_ms=12000))
+        ranks = spark.createDataFrame(synth.gen_host_rank())
+        store = SnapshotStore(tmp_path / "wh")
+        drv = WaveDriver(spark, store, num_partitions=4)
+        drv.bootstrap(synth.gen_seed_list(300))
+        drv.run_wave(pages, robots, ranks)
+        drv.run_wave(pages, robots, ranks)
+        drv.reseed(synth.gen_seed_list(300))
+        stats = drv.run_wave(pages, robots, ranks)
+
+        delta = spark.read.parquet(
+            str(store.root / store.latest()["tables"]["frontier"][-1]))
+        lists = [r["url"] for r in delta.filter(
+            (F.col("depth") == 0) & (F.col("state") == "fetched")).collect()]
+        html = dict(zip(pdf["url"], pdf["html"]))
+        links = sum(len(extract_links(html[u].decode())) for u in lists)
+        details = stats["fetched"] - len(lists)
+        assert lists and links > 0 and details > 0
+        assert stats["new"] + stats["updated"] + stats["unchanged"] == links
+        jobs = store.read(spark, "jobs").filter(F.col("wave") == stats["wave"])
+        assert jobs.count() == details
 
 
 def _crawl_then_recrawl(spark, drv, n=120) -> list[dict]:
