@@ -9,11 +9,11 @@ Scale design (10^10-URL frontier):
 - The per-job Redis round-trip (deduplicator.go:49-67, the reference's
   scalability ceiling) becomes ONE shuffle: candidates LEFT JOIN seen
   on (source, id).
-- ``seen`` is salted by xxhash64(host) % N_SALTS so one hot domain
-  (Zipf top host owns ~30% of URLs) spreads over N_SALTS buckets in
-  the membership layer; politeness grouping stays keyed by TRUE host
-  (frontier.py) — salting only where skew hurts, never where semantics
-  need the real key.
+- ``seen`` is salted by xxhash64(host) % N_SALTS: hosts spread over
+  N_SALTS buckets, but all of one host's keys share its bucket, so the
+  hot domain (Zipf top host, ~30% of URLs) makes one bucket hot;
+  spreading it needs a key-derived salt. Politeness grouping stays
+  keyed by TRUE host (frontier.py).
 - Bloom fast path: per-salt blooms built distributively with
   applyInPandas and stored like ``seen``, as layers (scalable-bloom
   style, Almeida et al. 2007): a compacted base sized to the surviving

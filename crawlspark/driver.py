@@ -55,9 +55,13 @@ Scale notes:
   duplicate it). Only a wave with list links reads seen and blooms and
   classifies (its classified rows counted by status in a second action);
   seen and blooms are appended only when it enqueued, jobs, extracted
-  and jsonld_audit only when it fetched a detail page. Wave stats and
-  lineage rows are sums over the counts; loop control is exact
-  arithmetic over the stats, never a frontier re-read.
+  and jsonld_audit only when it fetched a detail page. The writes read
+  the caches: fetched frontier rows are the extraction cache's rows, the
+  missing anti join runs only when fewer urls were fetched than
+  scheduled, and the per-url window only when the wave enqueued (the
+  one way a url meets two delta rows). Wave stats and lineage rows are
+  sums over the counts; loop control is exact arithmetic over the
+  stats, never a frontier re-read.
 """
 
 from __future__ import annotations
@@ -150,13 +154,10 @@ def table_hash(df: DataFrame) -> int:
     return hash((int(out["s"] or 0), int(out["n"])))
 
 
-# Output files per fat-table write (jobs, extracted) and per compacted
-# frontier base; control, delta and bloom tables write with their
-# natural partitioning, saving one shuffle per table per wave (Iceberg's
-# writer sizes files in production). Sizing MUST be repartition, not
-# coalesce: coalesce would pull the upstream compute (normalize/clean
-# Python UDFs) down to SNAPSHOT_FILES tasks; repartition keeps compute
-# wide and only shuffles the small finished rows into the output files.
+# Output files per compacted frontier base. Every wave write keeps the
+# partitioning it arrives in — jobs and extracted that of the AQE-sized
+# extraction cache, so their Python UDFs run as wide as it — saving one
+# shuffle per table per wave (Iceberg's writer sizes files in production).
 SNAPSHOT_FILES = 8
 
 
@@ -300,9 +301,8 @@ class WaveDriver:
                           .drop("slot", "scheduled_ts"))
 
             # "fetch": equi-join with the pages table. The frontier side is
-            # explicitly broadcast (inner join) and PRUNED to the columns
-            # the downstream stages read: the wave is politeness-budget-
-            # bounded while pages is the 100 TB side — broadcasting the
+            # explicitly broadcast (inner join): the wave is politeness-
+            # budget-bounded while pages is the 100 TB side — broadcasting the
             # small side guarantees the fat html column NEVER crosses a
             # shuffle. html stays binary; the combined mapInArrow page stage
             # (pandas-free — 2.3x faster measured, BENCH.md) decodes per
@@ -312,27 +312,16 @@ class WaveDriver:
             # does), so the latest warc_ts wins, ties broken by the html
             # hash taken in the scan stage; the window runs over the
             # extraction output, after html is dropped. processed is then
-            # 1:1 with the fetched urls.
-            fetch_cols = to_fetch.select("url", "depth", "page", "id",
-                                         "last_updated_on", "attempts")
+            # 1:1 with the fetched urls and carries their frontier rows
+            # (every column but state), so it IS the fetched set: the
+            # fetched frontier rows are read from it, and the aggregate
+            # counts missing urls as scheduled minus fetched.
             processed = cached(_first_per_key(extract_pages(
                 pages.select("url", "html", F.col("warc_ts").alias("_warc_ts"),
                              F.xxhash64("html").alias("_html_hash"))
-                     .join(F.broadcast(fetch_cols), "url", "inner")),
+                     .join(F.broadcast(to_fetch.drop("state")), "url", "inner")),
                 ["url"], F.col("_warc_ts").desc(), F.col("_html_hash").asc())
-                .select("url", "depth", "page", "id", "last_updated_on",
-                        "attempts", "_warc_ts", "_links", "x", "jsonld"))
-            # P8 retry: missing urls return to the pending pool with
-            # attempts+1 (state left 'scheduled' would orphan them forever;
-            # the pending filter caps at max_retries). The cached
-            # processed.url IS the fetched set: missing and fetched rows
-            # split to_fetch on it (one broadcast, reused by both joins) —
-            # pages is never scanned again for them, and the aggregate
-            # counts them as scheduled minus fetched.
-            got = F.broadcast(processed.select("url"))
-            missing = (to_fetch.join(got, "url", "left_anti")
-                       .withColumn("attempts", F.col("attempts") + 1)
-                       .withColumn("state", F.lit("pending")))
+                .drop("_html_hash"))
 
             # ---- list pages -> frontier candidates (S5 + D1/D2) --------------
             links = (processed.filter(F.col("depth") == 0)
@@ -360,27 +349,16 @@ class WaveDriver:
             # fixtures are vieclam24h-shaped, so that normalizer runs here.
             # One row per url; two urls listed under one id both append,
             # and jobs_view decides between them.
-            jobs_batch = (normalize_vieclam24h(staged)
-                          .withColumn("wave", F.lit(wave))
-                          .repartition(SNAPSHOT_FILES))
+            jobs_batch = normalize_vieclam24h(staged).withColumn("wave", F.lit(wave))
 
             # the byte-identity surface (C2, worker.go:145-147): CleanToText of
             # the extracted description, committed per url
             _, clean_to_text_udf, _ = clean_udfs()
             extracted_batch = details.select(
                 "url", F.lit(wave).alias("wave"),
-                clean_to_text_udf(F.col("x.job_description")).alias("text")
-            ).repartition(SNAPSHOT_FILES)
+                clean_to_text_udf(F.col("x.job_description")).alias("text"))
             audit = details.select("url", F.lit(wave).alias("wave"),
                                    F.posexplode("jsonld").alias("blob_index", "blob"))
-
-            # ---- frontier delta (O(changed rows), never a rewrite) -----------
-            fetched_rows = (to_fetch.join(got, "url", "left_semi")
-                            .withColumn("state", F.lit("fetched")))
-            wave_delta = (fetched_rows.select(*_FRONTIER_COLS)
-                          .unionByName(missing.select(*_FRONTIER_COLS))
-                          .unionByName(disallowed.select(*_FRONTIER_COLS))
-                          .withColumn("_pri", F.lit(0)))
 
             # ---- THE pre-commit aggregate: what the wave has rows for ---------
             # A count over the two cached frames per partition, kind
@@ -433,7 +411,6 @@ class WaveDriver:
                            .withColumn("state", F.lit("pending"))
                            .withColumn("attempts", F.lit(0))
                            .select(*_FRONTIER_COLS))
-                wave_delta = wave_delta.unionByName(enqueue.withColumn("_pri", F.lit(1)))
 
                 # publish-then-mark, atomically: the seen DELTA commits in
                 # the same snapshot as the frontier delta (O(delta), no
@@ -458,16 +435,37 @@ class WaveDriver:
                            missing=total["scheduled"] - total["fetched"],
                            missing_retryable=retryable["scheduled"] - retryable["fetched"])
 
-            # Within-wave resolution: one row per url. An enqueue beats a
-            # state update (an UPDATED link re-pends a just-fetched url for
-            # recrawl — publisher.go:30-83 re-push semantics); duplicate
-            # enqueues keep the earliest FIFO discovery (page, rank).
-            frontier_delta = (_first_per_key(
-                wave_delta, ["url"], F.col("_pri").desc(),
-                F.col("page").asc_nulls_last(), F.col("rank").asc_nulls_last(),
-                F.col("last_updated_on").asc_nulls_last(), F.col("id").asc())
-                .drop("_pri")
-                .withColumn("_wseq", F.lit(wave)))
+            # ---- frontier delta (O(changed rows), never a rewrite) -----------
+            wave_delta = (processed.withColumn("state", F.lit("fetched"))
+                          .select(*_FRONTIER_COLS)
+                          .unionByName(disallowed.select(*_FRONTIER_COLS)))
+            # P8 retry: missing urls return to the pending pool with
+            # attempts+1 (state left 'scheduled' would orphan them forever;
+            # the pending filter caps at max_retries); pages is never
+            # scanned again for them
+            if counted["missing"]:
+                missing = (to_fetch.join(F.broadcast(processed.select("url")),
+                                         "url", "left_anti")
+                           .withColumn("attempts", F.col("attempts") + 1)
+                           .withColumn("state", F.lit("pending")))
+                wave_delta = wave_delta.unionByName(missing.select(*_FRONTIER_COLS))
+
+            # Within-wave resolution: one row per url. pending is one row
+            # per url, so the fetched, missing and disallowed rows are
+            # disjoint by url and the window runs only on a wave that
+            # enqueued. An enqueue beats a state update (an UPDATED link
+            # re-pends a just-fetched url for recrawl — publisher.go:30-83
+            # re-push semantics); duplicate enqueues keep the earliest FIFO
+            # discovery (page, rank).
+            if counted["enqueued"]:
+                wave_delta = _first_per_key(
+                    wave_delta.withColumn("_pri", F.lit(0))
+                    .unionByName(enqueue.withColumn("_pri", F.lit(1))),
+                    ["url"], F.col("_pri").desc(),
+                    F.col("page").asc_nulls_last(), F.col("rank").asc_nulls_last(),
+                    F.col("last_updated_on").asc_nulls_last(),
+                    F.col("id").asc()).drop("_pri")
+            frontier_delta = wave_delta.withColumn("_wseq", F.lit(wave))
 
             # ---- lineage (per-partition metrics, north_rule) ------------------
             # from the collected counts; one file per wave. wall_ms is the
@@ -520,10 +518,9 @@ class WaveDriver:
               .repartition(SNAPSHOT_FILES).sortWithinPartitions("state"))
         # seen base is stored bucketed by salt (directory partitioning —
         # the plain-parquet analogue of Iceberg bucket-partitioned MoR):
-        # clustered by the same key the blooms and the hot-domain skew
-        # scheme use, one file per salt (repartition on salt, not a
-        # blind N-way split), so per-salt maintenance and salt-pruned
-        # probes read only their bucket's files.
+        # clustered by the same key the blooms use, one file per salt
+        # (repartition on salt, not a blind N-way split), so per-salt
+        # maintenance and salt-pruned probes read only their bucket's files.
         sn = (D.seen_live(self._resolved("seen", ["source", "id"]), now_ts)
               .repartition(F.col("salt")))
         tables: dict[str, DataFrame] = {"frontier": fr, "seen": sn}

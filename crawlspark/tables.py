@@ -139,8 +139,8 @@ class SnapshotStore:
         atomically publish ONE snapshot covering both plus every
         carried-forward table. Returns the new snapshot id.
 
-        Each frame is written with the partitioning it arrives in: the
-        caller sizes the files it writes (driver.SNAPSHOT_FILES)."""
+        Each frame is written with the partitioning it arrives in (a
+        wave's appends keep theirs; compaction sizes the frontier base)."""
         self.root.mkdir(parents=True, exist_ok=True)
         manifest = self._read_manifest()
         prev = manifest["snapshots"][-1] if manifest["snapshots"] else None

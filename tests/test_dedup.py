@@ -3,6 +3,7 @@
 from collections import Counter
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from crawlspark import dedup as D
@@ -62,6 +63,26 @@ class TestClassify:
         want = {r["id"]: r["status"] for r in plain.collect()}
         have = {r["id"]: r["status"] for r in got.collect()}
         assert want == have
+
+    @pytest.mark.xfail(strict=True, reason=(
+        "classify_with_bloom salts a candidate by its own host, while the "
+        "seen row and its bloom layer are salted by the host that first "
+        "listed the id: an id relisted under another host probes the "
+        "wrong salt bucket and reads NEW"))
+    def test_bloom_matches_plain_for_id_relisted_under_another_host(self, spark):
+        emitted = spark.createDataFrame(pd.DataFrame(
+            {"source": ["s"], "id": ["x"], "host": ["h0.vn"],
+             "last_updated_on": ["100"]}))
+        seen = D.seen_delta(emitted, _now())
+        cands = _cands(spark, [("s", "x", "h1.vn", "100")])
+        salts = cands.select(D.salt_of(F.col("host")).alias("c")).crossJoin(
+            seen.select(F.col("salt").alias("s"))).first()
+        assert salts["c"] != salts["s"]  # the two hosts salt apart
+        plain = D.classify(cands, seen, _now()).first()["status"]
+        assert plain == D.STATUS_UNCHANGED
+        got = D.classify_with_bloom(cands, seen, D.build_blooms(seen),
+                                    _now()).first()["status"]
+        assert got == plain
 
     def test_bloom_prunes_misses(self, spark):
         seen = _seen(spark, [("s", "1", 0, "100", "2026-02-01", 0)])

@@ -649,9 +649,9 @@ def _jobs_by_execution(spark, ids: set[int]) -> dict[str, int]:
 class TestJobBudget:
     # Spark jobs run by run_until_done on the 120-page world below
     # (bootstrap excluded): 2 waves plus the initial pending count
-    MAX_JOBS = 47
+    MAX_JOBS = 40
     # ... and by reseed plus run_until_done of the recrawl below
-    MAX_RECRAWL_JOBS = 72
+    MAX_RECRAWL_JOBS = 65
 
     def test_wave_loop_job_budget(self, spark, tmp_path):
         """Job-count guard on the wave loop, counted as
@@ -781,6 +781,62 @@ class TestWaveSides:
         assert stats["new"] + stats["updated"] + stats["unchanged"] == links
         jobs = store.read(spark, "jobs").filter(F.col("wave") == stats["wave"])
         assert jobs.count() == details
+
+
+def _write_jobs(spark, ids: set[int], path) -> int:
+    """Jobs among ``ids`` of the SQL executions that write ``path``."""
+    n = 0
+    it = spark._jsparkSession.sharedState().statusStore() \
+        .executionsList().iterator()
+    while it.hasNext():
+        e = it.next()
+        if f"[path={path}]" in e.physicalPlanDescription():
+            jobs = e.jobs().keySet().iterator()
+            while jobs.hasNext():
+                n += int(jobs.next()) in ids
+    return n
+
+
+class TestFrontierDelta:
+    def test_window_skip_keeps_one_row_per_url(self, spark, world):
+        """The per-url window runs only on a wave that enqueued. With
+        detail pages missing (fetched, missing and disallowed rows split
+        by url), one list page relisting another's items (duplicate
+        enqueues the window must merge) and a reseeded recrawl, every
+        committed frontier delta holds one row per url, and a detail
+        wave that enqueued nothing and missed nothing writes frontier,
+        jobs and extracted with one job each, from the wave's caches."""
+        drv, store = world["drv"], world["store"]
+        args = world["robots"], world["ranks"]
+        pdf = synth.gen_pages_pandas(N, seed=42)
+        lists = sorted(pdf.url[pdf.url.str.contains("/viec-lam-")])
+        pdf.loc[pdf.url == lists[1], "html"] = \
+            pdf.loc[pdf.url == lists[0], "html"].iloc[0]
+        pages = spark.createDataFrame(pdf[~pdf.url.str.contains(r"3\.html$")])
+        stats = drv.run_until_done(pages, *args, 12)
+        drv.reseed(synth.gen_seed_list(N, wave=2))
+        pages2 = spark.createDataFrame(synth.gen_pages_pandas(N, wave=2))
+        assert drv.run_wave(pages2, *args)["enqueued"]
+        ids0 = _job_ids(spark)
+        detail = drv.run_wave(pages2, *args)
+        ran = _job_ids(spark) - ids0
+        assert any(s["missing"] and not s["enqueued"] for s in stats)
+        assert detail["fetched"] and not (detail["enqueued"] or detail["missing"])
+
+        for rel in store.latest()["tables"]["frontier"]:
+            delta = spark.read.parquet(str(store.root / rel))
+            assert delta.count() == delta.select("url").distinct().count(), rel
+        # the list wave's window merged the relisted items
+        first = stats[0]
+        sid1 = next(s["sid"] for s in store.snapshots() if s["wave"] == 1)
+        merged = spark.read.parquet(str(store.root / f"data/{sid1}/frontier"))
+        assert merged.count() < (first["fetched"] + first["disallowed"]
+                                 + first["enqueued"])
+        sid = store.latest()["sid"]
+        assert {t: _write_jobs(spark, ran, store.root / f"data/{sid}/{t}")
+                for t in ("frontier", "jobs", "extracted")} == dict.fromkeys(
+            ("frontier", "jobs", "extracted"), 1), json.dumps(
+            _jobs_by_execution(spark, ran), indent=1)
 
 
 def _crawl_then_recrawl(spark, drv, n=120) -> list[dict]:
